@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.GraftColumnShim
 import org.apache.spark.sql.types._
 
 import graft.model.Keccak256
@@ -413,283 +409,9 @@ object AbiRuntime {
   }
 }
 
-/** ABI u256 word → Decimal(38, scale) as a native Catalyst expression
-  * (decode path of the reference's generated `cast_u256`,
-  * eth_event_macro/src/lib.rs:97-107). `scale` > 0 is the `ufixedMxN`
-  * decode: the raw word IS the unscaled value (value = raw · 10⁻ⁿ), so
-  * building `Decimal(raw, n)` directly covers the FULL Decimal(38,n)
-  * value range — null only when the raw word exceeds 38 significant
-  * digits, the same wide-int overflow policy as scale 0.
-  */
-case class U256ToDecimal(child: Expression, scale: Int = 0)
-    extends UnaryExpression {
-  override def dataType: DataType = DecimalType(38, scale)
-  override def nullable: Boolean = true
-  override def prettyName: String = "u256_to_decimal"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.u256ToDecimal(input.asInstanceOf[Array[Byte]], scale)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.types.Decimal ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.u256ToDecimal(${c.value}, $scale);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): U256ToDecimal =
-    copy(child = newChild)
-}
-
-/** Signed twin of [[U256ToDecimal]] (`scale` > 0 = `fixedMxN`). */
-case class I256ToDecimal(child: Expression, scale: Int = 0)
-    extends UnaryExpression {
-  override def dataType: DataType = DecimalType(38, scale)
-  override def nullable: Boolean = true
-  override def prettyName: String = "i256_to_decimal"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.i256ToDecimal(input.asInstanceOf[Array[Byte]], scale)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.types.Decimal ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.i256ToDecimal(${c.value}, $scale);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): I256ToDecimal =
-    copy(child = newChild)
-}
-
-/** ABI bool word → BOOLEAN (any nonzero byte), the scalar twin of the
-  * `bool[]` tail kernel's element test — one consistent bool contract
-  * across scalar and array decode.
-  */
-case class WordNonZero(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "abi_word_nonzero"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.wordNonZero(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.AbiRuntime.wordNonZero($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNonZero =
-    copy(child = newChild)
-}
-
-/** keccak-256 digest of a binary column — the hash behind event topic0
-  * (reference: ethabi `Event::signature()` via eth_event_stream/src/stream.rs:113).
-  */
-case class Keccak256Hash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "keccak256"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.keccak256(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.AbiRuntime.keccak256($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Keccak256Hash =
-    copy(child = newChild)
-}
-
-/** `uintN[]`/`intN[]` dynamic-tail decode as one native expression: the
-  * per-element loop runs as a compiled runtime call inside whole-stage
-  * codegen instead of an interpreted `transform(sequence(…))` lambda
-  * whose inner tree (substring + u256) re-evaluates per element.
-  */
-case class WordTailArray(child: Expression, headIdx: Int, signed: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DecimalType(38, 0))
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_word_tail_array"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.wordTailArray(input.asInstanceOf[Array[Byte]], headIdx, signed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.wordTailArray(
-          ${c.value}, $headIdx, $signed);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordTailArray =
-    copy(child = newChild)
-}
-
-/** Non-numeric twin of [[WordTailArray]] for `address[]` / `bytes32[]` /
-  * `bool[]` tails — the remaining interpreted `transform(sequence(…))`
-  * decode path moved into one compiled runtime call.
-  */
-case class WordTailSliceArray(child: Expression, headIdx: Int, kind: String)
-    extends UnaryExpression {
-  private val kindCode: Int = kind match {
-    case "address" => 0
-    case "bytes32" => 1
-    case "bool"    => 2
-    case other => throw new IllegalArgumentException(
-      s"abi_word_tail_slice_array: unsupported element kind $other")
-  }
-  override def dataType: DataType =
-    if (kind == "bool") ArrayType(BooleanType) else ArrayType(BinaryType)
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_word_tail_slice_array"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.wordTailSliceArray(input.asInstanceOf[Array[Byte]], headIdx, kindCode)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.wordTailSliceArray(
-          ${c.value}, $headIdx, $kindCode);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordTailSliceArray =
-    copy(child = newChild)
-}
-
-/** Nested twin of [[WordTailArray]] for `uintN[][]` / `intN[][]` tails —
-  * offset-indirected inner arrays decoded in one compiled runtime call.
-  */
-case class NestedWordTailArray(child: Expression, headIdx: Int,
-    signed: Boolean) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(ArrayType(DecimalType(38, 0)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_nested_word_tail_array"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.nestedWordTailArray(input.asInstanceOf[Array[Byte]], headIdx, signed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.nestedWordTailArray(
-          ${c.value}, $headIdx, $signed);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NestedWordTailArray =
-    copy(child = newChild)
-}
-
-/** Tuple twin of [[WordTailArray]] for `(T1,…,Tk)[]` tails — arrays of
-  * static tuples decoded to `ARRAY<STRUCT<…>>` in one compiled runtime
-  * call. `comps` holds (canonical scalar type, struct field name) per
-  * component.
-  */
-case class TupleWordTailArray(child: Expression, headIdx: Int,
-    comps: Seq[(String, String)]) extends UnaryExpression {
-  require(comps.nonEmpty,
-    "abi_tuple_word_tail_array: tuple needs at least one component")
-  private val kinds: Array[Int] = comps.map {
-    case ("address", _) => 0
-    case ("bytes32", _) => 1
-    case ("bool", _)    => 2
-    case (t, _) if t.startsWith("uint") => 3
-    case (t, _) if t.startsWith("int")  => 4
-    case (t, _) => throw new IllegalArgumentException(
-      s"abi_tuple_word_tail_array: unsupported component type $t")
-  }.toArray
-
-  override def dataType: DataType = ArrayType(StructType(comps.map {
-    case (t, nm) => StructField(nm, t match {
-      case "address" | "bytes32" => BinaryType
-      case "bool"                => BooleanType
-      case _                     => DecimalType(38, 0)
-    }, nullable = true)
-  }))
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_tuple_word_tail_array"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.tupleWordTailArray(input.asInstanceOf[Array[Byte]], headIdx, kinds)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val kindsRef = ctx.addReferenceObj("kinds", kinds, "int[]")
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.tupleWordTailArray(
-          ${c.value}, $headIdx, $kindsRef);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TupleWordTailArray =
-    copy(child = newChild)
-}
-
-/** Dynamic-element twin of [[WordTailSliceArray]] for `string[]` /
-  * `bytes[]` tails (and their fixed-size `[k]` forms via `fixedK >= 0`)
-  * — offset-indirected elements decoded in one compiled runtime call.
-  */
-case class DynTailArray(child: Expression, headIdx: Int, asString: Boolean,
-    fixedK: Int = -1) extends UnaryExpression {
-  override def dataType: DataType =
-    if (asString) ArrayType(StringType) else ArrayType(BinaryType)
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_dyn_tail_array"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.dynTailArray(input.asInstanceOf[Array[Byte]], headIdx,
-      asString, fixedK)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.dynTailArray(
-          ${c.value}, $headIdx, $asString, $fixedK);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DynTailArray =
-    copy(child = newChild)
-}
-
 /** comps (canonical type, field name) → kind codes + Spark field types
-  * for the dynamic-tuple kernels (codes documented at
-  * [[AbiRuntime.staticAt]]'s kind table).
+  * for the tuple kernels (codes documented at [[AbiRuntime.staticAt]]'s
+  * kind table).
   */
 private[functions] object TupleComps {
   def kindOf(t: String): Int = t match {
@@ -711,7 +433,7 @@ private[functions] object TupleComps {
       s"abi dynamic tuple: unsupported component type $other")
   }
 
-  def fieldType(t: String): DataType = kindOf(t) match {
+  def fieldType(kind: Int): DataType = kind match {
     case 0 | 1 | 6 => BinaryType
     case 2         => BooleanType
     case 3 | 4     => DecimalType(38, 0)
@@ -723,141 +445,68 @@ private[functions] object TupleComps {
     case _         => ArrayType(BinaryType)
   }
 
-  def structOf(comps: Seq[(String, String)]): StructType =
-    StructType(comps.map { case (t, nm) =>
-      StructField(nm, fieldType(t), nullable = true)
+  def struct(comps: Seq[(String, String)], kinds: Array[Int]): StructType =
+    StructType(comps.zip(kinds).map { case ((_, nm), k) =>
+      StructField(nm, fieldType(k), nullable = true)
     })
 }
 
-/** DYNAMIC tuple param decode (≥1 string/bytes/array component) through
-  * one compiled runtime call — the kernel twin of the expression-level
-  * offset-relative path, required once a component is itself an ARRAY
-  * (a per-element loop can't stay expression-level). `comps` holds
-  * (canonical type, struct field name) per component.
-  */
-case class DynTupleTailStruct(child: Expression, headIdx: Int,
-    comps: Seq[(String, String)]) extends UnaryExpression {
-  require(comps.nonEmpty,
-    "abi_dyn_tuple_tail_struct: tuple needs at least one component")
-  private val kinds: Array[Int] = comps.map(c => TupleComps.kindOf(c._1)).toArray
-
-  override def dataType: DataType = TupleComps.structOf(comps)
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_dyn_tuple_tail_struct"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.dynTupleTailStruct(input.asInstanceOf[Array[Byte]], headIdx, kinds)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val kindsRef = ctx.addReferenceObj("kinds", kinds, "int[]")
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.dynTupleTailStruct(
-          ${c.value}, $headIdx, $kindsRef);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DynTupleTailStruct =
-    copy(child = newChild)
-}
-
-/** Dynamic twin of [[TupleWordTailArray]] for `(T1,…,Tk)[]` tails whose
-  * tuple is DYNAMIC (string/bytes/array components): per-element offset
-  * indirection, each element its own tuple encoding — decoded to
-  * `ARRAY<STRUCT<…>>` in one compiled runtime call.
-  */
-case class DynTupleWordTailArray(child: Expression, headIdx: Int,
-    comps: Seq[(String, String)]) extends UnaryExpression {
-  require(comps.nonEmpty,
-    "abi_dyn_tuple_word_tail_array: tuple needs at least one component")
-  private val kinds: Array[Int] = comps.map(c => TupleComps.kindOf(c._1)).toArray
-
-  override def dataType: DataType = ArrayType(TupleComps.structOf(comps))
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_dyn_tuple_word_tail_array"
-
-  override protected def nullSafeEval(input: Any): Any =
-    AbiRuntime.dynTupleWordTailArray(input.asInstanceOf[Array[Byte]], headIdx, kinds)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val kindsRef = ctx.addReferenceObj("kinds", kinds, "int[]")
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${c.isNull}) {
-        ${ev.value} = graft.functions.AbiRuntime.dynTupleWordTailArray(
-          ${c.value}, $headIdx, $kindsRef);
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DynTupleWordTailArray =
-    copy(child = newChild)
-}
-
-/** Column-API surface for the ABI expressions. */
+/** Column-API surface for the ABI kernels (rows of [[Kernels]]). */
 object abi {
-  private def wrap(e: Expression): Column = GraftColumnShim.column(e)
-  private def ex(c: Column): Expression = GraftColumnShim.expression(c)
+  private def k(name: String, in: Column, params: Any*): Column =
+    Kernels.call(name, Seq(in), params: _*)
 
-  def u256(c: Column): Column = wrap(U256ToDecimal(ex(c)))
-  def i256(c: Column): Column = wrap(I256ToDecimal(ex(c)))
+  def u256(c: Column): Column = k("u256_to_decimal", c, 0)
+  def i256(c: Column): Column = k("i256_to_decimal", c, 0)
   /** `ufixedMxN`/`fixedMxN` decode: Decimal(38, n) built directly from
     * the raw word (full-range, see [[AbiRuntime.u256ToDecimal]]).
     */
-  def u256Scaled(c: Column, n: Int): Column = wrap(U256ToDecimal(ex(c), n))
-  def i256Scaled(c: Column, n: Int): Column = wrap(I256ToDecimal(ex(c), n))
-  def keccak256(c: Column): Column = wrap(Keccak256Hash(ex(c)))
+  def u256Scaled(c: Column, n: Int): Column = k("u256_to_decimal", c, n)
+  def i256Scaled(c: Column, n: Int): Column = k("i256_to_decimal", c, n)
+  def keccak256(c: Column): Column = k("keccak256", c)
 
   /** ABI bool word → any-nonzero-byte (same test as the `bool[]` kernel). */
-  def nonZeroWord(c: Column): Column = wrap(WordNonZero(ex(c)))
+  def nonZeroWord(c: Column): Column = k("abi_word_nonzero", c)
 
   /** Numeric `T[]` dynamic tail (head word at `headIdx`) → ARRAY<DECIMAL>. */
   def wordTailArray(data: Column, headIdx: Int, signed: Boolean): Column =
-    wrap(WordTailArray(ex(data), headIdx, signed))
+    k("abi_word_tail_array", data, headIdx, signed)
 
   /** `address[]`/`bytes32[]`/`bool[]` dynamic tail → typed array. */
   def wordTailSliceArray(data: Column, headIdx: Int, kind: String): Column =
-    wrap(WordTailSliceArray(ex(data), headIdx, kind))
+    k("abi_word_tail_slice_array", data, headIdx, kind)
 
   /** `uintN[][]`/`intN[][]` nested tail → ARRAY<ARRAY<DECIMAL>>. */
   def nestedWordTailArray(data: Column, headIdx: Int, signed: Boolean): Column =
-    wrap(NestedWordTailArray(ex(data), headIdx, signed))
+    k("abi_nested_word_tail_array", data, headIdx, signed)
 
   /** `(T1,…,Tk)[]` static-tuple-array tail → ARRAY<STRUCT<…>>; `comps`
     * = (canonical scalar type, field name) per component.
     */
   def tupleWordTailArray(data: Column, headIdx: Int,
       comps: Seq[(String, String)]): Column =
-    wrap(TupleWordTailArray(ex(data), headIdx, comps))
+    k("abi_tuple_word_tail_array", data, headIdx, comps)
 
   /** `string[]`/`bytes[]` tail (dynamic elements; `fixedK >= 0` for the
     * fixed-size `[k]` form) → ARRAY<STRING> / ARRAY<BINARY>.
     */
   def dynTailArray(data: Column, headIdx: Int, asString: Boolean,
       fixedK: Int = -1): Column =
-    wrap(DynTailArray(ex(data), headIdx, asString, fixedK))
+    k("abi_dyn_tail_array", data, headIdx, asString, fixedK)
 
   /** DYNAMIC tuple param (string/bytes/array components) → STRUCT<…>;
     * `comps` = (canonical type, field name) per component.
     */
   def dynTupleTailStruct(data: Column, headIdx: Int,
       comps: Seq[(String, String)]): Column =
-    wrap(DynTupleTailStruct(ex(data), headIdx, comps))
+    k("abi_dyn_tuple_tail_struct", data, headIdx, comps)
 
   /** `(T1,…,Tk)[]` DYNAMIC-tuple-array tail (per-element offsets) →
     * ARRAY<STRUCT<…>>; `comps` = (canonical type, field name).
     */
   def dynTupleWordTailArray(data: Column, headIdx: Int,
       comps: Seq[(String, String)]): Column =
-    wrap(DynTupleWordTailArray(ex(data), headIdx, comps))
+    k("abi_dyn_tuple_word_tail_array", data, headIdx, comps)
 
   /** 20-byte address literal from hex — the reference's `address()` util
     * as a Column (eth_event_stream/src/lib.rs:7-15).

@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.GraftColumnShim
+import org.apache.spark.sql.{GraftColumnShim, GraftExpectsInputTypes}
 import org.apache.spark.sql.types._
 
 /** Runtime for [[CmsEstimate]]: deserializes a Spark
@@ -68,7 +67,7 @@ object CmsRuntime {
     sketchOf(bytes).estimateCount(key.getBytes)
 }
 
-/** Runtime for [[BloomMightContain]]: deserializes a Spark `BloomFilter`
+/** Runtime for the `bloom_might_contain` kernel: deserializes a Spark `BloomFilter`
   * blob and probes one long key. Same identity-keyed cache discipline as
   * [[CmsRuntime]] (and the same honesty about its reach): the literal
   * blob amortizes deserialization WITHIN a task — codegen reference
@@ -113,56 +112,16 @@ object BloomRuntime {
     filterOf(bytes).mightContainLong(key)
 }
 
-/** `bloom_might_contain(filter, key)` — probe a `DataFrameStatFunctions
-  * .bloomFilter(...)` blob for one long key. One-sided like count-min:
-  * false negatives are impossible, so a Bloom PREFILTER (keep rows that
-  * might be in the set, exact-verify the survivors) never loses a true
-  * hit — the contract [[graft.operators.Dedup.decontaminateBloom]]
-  * builds on. Compiled (`doGenCode`), so the probe rides inside
-  * whole-stage codegen instead of breaking the stage at a ScalaUDF.
-  */
-case class BloomMightContain(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-  override def prettyName: String = "bloom_might_contain"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (left.dataType != BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: filter argument must be BINARY, got ${left.dataType}")
-    else right.dataType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: key argument must be integral, got $other")
-    }
-  }
-
-  override protected def nullSafeEval(filter: Any, key: Any): Any =
-    BloomRuntime.mightContain(filter.asInstanceOf[Array[Byte]],
-      key.asInstanceOf[Number].longValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (f, k) =>
-      s"graft.functions.BloomRuntime.mightContain($f, (long) $k)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomMightContain =
-    copy(left = newLeft, right = newRight)
-}
-
 /** `cms_estimate(sketch, key)` — probe a `count_min_sketch(...)` blob for
   * one key's estimated count. Count-min guarantees estimate ≥ true count
   * always, and estimate ≤ true + eps·N with the sketch's confidence —
   * the one-sided error that makes sketch-probed heavy hitters safe to
   * gate on. Accepts integral or string keys (matching what the sketch
-  * was built over).
+  * was built over). Not a [[Kernels]] row: the key type picks the
+  * runtime method.
   */
 case class CmsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with GraftExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "cms_estimate"
@@ -170,19 +129,8 @@ case class CmsEstimate(left: Expression, right: Expression)
   // children may be unresolved at construction — defer the type probe
   private def asString: Boolean = right.dataType == StringType
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (left.dataType != BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: sketch argument must be BINARY, got ${left.dataType}")
-    else right.dataType match {
-      case LongType | IntegerType | ShortType | ByteType | StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: key argument must be integral or string, got $other")
-    }
-  }
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(BinaryType),
+    Seq(LongType, IntegerType, ShortType, ByteType, StringType))
 
   override protected def nullSafeEval(sketch: Any, key: Any): Any =
     if (asString)
@@ -204,13 +152,19 @@ case class CmsEstimate(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Column API for the sketch-probe expression. */
+/** Column API for the sketch probes. */
 object sketches {
   def cmsEstimate(sketch: Column, key: Column): Column =
     GraftColumnShim.column(CmsEstimate(
       GraftColumnShim.expression(sketch), GraftColumnShim.expression(key)))
 
+  /** `bloom_might_contain(filter, key)` — probe a `DataFrameStatFunctions
+    * .bloomFilter(...)` blob for one integral key. One-sided like
+    * count-min: false negatives are impossible, so a Bloom PREFILTER
+    * (keep rows that might be in the set, exact-verify the survivors)
+    * never loses a true hit — the contract
+    * [[graft.operators.Dedup.decontaminateBloom]] builds on.
+    */
   def bloomMightContain(filter: Column, key: Column): Column =
-    GraftColumnShim.column(BloomMightContain(
-      GraftColumnShim.expression(filter), GraftColumnShim.expression(key)))
+    Kernels.call("bloom_might_contain", Seq(filter, key))
 }

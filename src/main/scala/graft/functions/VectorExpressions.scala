@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnShim
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -18,7 +15,7 @@ object VectorRuntime {
     * Dimension mismatch fails loudly — a truncated dot silently corrupts
     * every similarity/bucket downstream.
     */
-  def dot(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
     val n = a.numElements()
     if (n != b.numElements()) throw new IllegalArgumentException(
       s"vector_dot: dimension mismatch ${a.numElements()} vs ${b.numElements()}")
@@ -2028,7 +2025,7 @@ object VectorRuntime {
     * `dim` BYTES — the compact index payload that replaces the float
     * vector in candidate joins.
     */
-  def quantResidual(v: ArrayData, vFloat: Boolean, c: ArrayData,
+  def quantResidual(v: ArrayData, c: ArrayData, vFloat: Boolean,
       levels: Int): org.apache.spark.sql.catalyst.InternalRow = {
     val n = v.numElements()
     if (n != c.numElements()) throw new IllegalArgumentException(
@@ -2057,7 +2054,7 @@ object VectorRuntime {
     * approximate-distance inner loop): `Σ q_i · codes_i` — the caller
     * multiplies by the stored scale. Bytes are signed, matching encode.
     */
-  def dotCodes(q: ArrayData, qFloat: Boolean, codes: Array[Byte]): Double = {
+  def dotCodes(q: ArrayData, codes: Array[Byte], qFloat: Boolean): Double = {
     val n = codes.length
     if (q.numElements() != n) throw new IllegalArgumentException(
       s"dot_codes: dimension mismatch ${q.numElements()} vs $n")
@@ -2158,863 +2155,17 @@ object VectorRuntime {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
+
+  /** The `n` nearest coarse-quantizer lists for `v`, nearest first (see
+    * [[NearestCentroidsKernel]]).
+    */
+  def nearestCentroids(v: ArrayData, kernel: NearestCentroidsKernel): ArrayData =
+    kernel(v)
 }
 
-/** `dot(array<float|double>, array<float|double>) → double`. */
-case class VectorDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"dot expects array<float|double>, got $other")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vector_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorRuntime.dot(a.asInstanceOf[ArrayData], isFloat(left),
-      b.asInstanceOf[ArrayData], isFloat(right))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorRuntime.dot($a, ${isFloat(left)}, $b, ${isFloat(right)})")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VectorDot =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `cos_ge(array<double>, array<double>, p2, q2) → boolean` — fused
-  * exact integer cosine-threshold test (see [[VectorRuntime.cosGe]]):
-  * the join-condition form of the semantic-decon predicate, one kernel
-  * call per pair.
-  */
-case class CosThresholdGeExpr(left: Expression, right: Expression,
-    p2: Long, q2: Long) extends BinaryExpression {
-  require(p2 > 0 && q2 >= p2,
-    s"cos_ge: need 0 < p2 <= q2, got $p2/$q2")
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "cos_ge"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorRuntime.cosGe(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], p2, q2)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorRuntime.cosGe($a, $b, ${p2}L, ${q2}L)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosThresholdGeExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `quant_residual(array<float|double>, array<double>, levels) →
-  * struct<codes: binary, scale: double>` — PQ residual encode against a
-  * per-row centroid (see [[VectorRuntime.quantResidual]]).
-  */
-case class QuantResidual(left: Expression, right: Expression, levels: Int)
-    extends BinaryExpression {
-  // int8 codes: past 127 the byte wraps and sign-flips every downstream
-  // dot — a loud argument error, not silently corrupted similarities
-  require(levels >= 1 && levels <= 127,
-    s"quant_residual: levels must be in [1, 127], got $levels")
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"quant_residual expects array<float|double> vector, got $other")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("codes", BinaryType, nullable = false),
-    StructField("scale", DoubleType, nullable = false)))
-  override def prettyName: String = "quant_residual"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorRuntime.quantResidual(a.asInstanceOf[ArrayData], isFloat,
-      b.asInstanceOf[ArrayData], levels)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorRuntime.quantResidual($a, $isFloat, $b, $levels)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QuantResidual =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `dot_codes(array<float|double>, binary) → double` — query × int8
-  * residual codes (see [[VectorRuntime.dotCodes]]).
-  */
-case class VectorDotCodes(left: Expression, right: Expression)
-    extends BinaryExpression {
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"dot_codes expects array<float|double> query, got $other")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_codes"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorRuntime.dotCodes(a.asInstanceOf[ArrayData], isFloat,
-      b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorRuntime.dotCodes($a, $isFloat, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VectorDotCodes =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `codes_dot(binary, binary) → long` — int8 × int8 code dot (see
-  * [[VectorRuntime.codesDot]]).
-  */
-case class CodesDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "codes_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorRuntime.codesDot(a.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorRuntime.codesDot($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CodesDot =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `simhash64(array<long>) → long` over pre-hashed tokens. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.simHash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorRuntime.simHash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** `minhash_sig(array<long>, n) → array<long>` over pre-hashed shingles. */
-case class MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  require(numHashes >= 1, s"minhash_sig: numHashes must be >= 1, got $numHashes")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  // null for an EMPTY gram set (not just null input) — see
-  // VectorRuntime.minHashSig; codegen below tracks the result null
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.minHashSig(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.minHashSig($c, $numHashes);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** `ngram_hashes(array<long>, n) → array<long>` — distinct sliding-window
-  * gram hashes from token hashes.
-  */
-case class NgramHashes(child: Expression, n: Int, distinct: Boolean = true)
-    extends UnaryExpression {
-  require(n >= 1, s"ngram_hashes: n must be >= 1, got $n") // CharNgramHashes contract
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ngram_hashes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.ngramHashes(input.asInstanceOf[ArrayData], n, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.ngramHashes($c, $n, $distinct)")
-
-  override protected def withNewChildInternal(newChild: Expression): NgramHashes =
-    copy(child = newChild)
-}
-
-/** `dhash_bands(string, bands, bandBits) → array<long>` — cyclic
-  * byte-gradient difference hash packed into band keys (see
-  * [[VectorRuntime.dHashBands]]). Nullable: null for inputs under 2
-  * bytes (no gradient — would alias into one all-zero bucket).
-  */
-case class DHashBands(child: Expression, bands: Int, bandBits: Int)
-    extends UnaryExpression {
-  require(bands >= 1, s"dhash_bands: bands must be >= 1, got $bands")
-  // bandBits = 64 is the UN-BANDED case (bands = 1): one long carrying
-  // the full 64-bit hash — the per-bit packing loop shifts by j < 64,
-  // so the sign bit is just bit 63 (Multimodal.dHash64's hash-once
-  // re-banding entry point)
-  require(bandBits >= 1 && bandBits <= 64,
-    s"dhash_bands: bandBits must be in [1, 64], got $bandBits")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "dhash_bands"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.dHashBands(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      bands, bandBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.dHashBands($c, $bands, $bandBits);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): DHashBands =
-    copy(child = newChild)
-}
-
-/** `dhash_image_bands(binary, bands, bandBits) → array<long>` — the REAL
-  * image difference hash: pure-JVM PPM (P6) decode → integer luma →
-  * 9×8 box resize → 64 gradient bits, banded exactly like
-  * [[DHashBands]] (see [[VectorRuntime.dHashImageBands]]). `bands ×
-  * bandBits` must cover the 64-bit hash exactly — a partial banding
-  * would silently drop gradient bits from the index key scheme.
-  * Nullable: null for any non-PPM payload (the row drops out of the
-  * band index, like gramless docs in MinHash).
-  */
-case class DHashImageBands(child: Expression, bands: Int, bandBits: Int)
-    extends UnaryExpression {
-  require(bands >= 1 && bandBits >= 1 && bands * bandBits == 64,
-    s"dhash_image_bands: bands × bandBits must equal the 64 dHash bits, " +
-      s"got $bands × $bandBits")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "dhash_image_bands"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.dHashImageBands(
-      input.asInstanceOf[Array[Byte]], bands, bandBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.dHashImageBands($c, $bands, $bandBits);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): DHashImageBands =
-    copy(child = newChild)
-}
-
-/** `ppm_resize(binary, outW, outH) → binary` — REAL image transcode:
-  * pure-JVM P6 decode → integer box resize per RGB channel → canonical
-  * P6 re-encode (see [[VectorRuntime.ppmResize]]). Target dims are
-  * plan-time ints (one resize geometry per operator, the codegen'd
-  * convention). Nullable: null for non-PPM payloads.
-  */
-case class PpmResize(child: Expression, outW: Int, outH: Int)
-    extends UnaryExpression {
-  require(outW >= 1 && outH >= 1,
-    s"ppm_resize: target dims must be >= 1, got ${outW}x$outH")
-  // the output buffer is header (< 32 B) + outW·outH·3 in ONE byte
-  // array — reject dims whose product overflows Int at plan time
-  // instead of a per-row NegativeArraySizeException at execution
-  require(outW.toLong * outH * 3L + 32L <= Int.MaxValue,
-    s"ppm_resize: ${outW}x$outH output exceeds the 2 GiB array bound")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ppm_resize"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.ppmResize(input.asInstanceOf[Array[Byte]], outW, outH)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.ppmResize($c, $outW, $outH);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PpmResize =
-    copy(child = newChild)
-}
-
-/** `image_to_ppm(binary) → binary` — normalize any supported image
-  * container to canonical P6 (see [[VectorRuntime.imageToPpm]]).
-  * Nullable: null for non-image payloads.
-  */
-case class ImageToPpm(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "image_to_ppm"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.imageToPpm(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.imageToPpm($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ImageToPpm =
-    copy(child = newChild)
-}
-
-/** `image_stats(binary) → array<long>(width, height, luma_milli_mean)`
-  * — decoded raster stats via the shared PPM/ImageIO parse (see
-  * [[VectorRuntime.imageStats]]). Nullable: null for non-raster
-  * payloads.
-  */
-case class ImageStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "image_stats"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.imageStats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.imageStats($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ImageStats =
-    copy(child = newChild)
-}
-
-/** `ppm_to_png(binary) → binary` — P6 → PNG transcode through the JDK
-  * encoder (see [[VectorRuntime.ppmToPng]]): the in-plan fixture leg
-  * for real-format decode gates. Nullable: null for non-PPM payloads.
-  */
-case class PpmToPng(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ppm_to_png"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.ppmToPng(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.ppmToPng($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PpmToPng =
-    copy(child = newChild)
-}
-
-/** `ppm_to_jpeg(binary) → binary` — LOSSY JPEG transcode of a netpbm
-  * payload via the JDK encoder (see [[VectorRuntime.ppmToJpeg]]): the
-  * fixture leg for the real-world re-encoded-copy dedup case.
-  * Nullable: null for non-netpbm payloads.
-  */
-case class PpmToJpeg(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ppm_to_jpeg"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.ppmToJpeg(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.ppmToJpeg($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PpmToJpeg =
-    copy(child = newChild)
-}
-
-/** `pgm_to_gray_png(binary) → binary` — grayscale netpbm →
-  * single-band `TYPE_BYTE_GRAY` PNG (see
-  * [[VectorRuntime.pgmToGrayPng]]): the in-plan fixture leg for the
-  * gray-raster decode path. Nullable: null for non-gray payloads.
-  */
-case class PgmToGrayPng(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "pgm_to_gray_png"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.pgmToGrayPng(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.pgmToGrayPng($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PgmToGrayPng =
-    copy(child = newChild)
-}
-
-/** `pgm_rescale(binary, newMaxval) → binary` — P5 re-emitted under a
-  * different maxval, samples rescaled round-half-up (see
-  * [[VectorRuntime.pgmRescale]]): the in-plan fixture leg for
-  * maxval < 255 corpora. Nullable: null for non-P5 payloads.
-  */
-case class PgmRescale(child: Expression, newMaxval: Int)
-    extends UnaryExpression {
-  require(newMaxval >= 1 && newMaxval <= 255,
-    s"pgm_rescale: need 1 <= newMaxval <= 255, got $newMaxval")
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "pgm_rescale"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.pgmRescale(input.asInstanceOf[Array[Byte]], newMaxval)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.pgmRescale($c, $newMaxval);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PgmRescale =
-    copy(child = newChild)
-}
-
-/** `video_frame_dhashes(binary, maxFrames) → array<long>` — per-frame
-  * 64-bit dHashes of a video payload, container-routed by magic bytes
-  * (Y4M or concatenated PPM), up to `maxFrames` evenly sampled (see
-  * [[VectorRuntime.videoFrameDHashes]]). Nullable: null for
-  * empty/torn/malformed/unrecognized payloads.
-  */
-case class VideoFrameDHashes(child: Expression, maxFrames: Int)
-    extends UnaryExpression {
-  require(maxFrames >= 1,
-    s"video_frame_dhashes: maxFrames must be >= 1, got $maxFrames")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "video_frame_dhashes"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.videoFrameDHashes(input.asInstanceOf[Array[Byte]], maxFrames)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.videoFrameDHashes($c, $maxFrames);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoFrameDHashes =
-    copy(child = newChild)
-}
-
-/** `audio_fingerprint64(binary) → long` — container-routed audio
-  * fingerprint: WAV (RIFF, pure-JVM parse — integer PCM and IEEE
-  * float32) or AIFF (javax.sound), identical sample domain across
-  * routes → 64-bit windowed energy/zero-crossing fingerprint (see
-  * [[VectorRuntime.audioFingerprint64]]). Nullable: null for anything
-  * that is not well-formed audio in an accepted container.
-  */
-case class AudioFingerprint64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "audio_fingerprint64"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.audioFingerprint64(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val box = ctx.freshName("audioFp")
-      s"""
-      java.lang.Long $box = graft.functions.VectorRuntime.audioFingerprint64($c);
-      ${ev.isNull} = $box == null;
-      ${ev.value} = ${ev.isNull} ? -1L : $box.longValue();
-    """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): AudioFingerprint64 =
-    copy(child = newChild)
-}
-
-/** `wav_to_aiff(binary) → binary` — integer-PCM WAV → AIFF transcode
-  * through the JDK encoder (see [[VectorRuntime.wavToAiff]]): exact
-  * sample preservation, so the output fingerprints bit-identically.
-  * Nullable: null for non-integer-PCM input.
-  */
-case class WavToAiff(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "wav_to_aiff"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.wavToAiff(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.wavToAiff($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): WavToAiff =
-    copy(child = newChild)
-}
-
-/** `audio_to_wav(binary) → binary` — container-routed audio
-  * normalization to canonical PCM-16 WAV (see
-  * [[VectorRuntime.audioToWav]]): integer-PCM/float32 WAV and AIFF all
-  * land in ONE format whose fingerprint equals the original's
-  * bit-exactly, so a mixed-container corpus pays codec cost once at
-  * ingest. Nullable: null for unrecognized containers (the null-drop
-  * routing convention).
-  */
-case class AudioToWav(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "audio_to_wav"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.audioToWav(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.audioToWav($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioToWav =
-    copy(child = newChild)
-}
-
-/** `wav_to_float32(binary) → binary` — integer-PCM WAV → IEEE-float32
-  * WAV transcode (see [[VectorRuntime.wavToFloat32]]): exact sample
-  * mapping, channels preserved, canonical header. Nullable: null for
-  * non-PCM input.
-  */
-case class WavToFloat32(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "wav_to_float32"
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.wavToFloat32(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VectorRuntime.wavToFloat32($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): WavToFloat32 =
-    copy(child = newChild)
-}
-
-/** `char_ngram_hashes(string, n) -> array<long>` -- ordered per-position
-  * character n-gram hashes (multiplicity kept, index-aligned across n).
-  */
-case class CharNgramHashes(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, "char_ngram_hashes: n must be >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "char_ngram_hashes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.charNgramHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.charNgramHashes($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharNgramHashes =
-    copy(child = newChild)
-}
-
-/** `lsh_band_keys(array<long>, bands, rowsPerBand) → array<long>` — the
-  * compiled twin of `transform(sequence(0, bands-1), b => xxhash64(b,
-  * slice(sig, b·r+1, r)))`; see [[VectorRuntime.lshBandKeys]].
-  */
-case class LshBandKeys(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  require(bands >= 1 && rowsPerBand >= 1,
-    s"lsh_band_keys: need bands >= 1 and rowsPerBand >= 1, got $bands/$rowsPerBand")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_band_keys"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.lshBandKeys(
-      input.asInstanceOf[ArrayData], bands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.lshBandKeys($c, $bands, $rowsPerBand)")
-
-  override protected def withNewChildInternal(newChild: Expression): LshBandKeys =
-    copy(child = newChild)
-}
-
-/** `ws_token_hashes(string) → array<long>` — fused whitespace tokenize
-  * + per-token xxhash64 (seed 42, byte-exact with
-  * `transform(wsTokens(text), w => xxhash64(w))`); see
-  * [[VectorRuntime.wsTokenHashes]].
-  */
-case class WsTokenHashes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ws_token_hashes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.wsTokenHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorRuntime.wsTokenHashes($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WsTokenHashes =
-    copy(child = newChild)
-}
-
-/** `token_counts(string) → array<long>(n_ws, n_bpe)` — fused tokenizer
-  * counters (regex-equivalent, single pass).
-  */
-case class TokenCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "token_counts"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.tokenCounts(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorRuntime.tokenCounts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenCounts =
-    copy(child = newChild)
-}
-
-/** `term_tf(string) → array<long>(dl, tf_1..tf_m)` — fused whitespace
-  * tokenizer + per-term counters for a LITERAL term list (one pass, no
-  * explode, no per-term re-tokenization;
-  * [[graft.operators.TextOps.bm25TopK]]'s hot loop).
-  */
-/** `lang_stats(lowered_string) → array<long>` — fused language votes +
-  * quality counts (`[v_0..v_{k-1}, n_ws, n_bpe, n_punct]`, see
-  * [[VectorRuntime.langStats]]): one pass replacing 8 interpreted HOF
-  * filter lambdas per row in the langId/qualityScore/langQuality hot
-  * path. The child must already be lowercased (the operators pass
-  * `lower(text)` so lowercase semantics stay Spark's own).
-  */
-case class LangStats(child: Expression, words: Seq[Seq[String]])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lang_stats"
-
-  @transient private lazy val wordArr: Array[Array[String]] =
-    words.map(_.toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.langStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], wordArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("langStatsWords", wordArr,
-      "java.lang.String[][]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.langStats($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LangStats =
-    copy(child = newChild)
-}
-
-case class TermTf(child: Expression, terms: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "term_tf"
-
-  @transient private lazy val termArr: Array[String] = terms.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.termTf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], termArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("termTfTerms", termArr, "java.lang.String[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.termTf($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TermTf =
-    copy(child = newChild)
-}
-
-/** `rolling_fp(string, mod) → long` — rolling polynomial hash over
-  * codepoints (document fingerprinting).
-  */
-case class RollingFp(child: Expression, mod: Long) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_fp"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.rollingFp(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorRuntime.rollingFp($c, ${mod}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingFp =
-    copy(child = newChild)
-}
-
-/** `hash_embed_vec(string, n, dim) → array<long>` — dense signed
-  * hashing-trick embedding over char n-grams (one row-local pass; see
-  * [[VectorRuntime.hashEmbedVec]]). `n ≤ 3` is a hard contract: it is
-  * what keeps the gram code inside exact int64 so the DuckDB oracle can
-  * restate the hash in plain BIGINT arithmetic.
-  */
-case class HashEmbedVec(child: Expression, n: Int, dim: Int)
-    extends UnaryExpression {
-  require(n >= 1 && n <= 3,
-    s"hash_embed_vec: n must be in [1, 3] (int64-exact gram codes), got $n")
-  require(dim >= 2, s"hash_embed_vec: dim must be >= 2, got $dim")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hash_embed_vec"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.hashEmbedVec(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.hashEmbedVec($c, $n, $dim)")
-
-  override protected def withNewChildInternal(newChild: Expression): HashEmbedVec =
-    copy(child = newChild)
-}
-
-/** `winnow_hashes(array<long>, w) → array<long>` — distinct winnowing
-  * fingerprints over ordered gram hashes (MOSS scheme).
-  */
-case class WinnowHashes(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_hashes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.winnowHashes(input.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.winnowHashes($c, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowHashes =
-    copy(child = newChild)
-}
-
-/** `quant_stats(array<float|double>, levels) → array<double>(max_err, scale)`
-  * — symmetric int-quantization round-trip error in one compiled pass.
-  */
-case class QuantStats(child: Expression, levels: Int) extends UnaryExpression {
-  require(levels >= 1 && levels <= 127,
-    s"quant_stats: levels must be in [1, 127], got $levels")
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"quant_stats expects array<float|double>, got $other")
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "quant_stats"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.quantStats(input.asInstanceOf[ArrayData], isFloat, levels)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.quantStats($c, $isFloat, $levels)")
-
-  override protected def withNewChildInternal(newChild: Expression): QuantStats =
-    copy(child = newChild)
-}
-
-/** `sig_agreement(array<long>, array<long>) → int`. */
-case class SigAgreement(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sig_agreement"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorRuntime.sigAgreement(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.VectorRuntime.sigAgreement($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SigAgreement =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `nfc_normalize(string) → string` — Unicode NFC normalization (the
-  * canonical-composition pass of every text-cleaning chain; combining
-  * sequences like `e`+U+0301 fold to `é`). Wraps `java.text.Normalizer`
-  * with a fast-path skip via `isNormalized` (ASCII and already-NFC text
-  * costs one scan, no allocation) — matching any engine's NFC, e.g.
-  * DuckDB's `nfc_normalize`, byte for byte.
-  */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.nfc(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorRuntime.nfc($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
-/** `bpe_encode(word) → array<string>` — greedy merge-rank BPE encoding
-  * of one whitespace-free word under the learned merge list (embedded in
-  * the plan; the rank map rebuilds once per executor via the transient
-  * lazy val and rides codegen as a reference object).
-  */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_encode"
-
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](merges.size * 2)
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
-      m.put(a + " " + b, Integer.valueOf(i))
-    }
-    m
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorRuntime.bpeEncode(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], ranks)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ranksRef = ctx.addReferenceObj("bpeRanks", ranks,
-      "java.util.HashMap<String, Integer>")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorRuntime.bpeEncode($c, $ranksRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-}
-
-/** Precomputed coarse-quantizer state for [[NearestCentroids]]: the
-  * centroid matrix flattened row-major plus per-centroid squared norms,
+/** Precomputed coarse-quantizer state for the `nearest_centroids` kernel
+  * ([[VectorRuntime.nearestCentroids]]): the centroid matrix flattened
+  * row-major plus per-centroid squared norms,
   * built ONCE per expression instance and shared by every row (the
   * per-centroid-expression formulation this replaces rebuilt `nlist`
   * struct expressions per plan — at `nlist = √n` sizing the generated
@@ -3079,106 +2230,66 @@ final class NearestCentroidsKernel(centroids: Array[Array[Double]],
   }
 }
 
-/** `nearest_centroids(array<float|double>) → array<int>` — the `n`
-  * nearest coarse-quantizer lists for a vector, nearest first. One
-  * compiled node regardless of `nlist`; see [[NearestCentroidsKernel]].
+/** Column-API surface for the vector, text and media kernels (rows of
+  * [[Kernels]]).
   */
-case class NearestCentroids(child: Expression,
-    centroids: Array[Array[Double]], n: Int) extends UnaryExpression {
-  private def vecIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"nearest_centroids expects array<float|double>, got $other")
-  }
-  @transient private lazy val kernel =
-    new NearestCentroidsKernel(centroids, n, vecIsFloat)
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "nearest_centroids"
-
-  override protected def nullSafeEval(v: Any): Any =
-    kernel(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nearestCentroidsKernel", kernel,
-      classOf[NearestCentroidsKernel].getName)
-    defineCodeGen(ctx, ev, v => s"$ref.apply($v)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
-    copy(child = newChild)
-}
-
 object vec {
-  private def wrap(e: Expression): Column = GraftColumnShim.column(e)
-  private def ex(c: Column): Expression = GraftColumnShim.expression(c)
+  private def k(name: String, in: Column, params: Any*): Column =
+    Kernels.call(name, Seq(in), params: _*)
 
-  def dot(a: Column, b: Column): Column = wrap(VectorDot(ex(a), ex(b)))
+  def dot(a: Column, b: Column): Column = Kernels.call("vector_dot", Seq(a, b))
   def cosGe(a: Column, b: Column, p2: Long, q2: Long): Column =
-    wrap(CosThresholdGeExpr(ex(a), ex(b), p2, q2))
-  def simHash64(hashes: Column): Column = wrap(SimHash64(ex(hashes)))
+    Kernels.call("cos_ge", Seq(a, b), p2, q2)
+  def simHash64(hashes: Column): Column = k("simhash64", hashes)
   def ngramHashes(tokenHashes: Column, n: Int): Column =
-    wrap(NgramHashes(ex(tokenHashes), n))
+    k("ngram_hashes", tokenHashes, n, true)
 
   /** Every-occurrence variant (multiplicity survives for mode counts). */
   def ngramHashesAll(tokenHashes: Column, n: Int): Column =
-    wrap(NgramHashes(ex(tokenHashes), n, distinct = false))
-  /** Ordered per-position char n-gram hashes (see [[CharNgramHashes]]). */
-  def charNgramHashes(text: Column, n: Int): Column =
-    wrap(CharNgramHashes(ex(text), n))
-  def tokenCounts(text: Column): Column = wrap(TokenCounts(ex(text)))
+    k("ngram_hashes", tokenHashes, n, false)
+  /** Ordered per-position char n-gram hashes (see [[VectorRuntime.charNgramHashes]]). */
+  def charNgramHashes(text: Column, n: Int): Column = k("char_ngram_hashes", text, n)
+  def tokenCounts(text: Column): Column = k("token_counts", text)
   def langStats(loweredText: Column, words: Seq[Seq[String]]): Column =
-    wrap(LangStats(ex(loweredText), words))
-  def wsTokenHashes(text: Column): Column = wrap(WsTokenHashes(ex(text)))
+    k("lang_stats", loweredText, words)
+  def wsTokenHashes(text: Column): Column = k("ws_token_hashes", text)
   def dHashBands(s: Column, bands: Int, bandBits: Int): Column =
-    wrap(DHashBands(ex(s), bands, bandBits))
+    k("dhash_bands", s, bands, bandBits)
   def dHashImageBands(payload: Column, bands: Int, bandBits: Int): Column =
-    wrap(DHashImageBands(ex(payload), bands, bandBits))
+    k("dhash_image_bands", payload, bands, bandBits)
   def ppmResize(payload: Column, outW: Int, outH: Int): Column =
-    wrap(PpmResize(ex(payload), outW, outH))
-  def ppmToPng(payload: Column): Column = wrap(PpmToPng(ex(payload)))
-  def ppmToJpeg(payload: Column): Column = wrap(PpmToJpeg(ex(payload)))
-  def pgmToGrayPng(payload: Column): Column =
-    wrap(PgmToGrayPng(ex(payload)))
+    k("ppm_resize", payload, outW, outH)
+  def ppmToPng(payload: Column): Column = k("ppm_to_png", payload)
+  def ppmToJpeg(payload: Column): Column = k("ppm_to_jpeg", payload)
+  def pgmToGrayPng(payload: Column): Column = k("pgm_to_gray_png", payload)
   def pgmRescale(payload: Column, newMaxval: Int): Column =
-    wrap(PgmRescale(ex(payload), newMaxval))
-  def imageStats(payload: Column): Column = wrap(ImageStats(ex(payload)))
-  def imageToPpm(payload: Column): Column = wrap(ImageToPpm(ex(payload)))
+    k("pgm_rescale", payload, newMaxval)
+  def imageStats(payload: Column): Column = k("image_stats", payload)
+  def imageToPpm(payload: Column): Column = k("image_to_ppm", payload)
   def videoFrameDHashes(payload: Column, maxFrames: Int): Column =
-    wrap(VideoFrameDHashes(ex(payload), maxFrames))
-  def audioFingerprint64(payload: Column): Column =
-    wrap(AudioFingerprint64(ex(payload)))
-  def wavToFloat32(payload: Column): Column =
-    wrap(WavToFloat32(ex(payload)))
-  def wavToAiff(payload: Column): Column =
-    wrap(WavToAiff(ex(payload)))
-  def audioToWav(payload: Column): Column =
-    wrap(AudioToWav(ex(payload)))
+    k("video_frame_dhashes", payload, maxFrames)
+  def audioFingerprint64(payload: Column): Column = k("audio_fingerprint64", payload)
+  def wavToFloat32(payload: Column): Column = k("wav_to_float32", payload)
+  def wavToAiff(payload: Column): Column = k("wav_to_aiff", payload)
+  def audioToWav(payload: Column): Column = k("audio_to_wav", payload)
   def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    wrap(LshBandKeys(ex(sig), bands, rowsPerBand))
-  def termTf(text: Column, terms: Seq[String]): Column =
-    wrap(TermTf(ex(text), terms))
-  def rollingFp(text: Column, mod: Long): Column = wrap(RollingFp(ex(text), mod))
+    k("lsh_band_keys", sig, bands, rowsPerBand)
+  def termTf(text: Column, terms: Seq[String]): Column = k("term_tf", text, terms)
+  def rollingFp(text: Column, mod: Long): Column = k("rolling_fp", text, mod)
   def hashEmbedVec(text: Column, n: Int, dim: Int): Column =
-    wrap(HashEmbedVec(ex(text), n, dim))
+    k("hash_embed_vec", text, n, dim)
   def minHashSig(hashes: Column, numHashes: Int): Column =
-    wrap(MinHashSig(ex(hashes), numHashes))
-  def sigAgreement(a: Column, b: Column): Column =
-    wrap(SigAgreement(ex(a), ex(b)))
-  def quantStats(v: Column, levels: Int): Column =
-    wrap(QuantStats(ex(v), levels))
+    k("minhash_sig", hashes, numHashes)
+  def sigAgreement(a: Column, b: Column): Column = Kernels.call("sig_agreement", Seq(a, b))
+  def quantStats(v: Column, levels: Int): Column = k("quant_stats", v, levels)
   def quantResidual(v: Column, centroid: Column, levels: Int): Column =
-    wrap(QuantResidual(ex(v), ex(centroid), levels))
-  def dotCodes(q: Column, codes: Column): Column =
-    wrap(VectorDotCodes(ex(q), ex(codes)))
-  def codesDot(a: Column, b: Column): Column =
-    wrap(CodesDot(ex(a), ex(b)))
-  def winnowHashes(gramHashes: Column, w: Int): Column =
-    wrap(WinnowHashes(ex(gramHashes), w))
+    Kernels.call("quant_residual", Seq(v, centroid), levels)
+  def dotCodes(q: Column, codes: Column): Column = Kernels.call("dot_codes", Seq(q, codes))
+  def codesDot(a: Column, b: Column): Column = Kernels.call("codes_dot", Seq(a, b))
+  def winnowHashes(gramHashes: Column, w: Int): Column = k("winnow_hashes", gramHashes, w)
   def bpeEncode(word: Column, merges: Seq[(String, String)]): Column =
-    wrap(BpeEncode(ex(word), merges))
-  def nfc(text: Column): Column = wrap(NfcNormalize(ex(text)))
-  def nearestCentroids(v: Column, centroids: Array[Array[Double]],
-      n: Int): Column = wrap(NearestCentroids(ex(v), centroids, n))
+    k("bpe_encode", word, merges)
+  def nfc(text: Column): Column = k("nfc_normalize", text)
+  def nearestCentroids(v: Column, centroids: Array[Array[Double]], n: Int): Column =
+    k("nearest_centroids", v, centroids.map(_.toSeq).toSeq, n)
 }

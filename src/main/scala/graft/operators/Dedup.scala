@@ -71,7 +71,7 @@ object Dedup {
   }
 
   /** Distinct gram HASHES per doc: tokens string-hashed once, sliding
-    * combine + dedup in the native [[graft.functions.NgramHashes]] kernel.
+    * combine + dedup in the native `ngram_hashes` kernel.
     * Joining/counting on 64-bit hashes instead of gram strings shrinks the
     * shuffle ~10× and skips all string building; counts (and so Jaccard)
     * are identical modulo negligible 64-bit collisions.
@@ -365,7 +365,7 @@ object Dedup {
     * At 100 TB the win is step 1: the verify join shuffles ~fpp of the
     * corpus gram volume instead of all of it (AQE still broadcasts the
     * bench side when it fits). The probe is the compiled
-    * [[graft.functions.BloomMightContain]] expression — the serialized
+    * `bloom_might_contain` kernel — the serialized
     * filter rides as a plan literal (the [[Sketches.cmsProbe]] pattern)
     * and the per-gram probe stays inside whole-stage codegen.
     */
@@ -397,7 +397,7 @@ object Dedup {
     * the min over shingles of a splitmix-mixed 64-bit gram hash — the
     * standard "one hash family, seeded per slot" construction. Grams are
     * string-hashed ONCE (`xxhash64`), then the per-slot mixing runs as a
-    * native compiled loop ([[graft.functions.MinHashSig]]) — the
+    * native compiled loop (`minhash_sig`) — the
     * interpreted higher-order-function version was ~100× slower.
     */
   def minHashSignature(text: Column, n: Int = 3,
@@ -662,7 +662,7 @@ object Dedup {
   /** Distinct winnowing fingerprints per document (Schleimer, Wilkerson
     * & Aiken 2003 — the MOSS scheme): ordered word n-gram hashes →
     * sliding `window`-min selection in the native
-    * [[graft.functions.WinnowHashes]] kernel. Any shared token run of
+    * `winnow_hashes` kernel. Any shared token run of
     * length ≥ window+n−1 is GUARANTEED to surface a shared fingerprint,
     * and only ~2/(window+1) of grams are kept — the standard
     * fingerprint-density/detection-length tradeoff. Complements
@@ -828,7 +828,7 @@ object Dedup {
   /** Row-local 64-bit SimHash over whitespace tokens: per bit, sum ±1
     * votes from each token's hash bit, sign gives the fingerprint bit.
     * Tokens are string-hashed once; the 64-bit voting loop is the native
-    * [[graft.functions.SimHash64]] kernel (the interpreted lambda version
+    * `simhash64` kernel (the interpreted lambda version
     * dominated the whole bench at ~300 s).
     */
   def simHash64(df: DataFrame, textCol: String = "text",
@@ -918,7 +918,7 @@ object Dedup {
     * and how many duplicated grams support it.
     *
     * Scale shape: gram hashes come ORDERED from the compiled
-    * [[graft.functions.NgramHashes]] kernel (position = array index, no
+    * `ngram_hashes` kernel (position = array index, no
     * window/lead over token rows, no gram strings); the occurrence count
     * is one map-side-combined groupBy on 64-bit keys; marking is a join
     * back on those keys (the exploded starts persist once, both sides

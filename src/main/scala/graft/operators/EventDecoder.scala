@@ -23,8 +23,8 @@ import graft.model.{EventParam, EventSchema}
   *    (nullable-on-mismatch, vs. the reference's panic — SURVEY §2.2 P2).
   *
   * Everything is expression-level (substring/conv on binary + the native
-  * [[graft.functions.U256ToDecimal]]), so decode stays inside whole-stage
-  * codegen and parallelizes embarrassingly at 100 TB.
+  * `u256_to_decimal` kernel), so decode stays inside whole-stage codegen
+  * and parallelizes embarrassingly at 100 TB.
   */
 object EventDecoder {
 
@@ -233,17 +233,6 @@ object EventDecoder {
   private def substring(c: Column, pos: Int, len: Int): Column =
     org.apache.spark.sql.functions.substring(c, pos, len)
 
-  /** Decoded columns (param name → Column) for `schema` over raw log
-    * columns. Topic assignment: i-th indexed param ← `topic{i+1}`
-    * (anonymous events carry no signature topic, so theirs start at
-    * `topic0`). An indexed dynamic param (string/bytes) is stored by ABI
-    * as the keccak hash of its value — it decodes to that 32-byte binary,
-    * the value itself is unrecoverable.
-    */
-  def decodedColumns(schema: EventSchema,
-      topics: Seq[Column], data: Column): Seq[(String, Column)] =
-    decodedWithRaw(schema, topics, data).map { case (n, c, _) => n -> c }
-
   /** Wide numeric params: `Decimal(38,0)` tops out at 10^38−1, so the
     * typed column nulls out when the value exceeds it — possible from
     * width 128 up (uint128 max ≈ 3.4e38, int128 max ≈ 1.7e38); every
@@ -261,7 +250,11 @@ object EventDecoder {
   }
 
   /** Decode plan per param: (name, typed column, lossless raw word for the
-    * 256-bit numeric family).
+    * 256-bit numeric family). Topic assignment: i-th indexed param ←
+    * `topic{i+1}` (anonymous events carry no signature topic, so theirs
+    * start at `topic0`). An indexed dynamic param (string/bytes) is stored
+    * by ABI as the keccak hash of its value — it decodes to that 32-byte
+    * binary, the value itself is unrecoverable.
     */
   private[graft] def decodedWithRaw(schema: EventSchema,
       topics: Seq[Column], data: Column): Seq[(String, Column, Option[Column])] = {
@@ -374,8 +367,4 @@ object EventDecoder {
   def encodeWordFromLongSigned(c: Column): Column =
     when(c >= 0, encodeWordFromLong(c))
       .otherwise(unhex(lpad(hex(c), 64, "f")))
-
-  /** ABI-encode an address stored as a 20-byte binary into its topic word. */
-  def encodeWordFromAddress(c: Column): Column =
-    concat(lit(Array.fill[Byte](12)(0)), c)
 }

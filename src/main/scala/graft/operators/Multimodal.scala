@@ -63,7 +63,7 @@ object Multimodal {
 
   /** Deterministic REAL-FORMAT image fixture (round-15): the
     * [[attachPpmImages]] pixels transcoded to PNG through the JDK
-    * encoder ([[graft.functions.PpmToPng]]) — what a real corpus of
+    * encoder (`ppm_to_png`) — what a real corpus of
     * PNG payloads looks like to the engine. PNG is lossless, so
     * payload-pixel equality ⇔ text equality still holds and the PNG
     * leg's dHash EQUALS the PPM leg's (the `mm_dhash_png` gate's pin).
@@ -102,7 +102,7 @@ object Multimodal {
     * 8-hex content signature (bytes 4–7, past the 3-byte fixture tag /
     * inside any real header) for every kind, plus DECODED raster stats
     * for image payloads via the shared PPM/ImageIO parse
-    * ([[graft.functions.ImageStats]]): width, height, and the integer
+    * (`image_stats`): width, height, and the integer
     * milli-scaled ITU-R 601 mean luma (`Σ(299R+587G+114B) / (w·h)`,
     * one final division — relationally replayable from the fixture
     * recipe, the byte-exact oracle class). Non-raster payloads carry
@@ -168,7 +168,7 @@ object Multimodal {
     * box-resized to `outW`×`outH` per RGB channel in pure integer
     * arithmetic, and re-encoded as a canonical P6 — payload AND
     * implied dimensions change, byte-deterministically, inside the
-    * compiled [[graft.functions.PpmResize]] kernel. One row-local
+    * compiled `ppm_resize` kernel. One row-local
     * projection: no shuffle, scale-free. Non-PPM payloads resize to
     * null and drop (the null-drop routing convention), so mixed tables
     * route themselves.
@@ -186,7 +186,7 @@ object Multimodal {
     * `(band_idx, band_key)` row per band): a difference-hash (dHash)
     * gradient over the image's byte content, packed into `bands` keys
     * of `bandBits` bits by the compiled
-    * [[graft.functions.DHashBands]] kernel, entirely row-local — the
+    * `dhash_bands` kernel, entirely row-local — the
     * banded self-join downstream is the only shuffle, the same plan
     * shape that carries MinHash at 100 TB.
     *
@@ -301,7 +301,7 @@ object Multimodal {
     * sniffed; round-15, so real-world image corpora no longer
     * null-drop) — then integer luma → 9×8 box resize → classic 64-bit
     * dHash, entirely inside the compiled
-    * [[graft.functions.DHashImageBands]] kernel: row-local, one
+    * `dhash_image_bands` kernel: row-local, one
     * projection, no external codec dependency. The hash arithmetic is
     * identical across decode paths, so a PPM and a PNG of the same
     * pixels land in the same buckets. Unsupported payloads hash to
@@ -628,7 +628,7 @@ object Multimodal {
   }
 
   /** Band rows for audio payloads: WAV parse + energy/ZCR fingerprint
-    * inside the compiled [[graft.functions.WavFingerprint64]] kernel
+    * inside the compiled `audio_fingerprint64` kernel
     * (row-local), banded by the shared [[BandedHamming.bandRows]] —
     * so the downstream join/cap/probe/verify machinery is the image
     * dHash one verbatim. Unparseable payloads fingerprint to null and
@@ -869,7 +869,7 @@ object Multimodal {
     * byte-exact fixture codec), dHash up to `maxFrames` evenly sampled
     * frames through the SAME 9×8 luma kernel as still images (one
     * compiled row-local projection —
-    * [[graft.functions.VideoFrameDHashes]]), one row per sampled frame.
+    * `video_frame_dhashes`), one row per sampled frame.
     * A gray PPM rendering of a Y4M frame's Y plane hashes IDENTICALLY
     * (R=G=B=Y ⇒ integer luma = Y), so mixed-container corpora pair
     * across formats. Torn/malformed payloads hash to null and drop

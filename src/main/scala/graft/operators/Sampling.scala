@@ -102,7 +102,7 @@ object Sampling {
     * first byte as the monotone bucket, so there is no global
     * single-task sort — two partitioned shuffles, same as every other
     * cumulative operator here. Token counting is the compiled
-    * [[graft.functions.TokenCounts]] kernel (one string pass, row-local).
+    * `token_counts` kernel (one string pass, row-local).
     */
   def tokenBudgetSelect(df: DataFrame, budget: Long,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {

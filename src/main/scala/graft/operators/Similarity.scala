@@ -10,7 +10,7 @@ import graft.functions.vec
   * brute-force cosine top-k as the exact baseline and a random-hyperplane
   * LSH-bucketed variant as the 100 TB path.
   *
-  * Vector math runs through the native [[graft.functions.VectorDot]]
+  * Vector math runs through the native `vector_dot`
   * kernel (compiled loop inside whole-stage codegen; the interpreted
   * higher-order-function fold was the bench bottleneck). All pairwise
   * paths precompute per-row norms once so each pair costs exactly one dot.
@@ -351,7 +351,7 @@ object Similarity {
     * Determinism contract (what makes this oracle-able, same recipe as
     * [[assignClusters]]): the rank key is
     * `‖v‖² + ‖c‖² − 2·v·c` with BOTH dots accumulated in element order
-    * through the compiled [[graft.functions.VectorDot]] kernel
+    * through the compiled `vector_dot` kernel
     * (`float→double` per element, left-associated `+`), `‖c‖²` folded at
     * plan time from exactly-representable centroid components, and ties
     * broken by ascending id — every term restatable bit-for-bit in SQL.
@@ -469,7 +469,7 @@ object Similarity {
   /** IVF-PQ — the genuinely-100 TB ANN index shape. Like [[ivfTopK]] the
     * coarse quantizer routes each vector to its nearest list, but the
     * list rows store int8 RESIDUAL codes (`vec − centroid`, per-vector
-    * scale — the [[graft.functions.QuantResidual]] kernel, same math as
+    * scale — the `quant_residual` kernel, same math as
     * [[int8RoundTrip]]) instead of the float vector: the candidate join
     * moves ~dim BYTES per row where IVF moves ~4·dim (float32), cutting
     * the widest shuffle of the ANN path ~4×. Scoring is two-stage:
@@ -478,7 +478,7 @@ object Similarity {
     *     `q·v ≈ q·c_list + scale·(q·codes)`, where `q·c_list` is
     *     computed ONCE per (query, probed list) on the tiny broadcast
     *     query side and the per-candidate cost is one compiled byte-dot
-    *     ([[graft.functions.VectorDotCodes]]);
+    *     (`dot_codes`);
     *  2. the top `rerank·k` survivors per query fetch their float
     *     vectors by id — a broadcast join, survivors are
     *     queries × rerank·k, never corpus-sized — for EXACT cosine
@@ -770,7 +770,7 @@ object Similarity {
     * reconstruction error, the scale, and the `quant_ok` bound check
     * (error ≤ scale/2 by construction — a failed bound means the
     * quantizer math broke, not the data). One compiled pass per row via
-    * [[graft.functions.QuantStats]]; no quantized array materializes.
+    * `quant_stats`; no quantized array materializes.
     */
   def int8RoundTrip(df: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", levels: Int = 127): DataFrame =
@@ -831,7 +831,7 @@ object Similarity {
     *       = |c|² + s_a·(c·q_a) + s_b·(c·q_b) + s_a·s_b·(q_a·q_b)` —
     * `|c|²` is a per-list literal, `c·q` is precomputed ONCE per index
     * row at encode time (`cdot`), so the per-pair cost is one compiled
-    * int8×int8 dot ([[graft.functions.CodesDot]], exact Long
+    * int8×int8 dot (`codes_dot`, exact Long
     * arithmetic) plus scalar math. Pairs whose approximate sim clears
     * `threshold − slack` fetch their float vectors by id and are
     * verified by EXACT cosine — zero false positives (the `subset_ok`

@@ -28,7 +28,7 @@ object TextOps {
 
   /** Token counting: whitespace tokens + BPE-ish regex tokens + chars.
     * Counting goes through the fused single-pass native kernel
-    * ([[graft.functions.TokenCounts]]) — regex-equivalent, ~10× cheaper
+    * (`token_counts`) — regex-equivalent, ~10× cheaper
     * than two `regexp_extract_all` passes.
     */
   def tokenStats(df: DataFrame, textCol: String = "text",
@@ -60,7 +60,7 @@ object TextOps {
     * votes) so the decision is auditable.
     */
   /** The fused per-row language/quality statistics vector
-    * `[v_en..v_zh, n_ws, n_bpe, n_punct]` ([[graft.functions.LangStats]]
+    * `[v_en..v_zh, n_ws, n_bpe, n_punct]` (`lang_stats`
     * over `lower(text)` — one compiled pass; the HOF formulation it
     * replaces evaluated the tokenizer plus 8 interpreted `ArrayFilter`
     * lambdas per row, measured 2.8 s vs tokenStats' fused-kernel 0.11 s
@@ -212,7 +212,7 @@ object TextOps {
     *    the per-doc bigram mode needs a count, so bigram HASHES explode
     *    into a `(doc, bigram)` aggregation: tokens are string-hashed
     *    once, the sliding combine runs in the native
-    *    [[graft.functions.NgramHashes]] kernel with multiplicity kept
+    *    `ngram_hashes` kernel with multiplicity kept
     *    (no gram strings materialize, the shuffle carries 64-bit keys),
     *    and the shuffle is keyed exactly like the gram joins
     *    (doc-bounded fanout, scales by partitioning).
@@ -627,7 +627,7 @@ object TextOps {
   /** Document fingerprint: rolling polynomial hash over the characters,
     * `acc = (acc*131 + ascii(c)) mod 1e9+7` — deterministic, engine-neutral
     * (the oracle replays the same fold), and row-local. Runs as the native
-    * [[graft.functions.RollingFp]] kernel — the interpreted
+    * `rolling_fp` kernel — the interpreted
     * `aggregate(split(...))` fold allocated a per-char array per row.
     */
   def fingerprint(df: DataFrame, textCol: String = "text",
@@ -639,7 +639,7 @@ object TextOps {
   /** Hashing-trick text embedding (Weinberger et al. 2009, "Feature
     * Hashing for Large Scale Multitask Learning"): a dense signed
     * char-n-gram count vector per document via the compiled
-    * [[graft.functions.HashEmbedVec]] kernel — the in-engine embedding
+    * `hash_embed_vec` kernel — the in-engine embedding
     * that closes the text → vector → ANN loop with NO external model:
     * E[v·w] over the signed slots is the gram-profile dot product, so
     * gram-similar documents land near each other and the whole
@@ -1210,7 +1210,7 @@ object TextOps {
     * gibberish/boilerplate-shuffled text scores high.
     *
     * Scale shape: gram hashing is the compiled row-local
-    * [[graft.functions.CharNgramHashes]] kernel (64-bit keys, never gram
+    * `char_ngram_hashes` kernel (64-bit keys, never gram
     * strings), position alignment comes from slicing the (n−1)-gram
     * array to the n-gram array's length (context of position i IS
     * position i), and both passes are plain map-side-combined groupBys
@@ -1343,7 +1343,7 @@ object TextOps {
 
   /** The standard web-corpus cleaning chain, row-local and fully
     * codegen'd: strip markup tags (`<...>` → space), Unicode-NFC
-    * normalize (compiled [[graft.functions.NfcNormalize]] kernel with an
+    * normalize (compiled `nfc_normalize` kernel with an
     * already-normalized fast path), collapse whitespace runs to single
     * spaces, trim. Each step is deterministic and reproducible in any
     * engine (DuckDB: `regexp_replace(..., 'g')` + `nfc_normalize`), so
@@ -1414,7 +1414,7 @@ object TextOps {
   }
 
   /** Apply a learned merge list to every word of every document through
-    * the compiled [[graft.functions.BpeEncode]] kernel and emit the
+    * the compiled `bpe_encode` kernel and emit the
     * per-document verification stats: word count, BPE token count, the
     * lossless round trip (every word re-concatenates from its tokens —
     * BPE's defining invariant) and the count bounds

@@ -14,152 +14,24 @@ import graft.functions._
   * }}}
   */
 object GraftFunctions {
-  /** (name, builder) for every engine function. Integer parameters are
-    * extracted from foldable literals at resolution time.
+  /** (name, builder) for every engine function: [[Kernels]] rows read
+    * their params from foldable literals at resolution time.
     */
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "u256_to_decimal" -> (es => U256ToDecimal(es.head)),
-    "i256_to_decimal" -> (es => I256ToDecimal(es.head)),
-    "keccak256" -> (es => Keccak256Hash(es.head)),
-    "vector_dot" -> (es => VectorDot(es(0), es(1))),
-    "simhash64" -> (es => SimHash64(es.head)),
-    "sig_agreement" -> (es => SigAgreement(es(0), es(1))),
-    "minhash_sig" -> (es => MinHashSig(es.head, litInt(es(1), "minhash_sig"))),
-    "ngram_hashes" -> (es => NgramHashes(es.head, litInt(es(1), "ngram_hashes"),
-      distinct = if (es.length > 2) litBool(es(2), "ngram_hashes") else true)),
-    "token_counts" -> (es => TokenCounts(es.head)),
-    "ws_token_hashes" -> (es => WsTokenHashes(es.head)),
-    "lsh_band_keys" -> (es => LshBandKeys(es.head,
-      litInt(es(1), "lsh_band_keys"), litInt(es(2), "lsh_band_keys"))),
-    "char_ngram_hashes" -> (es => CharNgramHashes(es.head,
-      litInt(es(1), "char_ngram_hashes"))),
-    "rolling_fp" -> (es => RollingFp(es.head, litLong(es(1), "rolling_fp"))),
-    "abi_word_tail_array" -> (es => WordTailArray(es.head,
-      litInt(es(1), "abi_word_tail_array"),
-      signed = if (es.length > 2) litBool(es(2), "abi_word_tail_array") else false)),
-    "quant_stats" -> (es => QuantStats(es.head, litInt(es(1), "quant_stats"))),
-    "winnow_hashes" -> (es => WinnowHashes(es.head, litInt(es(1), "winnow_hashes"))),
-    "abi_word_tail_slice_array" -> (es => WordTailSliceArray(es.head,
-      litInt(es(1), "abi_word_tail_slice_array"),
-      litString(es(2), "abi_word_tail_slice_array"))),
-    "abi_word_nonzero" -> (es => WordNonZero(es.head)),
-    "abi_nested_word_tail_array" -> (es => NestedWordTailArray(es.head,
-      litInt(es(1), "abi_nested_word_tail_array"),
-      signed = if (es.length > 2) litBool(es(2), "abi_nested_word_tail_array")
-        else false)),
-    "cms_estimate" -> (es => CmsEstimate(es(0), es(1))),
-    "nfc_normalize" -> (es => NfcNormalize(es.head)),
-    "bloom_might_contain" -> (es => BloomMightContain(es(0), es(1))),
-    "term_tf" -> (es => TermTf(es.head,
-      litStringSeq(es(1), "term_tf"))),
-    "abi_dyn_tail_array" -> (es => DynTailArray(es.head,
-      litInt(es(1), "abi_dyn_tail_array"),
-      asString = litBool(es(2), "abi_dyn_tail_array"),
-      fixedK = if (es.length > 3) litInt(es(3), "abi_dyn_tail_array") else -1)),
-    "dhash_bands" -> (es => DHashBands(es.head,
-      litInt(es(1), "dhash_bands"), litInt(es(2), "dhash_bands"))),
-    "quant_residual" -> (es => QuantResidual(es(0), es(1),
-      litInt(es(2), "quant_residual"))),
-    "dot_codes" -> (es => VectorDotCodes(es(0), es(1))),
-    "codes_dot" -> (es => CodesDot(es(0), es(1))),
-    "nearest_centroids" -> (es => NearestCentroids(es.head,
-      litDoubleMatrix(es(1), "nearest_centroids"),
-      litInt(es(2), "nearest_centroids"))))
-    // BpeEncode is deliberately NOT on the SQL surface: its merge table
+    "u256_to_decimal", "i256_to_decimal", "keccak256", "vector_dot",
+    "simhash64", "sig_agreement", "minhash_sig", "ngram_hashes",
+    "token_counts", "ws_token_hashes", "lsh_band_keys", "char_ngram_hashes",
+    "rolling_fp", "abi_word_tail_array", "quant_stats", "winnow_hashes",
+    "abi_word_tail_slice_array", "abi_word_nonzero",
+    "abi_nested_word_tail_array", "nfc_normalize", "bloom_might_contain",
+    "term_tf", "abi_dyn_tail_array", "dhash_bands", "quant_residual",
+    "dot_codes", "codes_dot", "nearest_centroids",
+  ).map(name => name -> Kernels.sql(name)) :+
+    ("cms_estimate" -> ((es: Seq[Expression]) => CmsEstimate(es(0), es(1))))
+    // bpe_encode is deliberately NOT on the SQL surface: its merge table
     // is a TRAINED artifact (bpeTrainMerges output, thousands of pairs),
     // not something a user types as a literal — the DataFrame API
     // (TextOps.bpeApplyStats) threads it from the training pass.
-
-  private def litInt(e: Expression, fn: String): Int = {
-    require(e.foldable, s"$fn: the count argument must be a literal")
-    e.eval() match {
-      case i: Int  => i
-      case l: Long if l >= Int.MinValue && l <= Int.MaxValue => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"$fn: expected int-range integer literal, got $other")
-    }
-  }
-
-  private def litLong(e: Expression, fn: String): Long = {
-    require(e.foldable, s"$fn: the count argument must be a literal")
-    e.eval() match {
-      case i: Int  => i.toLong
-      case l: Long => l
-      case other => throw new IllegalArgumentException(
-        s"$fn: expected integer literal, got $other")
-    }
-  }
-
-  private def litStringSeq(e: Expression, fn: String): Seq[String] = {
-    require(e.foldable, s"$fn: the term-list argument must be a literal array")
-    e.eval() match {
-      case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-        a.toObjectArray(org.apache.spark.sql.types.StringType).toSeq.map {
-          // String.valueOf(null) would fabricate the term "null"
-          case null => throw new IllegalArgumentException(
-            s"$fn: term list must not contain NULL elements")
-          case s => s.toString
-        }
-      case other => throw new IllegalArgumentException(
-        s"$fn: expected array<string> literal, got $other")
-    }
-  }
-
-  private def litString(e: Expression, fn: String): String = {
-    require(e.foldable, s"$fn: the kind argument must be a literal")
-    e.eval() match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-      case s: String => s
-      case other => throw new IllegalArgumentException(
-        s"$fn: expected string literal, got $other")
-    }
-  }
-
-  private def litDoubleMatrix(e: Expression, fn: String): Array[Array[Double]] = {
-    import org.apache.spark.sql.types._
-    require(e.foldable,
-      s"$fn: the centroid argument must be a literal array<array<numeric>>")
-    // accept every numeric element spelling (1.0 is DECIMAL in SQL, 1 is
-    // INT) — a raw ClassCastException for the natural literal forms is
-    // not an argument error a user can act on
-    val elemType = e.dataType match {
-      case ArrayType(ArrayType(t: NumericType, _), _) => t
-      case other => throw new IllegalArgumentException(
-        s"$fn: expected array<array<numeric>> literal, got $other")
-    }
-    def asDouble(x: Any): Double = x match {
-      case null => throw new IllegalArgumentException(
-        s"$fn: centroid components must not be NULL")
-      case d: java.lang.Double => d
-      case f: java.lang.Float => f.toDouble
-      case dec: Decimal => dec.toDouble
-      case n: java.lang.Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"$fn: non-numeric centroid component $other")
-    }
-    val a = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val rows = Array.tabulate(a.numElements()) { i =>
-      val inner = a.getArray(i)
-      if (inner == null) throw new IllegalArgumentException(
-        s"$fn: centroid rows must not be NULL")
-      inner.toObjectArray(elemType).map(asDouble)
-    }
-    // the kernel sizes its dim from row 0 — a ragged matrix would
-    // silently truncate (or index past) every other centroid
-    require(rows.nonEmpty && rows.forall(_.length == rows(0).length),
-      s"$fn: centroid rows must be uniform length, got " +
-        rows.map(_.length).mkString("[", ",", "]"))
-    rows
-  }
-
-  private def litBool(e: Expression, fn: String): Boolean = {
-    require(e.foldable, s"$fn: the flag argument must be a literal")
-    e.eval() match {
-      case b: Boolean => b
-      case other => throw new IllegalArgumentException(
-        s"$fn: expected boolean literal, got $other")
-    }
-  }
 
   /** Register every function on a live session, plus the decoded-param
     * rewrite via `experimental.extraOptimizations`. NOTE the experimental

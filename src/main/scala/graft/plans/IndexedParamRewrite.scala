@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-import graft.functions.{I256ToDecimal, U256ToDecimal}
+import graft.functions.KernelCall
 
 /** Rewrites filters on DECODED indexed params into filters on the raw
   * 32-byte topic words, so the idiomatic query
@@ -91,9 +91,15 @@ object IndexedParamRewrite extends Rule[LogicalPlan] with PredicateHelper {
       else Filter(rewritten.reduce(And), child)
   }
 
-  private def isDecode(e: Expression): Boolean = e match {
-    case _: U256ToDecimal | _: I256ToDecimal => true
-    case _ => false
+  private def isDecode(e: Expression): Boolean = Decode.unapply(e).isDefined
+
+  /** `(word, scale, signed)` of a `u256_to_decimal` / `i256_to_decimal`. */
+  private object Decode {
+    def unapply(e: Expression): Option[(Expression, Int, Boolean)] = e match {
+      case KernelCall("u256_to_decimal", Seq(c), Seq(s: Int)) => Some((c, s, false))
+      case KernelCall("i256_to_decimal", Seq(c), Seq(s: Int)) => Some((c, s, true))
+      case _ => None
+    }
   }
 
   /** Decode side of a comparison: `(topic attr, decode scale, signed,
@@ -105,12 +111,9 @@ object IndexedParamRewrite extends Rule[LogicalPlan] with PredicateHelper {
       : Option[(AttributeReference, Int, Boolean, Option[DecimalType])] = {
     val inner: Option[(Expression, Int, Boolean, Option[DecimalType])] =
       e match {
-        case U256ToDecimal(c, s) => Some((c, s, false, None))
-        case I256ToDecimal(c, s) => Some((c, s, true, None))
-        case Cast(U256ToDecimal(c, s), dt: DecimalType, _, _)
-            if dt.scale >= s => Some((c, s, false, Some(dt)))
-        case Cast(I256ToDecimal(c, s), dt: DecimalType, _, _)
-            if dt.scale >= s => Some((c, s, true, Some(dt)))
+        case Decode(c, s, signed) => Some((c, s, signed, None))
+        case Cast(Decode(c, s, signed), dt: DecimalType, _, _)
+            if dt.scale >= s => Some((c, s, signed, Some(dt)))
         case _ => None
       }
     inner.collect {

@@ -12,6 +12,18 @@ object GraftColumnShim {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
 
+/** `ExpectsInputTypes` for expressions outside this package:
+  * `AbstractDataType` and `TypeCollection` are `private[sql]`, so each
+  * input is declared as the list of types it accepts.
+  */
+trait GraftExpectsInputTypes extends catalyst.expressions.ExpectsInputTypes {
+  def acceptedTypes: Seq[Seq[types.DataType]]
+  override def inputTypes: Seq[types.AbstractDataType] = acceptedTypes.map {
+    case Seq(t) => t
+    case ts => types.TypeCollection(ts: _*)
+  }
+}
+
 /** Registers a temp SQL function on a LIVE session (`sessionState` is
   * `private[sql]`); the extensions path covers sessions created with
   * `spark.sql.extensions`.

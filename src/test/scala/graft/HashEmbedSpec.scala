@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 
 import graft.operators.{Similarity, TextOps}
 
-/** Hashing-trick text embedding ([[graft.functions.HashEmbedVec]] /
+/** Hashing-trick text embedding (`hash_embed_vec` /
   * [[TextOps.hashEmbed]]): kernel arithmetic pinned against an
   * independent reference fold, codepoint (BMP) semantics, the unit-float
   * adapter's geometry, and the end-to-end retrieval sanity the
