@@ -317,12 +317,6 @@ object EventDecoder {
     }
   }
 
-  /** Decode `df` (raw log schema, FIXTURES.md §1.2) per `schema`: appends
-    * one typed column per event param, null unless `topic0` matches the
-    * schema's signature hash. Anonymous events carry no signature topic —
-    * no match guard is possible (callers route by address), and indexed
-    * params shift down to `topic0`.
-    */
   /** Raw-log column names a decoded param must not shadow: the fold below
     * would silently replace the raw column mid-decode and corrupt every
     * later param's expression.
@@ -331,6 +325,12 @@ object EventDecoder {
     "address", "topic0", "topic1", "topic2", "topic3", "data",
     "block_number", "transaction_hash", "log_index", "removed")
 
+  /** Decode `df` (raw log schema, FIXTURES.md §1.2) per `schema`: appends
+    * one typed column per event param, null unless `topic0` matches the
+    * schema's signature hash. Anonymous events carry no signature topic —
+    * no match guard is possible (callers route by address), and indexed
+    * params shift down to `topic0`.
+    */
   def decode(df: DataFrame, schema: EventSchema): DataFrame = {
     val names = schema.params.map(_.name)
     val clash = names.filter(ReservedNames)

@@ -154,10 +154,6 @@ object EthJsonRpc {
     mapper.writeValueAsString(root)
   }
 
-  /** Result node, or a loud error for the JSON-RPC error envelope (the
-    * retry wrapper treats it as transient, like the reference's
-    * `retry(..)` around every call, stream.rs:159-166).
-    */
   /** Range-limit rejections, as public providers phrase them: code
     * −32005 ("limit exceeded") or a message naming a result/response
     * size cap. Deterministic — retrying the identical request cannot
@@ -172,6 +168,10 @@ object EthJsonRpc {
       m.contains("query timeout exceeded")
   }
 
+  /** Result node, or a loud error for the JSON-RPC error envelope (the
+    * retry wrapper treats it as transient, like the reference's
+    * `retry(..)` around every call, stream.rs:159-166).
+    */
   private def result(responseJson: String): JsonNode = {
     val root = mapper.readTree(responseJson)
     val err = root.get("error")

@@ -42,22 +42,28 @@ object BlockSink {
     * first call's `(block_bucket, ingest_batch)` partitions with
     * identical content. Distinct batches never clobber each other even
     * inside one block bucket.
+    *
+    * The write is the batch's ONLY action: a `foreachBatch` frame
+    * re-executes its whole plan per action, so an emptiness probe first
+    * would re-run a stateful stage (committing its state-store
+    * versions again) or re-fetch a stateless source's ranges. An empty
+    * batch needs no guard — the dynamic overwrite of zero rows touches
+    * no partition, writing no data file and no `block_bucket=`
+    * directory, and earlier epochs stay as they are.
     */
   def writeBatch(batch: DataFrame, batchId: Long, path: String,
       blockCol: String = "block_number",
       bucketBlocks: Long = 1000L): Unit = {
     require(bucketBlocks > 0, "bucketBlocks must be positive")
-    if (!batch.isEmpty) {
-      batch
-        .withColumn("block_bucket",
-          floor(col(blockCol) / lit(bucketBlocks)).cast("long"))
-        .withColumn("ingest_batch", lit(batchId))
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("block_bucket", "ingest_batch")
-        .parquet(path)
-    }
+    batch
+      .withColumn("block_bucket",
+        floor(col(blockCol) / lit(bucketBlocks)).cast("long"))
+      .withColumn("ingest_batch", lit(batchId))
+      .write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("block_bucket", "ingest_batch")
+      .parquet(path)
   }
 
   /** Start the streaming ingest: `stream` (any block-keyed frame — raw

@@ -1,11 +1,41 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{RpcLogSource, SimEthNode}
-import graft.streaming.BlockSink
+import graft.sources.{EthJsonRpc, JsonRpcTransport, RpcLogSource, SimEthNode}
+import graft.streaming.{BlockSink, StreamOps}
+
+/** [[SimEthNode]] that records every `eth_getLogs` range it serves under
+  * `tag`. The log lives in the companion object, JVM-global: each task
+  * fetches through its own deserialized copy of the transport, so a field
+  * would only count the copy's calls.
+  */
+final class RangeRecordingTransport(tag: String, node: SimEthNode)
+    extends JsonRpcTransport {
+  override def call(requestJson: String): String = {
+    val req = new com.fasterxml.jackson.databind.ObjectMapper().readTree(requestJson)
+    if (req.path("method").asText() == "eth_getLogs") {
+      val f = req.path("params").get(0)
+      RangeRecordingTransport.ranges
+        .computeIfAbsent(tag, _ => new java.util.concurrent.ConcurrentLinkedQueue)
+        .add((EthJsonRpc.parseQuantityHex(f.path("fromBlock").asText()),
+          EthJsonRpc.parseQuantityHex(f.path("toBlock").asText())))
+    }
+    node.call(requestJson)
+  }
+}
+
+object RangeRecordingTransport {
+  val ranges = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
+  def requested(tag: String): Seq[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    Option(ranges.get(tag)).toSeq.flatMap(_.asScala)
+  }
+}
 
 /** S7 write path: idempotent block-bucketed parquet ingest + compaction
   * (reference exactly-once contract, eth_event_stream/src/sink.rs:20).
@@ -221,5 +251,126 @@ class BlockSinkSpec extends AnyFunSuite {
     BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1)
     assert(spark.read.parquet(out)
       .select($"block_number", $"log_index", $"v").collect().toSet == want)
+  }
+
+  private def dataFiles(dir: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    walk(new java.io.File(dir))
+  }
+
+  private def bucketDirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list).toSeq.flatten
+      .filter(_.startsWith("block_bucket="))
+
+  private def offsetOf(s: String): Long = if (s == null) -1L else s.trim.toLong
+
+  test("synced flush into writeBatch runs the state stage once per " +
+      "micro-batch and writes the memory sink's cells") {
+    RpcLogSource.registerTransport("fake_sink_synced",
+      new SimEthNode(head = 60L, logsPerBlock = 2))
+    def flushed(): DataFrame = {
+      def leg(source: String, addr: String, step: Int) =
+        spark.readStream.format("graft.sources.RpcLogProvider")
+          .option("transport", "fake_sink_synced").option("confirmations", "0")
+          .option("address", addr).option("blockStep", step.toString).load()
+          .select(lit(source).as("event_type"), $"block_number",
+            graft.functions.abi.u256($"data").cast("double").as("value"))
+      StreamOps.flushIncludingSyncedStream(Seq(
+        "A" -> leg("A", "0x" + "aa" * 20, 10),
+        "B" -> leg("B", "0x" + "bb" * 20, 30)))
+    }
+    val mem = flushed().writeStream.format("memory").queryName("sink_synced_mem")
+      .outputMode(OutputMode.Append()).option("checkpointLocation", tmp()).start()
+    try mem.processAllAvailable() finally mem.stop()
+    val expected = spark.table("sink_synced_mem")
+      .select($"block_number", $"source", $"n_events", $"sum_value")
+      .as[(Long, String, Long, Double)].collect().toSeq
+
+    val out = tmp()
+    val q = flushed().writeStream
+      .outputMode(OutputMode.Append()).option("checkpointLocation", tmp())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        BlockSink.writeBatch(batch, id, out, bucketBlocks = 16L)
+      }
+      .start()
+    val progress =
+      try { q.processAllAvailable(); q.recentProgress.toSeq }
+      finally q.stop()
+    val stateful = progress.filter(_.stateOperators.nonEmpty)
+    assert(stateful.nonEmpty, "no progress event carried a state operator")
+    for (p <- stateful; op <- p.stateOperators)
+      assert(op.numStateStoreInstances == op.numShufflePartitions,
+        s"batch ${p.batchId}: ${op.numStateStoreInstances} state-store " +
+          s"instances for ${op.numShufflePartitions} shuffle partitions — " +
+          "the micro-batch ran its state stage more than once")
+
+    val written = spark.read.parquet(out)
+      .select($"block_number", $"source", $"n_events", $"sum_value")
+      .as[(Long, String, Long, Double)].collect().toSeq
+    assert(expected.map(_._1).toSet == (0L to 60L).toSet,
+      "vacuous fixture: the memory drain did not flush the whole chain")
+    assert(written.sorted == expected.sorted,
+      "writeBatch cells differ from the memory sink's drain of the same flush")
+  }
+
+  test("stateless ingest: BlockSink.start fetches each planned range once") {
+    val tag = "fake_sink_once"
+    RangeRecordingTransport.ranges.remove(tag)
+    RpcLogSource.registerTransport(tag,
+      new RangeRecordingTransport(tag, new SimEthNode(head = 80L, logsPerBlock = 2)))
+    val stream = spark.readStream.format("graft.sources.RpcLogProvider")
+      .option("transport", tag).option("confirmations", "0")
+      .option("blockStep", "20").option("fetchBlocks", "10").load()
+      .select($"block_number", $"log_index")
+    val q = BlockSink.start(stream, tmp(), tmp(), bucketBlocks = 16L)
+    val progress =
+      try { q.processAllAvailable(); q.recentProgress.toSeq }
+      finally q.stop()
+    // one eth_getLogs range per fetchBlocks partition of each batch's
+    // (startOffset, endOffset] block span
+    val planned = progress.flatMap { p =>
+      val (lo, hi) = (offsetOf(p.sources.head.startOffset) + 1,
+        offsetOf(p.sources.head.endOffset))
+      (lo to hi by 10L).map(a => (a, math.min(a + 9L, hi)))
+    }
+    assert(planned.flatMap { case (a, b) => a to b }.sorted == (0L to 80L),
+      "planned ranges must tile the chain")
+    val requested = RangeRecordingTransport.requested(tag)
+    val repeats = requested.groupBy(identity).collect {
+      case (r, rs) if rs.size > 1 => r -> rs.size
+    }
+    assert(repeats.isEmpty, s"ranges fetched more than once: $repeats")
+    assert(requested.sorted == planned.sorted)
+  }
+
+  test("writeBatch of an empty frame writes no data file and no bucket; " +
+      "an empty epoch leaves earlier epochs intact") {
+    val local = tmp()
+    BlockSink.writeBatch(rows(0 until 0), batchId = 0L, local, bucketBlocks = 16L)
+    // an empty micro-batch is usually NOT zero partitions but several
+    // empty ones (e.g. after a shuffle)
+    val split = tmp()
+    BlockSink.writeBatch(rows(0 until 8).repartition(4).filter($"v" < 0),
+      batchId = 0L, split, bucketBlocks = 16L)
+    for (out <- Seq(local, split)) {
+      assert(dataFiles(out).isEmpty, s"empty write left parquet files in $out")
+      assert(bucketDirs(out).isEmpty, s"empty write left bucket dirs in $out")
+    }
+
+    val out = tmp()
+    BlockSink.writeBatch(rows(0 until 20), batchId = 0L, out, bucketBlocks = 16L)
+    def snapshot() = (
+      spark.read.parquet(out)
+        .select($"block_number", $"log_index", $"v", $"block_bucket".cast("long"),
+          $"ingest_batch".cast("long"))
+        .as[(Long, Long, Long, Long, Long)].collect().toSet,
+      dataFiles(out).map(_.getPath).sorted)
+    val before = snapshot()
+    assert(before._1.size == 40)
+    BlockSink.writeBatch(rows(0 until 20).filter($"v" < 0), batchId = 1L, out,
+      bucketBlocks = 16L)
+    assert(snapshot() == before, "an empty epoch changed earlier epochs' rows or files")
   }
 }
