@@ -34,6 +34,9 @@ final class EngineSession(
     val spark: SparkSession,
     val config: StreamConfig = StreamConfig()) {
 
+  // checkpoint files go through the fork-free local filesystem
+  graft.streaming.NioLocalFs.install(spark)
+
   private val registry = mutable.LinkedHashMap.empty[(Seq[Byte], Seq[Byte]), StreamHandle]
   private var frozen = false
 

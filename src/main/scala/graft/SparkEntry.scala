@@ -129,7 +129,9 @@ object SparkEntry {
     *    [[drainStatePartitions]] and restored only once the query is done;
     *  - the checkpoint and any caller scratch dirs are deleted after the
     *    drain — the result lives in the memory sink, and repeated
-    *    Verify/Bench invocations must not accumulate /tmp garbage.
+    *    Verify/Bench invocations must not accumulate /tmp garbage;
+    *  - checkpoint files go through the fork-free local filesystem
+    *    ([[graft.streaming.NioLocalFs.install]]).
     */
   private def runStreamingGate(s: SparkSession, sinkName: String,
       out: DataFrame, scratch: Seq[String] = Nil,
@@ -137,6 +139,7 @@ object SparkEntry {
         org.apache.spark.sql.streaming.OutputMode.Append()): DataFrame = {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sg").toString
     s.catalog.dropTempView(sinkName)
+    graft.streaming.NioLocalFs.install(s)
     val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", drainStatePartitions(s))
     try {
@@ -161,10 +164,12 @@ object SparkEntry {
     * 32 that is 32 state commits per stateful op per trigger for
     * near-empty stores (the video twin chains TWO stateful dedups ×
     * 4 triggers). Scoped to [[drainStatePartitions]] for the drain and
-    * restored before the batch-twin plans run.
+    * restored before the batch-twin plans run. Checkpoint files go
+    * through the fork-free local filesystem, as in [[runStreamingGate]].
     */
   private def drainToParquet(s: SparkSession,
       out: DataFrame, run: String): Unit = {
+    graft.streaming.NioLocalFs.install(s)
     val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", drainStatePartitions(s))
     try {
@@ -756,6 +761,7 @@ object SparkEntry {
         new graft.sources.SimEthNode(head = 80L, logsPerBlock = 3))
       val out = java.nio.file.Files.createTempDirectory("graft_sink_rt").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ck").toString
+      graft.streaming.NioLocalFs.install(s)
       val stream = s.readStream.format("graft.sources.RpcLogProvider")
         .option("transport", "verify_sim_sink").option("confirmations", "0")
         .option("blockStep", "20").load()
