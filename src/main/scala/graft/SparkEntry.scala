@@ -1219,18 +1219,17 @@ object SparkEntry {
         .withColumn("sum_value", col("sum_value").cast("double"))),
 
     // J2 end-to-end through the STREAMING engine: replay through the
-    // DSv2 block source into the watermark-driven flush — dense
-    // block×source cells (EMPTY cells included, the defining J2
-    // semantic) emitted exactly once when the frontier passes each
-    // block. At drain the watermark sits past the last block (a late
-    // row for it would be dropped), so every block ≤ max is closed and
-    // the oracle is the batch block-align spine over the full range.
-    // "transfer" is a registered source with ZERO events anywhere —
-    // its all-zero cells come from the initial-state seeding (the
-    // reference's add_source registration), not from data.
+    // DSv2 block source into the stateful flush — dense block×source
+    // cells (EMPTY cells included, the defining J2 semantic) emitted
+    // exactly once, by the trigger that reads the chain past each
+    // block. At drain the chain's frontier is its last block, so every
+    // block ≤ max is closed and the oracle is the batch block-align
+    // spine over the full range. "transfer" is a registered source with
+    // ZERO events anywhere — its all-zero cells come from the
+    // registration (the reference's add_source), not from data.
     "j2_flush_stream" -> ((s, dir) => {
       // ~2-3 catch-up batches (the q_stream_interval_join rationale):
-      // the watermark advances mid-stream — the flush-at-frontier
+      // the frontier advances mid-stream — the flush-at-frontier
       // semantic is exercised — without paying 5+ trigger round trips
       val stream = graft.streaming.StreamOps.readBlockStream(
         s, s"$dir/events.parquet",
@@ -1245,11 +1244,11 @@ object SparkEntry {
     // topology (stream_multi.rs:105-114): TWO independent DSv2 block
     // streams at DIFFERENT rates (blockStep 1× vs 3×), one source per
     // leg, synced by the MIN frontier (sink.rs:187-197) into the
-    // stateful flush. Cells emit exactly once as the min watermark
-    // passes each block — never past the slower leg's frontier
-    // (StreamingSpec pins that mid-stream) — and at drain the dense
-    // spine ends at min(max block per source): the synced range, which
-    // is exactly what the oracle states.
+    // stateful flush. Cells emit exactly once, in the trigger where the
+    // min frontier reaches each block — never past the slower leg's
+    // frontier (StreamingSpec pins that mid-stream) — and at drain the
+    // dense spine ends at min(max block per source): the synced range,
+    // which is exactly what the oracle states.
     "j1_frontier_stream" -> ((s, dir) => {
       val path = s"$dir/events.parquet"
       val step = fifthOfHead(s, path)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Streaming state-store backend selection — the deployment knob that
   * decides WHERE stateful operators ([[StreamOps.statefulNetflow]]'s
   * `mapGroupsWithState` fold, [[StreamOps.distributedOrderedReducer]]'s
-  * per-block buffers, `flushCells`' per-source frontiers, dropDuplicates
-  * dedup state, sessionization windows) keep their state.
+  * per-block buffers, the J2 flush's one state row of per-leg frontiers
+  * and open cells, dropDuplicates dedup state, sessionization windows)
+  * keep their state.
   *
   * Spark's default provider (`HDFSBackedStateStoreProvider`) holds every
   * partition's ENTIRE state map on the executor HEAP, snapshotting deltas

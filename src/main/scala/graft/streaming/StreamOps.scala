@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -9,8 +11,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Streaming layer: the reference's sync/consume surface rebuilt on
   * Structured Streaming (SURVEY §7 phase 5).
   *
-  *  - multi-source min-watermark (J1) and exactly-once-per-range (S7) come
-  *    from the engine (checkpointed offsets, global watermark = min);
+  *  - exactly-once-per-range (S7) comes from the engine (checkpointed
+  *    offsets); the multi-source min frontier (J1) is the flush state's
+  *    own per-leg high-water marks, so a block is flushed by the trigger
+  *    that reads it, with each leg's watermark (global = min) dropping
+  *    rows for blocks already flushed;
   *  - the barrier (J3, sink.rs:200-213) is `processAllAvailable`;
   *  - keyed stateful reduction (A1) is `mapGroupsWithState`;
   *  - order-sensitive per-block reduction (A2) is `foreachBatch` over
@@ -186,31 +191,33 @@ object StreamOps {
         col("n_events"), col("sum_value"), col("window_from"), col("window_to"))
   }
 
-  /** Per-source flush state for [[flushIncludingStream]]: the highest
-    * block already emitted plus the open per-block cells
-    * `block → (n_events, cents)`. Cents keep the fold exact at 2 dp —
-    * the same decimal-exactness contract as the netflow paths.
+  /** Flush state of [[flushCells]] — the reference sink's own sync
+    * metadata (sink.rs:26-29): `lastFlushed` is its `bottom` (every
+    * block at or below it is published), `frontiers` its `source_vals`
+    * (per leg, the highest block that leg has closed) and `cells` the
+    * open `source → block → (n_events, cents)`. Cents keep the fold
+    * exact at 2 dp — the same decimal-exactness contract as the netflow
+    * paths.
     */
-  final case class FlushSrcState(lastFlushed: Long,
-      cells: Map[Long, (Long, Long)])
+  final case class FlushState(lastFlushed: Long, frontiers: Map[String, Long],
+      cells: Map[String, Map[Long, (Long, Long)]])
 
   /** J2 on an unbounded stream — the reference's block-aligned
     * `flush_including` (sink.rs:229-246) as a streaming operator: one
     * DENSE `(block_number, source, n_events, sum_value)` row per block ×
     * source cell — EMPTY cells included, the defining J2 semantic —
-    * emitted exactly once when the watermark (the J1 frontier on the
-    * 1-block-=-1-second axis) passes the block.
+    * emitted exactly once, by the trigger that reads the chain past the
+    * block (one leg: the whole chain, frontier = max block −
+    * `lateBlocks`).
     *
-    * The watermark is assigned BEFORE the registered-source filter, so
-    * the frontier advances with the whole chain: trailing blocks that
-    * carry only unregistered event types still close their cells, and
-    * the dense spine agrees with the batch `blockAlign` oracle built
-    * over all events. Registered sources are SEEDED into the stateful
-    * operator's initial state (`FlushSrcState(fromBlock−1, ∅)` per
-    * source — the reference's `add_source` registration,
-    * sink.rs:175-179), so a source with zero events in the stream still
-    * forms a group, arms its timeout on the first batch, and emits its
-    * zero cells as the frontier passes — no caller-side seeding.
+    * Every row moves the frontier, registered or not: trailing blocks
+    * that carry only unregistered event types still close their cells,
+    * and the dense spine agrees with the batch `blockAlign` oracle built
+    * over all events. Only rows of a registered source count in a cell.
+    * Every registered source is part of the state's emission (the
+    * reference's `add_source` registration, sink.rs:175-179), so a
+    * source with zero events in the stream still emits its zero cells —
+    * no caller-side seeding.
     */
   def flushIncludingStream(stream: DataFrame, sources: Seq[String],
       fromBlock: Long = 0L, lateBlocks: Long = 0L): DataFrame = {
@@ -218,63 +225,89 @@ object StreamOps {
       // +1 like dedupStream: block 0 must not sit AT the epoch
       .withColumn("block_ts", timestamp_seconds(col("block_number") + 1))
       .withWatermark("block_ts", s"$lateBlocks seconds")
-      .filter(col("event_type").isin(sources: _*))
-    flushCells(withWm, sources, fromBlock)
+      .select(lit("chain").as("leg"),
+        when(col("event_type").isin(sources: _*), col("event_type"))
+          .as("source"),
+        col("block_number"), col("value"), col("block_ts"))
+    flushCells(withWm, Seq("chain"), sources, fromBlock, lateBlocks)
   }
 
   /** J1 × J2 — the reference's defining topology: N INDEPENDENT source
     * streams synced by the MIN frontier (`stream_multi.rs:105-114`;
-    * sink.rs:187-197). Each leg is one registered source with its OWN
-    * watermark — its frontier is its own high-water mark, advancing at
-    * its own rate — and Spark's multi-watermark policy (min, the
-    * default) makes the stateful flush see exactly the reference's
-    * `min(source_vals)` frontier: no cell is emitted past the SLOWEST
-    * source's frontier, and at drain the dense spine ends at
-    * `min(max block per leg)` — the synced range.
+    * sink.rs:187-197). Each leg is one registered source; its frontier is
+    * its own high-water mark (max block − `lateBlocks`), advancing at its
+    * own rate, and a block is emitted by the trigger in which the SLOWEST
+    * leg's frontier reaches it — never past it, and not one trigger
+    * later. At drain the dense spine ends at `min(max block per leg)` —
+    * the synced range.
+    *
+    * Each leg also keeps its own watermark. Under Spark's `min`
+    * multi-watermark policy (the default) the global watermark after a
+    * trigger is the min frontier + 1, so a late row for an already
+    * emitted block is dropped. Any other policy drops the slower leg's
+    * rows as late, so this refuses to build under one.
+    *
+    * Old checkpoints: the flush state is one group per query
+    * ([[FlushState]]); checkpoints written by the earlier per-source
+    * state (one group per source, keyed by the source string) fail on
+    * restart with `STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE`. Start such a
+    * query on a fresh checkpoint: the sources replay from their
+    * configured start, and the drained cells equal the batch fold.
     */
   def flushIncludingSyncedStream(legs: Seq[(String, DataFrame)],
       fromBlock: Long = 0L, lateBlocks: Long = 0L): DataFrame = {
     require(legs.nonEmpty, "at least one source leg")
+    val policyKey = "spark.sql.streaming.multipleWatermarkPolicy"
+    val policy = legs.head._2.sparkSession.conf.get(policyKey, "min")
+    require(policy.equalsIgnoreCase("min"),
+      s"flushIncludingSyncedStream needs $policyKey=min, got '$policy': " +
+        "under any other policy Spark drops the slower leg's rows as late " +
+        "and the synced cells would be silently wrong")
     val unioned = legs.map { case (source, df) =>
-      // INTENTIONALLY filter-then-watermark — the opposite of
-      // flushIncludingStream's single-chain order: each leg's frontier
-      // must be its OWN high-water mark (sink.rs:26-29), so the
-      // watermark is computed from the rows that survive the source
-      // filter, not from the whole unfiltered chain.
+      // each leg's frontier is its OWN high-water mark (sink.rs:26-29),
+      // so its rows are the ones that survive the source filter
       df.filter(col("event_type") === source)
         .withColumn("block_ts", timestamp_seconds(col("block_number") + 1))
         .withWatermark("block_ts", s"$lateBlocks seconds")
+        .select(col("event_type").as("leg"), col("event_type").as("source"),
+          col("block_number"), col("value"), col("block_ts"))
     }.reduce(_ unionByName _)
-    flushCells(unioned, legs.map(_._1), fromBlock)
+    flushCells(unioned, legs.map(_._1), legs.map(_._1), fromBlock, lateBlocks)
   }
 
-  /** Shared stateful core of the J2 flush variants. `withWm` must carry
-    * `event_type`, `block_number`, `value`, and a watermarked `block_ts`
-    * on the block+1 axis.
+  /** Shared stateful core of the J2 flush variants. `rows` carries
+    * `leg`, `source` (null for a row that counts in no cell),
+    * `block_number`, `value` and a watermarked `block_ts` on the block+1
+    * axis.
     *
-    * Shape: `flatMapGroupsWithState` keyed by source with event-time
-    * timeout, initial state seeding every registered source. Rows buffer
-    * into per-block cells; every wake (data or timeout) flushes the
-    * contiguous run of closed blocks — block `b` is closed once
-    * `b+1 ≤ watermark`, i.e. when a late row for it would be dropped —
-    * from `lastFlushed+1` upward, empty blocks synthesized as zero
-    * cells, and re-arms the timeout just past the current watermark so
-    * the trailing no-data micro-batch drains the tail. State is O(open
-    * blocks × sources), watermark-bounded like the evicting window; each
-    * emitted cell leaves the state map immediately.
+    * Shape: `flatMapGroupsWithState` over ONE group per query holding a
+    * [[FlushState]]. Each trigger folds its rows into the cells, moves
+    * each leg's frontier to `max(frontier, block − lateBlocks)`, emits
+    * the dense cells over `(lastFlushed, min(frontiers)]` for every
+    * registered source — empty blocks synthesized as zero cells — and
+    * evicts them. So a block is written by the trigger in which the last
+    * leg reads it. State is O(open blocks × sources).
+    *
+    * The watermark closes nothing here. It is kept because the
+    * event-time timeout drops rows at or below it as late — after a
+    * trigger the (min) watermark is `min(frontiers) + 1`, so a row for an
+    * emitted block never reopens its cell (the fold skips them too) —
+    * and because Spark runs a no-data trigger after each watermark
+    * advance, which `processAllAvailable` callers observe. That trigger
+    * emits nothing; no timeout is ever armed.
     *
     * Exactness: values fold as integer CENTS under an ASSERTED 2-dp
-    * contract — a value with more than 2 decimal places fails the query
-    * loudly (`assert_true`) instead of silently rounding into the
-    * decimal(18,2) cast. The per-cell Long sum is exact to 2^63; the
-    * final `/ 100.0` double is correctly rounded while |sum_cents| ≤
-    * 2^53 (≈ 9e13 cents PER CELL — a per-block-per-source sum never
-    * near it; callers folding coarser cells should widen to a decimal
-    * state like [[statefulNetflow]]).
+    * contract — a value of a registered source with more than 2 decimal
+    * places fails the query loudly (`assert_true`) instead of silently
+    * rounding into the decimal(18,2) cast. The per-cell Long sum is exact
+    * to 2^63; the final `/ 100.0` double is correctly rounded while
+    * |sum_cents| ≤ 2^53 (≈ 9e13 cents PER CELL — a per-block-per-source
+    * sum never near it; callers folding coarser cells should widen to a
+    * decimal state like [[statefulNetflow]]).
     */
-  private def flushCells(withWm: DataFrame, sources: Seq[String],
-      fromBlock: Long): DataFrame = {
-    val spark = withWm.sparkSession
+  private def flushCells(rows: DataFrame, legs: Seq[String],
+      sources: Seq[String], fromBlock: Long, lateBlocks: Long): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
     val v2 = col("value").cast("decimal(18,2)")
     val cents = (v2 * 100).cast("long") +
@@ -291,58 +324,54 @@ object StreamOps {
               "is a 2-dp contract; fold decimal (statefulNetflow) for " +
               "finer scales"))).cast("long"),
         lit(0L))
-    val src = withWm
+    val src = rows
       // the watermark column must reach the stateful operator — the
       // event-time-timeout checker rejects a plan whose watermark
-      // attribute was projected away before flatMapGroupsWithState
-      .select(col("event_type").as("source"), col("block_number"),
-        cents.as("cents"), col("block_ts"))
-      .as[(String, Long, Long, java.sql.Timestamp)]
-    val initial = sources.distinct
-      .map(s => s -> FlushSrcState(fromBlock - 1, Map.empty[Long, (Long, Long)]))
-      .toDS().groupByKey(_._1).mapValues(_._2)
-    src.groupByKey(_._1)
-      .flatMapGroupsWithState[FlushSrcState, (Long, String, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout(), initial) {
-        (source: String, rows: Iterator[(String, Long, Long, java.sql.Timestamp)],
-            state: GroupState[FlushSrcState]) =>
-          val st = state.getOption
-            .getOrElse(FlushSrcState(fromBlock - 1, Map.empty))
-          var cells = st.cells
-          rows.foreach { case (_, b, c, _) =>
-            val (n, sum) = cells.getOrElse(b, (0L, 0L))
-            cells += b -> (n + 1, sum + c)
+      // attribute was projected away before flatMapGroupsWithState.
+      // `when` evaluates the cents (and its assert) on counted rows only
+      .select(col("leg"), col("source"), col("block_number"),
+        when(col("source").isNotNull, cents).as("cents"), col("block_ts"))
+      .as[(String, String, Long, Option[Long], java.sql.Timestamp)]
+    val distinctSources = sources.distinct
+    val seed = FlushState(fromBlock - 1,
+      legs.map(_ -> (fromBlock - 1)).toMap, Map.empty)
+    src.groupByKey(_ => 0)
+      .flatMapGroupsWithState[FlushState, (Long, String, Long, Long)](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (_: Int,
+            batch: Iterator[(String, String, Long, Option[Long], java.sql.Timestamp)],
+            state: GroupState[FlushState]) =>
+          val st = state.getOption.getOrElse(seed)
+          val frontiers = mutable.HashMap.from(st.frontiers)
+          val cells = mutable.HashMap.from(
+            st.cells.map { case (s, m) => s -> mutable.HashMap.from(m) })
+          batch.foreach { case (leg, source, b, c, _) =>
+            frontiers(leg) = math.max(frontiers(leg), b - lateBlocks)
+            if (source != null && b > st.lastFlushed) {
+              val m = cells.getOrElseUpdate(source, mutable.HashMap.empty)
+              val (n, sum) = m.getOrElse(b, (0L, 0L))
+              m(b) = (n + 1, sum + c.getOrElse(0L))
+            }
           }
-          // block b is final once rows for it would be dropped as late:
-          // Spark drops rows AT-or-below the watermark (ts ≤ wm — the
-          // empirically-pinned rule behind the +1 epoch shift in
-          // dedupStream/intervalJoinStream), so block b (ts b+1) is
-          // droppable exactly when b+1 ≤ wmSec
-          val wmSec = state.getCurrentWatermarkMs() / 1000L
-          val hi = wmSec - 1L
+          val hi = math.max(st.lastFlushed, legs.map(frontiers).min)
           // ITERATOR, never a materialized Seq: the dense spine is the
           // operator's contract, but a large flush span (fromBlock far
           // below the live range, or one corrupt far-future row moving
-          // the watermark) must stream through the state function, not
-          // allocate span-many tuples at once
-          // snapshot BEFORE the eviction below: the lazy iterator is
-          // consumed after this function returns, and `cells` is a var
-          // the closure would otherwise read post-filter (all zeros)
-          val flushed = cells
+          // the frontiers) must stream through the state function, not
+          // allocate span-many tuples at once. It reads `cells`, which
+          // is never mutated after this point — the eviction below
+          // builds the next state's maps instead
           val out = Iterator.iterate(st.lastFlushed + 1)(_ + 1)
-            .takeWhile(_ <= hi).map { b =>
-            val (n, sum) = flushed.getOrElse(b, (0L, 0L))
-            (b, source, n, sum)
-          }
-          cells = cells.filter(_._1 > hi)
-          state.update(FlushSrcState(math.max(st.lastFlushed, hi), cells))
-          // wake on the next watermark advance: timeouts fire only when
-          // the watermark moves STRICTLY past the armed timestamp, so
-          // arm 1 ms past it — a full second would miss a final
-          // one-block advance (wm + 1 s == new watermark never fires)
-          // and silently drop the tail cells
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-          out.iterator
+            .takeWhile(_ <= hi).flatMap { b =>
+              distinctSources.iterator.map { s =>
+                val (n, sum) = cells.get(s).flatMap(_.get(b)).getOrElse((0L, 0L))
+                (b, s, n, sum)
+              }
+            }
+          state.update(FlushState(hi, frontiers.toMap,
+            cells.iterator.map { case (s, m) => s -> m.filter(_._1 > hi).toMap }
+              .filter(_._2.nonEmpty).toMap))
+          out
       }
       .toDF("block_number", "source", "n_events", "sum_cents")
       // exact-cents ÷ 100.0: both operands exact ⇒ the correctly-rounded
@@ -827,7 +856,7 @@ object StreamOps {
     val spark = stream.sparkSession
     import spark.implicits._
     val src = stream
-      // +1 axis like flushCells: block b is closed once b+1 ≤ watermark
+      // the flush variants' +1 axis: block b is closed once b+1 ≤ watermark
       .withColumn("block_ts", timestamp_seconds(col("block_number") + 1))
       .withWatermark("block_ts", s"$lateBlocks seconds")
       // the watermark column must survive to the stateful operator
@@ -849,9 +878,10 @@ object StreamOps {
             fold(block, buf.sortBy(e => (e.log_index, e.event_id))).iterator
           } else {
             state.update(buf)
-            // wake on the next watermark advance (the flushCells +1 ms
-            // rule: timeouts fire when the watermark moves STRICTLY
-            // past the armed timestamp)
+            // wake on the next watermark advance: timeouts fire only
+            // when the watermark moves STRICTLY past the armed
+            // timestamp, so arm 1 ms past it — a full second would miss
+            // a final one-block advance and never fold the tail block
             state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
             Iterator.empty
           }

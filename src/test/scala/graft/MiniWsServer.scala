@@ -73,7 +73,16 @@ final class MiniWsServer(sessions: Seq[Seq[Long]],
     if (cleanClose) { // Close frame: opcode 8, 2-byte status 1000
       out.write(Array[Byte](0x88.toByte, 2, 0x03, 0xe8.toByte)); out.flush()
       try readFrame(in) catch { case _: Exception => } // client's close echo
-    } // else: abrupt TCP close in the caller's finally
+    } else {
+      // abrupt TCP close in the caller's finally, but only after the
+      // client has taken every head: it answers a Ping queued behind them
+      // only once they are delivered, so the drop cannot race the last
+      // notifications (the client may process EOF before frames it has
+      // read but not yet delivered)
+      writeRaw(out, fin = true, opcode = 9, Array.emptyByteArray)
+      sock.setSoTimeout(10000)
+      while (readFrame(in)._1 != 10) {} // until the Pong
+    }
   }
 
   private def handshake(in: InputStream, out: OutputStream): Unit = {

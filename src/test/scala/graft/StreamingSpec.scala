@@ -1189,22 +1189,42 @@ class StreamingSpec extends AnyFunSuite {
       try { q.processAllAvailable(); q.recentProgress.toSeq }
       finally q.stop()
     import scala.jdk.CollectionConverters._
-    // the min frontier AFTER batch i = min over sources of the committed
-    // endOffset (a BlockOffset is its block number); batch i's emission
-    // is governed by the watermark from batches < i, so it must stay at
-    // or below the PREVIOUS batch's min frontier — mid-stream, that is
-    // the slow leg's offset
-    val minEndByBatch = progress.map { p =>
-      p.batchId -> p.sources.map(_.endOffset.trim.toLong).min
+    // each source's committed endOffset after batch i (a BlockOffset is
+    // its block number); progress lists the sources in leg order —
+    // purchase (slow), then click (fast, at the head after batch 0)
+    val endsByBatch = progress.map { p =>
+      p.batchId -> p.sources.map(_.endOffset.trim.toLong).toSeq
     }.toMap
-    val checked = perBatch.asScala.toSeq.sortBy(_._1).flatMap {
-      case (batchId, maxBlk) =>
-        minEndByBatch.get(batchId - 1).map { frontier =>
-          assert(maxBlk <= frontier,
-            s"batch $batchId emitted block $maxBlk past the slower " +
-              s"source's frontier $frontier")
-          batchId
-        }
+    assert(endsByBatch(progress.map(_.batchId).min)(1) == headBlock,
+      "progress did not list the fast click leg second")
+    // the highest block of a leg's own event type it has delivered
+    // through end offset `end`: its frontier
+    val legBlocks = Seq("purchase", "click").map { t =>
+      batchEvents.filter($"event_type" === t).select($"block_number")
+        .as[Long].collect().sorted
+    }
+    def delivered(leg: Int, end: Long): Long =
+      legBlocks(leg).takeWhile(_ <= end).lastOption.getOrElse(-1L)
+    val emittedByBatch = perBatch.asScala.toMap
+    var emittedThrough = -1L
+    val checked = endsByBatch.keys.toSeq.sorted.flatMap { batchId =>
+      val ends = endsByBatch(batchId)
+      // safety: batch i emits nothing past the min frontier AFTER batch
+      // i — mid-stream, that is the slow leg's offset
+      val emitted = emittedByBatch.get(batchId).map { maxBlk =>
+        assert(maxBlk <= ends.min,
+          s"batch $batchId emitted block $maxBlk past the slower " +
+            s"source's frontier ${ends.min}")
+        emittedThrough = math.max(emittedThrough, maxBlk)
+        batchId
+      }
+      // liveness: by the end of batch i, every block both legs have
+      // delivered is emitted — no trigger of lag
+      val live = ends.indices.map(l => delivered(l, ends(l))).min
+      assert(emittedThrough >= live,
+        s"by the end of batch $batchId only blocks ≤ $emittedThrough " +
+          s"were emitted, but both legs had delivered through $live")
+      emitted
     }
     assert(checked.size >= 2, "need ≥2 emitting batches to pin the bound")
     // emission genuinely happened MID-stream (before the final batch),
@@ -1229,7 +1249,7 @@ class StreamingSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
     val got = spark.table("seeded_flush")
     // "ghost" never appears in the data: its dense zero cells come from
-    // the initial-state registration alone
+    // its registration alone
     val ghost = got.filter($"source" === "ghost")
       .select($"block_number", $"n_events", $"sum_value")
       .as[(Long, Long, Double)].collect().sortBy(_._1)
@@ -1244,6 +1264,29 @@ class StreamingSpec extends AnyFunSuite {
         Seq("purchase"), 0L, 30L)
       .select($"block_number", $"n_events").as[(Long, Long)].collect().toMap
     assert(purchase == expected)
+  }
+
+  test("flush cents assert reads registered rows only; unregistered rows " +
+      "still close blocks") {
+    // the 2-dp contract covers the cells' values: a >2-dp value of an
+    // unregistered type never counts, so it must not fail the query
+    val stream = StreamOps.readBlockStream(spark, path,
+        blockStep = 4L, confirmations = 0L, toBlock = Some(20L))
+      .withColumn("value", when($"event_type" === "purchase", $"value")
+        .otherwise($"value" + lit(0.001)))
+    val out = StreamOps.flushIncludingStream(stream, Seq("purchase"))
+    val q = out.writeStream.format("memory").queryName("flush_unregistered_3dp")
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", tmp()).start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("flush_unregistered_3dp")
+      .select($"block_number", $"n_events", $"sum_value")
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    val want = EventLog
+      .blockAlign(batchEvents.filter($"block_number" <= 20L), Seq("purchase"), 0L, 20L)
+      .select($"block_number", $"n_events", $"sum_value".cast("double"))
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert(got == want)
   }
 
   test("flush cents fold rejects >2-dp values loudly (2-dp contract)") {
