@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessionShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, EventDecoder, EventLog, Multimodal, Sampling, Similarity, Sketches, TextOps}
@@ -110,76 +110,68 @@ object SparkEntry {
       a.join(e, keys, "left_anti").agg((count(lit(1)) === 0).as("subset_ok")))
   }
 
-  /** State-store partition count scoped around the streaming drains:
-    * the partition count freezes from `shuffle.partitions` at the first
-    * micro-batch, and it should track STATE size, not input core count —
-    * the bench gates hold a few hundred rows of state, where 4 stores
-    * beat `cpus` near-empty ones. A production ingest with a large
-    * flagged/dedup set raises it via this conf (any int ≥ 1).
+  /** Shuffle and state-store width of every streaming drain: the gates
+    * hold a few hundred rows of state, where 4 stores beat `cpus`
+    * near-empty ones (each store loads and commits a version per
+    * trigger).
     */
-  private def drainStatePartitions(s: SparkSession): String =
-    s.conf.getOption("spark.graft.stream.drainStatePartitions").getOrElse("4")
+  private val DrainWidth = 4
 
-  /** Shared harness for the streaming end-to-end queries: drain `out`
-    * into a fresh memory sink and return the sink table.
-    *
-    *  - the aggregation/dedup state is a few hundred rows, so the state
-    *    partition count (frozen from `shuffle.partitions` at the FIRST
-    *    micro-batch, asynchronously after start) is scoped to
-    *    [[drainStatePartitions]] and restored only once the query is done;
-    *  - the checkpoint and any caller scratch dirs are deleted after the
-    *    drain — the result lives in the memory sink, and repeated
-    *    Verify/Bench invocations must not accumulate /tmp garbage;
-    *  - checkpoint files go through the fork-free local filesystem
-    *    ([[graft.streaming.NioLocalFs.install]]).
+  /** Shared harness for every streaming query a query body runs: `start`
+    * receives `out` rebound onto a private clone of `s` at [[DrainWidth]]
+    * and returns the started query, which is drained and stopped. The
+    * caller's session conf is never written. A stateful query's state
+    * width is fixed by the session its DataFrame is bound to when
+    * `start()` runs, so the private session sets it, and other work on
+    * `s` keeps its own width throughout. Checkpoint files go through the
+    * fork-free local filesystem ([[graft.streaming.NioLocalFs.install]],
+    * on the private session). Returns the private session, which holds a
+    * memory sink's table.
+    */
+  private def drain(s: SparkSession, out: DataFrame)(
+      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
+      : SparkSession = {
+    val p = GraftSessionShim.privateSession(s, DrainWidth)
+    graft.streaming.NioLocalFs.install(p)
+    try {
+      val q = start(GraftSessionShim.rebind(out, p))
+      try q.processAllAvailable() finally q.stop()
+    } finally GraftSessionShim.detachStreams(p)
+    p
+  }
+
+  /** Drain `out` into a fresh memory sink ([[drain]]) and return the sink
+    * table, bound to `s`. The checkpoint is deleted after the drain: the
+    * result lives in the memory sink, and repeated Verify/Bench
+    * invocations must not accumulate /tmp garbage. `rocksDb` keeps the
+    * query's state on the RocksDB provider.
     */
   private def runStreamingGate(s: SparkSession, sinkName: String,
-      out: DataFrame, scratch: Seq[String] = Nil,
+      out: DataFrame,
       outputMode: org.apache.spark.sql.streaming.OutputMode =
-        org.apache.spark.sql.streaming.OutputMode.Append()): DataFrame = {
+        org.apache.spark.sql.streaming.OutputMode.Append(),
+      rocksDb: Boolean = false): DataFrame = {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sg").toString
-    s.catalog.dropTempView(sinkName)
-    graft.streaming.NioLocalFs.install(s)
-    val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainStatePartitions(s))
-    try {
-      val q = out.writeStream.format("memory").queryName(sinkName)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
-      (ckpt +: scratch).foreach(deleteRecursively)
-    }
-    s.table(sinkName)
+    val p = try drain(s, out) { df =>
+        def go() = df.writeStream.format("memory").queryName(sinkName)
+          .outputMode(outputMode)
+          .option("checkpointLocation", ckpt)
+          .start()
+        if (rocksDb) graft.streaming.StateBackend.withRocksDb(df.sparkSession)(go())
+        else go()
+      } finally deleteRecursively(ckpt)
+    GraftSessionShim.rebind(p.table(sinkName), s)
   }
 
-  /** Drain a streaming DataFrame into `\$run/out` through the parquet
-    * sink (checkpoint at `\$run/ckpt`) — the file-sink twin of
-    * [[runStreamingGate]], with the SAME state-partition scoping: the
-    * decon twins' only state is the flagged-id dedup (a few hundred
-    * rows), but the state-store partition count freezes from
-    * `shuffle.partitions` at the first micro-batch, and at the bench's
-    * 32 that is 32 state commits per stateful op per trigger for
-    * near-empty stores (the video twin chains TWO stateful dedups ×
-    * 4 triggers). Scoped to [[drainStatePartitions]] for the drain and
-    * restored before the batch-twin plans run. Checkpoint files go
-    * through the fork-free local filesystem, as in [[runStreamingGate]].
+  /** Drain `out` into `\$run/out` through the parquet sink (checkpoint at
+    * `\$run/ckpt`): the file-sink twin of [[runStreamingGate]].
     */
   private def drainToParquet(s: SparkSession,
-      out: DataFrame, run: String): Unit = {
-    graft.streaming.NioLocalFs.install(s)
-    val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainStatePartitions(s))
-    try {
-      val q = out.writeStream.format("parquet")
-        .option("path", s"$run/out")
-        .option("checkpointLocation", s"$run/ckpt")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
-  }
+      out: DataFrame, run: String): Unit =
+    drain(s, out)(_.writeStream.format("parquet")
+      .option("path", s"$run/out")
+      .option("checkpointLocation", s"$run/ckpt")
+      .outputMode("append").start())
 
   /** Scratch the RETURNED DataFrame is still backed by (the caller
     * writes/collects it after this function returns, so it cannot be
@@ -761,15 +753,13 @@ object SparkEntry {
         new graft.sources.SimEthNode(head = 80L, logsPerBlock = 3))
       val out = java.nio.file.Files.createTempDirectory("graft_sink_rt").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ck").toString
-      graft.streaming.NioLocalFs.install(s)
       val stream = s.readStream.format("graft.sources.RpcLogProvider")
         .option("transport", "verify_sim_sink").option("confirmations", "0")
         .option("blockStep", "20").load()
         .select(col("block_number"), col("log_index"),
           graft.functions.abi.u256(col("data")).cast("bigint").as("v"))
-      val q = graft.streaming.BlockSink.start(stream, out, ckpt,
-        bucketBlocks = 16L)
-      try q.processAllAvailable() finally q.stop()
+      drain(s, stream)(graft.streaming.BlockSink.start(_, out, ckpt,
+        bucketBlocks = 16L))
       deleteRecursively(ckpt)
       onJvmExitDelete(out) // the result frame stays file-backed until written
       s.read.parquet(out)
@@ -1275,14 +1265,13 @@ object SparkEntry {
         blockStep = fifthOfHead(s, s"$dir/events.parquet") * 2,
         confirmations = 0L)
       val ckpt = java.nio.file.Files.createTempDirectory("graft_a1").toString
-      val q = graft.streaming.StreamOps.runSuffixReducer(stream, ckpt,
+      try drain(s, stream)(graft.streaming.StreamOps.runSuffixReducer(_, ckpt,
         (block, suffix) =>
           if (suffix.lengthCompare(2) >= 0 &&
             suffix.head.getAs[String]("event_type") == "view" &&
             suffix(1).getAs[String]("event_type") == "click")
-            matches.merge(block, 1L, (a, b) => a + b))
-      try q.processAllAvailable()
-      finally { q.stop(); deleteRecursively(ckpt) }
+            matches.merge(block, 1L, (a, b) => a + b)))
+      finally deleteRecursively(ckpt)
       import s.implicits._
       import scala.jdk.CollectionConverters._
       matches.asScala.toSeq.toDF("block_number", "n_matches")
@@ -1305,21 +1294,20 @@ object SparkEntry {
         s, s"$dir/events.parquet",
         blockStep = fifthOfHead(s, s"$dir/events.parquet") * 2,
         confirmations = 0L)
-      graft.streaming.StateBackend.withRocksDb(s) {
-        runStreamingGate(s, "a1_dist_gate",
-          graft.streaming.StreamOps.distributedOrderedReducer[(Long, Long)](
-            stream,
-            (block, events) => {
-              var n = 0L
-              var i = 0
-              while (i + 1 < events.size) {
-                if (events(i).event_type == "view" &&
-                  events(i + 1).event_type == "click") n += 1
-                i += 1
-              }
-              if (n > 0) Some((block, n)) else None
-            }).toDF("block_number", "n_matches"))
-      }
+      runStreamingGate(s, "a1_dist_gate",
+        graft.streaming.StreamOps.distributedOrderedReducer[(Long, Long)](
+          stream,
+          (block, events) => {
+            var n = 0L
+            var i = 0
+            while (i + 1 < events.size) {
+              if (events(i).event_type == "view" &&
+                events(i + 1).event_type == "click") n += 1
+              i += 1
+            }
+            if (n > 0) Some((block, n)) else None
+          }).toDF("block_number", "n_matches"),
+        rocksDb = true)
     }),
 
     // A1 as a typed distributed Aggregator (SURVEY §2.5): the netflow
@@ -2397,18 +2385,13 @@ object SparkEntry {
       val stream = s.readStream.schema(
           s.read.parquet(s"$streamIn/in").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
-      val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        // compactEvery=2: the 4-file stream folds its committed append +
-        // pairs partitions mid-run (IngestCompaction), so THIS gate also
-        // pins that the drained result is unchanged by the fold
-        val q = graft.streaming.StreamOps.nearDupIngestStream(stream,
-          s"$scratch/index", s"$run/append", s"$run/pairs", s"$run/ckpt",
-          n = 3, numHashes = 64, bands = 16, minJaccard = 0.5,
-          compactEvery = Some(2))
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
+      // compactEvery=2: the 4-file stream folds its committed append +
+      // pairs partitions mid-run (IngestCompaction), so THIS gate also
+      // pins that the drained result is unchanged by the fold
+      drain(s, stream)(graft.streaming.StreamOps.nearDupIngestStream(_,
+        s"$scratch/index", s"$run/append", s"$run/pairs", s"$run/ckpt",
+        n = 3, numHashes = 64, bands = 16, minJaccard = 0.5,
+        compactEvery = Some(2)))
       // a corpus slice with zero qualifying pairs leaves $run/pairs
       // schema-less (partition dirs only appear on non-empty epochs)
       val streamed = try
@@ -2474,15 +2457,10 @@ object SparkEntry {
       val stream = s.readStream.schema(
           s.read.parquet(s"$streamIn/in").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
-      val oldShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.StreamOps.dHashIngestStream(
-          Multimodal.attachMedia(stream), s"$scratch/index",
+      drain(s, Multimodal.attachMedia(stream))(
+        graft.streaming.StreamOps.dHashIngestStream(_, s"$scratch/index",
           s"$run/append", s"$run/pairs", s"$run/ckpt",
-          maxHamming = 6, compactEvery = Some(2))
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", oldShuffle)
+          maxHamming = 6, compactEvery = Some(2)))
       val streamed = try
           s.read.parquet(s"$run/pairs").select("d1", "d2", "hamming")
         catch { case _: org.apache.spark.sql.AnalysisException =>
@@ -4212,9 +4190,8 @@ object SparkEntry {
       val stream = s.readStream.schema(
           s.read.parquet(s"$streamIn/in").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
-      val q = graft.streaming.StreamOps.annIngestStream(stream, scratch,
-        s"$run/append", s"$run/ckpt")
-      try q.processAllAvailable() finally q.stop()
+      drain(s, stream)(graft.streaming.StreamOps.annIngestStream(_, scratch,
+        s"$run/append", s"$run/ckpt"))
       // fold ALL drained epochs into one partition before serving (the
       // stream is stopped, so every epoch is committed and foldable):
       // the gate below then asserts the compacted index answers
@@ -4277,9 +4254,8 @@ object SparkEntry {
         .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
       val vecStream = TextOps.hashEmbedUnit(textStream)
         .withColumnRenamed("doc_id", "vec_id")
-      val q = graft.streaming.StreamOps.annIngestStream(vecStream, scratch,
-        s"$run/append", s"$run/ckpt")
-      try q.processAllAvailable() finally q.stop()
+      drain(s, vecStream)(graft.streaming.StreamOps.annIngestStream(_,
+        scratch, s"$run/append", s"$run/ckpt"))
       graft.streaming.IngestCompaction.compact(s, s"$run/append",
         upToEpoch = Long.MaxValue, orderCols = Seq("list"))
       val centroids = Similarity.loadIvfPqCentroids(s, scratch)

@@ -747,6 +747,7 @@ object Dedup {
   def clusterLabels(docs: DataFrame, pairs: DataFrame, maxIter: Int = 5,
       idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.GraftCheckpointShim.releaseCheckpoint
+    import org.apache.spark.sql.GraftSessionShim.{privateSession, rebind}
     // symmetrize with a row-local explode, NOT a self-union: `pairs` is
     // usually an unpersisted candidate-join subtree (three banded pair
     // joins in the mm capstone), and a union evaluates that subtree once
@@ -758,47 +759,46 @@ object Dedup {
         struct(col("d2").as("d1"), col("d1").as("d2")))).as("e"))
       .select(col("e.d1").as("d1"), col("e.d2").as("d2"))
       .localCheckpoint(true)
-    // scope the LOOP's shuffle width to the edge set's size: every
-    // round shuffles pair-graph vertices (near-dup pairs are a tiny
-    // fraction of the corpus), and at the session default (cpus) each
-    // round pays per-partition fixed cost for near-empty partitions —
-    // measured 1.4 s vs 0.8 s per resolution at 256 edges, 32 vs 4
-    // partitions, times six consumer queries. Scale-adaptive, not a
-    // constant: ~1M edges (tens of MB) per partition, never above the
-    // session setting — a corpus-scale edge set keeps the full width.
-    // The count is one cheap job over the just-materialized checkpoint,
-    // and the conf is restored before the returned (lazy) plan runs.
+    // run the LOOP at a width sized to the edge set: every round
+    // shuffles pair-graph vertices (near-dup pairs are a tiny fraction of
+    // the corpus), and at the session default (cpus) each round pays
+    // per-partition fixed cost for near-empty partitions — measured
+    // 1.4 s vs 0.8 s per resolution at 256 edges, 32 vs 4 partitions,
+    // times six consumer queries. Scale-adaptive, not a constant: ~1M
+    // edges (tens of MB) per partition, never above the session setting
+    // — a corpus-scale edge set keeps the full width. The count is one
+    // cheap job over the just-materialized checkpoint. The loop runs on
+    // a private session at that width, so the caller's conf is never
+    // written; the final labels are bound back to the caller's session.
     val sess = docs.sparkSession
-    val oldParts = sess.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L,
-      math.min(oldParts.toLong, edges.count() / 1000000L + 1L))
-    sess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    val loopParts = math.max(1L, math.min(
+      sess.conf.get("spark.sql.shuffle.partitions").toLong,
+      edges.count() / 1000000L + 1L))
+    val loopEdges = rebind(edges, privateSession(sess, loopParts.toInt))
     // propagate ONLY over the pair-graph vertices — near-dup pairs are a
     // tiny fraction of the corpus, so the iterative joins run on the edge
     // set, not the full table; singletons rejoin unchanged at the end
-    var labels = edges.select(col("d1").as("doc_id")).distinct()
+    var labels = loopEdges.select(col("d1").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id"))
       .localCheckpoint(true)
-    try {
-      var i = 0
-      var converged = false
-      while (i < maxIter && !converged) {
-        val neighborMin = edges
-          .join(labels.withColumnRenamed("doc_id", "d2"), Seq("d2"))
-          .groupBy(col("d1").as("doc_id"))
-          .agg(min("cluster_id").as("neighbor_min"))
-        val next = labels.join(neighborMin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("cluster_id"), coalesce(col("neighbor_min"), col("cluster_id")))
-              .as("cluster_id"),
-            (col("neighbor_min") < col("cluster_id")).as("changed"))
-          .localCheckpoint(true)
-        converged = next.filter(col("changed")).isEmpty
-        releaseCheckpoint(labels) // superseded — `next` is materialized
-        labels = next.drop("changed")
-        i += 1
-      }
-    } finally sess.conf.set("spark.sql.shuffle.partitions", oldParts)
+    var i = 0
+    var converged = false
+    while (i < maxIter && !converged) {
+      val neighborMin = loopEdges
+        .join(labels.withColumnRenamed("doc_id", "d2"), Seq("d2"))
+        .groupBy(col("d1").as("doc_id"))
+        .agg(min("cluster_id").as("neighbor_min"))
+      val next = labels.join(neighborMin, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          least(col("cluster_id"), coalesce(col("neighbor_min"), col("cluster_id")))
+            .as("cluster_id"),
+          (col("neighbor_min") < col("cluster_id")).as("changed"))
+        .localCheckpoint(true)
+      converged = next.filter(col("changed")).isEmpty
+      releaseCheckpoint(labels) // superseded — `next` is materialized
+      labels = next.drop("changed")
+      i += 1
+    }
     releaseCheckpoint(edges)
     // the FINAL labels checkpoint backs the returned DataFrame — inside
     // a CacheScope it is released at scope exit (after which the result
@@ -807,7 +807,7 @@ object Dedup {
     val labelsFinal = labels
     graft.CacheScope.onExit(() => releaseCheckpoint(labelsFinal))
     docs.select(col(idCol).as("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
+      .join(rebind(labels, sess), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
   }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * as state grows (Spark 3.4+, SPARK-43421).
   *
   * The provider is read from the session conf at QUERY START, so this is
-  * a per-session toggle, not a rebuild: call [[useRocksDb]] before
-  * `writeStream.start()`. Existing checkpoints are NOT portable across
+  * a per-session toggle, not a rebuild: start the query inside
+  * [[withRocksDb]]. Existing checkpoints are NOT portable across
   * providers — Spark refuses a provider switch on a live checkpoint
   * (`OffsetSeqMetadata` pins it), so flipping the backend on an existing
   * stream means a new checkpoint dir and a replay from the source
@@ -49,20 +49,18 @@ object StateBackend {
   private val ChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  /** Route every SUBSEQUENTLY STARTED stateful query's state to RocksDB.
-    * `changelogCheckpointing=true` (the 100 TB default) uploads per-commit
-    * deltas instead of full SST snapshots; disable only for
-    * short-lived streams where snapshot simplicity beats commit latency.
+  /** Route every SUBSEQUENTLY STARTED stateful query's state to RocksDB,
+    * with changelog checkpointing: per-commit deltas instead of full SST
+    * snapshots.
     */
-  def useRocksDb(spark: SparkSession,
-      changelogCheckpointing: Boolean = true): Unit = {
+  private def useRocksDb(spark: SparkSession): Unit = {
     spark.conf.set(ProviderKey, RocksDbProvider)
-    spark.conf.set(ChangelogKey, changelogCheckpointing.toString)
+    spark.conf.set(ChangelogKey, "true")
   }
 
   /** Restore the heap-backed default (fixture/test scale). NOTE: this
     * restores Spark's FACTORY default, not whatever the session had
-    * before [[useRocksDb]] — a session that deliberately configured a
+    * before — a session that deliberately configured a
     * custom provider should scope the switch with [[withRocksDb]],
     * which captures and restores the prior conf values.
     */
@@ -74,15 +72,13 @@ object StateBackend {
   /** Run `body` with every stateful query STARTED inside it using the
     * RocksDB backend, then restore the session's PRIOR provider conf —
     * set back if it was set (including a custom third-party provider),
-    * unset if it was unset. The scoped form every gate/test should use:
-    * a bare [[useRocksDb]]/[[useDefault]] pair stomps a deliberately
-    * customized session.
+    * unset if it was unset. A query's provider is fixed when it starts,
+    * so the restore may run as soon as `start()` returns.
     */
-  def withRocksDb[T](spark: SparkSession,
-      changelogCheckpointing: Boolean = true)(body: => T): T = {
+  def withRocksDb[T](spark: SparkSession)(body: => T): T = {
     val priorProvider = spark.conf.getOption(ProviderKey)
     val priorChangelog = spark.conf.getOption(ChangelogKey)
-    useRocksDb(spark, changelogCheckpointing)
+    useRocksDb(spark)
     try body
     finally {
       priorProvider.fold(spark.conf.unset(ProviderKey))(

@@ -54,3 +54,42 @@ object GraftCheckpointShim {
       case _ => ()
     }
 }
+
+/** A private session for work that needs its own shuffle width: a clone
+  * of the caller's session (conf, temp views, functions, extensions)
+  * whose width is set on the clone alone. The caller's conf is never
+  * written, so another query on the caller's session keeps its width.
+  * A stateful streaming query's state width is fixed by the session its
+  * DataFrame is bound to at `start()`, which is why a built plan is
+  * [[rebind]]-ed onto the private session rather than repartitioned.
+  * `Dataset.ofRows` is `private[sql]`.
+  */
+object GraftSessionShim {
+  def privateSession(spark: SparkSession, shufflePartitions: Int): SparkSession = {
+    val p = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    p.conf.set(internal.SQLConf.SHUFFLE_PARTITIONS.key, shufflePartitions.toLong)
+    p
+  }
+
+  /** `df`'s analyzed plan bound to `spark`. */
+  def rebind(df: DataFrame, spark: SparkSession): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
+
+  /** Detach a private session's streaming listener bus from the
+    * SparkContext's bus once its queries have stopped. Each session that
+    * starts a streaming query gets its own bus, which Spark registers
+    * with the SparkContext and never removes, so without this every
+    * drain would leave one listener behind for the life of the context.
+    * Progress events still reach `SparkListener`s: a query posts them to
+    * the SparkContext's bus directly. The bus field is private, hence the
+    * reflection.
+    */
+  def detachStreams(p: SparkSession): Unit = {
+    val bus = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
+    bus.setAccessible(true)
+    p.sparkContext.listenerBus.removeListener(
+      bus.get(p.streams)
+        .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+  }
+}

@@ -7,4 +7,10 @@ package org.apache.spark
   */
 object GraftTestBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Sessions' streaming listener buses registered with `sc`'s bus. */
+  def streamingBuses(sc: SparkContext): Int = sc.listenerBus
+    .findListenersByClass[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus]()
+    .size
 }
