@@ -23,9 +23,10 @@ object SparkEntry {
   private val EventSources = Seq("click", "error", "purchase", "signup", "view")
 
   private def events(spark: SparkSession, dir: String): DataFrame = {
-    // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by default;
-    // read nanos as epoch-nano longs (time math stays exact, DuckDB parity
-    // via epoch_ns()).
+    // Spark rejects a TIMESTAMP(NANOS) column by default; this reads one as
+    // epoch-nano longs (time math stays exact, DuckDB parity via
+    // epoch_ns()). The bundled sf0.001–sf0.1 events carry microseconds,
+    // which the flag leaves alone.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     EventLog.withBlockKeys(spark.read.parquet(s"$dir/events.parquet"))
   }
@@ -125,8 +126,11 @@ object SparkEntry {
     * `start()` runs, so the private session sets it, and other work on
     * `s` keeps its own width throughout. Checkpoint files go through the
     * fork-free local filesystem ([[graft.streaming.NioLocalFs.install]],
-    * on the private session). Returns the private session, which holds a
-    * memory sink's table.
+    * on the private session). After the stop, the streaming listener
+    * buses of the private session and of the query's own clone of it are
+    * detached ([[GraftSessionShim.detachStreams]]), so a drain leaves no
+    * listener on the SparkContext's bus. Returns the private session,
+    * which holds a memory sink's table.
     */
   private def drain(s: SparkSession, out: DataFrame)(
       start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
@@ -135,7 +139,11 @@ object SparkEntry {
     graft.streaming.NioLocalFs.install(p)
     try {
       val q = start(GraftSessionShim.rebind(out, p))
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable()
+      finally {
+        q.stop()
+        GraftSessionShim.detachStreams(GraftSessionShim.sessionForStream(q))
+      }
     } finally GraftSessionShim.detachStreams(p)
     p
   }

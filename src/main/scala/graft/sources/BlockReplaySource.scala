@@ -15,38 +15,19 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Offset = highest block included so far (inclusive frontier). */
-case class BlockOffset(block: Long) extends Offset {
-  override def json: String = block.toString
-}
-
-object BlockOffset {
-  def of(o: Offset): Long = o match {
-    case BlockOffset(b) => b
-    case other          => other.json.trim.toLong
-  }
-}
-
-/** Shared option parsing for the replay source (see provider Scaladoc). */
+/** Options of the replay source (see provider Scaladoc). */
 private[sources] final case class ReplayParams(
-    path: String,
-    blockSize: Long,
-    blockStep: Long,
-    confirmations: Long,
-    fromBlock: Long,
-    toBlock: Long) {
-  require(blockStep >= 1, "blockStep must be >= 1")
+    path: String, blockSize: Long, window: BlockWindow) {
   // a zero/negative blockSize otherwise surfaces as a bare '/ by zero'
   // deep in head tracking with no pointer back to the option
   require(blockSize >= 1, "blockSize must be >= 1")
-  require(confirmations >= 0, "confirmations must be >= 0")
 }
 
 private[sources] object ReplayParams {
@@ -56,11 +37,7 @@ private[sources] object ReplayParams {
       path = o.getOrElse("path",
         throw new IllegalArgumentException("block-replay requires a `path` option")),
       blockSize = o.getOrElse("blocksize", o.getOrElse("blockSize", "10")).toLong,
-      blockStep = o.getOrElse("blockstep", o.getOrElse("blockStep", "1000")).toLong,
-      confirmations = o.getOrElse("confirmations", "2").toLong,
-      fromBlock = o.getOrElse("fromblock", o.getOrElse("fromBlock", "0")).toLong,
-      toBlock = o.get("toblock").orElse(o.get("toBlock")).map(_.toLong)
-        .getOrElse(Long.MaxValue))
+      window = BlockWindow(o))
   }
 }
 
@@ -185,11 +162,9 @@ private[graft] final class FooterHeadTracker(column: String) {
 
 /** Deterministic replay of the events table as a block-ordered streaming
   * source — the test-harness twin of the reference's RPC-backed stream
-  * (SURVEY §2.1), ported to DataSource V2 `MicroBatchStream`: each
-  * micro-batch covers at most `blockStep` blocks (chunked admission
-  * control, reference: eth_event_stream/src/stream.rs:214-226) and never
-  * beyond `head − confirmations` (reorg-safety lag, stream.rs:244-247) nor
-  * `toBlock` (bounded ranges, stream.rs:252-254).
+  * (SURVEY §2.1). Offsets, admission and the `Trigger.AvailableNow` drain
+  * are the [[BlockWindowStream]] core it shares with `rpc-logs`; the head
+  * is the table's highest block.
   *
   * Scale design: each micro-batch DELEGATES to Spark's own DSv2 parquet
   * `Batch` — a fresh `ParquetTable` per trigger (so appended files are
@@ -199,15 +174,9 @@ private[graft] final class FooterHeadTracker(column: String) {
   * coarsely). Nothing collects to the driver; partition parallelism is the
   * parquet split planning Spark would use for the same batch query. Head
   * discovery is footer-metadata only ([[FooterHeadTracker]]).
-  *
-  * Admission control implements `SupportsTriggerAvailableNow`: the target
-  * head is snapshotted at query start and drained in `blockStep` chunks,
-  * so `Trigger.AvailableNow` processes everything available then stops
-  * (the V1 source could not — one-shot `getOffset`).
   */
 class BlockReplayStream(streamSchema: StructType, params: ReplayParams)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
+    extends BlockWindowStream(params.window) {
   import params._
 
   require(streamSchema.fieldNames.contains("event_id"),
@@ -217,77 +186,8 @@ class BlockReplayStream(streamSchema: StructType, params: ReplayParams)
 
   private val headTracker = new FooterHeadTracker("event_id")
 
-  /** Monotonic head guard: a head that moves backwards (uncle/reorg
-    * resubmission) is ignored, keeping offsets non-decreasing
-    * (stream.rs:236-242).
-    */
-  private var maxSeenHead = Long.MinValue
-  private def currentHead(): Option[Long] = {
-    headTracker.maxValue(spark, path).foreach { maxId =>
-      val h = Math.floorDiv(maxId, blockSize)
-      if (h > maxSeenHead) maxSeenHead = h
-    }
-    if (maxSeenHead == Long.MinValue) None else Some(maxSeenHead)
-  }
-
-  /** Synced upper bound: head − confirmations, clamped to toBlock. */
-  private def syncedEnd(): Long =
-    currentHead().map(h => math.min(h - confirmations, toBlock))
-      .getOrElse(fromBlock - 1)
-
-  // Trigger.AvailableNow: freeze the drain target at query start; the
-  // chunked latestOffset below then walks to it and stops
-  private var availableNowTarget: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(syncedEnd())
-
-  override def initialOffset(): Offset = BlockOffset(fromBlock - 1)
-  override def deserializeOffset(json: String): Offset =
-    BlockOffset(json.trim.toLong)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "block-replay implements SupportsAdmissionControl; the engine calls latestOffset(start, limit)")
-
-  /** Engine-provided admission limit → a block budget, composed with the
-    * source's own `blockStep` cap (the tighter bound wins):
-    * `ReadMaxRows` maps through `blockSize` (a block spans `blockSize`
-    * event ids, so it admits at most that many rows), `ReadMaxFiles`
-    * counts blocks as the source's admission unit (it plans block ranges,
-    * not files), a composite takes the minimum of its parts, and
-    * `ReadMinRows`/all-available leave `blockStep` in charge.
-    */
-  private def blockBudget(limit: ReadLimit): Long = limit match {
-    case r: ReadMaxRows  => math.min(math.max(1L, r.maxRows() / blockSize), blockStep)
-    case f: ReadMaxFiles => math.min(math.max(1L, f.maxFiles().toLong), blockStep)
-    case c: CompositeReadLimit => c.getReadLimits.map(blockBudget).min
-    case _ => blockStep
-  }
-
-  /** Advance at most the admitted block budget past the committed start —
-    * restart resync is structural here: the engine hands us the
-    * checkpointed start, so a recovered query can never plan below its
-    * committed frontier.
-    */
-  // progress reporting reuses the LAST head this trigger computed:
-  // reportLatestOffset is called once per trigger right after
-  // latestOffset, and re-running full head discovery there doubled the
-  // per-trigger metadata cost (recursive listing / head RPC) — worse, a
-  // transient failure inside mere progress reporting killed the query
-  @volatile private var lastSyncedEnd: Long = Long.MinValue
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = BlockOffset.of(start)
-    val target = availableNowTarget.getOrElse(syncedEnd())
-    lastSyncedEnd = math.max(lastSyncedEnd, target)
-    val end = math.max(from, math.min(target, from + blockBudget(limit)))
-    if (end == from) start else BlockOffset(end)
-  }
-
-  override def reportLatestOffset(): Offset =
-    BlockOffset(math.max(lastSyncedEnd, fromBlock - 1))
+  override protected def head(): Option[Long] =
+    headTracker.maxValue(spark, path).map(Math.floorDiv(_, blockSize))
 
   @volatile private var currentFactory: PartitionReaderFactory = _
 
@@ -317,9 +217,6 @@ class BlockReplayStream(streamSchema: StructType, params: ReplayParams)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = currentFactory
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Exact range residual on top of the pushed parquet filters: stats-based
@@ -394,7 +291,7 @@ object BlockReplay {
   *
   * Options: `path` (required), `blockSize` (event_id → block derivation,
   * default 10), `blockStep` (max blocks/micro-batch, default 1000),
-  * `confirmations` (default 2), `fromBlock` (default 0), `toBlock`
+  * `confirmations` (default 2, ≥ 0), `fromBlock` (default 0), `toBlock`
   * (default unbounded). The emitted schema is the RAW parquet schema —
   * derived block keys and the reorg guard are plain expressions applied by
   * [[graft.streaming.StreamOps.readBlockStream]] post-load.
@@ -405,10 +302,11 @@ class BlockReplayProvider extends TableProvider
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val spark = SparkSession.active
-    // the events fixture carries TIMESTAMP(NANOS); the legacy nanos-as-long
-    // conf must be in effect for every read this source plans, so the
-    // session opts in for its lifetime (per-read scoping raced concurrent
-    // queries during the restore window — see round-2 notes)
+    // a TIMESTAMP(NANOS) table is readable only under the legacy
+    // nanos-as-long conf (the bundled sf0.001–sf0.1 events carry
+    // microseconds, which it leaves alone); it must be in effect for every
+    // read this source plans, so the session opts in for its lifetime
+    // (per-read scoping raced concurrent queries during the restore window)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(ReplayParams(options).path).schema
   }

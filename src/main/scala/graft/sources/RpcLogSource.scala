@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,11 +35,11 @@ import graft.model.Hex
   *    log rows with the engine's standard schema, so everything
   *    downstream (`withBlockKeys` is unnecessary — real block numbers
   *    ride along — decode, reorg guard) is shared with the replay path;
-  *  - the STREAM reuses the replay source's offset/admission mechanics:
-  *    `BlockOffset` frontier, `blockStep` chunked admission,
-  *    `confirmations` lag, `toBlock` clamp, monotonic head guard,
-  *    `Trigger.AvailableNow` drain — checkpoint-compatible semantics,
-  *    different byte source.
+  *  - the STREAM shares the replay source's offset/admission core
+  *    ([[BlockWindowStream]]): `BlockOffset` frontier, `blockStep`
+  *    chunked admission, `confirmations` lag, `toBlock` clamp, monotonic
+  *    head guard, `Trigger.AvailableNow` drain — checkpoint-compatible
+  *    semantics, different byte source.
   *
   * The sandbox has no network, so the HTTP transport is exercised at the
   * request/URL level only; everything from the codec up runs end-to-end
@@ -395,12 +395,10 @@ object RpcLogSource {
   * 1..3 = indexed event params).
   */
 private[sources] final case class RpcParams(
-    transport: JsonRpcTransport,
-    blockStep: Long, confirmations: Long, fromBlock: Long, toBlock: Long,
+    transport: JsonRpcTransport, window: BlockWindow,
     fetchBlocks: Long, addresses: Option[Seq[String]],
     topics: Seq[Option[Seq[String]]], headMode: String,
     wsUrl: Option[String] = None) {
-  require(blockStep >= 1, "blockStep must be >= 1")
   require(fetchBlocks >= 1, "fetchBlocks must be >= 1")
   require(topics.size == 4, s"topics must carry 4 slots, got ${topics.size}")
   require(headMode == "poll" || headMode == "subscribe",
@@ -427,11 +425,7 @@ private[sources] object RpcParams {
     val o = options.asScala
     RpcParams(
       transport = RpcLogSource.transportFor(o),
-      blockStep = o.getOrElse("blockstep", o.getOrElse("blockStep", "1000")).toLong,
-      confirmations = o.getOrElse("confirmations", "2").toLong,
-      fromBlock = o.getOrElse("fromblock", o.getOrElse("fromBlock", "0")).toLong,
-      toBlock = o.get("toblock").orElse(o.get("toBlock")).map(_.toLong)
-        .getOrElse(Long.MaxValue),
+      window = BlockWindow(o),
       // executor-side fetch granularity: one eth_getLogs call per
       // partition — the reference's block_step chunking
       // (stream.rs:214-226) mapped onto task parallelism
@@ -509,9 +503,10 @@ private[sources] object RpcRanges {
       .toArray
 }
 
-/** Streaming side: the replay source's offset/admission mechanics over
-  * the RPC transport. Offsets are the same inclusive `BlockOffset`
-  * frontier, so checkpoints restart-resync structurally (S7).
+/** Streaming side: the [[BlockWindowStream]] core the replay source
+  * shares, over the RPC transport. Offsets are the same inclusive
+  * `BlockOffset` frontier, so checkpoints restart-resync structurally
+  * (S7).
   *
   * Head discovery is pluggable (`headMode` option): `poll` asks
   * `eth_blockNumber` once per trigger; `subscribe` reads a
@@ -520,13 +515,12 @@ private[sources] object RpcRanges {
   * the trigger never blocks on the wire once the first head lands.
   */
 private[sources] class RpcLogStream(params: RpcParams)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
+    extends BlockWindowStream(params.window) {
   import params._
 
   private val poller = new RpcHeadTracker(transport)
   @volatile private var subscription: HeadSubscription = null
-  private def currentHead(): Option[Long] = headMode match {
+  override protected def head(): Option[Long] = headMode match {
     case "subscribe" =>
       if (subscription == null) synchronized {
         if (subscription == null)
@@ -542,46 +536,6 @@ private[sources] class RpcLogStream(params: RpcParams)
       subscription.awaitFirst(10000L)
     case _ => poller.currentHead()
   }
-  private def syncedEnd(): Long =
-    currentHead().map(h => math.min(h - confirmations, toBlock))
-      .getOrElse(fromBlock - 1)
-
-  private var availableNowTarget: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(syncedEnd())
-
-  override def initialOffset(): Offset = BlockOffset(fromBlock - 1)
-  override def deserializeOffset(json: String): Offset =
-    BlockOffset(json.trim.toLong)
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "rpc-logs implements SupportsAdmissionControl; the engine calls latestOffset(start, limit)")
-
-  private def blockBudget(limit: ReadLimit): Long = limit match {
-    // blocks are this source's admission unit, like the replay source
-    case f: ReadMaxFiles => math.min(math.max(1L, f.maxFiles().toLong), blockStep)
-    case _ => blockStep
-  }
-
-  // progress reporting reuses the LAST head this trigger computed:
-  // reportLatestOffset is called once per trigger right after
-  // latestOffset, and re-running full head discovery there doubled the
-  // per-trigger metadata cost (recursive listing / head RPC) — worse, a
-  // transient failure inside mere progress reporting killed the query
-  @volatile private var lastSyncedEnd: Long = Long.MinValue
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = BlockOffset.of(start)
-    val target = availableNowTarget.getOrElse(syncedEnd())
-    lastSyncedEnd = math.max(lastSyncedEnd, target)
-    val end = math.max(from, math.min(target, from + blockBudget(limit)))
-    if (end == from) start else BlockOffset(end)
-  }
-
-  override def reportLatestOffset(): Offset =
-    BlockOffset(math.max(lastSyncedEnd, fromBlock - 1))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     if (!params.matchable) Array.empty
@@ -591,25 +545,22 @@ private[sources] class RpcLogStream(params: RpcParams)
   override def createReaderFactory(): PartitionReaderFactory =
     new RpcRangeReaderFactory(transport, addressList, topicLists)
 
-  override def commit(end: Offset): Unit = ()
   override def stop(): Unit = {
     val s = subscription
     if (s != null) s.close()
   }
 }
 
-/** Batch side: the historical chunked scan (S3) over RPC — the full
-  * `[fromBlock, min(head − confirmations, toBlock)]` range split into
-  * `fetchBlocks` partitions, fetched executor-side in parallel.
+/** Batch side: the historical chunked scan (S3) over RPC — the
+  * window's `[fromBlock, syncedEnd]` range split into `fetchBlocks`
+  * partitions, fetched executor-side in parallel.
   */
 private[sources] class RpcLogBatch(params: RpcParams) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     if (!params.matchable) return Array.empty
-    val head = new RpcHeadTracker(params.transport)
-    val hi = head.currentHead()
-      .map(h => math.min(h - params.confirmations, params.toBlock))
-      .getOrElse(params.fromBlock - 1)
-    RpcRanges.partitions(params.fromBlock, hi, params.fetchBlocks)
+    val window = params.window
+    val hi = window.syncedEnd(new RpcHeadTracker(params.transport).currentHead())
+    RpcRanges.partitions(window.fromBlock, hi, params.fetchBlocks)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new RpcRangeReaderFactory(params.transport, params.addressList,
@@ -685,6 +636,9 @@ private[sources] final class RpcScanBuilder(base: RpcParams)
   private def withTopic(p: RpcParams, slot: Int, hs: Seq[String]): RpcParams =
     p.copy(topics = p.topics.updated(slot, meet(p.topics(slot), hs)))
 
+  private def within(p: RpcParams, lo: Long, hi: Long): RpcParams =
+    p.copy(window = p.window.within(lo, hi))
+
   /** Fold one source filter into the params; None = not translatable. */
   private def translate(p: RpcParams, f: Filter): Option[RpcParams] = f match {
     case EqualTo(c, v) if c.equalsIgnoreCase("address") =>
@@ -704,16 +658,15 @@ private[sources] final class RpcScanBuilder(base: RpcParams)
       if (hs.size == vs.length) Some(withTopic(p, topicSlot(c).get, hs))
       else None
     case EqualTo(c, v) if c.equalsIgnoreCase("block_number") =>
-      longValue(v).map(b => p.copy(
-        fromBlock = math.max(p.fromBlock, b), toBlock = math.min(p.toBlock, b)))
+      longValue(v).map(b => within(p, b, b))
     case GreaterThan(c, v) if c.equalsIgnoreCase("block_number") =>
-      longValue(v).map(b => p.copy(fromBlock = math.max(p.fromBlock, b + 1)))
+      longValue(v).map(b => within(p, b + 1, Long.MaxValue))
     case GreaterThanOrEqual(c, v) if c.equalsIgnoreCase("block_number") =>
-      longValue(v).map(b => p.copy(fromBlock = math.max(p.fromBlock, b)))
+      longValue(v).map(b => within(p, b, Long.MaxValue))
     case LessThan(c, v) if c.equalsIgnoreCase("block_number") =>
-      longValue(v).map(b => p.copy(toBlock = math.min(p.toBlock, b - 1)))
+      longValue(v).map(b => within(p, Long.MinValue, b - 1))
     case LessThanOrEqual(c, v) if c.equalsIgnoreCase("block_number") =>
-      longValue(v).map(b => p.copy(toBlock = math.min(p.toBlock, b)))
+      longValue(v).map(b => within(p, Long.MinValue, b))
     case _ => None
   }
 
@@ -749,7 +702,7 @@ private[sources] class RpcLogTable(params: RpcParams)
   * Options: `url` (HTTP endpoint) OR `transport` (registered name);
   * `blockStep` (max blocks per micro-batch, default 1000);
   * `fetchBlocks` (blocks per eth_getLogs call/partition, default 100);
-  * `confirmations` (default 2); `fromBlock`/`toBlock`; optional
+  * `confirmations` (default 2, ≥ 0); `fromBlock`/`toBlock`; optional
   * `address`/`topic0` server-side filters (comma-separated lists
   * allowed — the RPC spec's OR semantics); `headMode` `poll` (default,
   * one `eth_blockNumber` per trigger) or `subscribe` (background

@@ -30,9 +30,10 @@ object StreamOps {
     * applied here — identical per-row semantics to evaluating them inside
     * the source, but visible to Catalyst.
     *
-    * Opts the SESSION into `spark.sql.legacy.parquet.nanosAsLong` (the
-    * events fixtures carry TIMESTAMP(NANOS)); all graft readers share that
-    * convention, see SparkEntry.events.
+    * Opts the SESSION into `spark.sql.legacy.parquet.nanosAsLong`, so a
+    * TIMESTAMP(NANOS) table reads as epoch-nano longs; the bundled
+    * sf0.001–sf0.1 events carry microseconds, which the flag leaves alone.
+    * All graft readers share that convention, see SparkEntry.events.
     */
   def readBlockStream(
       spark: SparkSession,
@@ -600,41 +601,63 @@ object StreamOps {
   private val MinHashIndexCols = Seq("doc_id", "sig", "band_idx", "band_key")
   private val DHashIndexCols = Seq("doc_id", "bands", "band_idx", "band_key")
 
-  /** Shared ingest skeleton for band-index streams (MinHash text and
-    * dHash image): per epoch, write the batch's band rows as the
-    * epoch's own `ingest_batch=id` partition, pair them against
-    * (base ∪ earlier epochs), write the pairs likewise, and on the
-    * `compactEvery` cadence fold committed partitions FIRST
-    * ([[IngestCompaction]] — recover+compact run inside `foreachBatch`
-    * before the epoch's own work with `upTo = id − 1`, so only
-    * committed epochs fold and a replay re-heals idempotently).
+  /** The ingest skeleton every index-append stream runs on (the band
+    * indexes and the ANN codes): on the `compactEvery` cadence, fold
+    * each directory's committed partitions FIRST ([[IngestCompaction]] —
+    * recover+compact run inside `foreachBatch` before the epoch's own
+    * work with `upTo = id − 1`, so only committed epochs fold and a
+    * replay re-heals idempotently), then run `epoch` on a non-empty
+    * batch. `compactions` pairs each directory with the columns its
+    * folded files are ordered by.
+    */
+  private def ingestStream(in: DataFrame, checkpoint: String,
+      compactEvery: Option[Int], compactions: Seq[(String, Seq[String])])(
+      epoch: (DataFrame, Long) => Unit): StreamingQuery = {
+    require(compactEvery.forall(_ >= 1),
+      s"compactEvery=$compactEvery must be >= 1 (pass None to disable " +
+        "compaction) — a zero cadence would divide by zero mid-stream")
+    in.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        compactEvery.filter(m => id > 0 && id % m == 0).foreach { _ =>
+          compactions.foreach { case (d, orderCols) =>
+            IngestCompaction.recover(batch.sparkSession, d)
+            IngestCompaction.compact(batch.sparkSession, d, id - 1,
+              orderCols = orderCols)
+          }
+        }
+        if (!batch.isEmpty) epoch(batch, id)
+      }
+      .start()
+  }
+
+  /** `df` as the epoch's own `ingest_batch=id` partition of `dir`: a
+    * dynamic-partition OVERWRITE, so a replayed epoch rewrites exactly
+    * its own partition (the [[BlockSink.writeBatch]] idempotence story).
+    */
+  private def epochWrite(df: DataFrame, dir: String, id: Long): Unit =
+    df.withColumn("ingest_batch", lit(id))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_batch")
+      .parquet(dir)
+
+  /** Band-index streams (MinHash text, dHash image, audio) on the
+    * [[ingestStream]] skeleton: per epoch, write the batch's band rows
+    * as the epoch's own `ingest_batch=id` partition, pair them against
+    * (base ∪ earlier epochs) and write the pairs likewise.
     */
   private def bandIngestStream(inStream: DataFrame, baseIndex: DataFrame,
       indexCols: Seq[String], appendDir: String, pairsDir: String,
       checkpoint: String, compactEvery: Option[Int],
       bandRowsOf: DataFrame => DataFrame,
-      pairsOf: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
-    require(compactEvery.forall(_ >= 1),
-      s"compactEvery=$compactEvery must be >= 1 (pass None to disable " +
-        "compaction) — a zero cadence would divide by zero mid-stream")
-    inStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        compactEvery.filter(m => id > 0 && id % m == 0).foreach { _ =>
-          Seq(appendDir, pairsDir).foreach { d =>
-            IngestCompaction.recover(batch.sparkSession, d)
-            IngestCompaction.compact(batch.sparkSession, d, id - 1,
-              orderCols = if (d == appendDir)
-                Seq("band_idx", "band_key") else Seq("d1", "d2"))
-          }
-        }
-        if (!batch.isEmpty)
-          bandIngestEpoch(batch, baseIndex, indexCols, appendDir,
-            pairsDir, id, bandRowsOf, pairsOf)
-      }
-      .start()
-  }
+      pairsOf: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    ingestStream(inStream, checkpoint, compactEvery,
+      Seq(appendDir -> Seq("band_idx", "band_key"), pairsDir -> Seq("d1", "d2"))) {
+      (batch, id) => bandIngestEpoch(batch, baseIndex, indexCols, appendDir,
+        pairsDir, id, bandRowsOf, pairsOf)
+    }
 
   /** One epoch of the near-dup ingest, exposed so the replay-idempotence
     * contract is directly drillable: calling this twice with the same
@@ -706,13 +729,7 @@ object StreamOps {
       id: Long, bandRowsOf: DataFrame => DataFrame,
       pairsOf: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
-    def epochWrite(df: DataFrame, dir: String): Unit =
-      df.withColumn("ingest_batch", lit(id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(dir)
-    epochWrite(bandRowsOf(batch), appendDir)
+    epochWrite(bandRowsOf(batch), appendDir, id)
     val appended = spark.read.parquet(appendDir)
     val thisBanded = appended.filter(col("ingest_batch") === id)
       .drop("ingest_batch")
@@ -720,7 +737,7 @@ object StreamOps {
       .select(indexCols.map(col): _*)
       .unionByName(appended.filter(col("ingest_batch") < id)
         .drop("ingest_batch"))
-    epochWrite(pairsOf(older, thisBanded), pairsDir)
+    epochWrite(pairsOf(older, thisBanded), pairsDir, id)
   }
 
   /** Streaming ANN index ingest — the PQ mirror of [[nearDupIngestStream]],
@@ -766,30 +783,17 @@ object StreamOps {
       appendDir: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       compactEvery: Option[Int] = None): StreamingQuery = {
-    require(compactEvery.forall(_ >= 1),
-      s"compactEvery=$compactEvery must be >= 1 (pass None to disable " +
-        "compaction) — a zero cadence would divide by zero mid-stream")
     // load the frozen quantizer ONCE at stream start — per-epoch reloads
     // would re-collect nlist × dim doubles every micro-batch for a
     // codebook that cannot change under this contract
     val centroids = graft.operators.Similarity.loadIvfPqCentroids(
       vecStream.sparkSession, indexDir)
-    vecStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // same committed-epochs-only fold cadence as nearDupIngestStream;
-        // list-ordered files keep the serving join's nprobe filter
-        // row-group-prunable after the fold
-        compactEvery.filter(m => id > 0 && id % m == 0).foreach { _ =>
-          IngestCompaction.recover(batch.sparkSession, appendDir)
-          IngestCompaction.compact(batch.sparkSession, appendDir, id - 1,
-            orderCols = Seq("list"))
-        }
-        if (!batch.isEmpty)
-          annIngestEpoch(batch, centroids, appendDir, id, idCol, vecCol)
-      }
-      .start()
+    // list-ordered folded files keep the serving join's nprobe filter
+    // row-group-prunable after the fold
+    ingestStream(vecStream, checkpoint, compactEvery,
+      Seq(appendDir -> Seq("list"))) {
+      (batch, id) => annIngestEpoch(batch, centroids, appendDir, id, idCol, vecCol)
+    }
   }
 
   /** One epoch of the ANN ingest, exposed so the replay-idempotence
@@ -801,19 +805,16 @@ object StreamOps {
   def annIngestEpoch(batch: DataFrame, centroids: Array[Array[Double]],
       appendDir: String, id: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    graft.operators.Similarity.ivfPqCodeRows(batch, centroids, idCol, vecCol)
-      // drift metric rides the epoch write (see annIngestStream's
-      // codebook-drift scaladoc); epoch-unique name — replays re-emit
-      // under the same name in their own (new) query execution
-      .observe(s"ann_ingest_drift_$id",
-        avg(graft.operators.Similarity.relResidual).as("mean_rel_residual"),
-        max(graft.operators.Similarity.relResidual).as("max_rel_residual"),
-        count(lit(1)).as("n_vectors"))
-      .withColumn("ingest_batch", lit(id))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(appendDir)
+    epochWrite(
+      graft.operators.Similarity.ivfPqCodeRows(batch, centroids, idCol, vecCol)
+        // drift metric rides the epoch write (see annIngestStream's
+        // codebook-drift scaladoc); epoch-unique name — replays re-emit
+        // under the same name in their own (new) query execution
+        .observe(s"ann_ingest_drift_$id",
+          avg(graft.operators.Similarity.relResidual).as("mean_rel_residual"),
+          max(graft.operators.Similarity.relResidual).as("max_rel_residual"),
+          count(lit(1)).as("n_vectors")),
+      appendDir, id)
 
   /** Row shape for [[distributedOrderedReducer]] — the reference's
     * event identity (block, intra-block order key, id, type), i.e. what

@@ -76,20 +76,36 @@ object GraftSessionShim {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 
-  /** Detach a private session's streaming listener bus from the
-    * SparkContext's bus once its queries have stopped. Each session that
-    * starts a streaming query gets its own bus, which Spark registers
-    * with the SparkContext and never removes, so without this every
-    * drain would leave one listener behind for the life of the context.
+  /** Detach a session's streaming listener bus from the SparkContext's
+    * bus once its queries have stopped. Each session whose
+    * `StreamingQueryManager` is built gets its own bus, which Spark
+    * registers with the SparkContext and never removes: the drain's
+    * private session (it starts the query), and the clone a STATEFUL query
+    * runs its batches on ([[sessionForStream]]; its stateful operators ask
+    * `session.streams` for the state-store coordinator). Without this each
+    * drain would leave a listener behind for the life of the context.
     * Progress events still reach `SparkListener`s: a query posts them to
-    * the SparkContext's bus directly. The bus field is private, hence the
+    * the SparkContext's bus directly. A session whose manager was never
+    * built is left alone (building it would register a bus and any
+    * configured query listeners). The fields are private, hence the
     * reflection.
     */
   def detachStreams(p: SparkSession): Unit = {
-    val bus = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
-    bus.setAccessible(true)
-    p.sparkContext.listenerBus.removeListener(
-      bus.get(p.streams)
-        .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+    def field(c: Class[_], name: String, of: AnyRef): AnyRef = {
+      val f = c.getDeclaredField(name)
+      f.setAccessible(true)
+      f.get(of)
+    }
+    val manager = field(classOf[internal.SessionState], "streamingQueryManager",
+      p.asInstanceOf[classic.SparkSession].sessionState)
+    if (manager != null)
+      p.sparkContext.listenerBus.removeListener(
+        field(classOf[classic.StreamingQueryManager], "listenerBus", manager)
+          .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
   }
+
+  /** The clone of its session that a started query runs its batches on. */
+  def sessionForStream(q: streaming.StreamingQuery): SparkSession =
+    q.asInstanceOf[execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.sparkSessionForStream
 }

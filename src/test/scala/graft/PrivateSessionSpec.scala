@@ -164,11 +164,11 @@ class PrivateSessionSpec extends AnyFunSuite {
     for (_ <- 1 to 2) SparkEntry.queries("a1_suffix_reducer")(s, Sf).collect()
     assert(buses() == before,
       "each drain's private session left its streaming bus registered")
-    // a STATEFUL query's own session clone (made by Spark at start()) adds
-    // one bus per start, with or without a private session; the drain
-    // must add none on top of it
-    SparkEntry.queries("j2_flush_stream")(s, Sf).collect()
-    assert(buses() - before <= 1)
+    // a STATEFUL query's own session clone (made by Spark at start())
+    // registers a bus of its own; the drain detaches that one too
+    for (_ <- 1 to 2) SparkEntry.queries("j2_flush_stream")(s, Sf).collect()
+    assert(buses() == before,
+      "each stateful drain left its query clone's streaming bus registered")
   }
 
   test("clusterLabels runs its loop at the loop width on a width-8 session") {
@@ -207,11 +207,14 @@ class PrivateSessionSpec extends AnyFunSuite {
       ("graft/streaming/StateBackend.scala", "ChangelogKey",
         "the RocksDB changelog switch and its scoped restore"),
       ("graft/SparkEntry.scala", "nanosAsLong",
-        "TIMESTAMP(NANOS) read opt-in, set for the session's lifetime"),
+        "reads a TIMESTAMP(NANOS) parquet as longs (the bundled events " +
+          "carry micros); set for the session's lifetime"),
       ("graft/streaming/StreamOps.scala", "nanosAsLong",
-        "TIMESTAMP(NANOS) read opt-in, set for the session's lifetime"),
+        "reads a TIMESTAMP(NANOS) parquet as longs (the bundled events " +
+          "carry micros); set for the session's lifetime"),
       ("graft/sources/BlockReplaySource.scala", "nanosAsLong",
-        "TIMESTAMP(NANOS) read opt-in, set for the session's lifetime"),
+        "reads a TIMESTAMP(NANOS) parquet as longs (the bundled events " +
+          "carry micros); set for the session's lifetime"),
       ("graft/ScaleProbe.scala", "autoBroadcastJoinThreshold",
         "a probe main flipping the session it built; no other caller"))
     val root = java.nio.file.Paths.get("src/main/scala")

