@@ -65,6 +65,11 @@ private[sources] object BlockWindow {
   * their default limit, which is the only limit the engine passes a
   * source, so the budget is `blockStep` alone.
   *
+  * The head guard here is the only one: a source's `head()` reports what
+  * it reads, a regressing head included, and None when it cannot read
+  * one; either leaves the highest head seen in place, so offsets never
+  * decrease and an outage keeps serving the last known head.
+  *
   * A source supplies the head and the reads: `head()`,
   * `planInputPartitions`, `createReaderFactory`, and `stop` if it holds a
   * resource.
@@ -73,7 +78,7 @@ private[sources] abstract class BlockWindowStream(window: BlockWindow)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  /** The chain head now, or None while it is unknown. */
+  /** The chain head as read now, or None when it cannot be read. */
   protected def head(): Option[Long]
 
   // a head that moves backwards (uncle/reorg resubmission) is ignored,

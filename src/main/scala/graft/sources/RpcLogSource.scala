@@ -191,6 +191,13 @@ object EthJsonRpc {
   def parseBlockNumber(responseJson: String): Long =
     parseQuantityHex(result(responseJson).asText())
 
+  /** The node's head: one `eth_blockNumber`, retried with backoff (B3).
+    * A node that stays down past the retry burst throws.
+    */
+  def blockNumber(transport: JsonRpcTransport): Long =
+    Retry.withBackoff()(() =>
+      parseBlockNumber(transport.call(blockNumberRequest(1L))))
+
   /** Parse an `eth_getLogs` response. Pending-log entries (null
     * blockNumber/logIndex per spec) are rejected — this engine ingests
     * only mined logs, like the reference's confirmed ranges.
@@ -217,34 +224,6 @@ object EthJsonRpc {
   }
 }
 
-/** Head discovery over the transport (`eth_blockNumber` polling — the
-  * pull twin of the reference's WebSocket head subscription,
-  * data_feed/block.rs:17-68) with the same monotonic guard as the
-  * replay source: a head that moves backwards (uncle resubmission) is
-  * ignored so offsets never regress (stream.rs:236-242).
-  */
-final class RpcHeadTracker(transport: JsonRpcTransport) {
-  private var maxSeen = Long.MinValue
-  /** Most recent poll failure (observability, like [[HeadSubscription]]). */
-  @volatile private[graft] var lastError: Throwable = null
-  def currentHead(): Option[Long] = {
-    // an outage longer than the retry burst must NOT kill the streaming
-    // query (the reference reconnects forever, block.rs:54-61): serve
-    // the last known head — the monotonic frontier stays correct, the
-    // batch just doesn't advance — or None before the first success
-    // (syncedEnd then plans an empty range and the next trigger retries)
-    try {
-      val h = Retry.withBackoff()(() =>
-        EthJsonRpc.parseBlockNumber(
-          transport.call(EthJsonRpc.blockNumberRequest(1L))))
-      if (h > maxSeen) maxSeen = h
-    } catch {
-      case scala.util.control.NonFatal(e) => lastError = e
-    }
-    if (maxSeen == Long.MinValue) None else Some(maxSeen)
-  }
-}
-
 /** One head-subscription SESSION — the seam a real deployment implements
   * over a WebSocket `eth_subscribe("newHeads")`. `connect()` either
   * returns the session's announcement iterator or throws (connection
@@ -255,29 +234,13 @@ trait HeadFeed {
   def connect(): Iterator[Long]
 }
 
-/** A head feed over the JSON-RPC transport: each `next()` asks
-  * `eth_blockNumber`, each session serves `pollsPerSession` announcements
-  * then "disconnects". In production a WS [[HeadFeed]] replaces this; the
-  * finite-session variant exists so [[SimEthNode.headSequence]] can drill
-  * disconnect/reconnect deterministically.
-  */
-final class RpcHeadFeed(transport: JsonRpcTransport,
-    pollsPerSession: Int = Int.MaxValue, pollIntervalMs: Long = 0L,
-    sleep: Long => Unit = Thread.sleep) extends HeadFeed {
-  override def connect(): Iterator[Long] =
-    (0 until pollsPerSession).iterator.map { i =>
-      if (i > 0 && pollIntervalMs > 0) sleep(pollIntervalMs)
-      EthJsonRpc.parseBlockNumber(
-        transport.call(EthJsonRpc.blockNumberRequest(1L)))
-    }
-}
-
 /** PUSH-based head subscription — the reference's `BlockNotify` watcher
   * (data_feed/block.rs:17-68) re-expressed as a latest-value channel: a
-  * daemon pump drains the feed into one atomic max (the same monotonic
-  * guard as [[RpcHeadTracker]] — a regressing announcement never moves
-  * the head backwards), and readers take the latest value without ever
-  * touching the wire. Reconnect policy matches the reference: up to
+  * daemon pump drains the feed into one atomic cell, and readers take the
+  * latest announced head without ever touching the wire. The channel
+  * reports what the feed says, a regressing head included; the stream
+  * that reads it ([[BlockWindowStream]]) keeps offsets monotonic.
+  * Reconnect policy matches the reference: up to
   * `triesPerConnect` backoff attempts per connect (block.rs:25-26), and
   * an INFINITE outer loop that re-subscribes after any disconnect or
   * exhausted retry burst (block.rs:54-61) until `close()`.
@@ -299,10 +262,7 @@ final class HeadSubscription(feed: HeadFeed,
         val it = Retry.withBackoff(
           attempts = triesPerConnect, initialDelayMs = backoffMs,
           sleep = sleep)(() => { connects += 1; feed.connect() })
-        while (!closed && it.hasNext) {
-          val h = it.next()
-          latest.getAndUpdate(prev => math.max(prev, h))
-        }
+        while (!closed && it.hasNext) latest.set(it.next())
         // iterator exhausted = disconnect: fall through, outer loop
         // re-subscribes (the reference's `loop { … }`, block.rs:54-61)
       } catch {
@@ -397,12 +357,14 @@ object RpcLogSource {
 private[sources] final case class RpcParams(
     transport: JsonRpcTransport, window: BlockWindow,
     fetchBlocks: Long, addresses: Option[Seq[String]],
-    topics: Seq[Option[Seq[String]]], headMode: String,
-    wsUrl: Option[String] = None) {
+    topics: Seq[Option[Seq[String]]], wsUrl: Option[String] = None) {
   require(fetchBlocks >= 1, "fetchBlocks must be >= 1")
   require(topics.size == 4, s"topics must carry 4 slots, got ${topics.size}")
-  require(headMode == "poll" || headMode == "subscribe",
-    s"headMode must be poll|subscribe, got $headMode")
+  // any other scheme fails every WebSocket connect, which the subscription
+  // would retry forever while each trigger waits out `awaitFirst`
+  require(wsUrl.forall(u => Set("ws", "wss")(
+      scala.util.Try(new java.net.URI(u).getScheme.toLowerCase).getOrElse(""))),
+    s"wsUrl must be a ws:// or wss:// URI, got ${wsUrl.getOrElse("")}")
 
   def matchable: Boolean =
     addresses.forall(_.nonEmpty) && topics.forall(_.forall(_.nonEmpty))
@@ -432,7 +394,6 @@ private[sources] object RpcParams {
       fetchBlocks = o.getOrElse("fetchblocks", o.getOrElse("fetchBlocks", "100")).toLong,
       addresses = o.get("address").map(hexList),
       topics = (0 to 3).map(i => o.get(s"topic$i").map(hexList)),
-      headMode = o.getOrElse("headmode", o.getOrElse("headMode", "poll")),
       wsUrl = o.get("wsurl").orElse(o.get("wsUrl")))
   }
 }
@@ -508,33 +469,35 @@ private[sources] object RpcRanges {
   * `BlockOffset` frontier, so checkpoints restart-resync structurally
   * (S7).
   *
-  * Head discovery is pluggable (`headMode` option): `poll` asks
-  * `eth_blockNumber` once per trigger; `subscribe` reads a
-  * [[HeadSubscription]] latest-value channel fed by a background pump
-  * with the reference's reconnect policy (data_feed/block.rs:17-68) —
-  * the trigger never blocks on the wire once the first head lands.
+  * `head()` reports the head it reads and leaves the monotonic guard to
+  * [[BlockWindowStream]]. Without `wsUrl` it asks `eth_blockNumber` once
+  * per trigger; a node that stays down past the retry burst yields None
+  * (the stream keeps its last known head) and the error lands in
+  * `lastHeadError`, so an outage never kills the query. With `wsUrl` it
+  * reads a [[HeadSubscription]] over [[WsHeadFeed]], the reference's
+  * `eth_subscribe("newHeads")` watcher with its reconnect policy
+  * (data_feed/block.rs:17-68) — the trigger never blocks on the wire once
+  * the first head lands.
   */
-private[sources] class RpcLogStream(params: RpcParams)
+private[graft] class RpcLogStream private[sources] (params: RpcParams)
     extends BlockWindowStream(params.window) {
   import params._
 
-  private val poller = new RpcHeadTracker(transport)
+  /** The last failed `eth_blockNumber` poll (observability). */
+  @volatile private[graft] var lastHeadError: Throwable = null
   @volatile private var subscription: HeadSubscription = null
-  override protected def head(): Option[Long] = headMode match {
-    case "subscribe" =>
+  override protected def head(): Option[Long] = wsUrl match {
+    case Some(u) =>
       if (subscription == null) synchronized {
         if (subscription == null)
-          // with `wsUrl` set this is the reference's exact transport
-          // (WS eth_subscribe newHeads, block.rs:22-28); without it, a
-          // polling fallback feed at a 50 ms announcement cadence (the
-          // pump must not busy-spin — a real WS feed blocks in next())
-          subscription = new HeadSubscription(wsUrl match {
-            case Some(u) => new WsHeadFeed(java.net.URI.create(u))
-            case None    => new RpcHeadFeed(transport, pollIntervalMs = 50L)
-          })
+          subscription = new HeadSubscription(new WsHeadFeed(java.net.URI.create(u)))
       }
       subscription.awaitFirst(10000L)
-    case _ => poller.currentHead()
+    case None =>
+      try Some(EthJsonRpc.blockNumber(transport))
+      catch {
+        case scala.util.control.NonFatal(e) => lastHeadError = e; None
+      }
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
@@ -553,13 +516,15 @@ private[sources] class RpcLogStream(params: RpcParams)
 
 /** Batch side: the historical chunked scan (S3) over RPC — the
   * window's `[fromBlock, syncedEnd]` range split into `fetchBlocks`
-  * partitions, fetched executor-side in parallel.
+  * partitions, fetched executor-side in parallel. A node that does not
+  * answer `eth_blockNumber` fails the scan: an unknown head has no range
+  * to plan.
   */
 private[sources] class RpcLogBatch(params: RpcParams) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     if (!params.matchable) return Array.empty
     val window = params.window
-    val hi = window.syncedEnd(new RpcHeadTracker(params.transport).currentHead())
+    val hi = window.syncedEnd(Some(EthJsonRpc.blockNumber(params.transport)))
     RpcRanges.partitions(window.fromBlock, hi, params.fetchBlocks)
   }
   override def createReaderFactory(): PartitionReaderFactory =
@@ -704,13 +669,11 @@ private[sources] class RpcLogTable(params: RpcParams)
   * `fetchBlocks` (blocks per eth_getLogs call/partition, default 100);
   * `confirmations` (default 2, ≥ 0); `fromBlock`/`toBlock`; optional
   * `address`/`topic0` server-side filters (comma-separated lists
-  * allowed — the RPC spec's OR semantics); `headMode` `poll` (default,
-  * one `eth_blockNumber` per trigger) or `subscribe` (background
-  * [[HeadSubscription]] latest-value channel with reconnects); `wsUrl`
-  * (with `headMode=subscribe`: feed the channel from a real WebSocket
-  * `eth_subscribe("newHeads")` via [[WsHeadFeed]] — the reference's
-  * http-url + ws-url pairing, block.rs:43-47 — instead of the polling
-  * fallback over the HTTP transport).
+  * allowed — the RPC spec's OR semantics); `wsUrl` (a `ws://` or
+  * `wss://` URI; streams then take the head from a WebSocket
+  * `eth_subscribe("newHeads")` [[HeadSubscription]] instead of one
+  * `eth_blockNumber` per trigger — the reference's http-url + ws-url
+  * pairing, block.rs:43-47).
   *
   * Batch reads additionally push `filter(...)` predicates on
   * `address`/`topic0`/`block_number` into the request — see

@@ -33,8 +33,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * yields one head. A notification without a parseable `number` ends the
   * session (the reference errors out on `block.number.is_none()`,
   * block.rs:35-37, and lets the outer loop reconnect). Head regressions
-  * are NOT filtered here — [[HeadSubscription]]'s monotonic-max channel
-  * is the single reorg guard.
+  * pass through unfiltered, here and in [[HeadSubscription]]: the
+  * stream's guard ([[BlockWindowStream]]) keeps offsets monotonic.
   */
 final class WsHeadFeed(uri: URI,
     connectTimeoutMs: Long = 10000L,

@@ -6,8 +6,9 @@ import java.nio.file.{Files, InvalidPathException}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver,
-  FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FSLinkResolver, FileStatus, FsConstants, FsServerDefaults, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
@@ -87,9 +88,17 @@ class NioRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
   * as `org.apache.hadoop.fs.local.LocalFs` is over `RawLocalFs`.
   * `AbstractFileSystem` instantiates it through the `(URI, Configuration)`
   * constructor; like `LocalFs`, it always serves `file:///`.
+  *
+  * One-argument `open` verifies the `.crc` sidecar too. `FilterFs` sends
+  * it to the raw filesystem, past `ChecksumFs`, and that is the call
+  * Spark's checkpoint reads make: a flipped byte in an offset or commit
+  * log would otherwise resume the query on a corrupt frontier.
   */
 class NioLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new NioRawLocalFs(conf))
+    extends ChecksumFs(new NioRawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object NioLocalFs {
 

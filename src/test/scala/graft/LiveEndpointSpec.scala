@@ -73,7 +73,7 @@ class LiveEndpointSpec extends AnyFunSuite {
     }
   }
 
-  test("live WS: newHeads subscription announces a plausible, advancing-or-holding head") {
+  test("live WS: newHeads subscription announces a plausible head the HTTP node agrees with") {
     assume(live, "HTTP_NODE_URL / WS_NODE_URL unset — live smoke skipped")
     val sub = new HeadSubscription(
       new WsHeadFeed(java.net.URI.create(wsUrl.get)))
@@ -81,11 +81,8 @@ class LiveEndpointSpec extends AnyFunSuite {
       val first = sub.awaitFirst(30000L)
       assert(first.nonEmpty, "no head announcement within 30 s")
       assert(first.get > 0L, s"implausible WS head ${first.get}")
-      // monotonic-max channel: a later read never regresses
       Thread.sleep(2000L)
       val later = sub.currentHead()
-      assert(later.exists(_ >= first.get),
-        s"head regressed: $later < $first")
       // cross-transport sanity: WS and HTTP see the same chain (within
       // a generous propagation window)
       val httpHead = EthJsonRpc.parseBlockNumber(

@@ -249,6 +249,68 @@ class LocalFsSpec extends AnyFunSuite {
       "commit log written without its checksum sidecar")
   }
 
+  test("a byte flipped in the last offset log, the last commit log, the " +
+      "metadata or a state delta fails the restart before any sink write") {
+    import org.apache.spark.sql.Row
+    val s = engineSession()
+    // batch id → per-address log counts, recorded after the batch's one action
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Row])]()
+    def run(ckpt: String, head: Long): Unit = {
+      RpcLogSource.registerTransport("fake_localfs_corrupt",
+        new SimEthNode(head = head, logsPerBlock = 2))
+      val q = s.readStream.format("graft.sources.RpcLogProvider")
+        .option("transport", "fake_localfs_corrupt").option("confirmations", "0")
+        .option("blockStep", "10").load()
+        .groupBy(col("address")).count()
+        .writeStream.outputMode("update").option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          written.add(id -> batch.collect().toSeq); ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def last(dir: String): File =
+      new File(dir).listFiles().filter(_.getName.matches("\\d+"))
+        .maxBy(_.getName.toLong)
+    // text files: shift their last digit down by one, so the content still
+    // parses (the offset log's end block 39 reads 38)
+    def shiftLastDigit(f: File): Unit = {
+      val b = Files.readAllBytes(f.toPath)
+      val at = b.lastIndexWhere(c => c >= '0' && c <= '9')
+      b(at) = (if (b(at) == '0') '9' else b(at) - 1).toByte
+      Files.write(f.toPath, b)
+    }
+    def flipMiddleByte(f: File): Unit = {
+      val raf = new RandomAccessFile(f, "rw")
+      val at = raf.length / 2
+      try { raf.seek(at); val c = raf.read(); raf.seek(at); raf.write(c ^ 0x5a) }
+      finally raf.close()
+    }
+    val corruptions: Seq[(String, String => File, File => Unit)] = Seq(
+      ("offsets", c => last(s"$c/offsets"), shiftLastDigit),
+      ("commits", c => last(s"$c/commits"), shiftLastDigit),
+      ("metadata", c => new File(s"$c/metadata"), shiftLastDigit),
+      ("state delta", c => Files.walk(Paths.get(s"$c/state")).iterator().asScala
+        .map(_.toFile).filter(_.getName.matches("\\d+\\.delta")).toSeq
+        .maxBy(f => (f.getName.stripSuffix(".delta").toLong, f.length)),
+        flipMiddleByte))
+    val resumed = corruptions.flatMap { case (kind, file, corrupt) =>
+      val ckpt = tmp()
+      run(ckpt, head = 39L)
+      val firstRun = written.asScala.map(_._1).toSet
+      assert(firstRun == (0L to 3L).toSet, s"$kind: first run wrote $firstRun")
+      corrupt(file(ckpt))
+      written.clear()
+      val failed = scala.util.Try(run(ckpt, head = 59L)).isFailure
+      val counts = written.asScala.toSeq.flatMap(_._2).map(_.getLong(1))
+      written.clear()
+      if (failed && counts.isEmpty) None
+      else Some(s"$kind: restart ${if (failed) "failed" else "succeeded"} " +
+        s"after the sink saw per-address counts $counts (60 each is exact)")
+    }
+    assert(resumed.isEmpty, resumed.mkString("\n"))
+  }
+
   test("install is idempotent, keeps a user's value and touches no other " +
       "scheme") {
     val stockFc = "org.apache.hadoop.fs.local.LocalFs"

@@ -2,13 +2,16 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.abi
 import graft.model.Hex
 import graft.operators.EventLog
-import graft.sources.{EthJsonRpc, HeadFeed, HeadSubscription, JsonRpcTransport, RpcHeadFeed, RpcHeadTracker, RpcLogSource, SimEthNode}
+import graft.sources.{BlockOffset, EthJsonRpc, HeadFeed, HeadSubscription, JsonRpcTransport, RpcLogProvider, RpcLogSource, RpcLogStream, SimEthNode}
 
 /** Transport wrapper that records every (request, response) exchange in a
   * STATIC buffer — reader factories serialize transports per task, so an
@@ -28,6 +31,15 @@ final class RecordingNode(inner: JsonRpcTransport) extends JsonRpcTransport {
     RecordingNode.exchanges.add((requestJson, resp))
     resp
   }
+}
+
+/** A node whose `eth_blockNumber` always fails with "down"; `eth_getLogs`
+  * is served by a [[SimEthNode]] with head 10.
+  */
+final class HeadlessNode extends JsonRpcTransport {
+  override def call(requestJson: String): String =
+    if (requestJson.contains("eth_blockNumber")) throw new java.io.IOException("down")
+    else new SimEthNode(head = 10L, logsPerBlock = 1).call(requestJson)
 }
 
 class RpcSpec extends AnyFunSuite {
@@ -93,13 +105,38 @@ class RpcSpec extends AnyFunSuite {
     }
   }
 
-  test("head tracker: monotonic guard ignores a regressing head; retries transient failures") {
-    val node = new SimEthNode(head = 12L, logsPerBlock = 1,
-      headSequence = Seq(10L, 8L))
-    val tracker = new RpcHeadTracker(node)
-    assert(tracker.currentHead().contains(10L))
-    assert(tracker.currentHead().contains(10L), "head 8 must not regress the guard")
-    assert(tracker.currentHead().contains(12L))
+  /** A poll-mode `rpc-logs` stream built the way Spark builds one:
+    * provider, table, scan builder, scan.
+    */
+  private def pollStream(node: JsonRpcTransport, blockStep: Long): RpcLogStream = {
+    val name = s"fake_guard_${java.util.UUID.randomUUID}"
+    RpcLogSource.registerTransport(name, node)
+    val opts = new CaseInsensitiveStringMap(java.util.Map.of("transport", name,
+      "confirmations", "0", "blockStep", blockStep.toString))
+    new RpcLogProvider().getTable(RpcLogSource.LogSchema, Array.empty, opts)
+      .asInstanceOf[SupportsRead].newScanBuilder(opts).build()
+      .toMicroBatchStream(tmp()).asInstanceOf[RpcLogStream]
+  }
+
+  /** The end offsets of `triggers` successive `latestOffset` calls from
+    * block `from` (default: the initial offset), each starting where the
+    * previous one ended, as the engine drives them.
+    */
+  private def ends(s: RpcLogStream, triggers: Int,
+      from: Option[Long] = None): Seq[Long] = {
+    var at: Offset = from.fold(s.initialOffset())(BlockOffset(_))
+    (1 to triggers).map { _ =>
+      at = s.latestOffset(at, s.getDefaultReadLimit)
+      BlockOffset.of(at)
+    }
+  }
+
+  test("head guard: stream end offsets never regress, transient head " +
+      "failures retry, an outage keeps the last known head") {
+    // heads 10, 8, 12: the 8 must not pull the end back below 10
+    val regressing = pollStream(new SimEthNode(head = 12L, logsPerBlock = 1,
+      headSequence = Seq(10L, 8L)), blockStep = 100L)
+    assert(ends(regressing, 3) == Seq(10L, 10L, 12L))
 
     val flaky = new JsonRpcTransport {
       var calls = 0
@@ -109,19 +146,18 @@ class RpcSpec extends AnyFunSuite {
         new SimEthNode(9L, 1).call(requestJson)
       }
     }
-    assert(new RpcHeadTracker(flaky).currentHead().contains(9L))
-    val dead = new JsonRpcTransport {
-      override def call(requestJson: String): String =
-        throw new java.io.IOException("down")
-    }
+    val retried = pollStream(flaky, blockStep = 100L)
+    assert(ends(retried, 1) == Seq(9L))
+    assert(retried.lastHeadError == null)
+
     // a dead node must NOT throw out of the trigger path (that would
-    // kill a poll-mode streaming query on the first brief outage — the
-    // reference reconnects forever): no head yet → None + lastError
-    val deadTracker = new RpcHeadTracker(dead)
-    assert(deadTracker.currentHead().isEmpty)
-    assert(deadTracker.lastError != null &&
-      deadTracker.lastError.getMessage == "down")
-    // outage AFTER a successful poll: the last known head keeps serving
+    // kill the streaming query on the first brief outage — the
+    // reference reconnects forever): no head yet → an empty range
+    val dead = pollStream(new HeadlessNode, blockStep = 100L)
+    assert(ends(dead, 2) == Seq(-1L, -1L))
+    assert(dead.lastHeadError != null && dead.lastHeadError.getMessage == "down")
+
+    // outage AFTER a head: the stream keeps admitting up to head 9
     class FlickerNode extends JsonRpcTransport {
       @volatile var up = true
       override def call(requestJson: String): String =
@@ -129,10 +165,43 @@ class RpcSpec extends AnyFunSuite {
         else throw new java.io.IOException("down")
     }
     val flicker = new FlickerNode
-    val t3 = new RpcHeadTracker(flicker)
-    assert(t3.currentHead().contains(9L))
+    val outage = pollStream(flicker, blockStep = 4L)
+    assert(ends(outage, 1) == Seq(3L))
     flicker.up = false
-    assert(t3.currentHead().contains(9L), "last known head must survive an outage")
+    assert(ends(outage, 3, from = Some(3L)) == Seq(7L, 9L, 9L),
+      "last known head must survive an outage")
+    assert(outage.lastHeadError.getMessage == "down")
+  }
+
+  test("a batch scan fails with the node's error when eth_blockNumber " +
+      "never answers") {
+    RpcLogSource.registerTransport("fake_dead_head", new HeadlessNode)
+    val err = intercept[Exception] {
+      spark.read.format("graft.sources.RpcLogProvider")
+        .option("transport", "fake_dead_head").option("confirmations", "0")
+        .load().count()
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.exists(e => String.valueOf(e.getMessage).contains("down")),
+      s"error does not carry the node's failure: $err")
+  }
+
+  test("wsUrl must be a ws:// or wss:// URI, refused at load() otherwise") {
+    RpcLogSource.registerTransport("fake_ws_scheme",
+      new SimEthNode(head = 20L, logsPerBlock = 1))
+    def load(wsUrl: String) = spark.readStream
+      .format("graft.sources.RpcLogProvider")
+      .option("transport", "fake_ws_scheme").option("wsUrl", wsUrl).load()
+    // an http(s) URL fails every WebSocket connect: the subscription would
+    // retry forever and each trigger wait out its first-head timeout
+    for (bad <- Seq("https://node.example/ws", "http://127.0.0.1:8546",
+        "127.0.0.1:8546", "ws://bad host")) {
+      val msg = intercept[IllegalArgumentException](load(bad)).getMessage
+      assert(msg.contains("wsUrl"), s"$bad: $msg")
+    }
+    load("ws://127.0.0.1:8546")
+    load("WSS://node.example/ws")
   }
 
   test("streaming RPC source: confirmations, chunked admission, decodable payloads") {
@@ -501,27 +570,31 @@ class RpcSpec extends AnyFunSuite {
     assert(req.contains(""""topics":["0x""" + "cc" * 32 + "\"]"))
   }
 
-  test("head subscription: latest-value channel, monotonic guard, reconnects " +
-      "across disconnects (block.rs:17-68)") {
-    // sessions of 2 announcements each: [5,7] drop [6,9] drop [20,20] …
-    // the 6 after the drop must not regress the channel below 7
-    val node = new SimEthNode(head = 20L, logsPerBlock = 1,
-      headSequence = Seq(5L, 7L, 6L, 9L))
-    val sub = new HeadSubscription(
-      new RpcHeadFeed(node, pollsPerSession = 2), backoffMs = 1L)
-    try {
-      assert(sub.awaitFirst(10000L).nonEmpty, "no head announcement arrived")
+  test("head subscription: latest-value channel, reconnects across " +
+      "disconnects (block.rs:17-68)") {
+    // each connect serves the next scripted session, blocking until one
+    // is queued; a session's end is a disconnect
+    val sessions = new java.util.concurrent.LinkedBlockingQueue[Seq[Long]]()
+    sessions.put(Seq(5L, 7L))
+    sessions.put(Seq(6L))
+    val feed = new HeadFeed {
+      override def connect(): Iterator[Long] = sessions.take().iterator
+    }
+    val sub = new HeadSubscription(feed, backoffMs = 1L)
+    def await(h: Long): Unit = {
       val deadline = System.nanoTime() + 10000L * 1000000L
-      var seen = Set.empty[Long]
-      while (sub.currentHead() != Some(20L) && System.nanoTime() < deadline) {
-        sub.currentHead().foreach(seen += _)
+      while (sub.currentHead() != Some(h) && System.nanoTime() < deadline)
         Thread.sleep(1L)
-      }
-      assert(sub.currentHead() == Some(20L), s"never reached head 20: $seen")
-      // every observed intermediate respects the monotonic guard
-      assert(!seen.contains(6L) || seen.contains(7L),
-        "regressing announcement 6 must not surface before 7")
-      assert(sub.connects >= 3L, "disconnects did not trigger re-subscription")
+      assert(sub.currentHead() == Some(h), s"channel never served head $h")
+    }
+    try {
+      // the channel reports the latest announcement, a regressing one
+      // included: the stream's guard is what keeps offsets monotonic
+      await(6L)
+      assert(sub.connects >= 2L, "a disconnect did not trigger re-subscription")
+      sessions.put(Seq(20L))
+      await(20L)
+      assert(sub.connects >= 3L)
     } finally sub.close()
   }
 
@@ -546,21 +619,6 @@ class RpcSpec extends AnyFunSuite {
     val after = attempts.get()
     Thread.sleep(20L)
     assert(attempts.get() == after, "pump survived close()")
-  }
-
-  test("streaming with headMode=subscribe drains to the subscribed head") {
-    RpcLogSource.registerTransport("fake_sub_stream",
-      new SimEthNode(head = 30L, logsPerBlock = 1))
-    val stream = spark.readStream.format("graft.sources.RpcLogProvider")
-      .option("transport", "fake_sub_stream").option("confirmations", "0")
-      .option("headMode", "subscribe").option("blockStep", "8").load()
-    val q = stream.writeStream.format("memory").queryName("rpc_sub_stream")
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", tmp()).start()
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.table("rpc_sub_stream").count() == 31L)
-    assert(spark.table("rpc_sub_stream")
-      .agg(max("block_number")).head().getLong(0) == 30L)
   }
 
   test("RPC stream restart from checkpoint: no duplicate, no missing " +
