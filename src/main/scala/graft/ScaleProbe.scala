@@ -892,7 +892,8 @@ object ScaleProbe {
     // (lineitem.parquet exists in the ordinary bench fixtures too — an
     // existence guard would silently add timed rows + a /tmp write to
     // every full probe run and skew cross-round comparisons). Broadcast
-    // disabled so all three rows measure the fact⋈fact shape.
+    // disabled on a private clone of the session so all three rows
+    // measure the fact⋈fact shape.
     val bktRuns: Seq[Option[(String, Double, Long)]] =
       if (!only.exists(_.startsWith("bkt_join"))) Seq.empty
       else {
@@ -901,11 +902,12 @@ object ScaleProbe {
         require(new java.io.File(s"$sfDir/lineitem.parquet").exists(),
           s"bkt_join_* tags need lineitem/orders parquet in $sfDir " +
             "(gen_tpch_scale_fixture.py)")
-        val oldB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        val noBroadcast = org.apache.spark.sql.GraftSessionShim.privateSession(
+          spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
         val run = java.util.UUID.randomUUID.toString.replace("-", "")
-        def li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+        def li = noBroadcast.read.parquet(s"$sfDir/lineitem.parquet")
           .select("l_orderkey", "l_extendedprice")
-        def ord = spark.read.parquet(s"$sfDir/orders.parquet")
+        def ord = noBroadcast.read.parquet(s"$sfDir/orders.parquet")
           .select("o_orderkey", "o_orderpriority")
         def joined(l: org.apache.spark.sql.DataFrame,
             o: org.apache.spark.sql.DataFrame): Long =
@@ -919,10 +921,9 @@ object ScaleProbe {
             "o_orderkey", 32, s"/tmp/graft_probe_bkt/ord_$run")
           2L
         }
-        // conf flip + pre-build INSIDE the try: a failure there must
-        // still restore the threshold and clean the run's tables
+        // pre-build INSIDE the try: a failure there must still clean the
+        // run's tables
         try {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
           // a tag filter selecting served without layout must still
           // have the tables — build them untimed
           if (only("bkt_join_served") && !only("bkt_join_layout"))
@@ -936,10 +937,9 @@ object ScaleProbe {
               buildTables() },
             time("bkt_join_served") {
               // every join after the layout: zero fact exchanges
-              joined(spark.table(s"graft_probe_li_$run"),
-                spark.table(s"graft_probe_ord_$run")) })
+              joined(noBroadcast.table(s"graft_probe_li_$run"),
+                noBroadcast.table(s"graft_probe_ord_$run")) })
         } finally {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldB)
           spark.sql(s"DROP TABLE IF EXISTS graft_probe_li_$run")
           spark.sql(s"DROP TABLE IF EXISTS graft_probe_ord_$run")
           // delete ONLY this run's subdirs — a concurrent probe owns

@@ -22,14 +22,12 @@ object SparkEntry {
     */
   private val EventSources = Seq("click", "error", "purchase", "signup", "view")
 
-  private def events(spark: SparkSession, dir: String): DataFrame = {
-    // Spark rejects a TIMESTAMP(NANOS) column by default; this reads one as
-    // epoch-nano longs (time math stays exact, DuckDB parity via
-    // epoch_ns()). The bundled sf0.001–sf0.1 events carry microseconds,
-    // which the flag leaves alone.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  // The bundled sf0.001–sf0.1 events carry `ts` as TIMESTAMP(MICROS). A
+  // TIMESTAMP(NANOS) table reads only on a session where the caller set
+  // `spark.sql.legacy.parquet.nanosAsLong` (as epoch-nano longs, which
+  // q_retention_cohorts handles); the engine never sets it.
+  private def events(spark: SparkSession, dir: String): DataFrame =
     EventLog.withBlockKeys(spark.read.parquet(s"$dir/events.parquet"))
-  }
 
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -120,11 +118,12 @@ object SparkEntry {
 
   /** Shared harness for every streaming query a query body runs: `start`
     * receives `out` rebound onto a private clone of `s` at [[DrainWidth]]
-    * and returns the started query, which is drained and stopped. The
-    * caller's session conf is never written. A stateful query's state
-    * width is fixed by the session its DataFrame is bound to when
-    * `start()` runs, so the private session sets it, and other work on
-    * `s` keeps its own width throughout. Checkpoint files go through the
+    * plus `conf` and returns the started query, which is drained and
+    * stopped. The caller's session conf is never written. A stateful
+    * query's state width and state-store provider are fixed by the
+    * session its DataFrame is bound to when `start()` runs, so the
+    * private session sets them, and other work on `s` keeps its own
+    * values throughout. Checkpoint files go through the
     * fork-free local filesystem ([[graft.streaming.NioLocalFs.install]],
     * on the private session). After the stop, the streaming listener
     * buses of the private session and of the query's own clone of it are
@@ -132,10 +131,12 @@ object SparkEntry {
     * listener on the SparkContext's bus. Returns the private session,
     * which holds a memory sink's table.
     */
-  private def drain(s: SparkSession, out: DataFrame)(
+  private def drain(s: SparkSession, out: DataFrame,
+      conf: Seq[(String, String)] = Nil)(
       start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
       : SparkSession = {
-    val p = GraftSessionShim.privateSession(s, DrainWidth)
+    val p = GraftSessionShim.privateSession(s,
+      ("spark.sql.shuffle.partitions" -> DrainWidth.toString) +: conf: _*)
     graft.streaming.NioLocalFs.install(p)
     try {
       val q = start(GraftSessionShim.rebind(out, p))
@@ -152,7 +153,8 @@ object SparkEntry {
     * table, bound to `s`. The checkpoint is deleted after the drain: the
     * result lives in the memory sink, and repeated Verify/Bench
     * invocations must not accumulate /tmp garbage. `rocksDb` keeps the
-    * query's state on the RocksDB provider.
+    * query's state on the RocksDB provider ([[graft.streaming.StateBackend]],
+    * set on the drain's private session).
     */
   private def runStreamingGate(s: SparkSession, sinkName: String,
       out: DataFrame,
@@ -160,13 +162,12 @@ object SparkEntry {
         org.apache.spark.sql.streaming.OutputMode.Append(),
       rocksDb: Boolean = false): DataFrame = {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sg").toString
-    val p = try drain(s, out) { df =>
-        def go() = df.writeStream.format("memory").queryName(sinkName)
+    val p = try drain(s, out,
+        if (rocksDb) graft.streaming.StateBackend.RocksDb else Nil) {
+        _.writeStream.format("memory").queryName(sinkName)
           .outputMode(outputMode)
           .option("checkpointLocation", ckpt)
           .start()
-        if (rocksDb) graft.streaming.StateBackend.withRocksDb(df.sparkSession)(go())
-        else go()
       } finally deleteRecursively(ckpt)
     GraftSessionShim.rebind(p.table(sinkName), s)
   }
@@ -269,15 +270,10 @@ object SparkEntry {
     * gram stage already dropped never embed), as do the lang+quality
     * and token-stats passes. `semCorpusKey` keys the quantizer's
     * centroid cache (the query passes the fixture key; probes may
-    * leave it None to retrain per call). `semPrescreen = false` swaps
-    * the semantic stage back to the plain flag tier — the right call
-    * when the corpus is SATURATED (round-19 A/B on the saturated 100×
-    * fixture: flag 7.7 s vs ivf_flag 31.0 s, identical sets; on
-    * clustered corpora the default wins 6.4× at 5M).
+    * leave it None to retrain per call).
     */
   private[graft] def corpusBuildSelected(docs: DataFrame,
-      semCorpusKey: Option[String] = None,
-      semPrescreen: Boolean = true): DataFrame = {
+      semCorpusKey: Option[String] = None): DataFrame = {
     val winners = graft.operators.Dedup.exact(docs)
       .select(col("keep_id").as("doc_id"))
     val corpus = docs.join(winners, Seq("doc_id"), "left_semi")
@@ -285,12 +281,8 @@ object SparkEntry {
     val evalSplit = docs.filter(col("doc_id") % 97 === 0)
     val deconned = graft.operators.Dedup.decontaminate(corpus,
       evalSplit, n = 3)
-    val semFlagged =
-      if (semPrescreen) graft.operators.TextOps
-        .semanticDecontaminateIvfFlag(deconned, evalSplit,
-          corpusKey = semCorpusKey)
-      else graft.operators.TextOps
-        .semanticDecontaminateFlag(deconned, evalSplit)
+    val semFlagged = graft.operators.TextOps.semanticDecontaminateIvfFlag(
+      deconned, evalSplit, corpusKey = semCorpusKey)
     // the survivor frame persists: it feeds BOTH the lang/quality pass
     // and the token-stats pass below, and unpersisted each side re-ran
     // the whole exact-dedup → gram-decon → semantic-anti-join chain
@@ -343,7 +335,6 @@ object SparkEntry {
     */
   private[graft] def corpusBuildMmSelected(docs: DataFrame,
       semCorpusKey: Option[String] = None,
-      semPrescreen: Boolean = true,
       maxIdHint: Option[Long] = None): DataFrame = {
     // the re-id offset needs max(doc_id): the query passes the footer-
     // stats value (footerMaxId — no plan-time scan job); probe callers
@@ -395,13 +386,10 @@ object SparkEntry {
     // mod-97 eval split, computed once over the original docs
     // (round-19: the measured-best tier — flagged set equals the
     // plain flag tier's by the recall-1 theorem, oracle unchanged)
-    val semFlagged = {
-      val c = docs.filter(col("doc_id") % 97 =!= 0)
-      val e = docs.filter(col("doc_id") % 97 === 0)
-      if (semPrescreen) graft.operators.TextOps
-        .semanticDecontaminateIvfFlag(c, e, corpusKey = semCorpusKey)
-      else graft.operators.TextOps.semanticDecontaminateFlag(c, e)
-    }.select(col("doc_id").as("orig_id"))
+    val semFlagged = graft.operators.TextOps.semanticDecontaminateIvfFlag(
+        docs.filter(col("doc_id") % 97 =!= 0),
+        docs.filter(col("doc_id") % 97 === 0), corpusKey = semCorpusKey)
+      .select(col("doc_id").as("orig_id"))
     // IMAGE decontamination (round-19, VERDICT r18 #1): the media leg
     // previously deduplicated but never decontaminated — flag corpus
     // images whose byte dHash (canonical-P6 body, 13-byte header)
@@ -1396,7 +1384,6 @@ object SparkEntry {
     // the oracle is the plain per-type count over the original table
     // (every duplicate must be dropped, nothing else).
     "stream_dedup" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // The doubled replay input is pure derived scratch — cache it under
       // a fixture-keyed path so repeated Verify/Bench runs replay it
       // instead of re-writing 2× the table each time. The key embeds the
@@ -4491,8 +4478,8 @@ object SparkEntry {
     // aggregation's exchange instead of a fresh shuffle.
     "q_retention_cohorts" -> ((s, dir) => {
       val ev = events(s, dir)
-      // nanos fixtures read as epoch-nano LONGs (nanosAsLong), micros as
-      // TIMESTAMP — integer day math either way (ns magnitudes exceed
+      // nanos fixtures read as epoch-nano LONGs (on a session where the
+      // caller set nanosAsLong), micros as TIMESTAMP — integer day math either way (ns magnitudes exceed
       // double precision, so never a float division)
       // FLOOR division via pmod, not `div` (truncation): the oracle's
       // `//` floors, and the two disagree on pre-1970 timestamps

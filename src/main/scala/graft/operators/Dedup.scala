@@ -774,7 +774,8 @@ object Dedup {
     val loopParts = math.max(1L, math.min(
       sess.conf.get("spark.sql.shuffle.partitions").toLong,
       edges.count() / 1000000L + 1L))
-    val loopEdges = rebind(edges, privateSession(sess, loopParts.toInt))
+    val loopEdges = rebind(edges,
+      privateSession(sess, "spark.sql.shuffle.partitions" -> loopParts.toString))
     // propagate ONLY over the pair-graph vertices — near-dup pairs are a
     // tiny fraction of the corpus, so the iterative joins run on the edge
     // set, not the full table; singletons rejoin unchanged at the end

@@ -281,7 +281,6 @@ private[sources] class BlockReplayTable(schema0: StructType, params: ReplayParam
 object BlockReplay {
   def stream(spark: SparkSession, options: Map[String, String]): BlockReplayStream = {
     val params = ReplayParams(options.asJava)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     new BlockReplayStream(spark.read.parquet(params.path).schema, params)
   }
 }
@@ -295,20 +294,19 @@ object BlockReplay {
   * (default unbounded). The emitted schema is the RAW parquet schema —
   * derived block keys and the reorg guard are plain expressions applied by
   * [[graft.streaming.StreamOps.readBlockStream]] post-load.
+  *
+  * A TIMESTAMP(NANOS) column needs the caller's
+  * `spark.sql.legacy.parquet.nanosAsLong` on the loading session (it then
+  * reads as epoch-nano longs, and every batch reads under that session's
+  * clone); without it Spark refuses the schema. The source never sets it.
   */
 class BlockReplayProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "block-replay"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    // a TIMESTAMP(NANOS) table is readable only under the legacy
-    // nanos-as-long conf (the bundled sf0.001–sf0.1 events carry
-    // microseconds, which it leaves alone); it must be in effect for every
-    // read this source plans, so the session opts in for its lifetime
-    // (per-read scoping raced concurrent queries during the restore window)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(ReplayParams(options).path).schema
+    // the loading session: Spark resolves the source with it active
+    SparkSession.active.read.parquet(ReplayParams(options).path).schema
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],

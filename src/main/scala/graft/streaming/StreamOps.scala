@@ -30,10 +30,11 @@ object StreamOps {
     * applied here — identical per-row semantics to evaluating them inside
     * the source, but visible to Catalyst.
     *
-    * Opts the SESSION into `spark.sql.legacy.parquet.nanosAsLong`, so a
-    * TIMESTAMP(NANOS) table reads as epoch-nano longs; the bundled
-    * sf0.001–sf0.1 events carry microseconds, which the flag leaves alone.
-    * All graft readers share that convention, see SparkEntry.events.
+    * A TIMESTAMP(NANOS) table loads only when the caller has set
+    * `spark.sql.legacy.parquet.nanosAsLong` on `spark` (it then reads as
+    * epoch-nano longs); without it the load fails with Spark's
+    * `PARQUET_TYPE_ILLEGAL`. The engine never sets the flag. The bundled
+    * sf0.001–sf0.1 events carry microseconds and need nothing.
     */
   def readBlockStream(
       spark: SparkSession,
@@ -43,7 +44,6 @@ object StreamOps {
       fromBlock: Long = 0L,
       toBlock: Option[Long] = None,
       blockSize: Long = 10L): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val r = spark.readStream
       .format("graft.sources.BlockReplayProvider")
       .option("path", path)

@@ -55,19 +55,22 @@ object GraftCheckpointShim {
     }
 }
 
-/** A private session for work that needs its own shuffle width: a clone
-  * of the caller's session (conf, temp views, functions, extensions)
-  * whose width is set on the clone alone. The caller's conf is never
-  * written, so another query on the caller's session keeps its width.
-  * A stateful streaming query's state width is fixed by the session its
-  * DataFrame is bound to at `start()`, which is why a built plan is
-  * [[rebind]]-ed onto the private session rather than repartitioned.
-  * `Dataset.ofRows` is `private[sql]`.
+/** A private session for work that needs its own conf: a clone of the
+  * caller's session (conf, temp views, functions, extensions) with each
+  * `conf` pair set on the clone alone. The caller's conf is never written,
+  * so another query on the caller's session keeps its own values. This is
+  * the engine's one way to scope conf: a drain's shuffle width and state
+  * provider, the `clusterLabels` loop width, a probe's broadcast threshold.
+  * A streaming query's conf (state width, state-store provider) is fixed
+  * by the session its DataFrame is bound to at `start()`, which is why a
+  * built plan is [[rebind]]-ed onto the private session. Nothing needs to
+  * be restored: the clone is dropped with the work. `Dataset.ofRows` is
+  * `private[sql]`.
   */
 object GraftSessionShim {
-  def privateSession(spark: SparkSession, shufflePartitions: Int): SparkSession = {
+  def privateSession(spark: SparkSession, conf: (String, String)*): SparkSession = {
     val p = spark.asInstanceOf[classic.SparkSession].cloneSession()
-    p.conf.set(internal.SQLConf.SHUFFLE_PARTITIONS.key, shufflePartitions.toLong)
+    conf.foreach { case (k, v) => p.conf.set(k, v) }
     p
   }
 

@@ -15,11 +15,8 @@ class BlockStoreSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  private lazy val events = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    EventLog.withBlockKeys(
-      spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-  }
+  private lazy val events = EventLog.withBlockKeys(
+    spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
 
   test("write/read roundtrip preserves rows; range scan matches filter") {
     val path = Files.createTempDirectory("blockstore").toString

@@ -19,10 +19,8 @@ class HardeningSpec extends AnyFunSuite {
 
   private val path = "/root/testdata/sf0.001/events.parquet"
 
-  private lazy val batchEvents = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private lazy val batchEvents =
     EventLog.withBlockKeys(spark.read.parquet(path)).cache()
-  }
 
   test("streaming restart from checkpoint: no duplicates, no gaps") {
     val ckpt = Files.createTempDirectory("restart-ckpt").toString
@@ -721,7 +719,6 @@ class HardeningSpec extends AnyFunSuite {
 
   test("reorg guard: poisoned replay stream aborts instead of ingesting") {
     val dir = Files.createTempDirectory("poisoned-ev").toString + "/ev"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(path).limit(60)
       .withColumn("removed", $"event_id" % 17 === 0)
       .write.parquet(dir)

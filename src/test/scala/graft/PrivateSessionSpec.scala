@@ -11,14 +11,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
 
 /** Operators and streaming drains never write the caller's session conf:
-  * each drain and the `clusterLabels` loop run on a private clone that
-  * holds its own shuffle width. Every test runs on a fresh session at
+  * each drain, the `clusterLabels` loop and a RocksDB start run on a
+  * private clone that holds its own conf. Every test runs on a fresh session at
   * width 8 — TestSpark's width (4) equals the drain width, so a test on
   * TestSpark could not tell the two apart.
   */
@@ -26,7 +26,16 @@ class PrivateSessionSpec extends AnyFunSuite {
   import TestSpark.spark
 
   private val Width = "spark.sql.shuffle.partitions"
+  private val Provider = "spark.sql.streaming.stateStore.providerClass"
   private val Sf = "/root/testdata/sf0.01"
+
+  /** Start a stateful query over `df` on the RocksDB provider the public
+    * way: bound to a private clone of `s` that carries the provider. */
+  private def startOnRocksDb(s: SparkSession, df: DataFrame)(
+      start: DataFrame => StreamingQuery): StreamingQuery = {
+    import org.apache.spark.sql.GraftSessionShim.{privateSession, rebind}
+    start(rebind(df, privateSession(s, graft.streaming.StateBackend.RocksDb: _*)))
+  }
 
   private def width8(conf: (String, String)*): SparkSession = {
     val s = spark.newSession()
@@ -150,9 +159,44 @@ class PrivateSessionSpec extends AnyFunSuite {
           "a1_distributed_reducer's state did not run on the RocksDB provider")
       assert(s.conf.get(Width) == "8", s"$q left the caller's width changed")
     }
-    assert(s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .forall(!_.contains("RocksDB")),
+    assert(s.conf.getOption(Provider).forall(!_.contains("RocksDB")),
       "the RocksDB provider leaked into the caller's session")
+  }
+
+  test("a RocksDB start leaves the caller's state-store provider untouched") {
+    val s = width8()
+    val own = s.conf.get(Provider)
+    val ckpt = TestSpark.tempDir("graft-rocks-race")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val samples = new java.util.concurrent.atomic.AtomicLong()
+    val done = new AtomicBoolean(false)
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        seen.add(s.conf.get(Provider))
+        samples.incrementAndGet()
+        Thread.onSpinWait()
+      })
+    reader.start()
+    val progress = try {
+      while (samples.get() == 0) Thread.onSpinWait()
+      val q = startOnRocksDb(s, graft.streaming.StreamOps.dedupStream(
+        graft.streaming.StreamOps.readBlockStream(s,
+          "/root/testdata/sf0.001/events.parquet",
+          blockStep = 20L, confirmations = 0L),
+        Seq("event_type"), withinBlocks = 5L)) {
+          _.writeStream.format("noop").option("checkpointLocation", ckpt).start()
+        }
+      try { q.processAllAvailable(); q.recentProgress.toSeq } finally q.stop()
+    } finally { done.set(true); reader.join() }
+
+    assert(samples.get() > 10, s"the reader sampled only ${samples.get()} times")
+    assert(seen.asScala.toSet == Set(own),
+      s"a concurrent reader of the session saw providers ${seen.asScala.toSet}")
+    assert(progress.exists(_.numInputRows > 0), "vacuous: the query read nothing")
+    val stateFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt, "state"))
+      .iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(stateFiles.exists(n => n.endsWith(".zip") || n.endsWith(".changelog")),
+      s"no RocksDB artifacts in $ckpt/state: the provider did not engage")
   }
 
   test("a drain's private session leaves no listener on the SparkContext's bus") {
@@ -198,25 +242,10 @@ class PrivateSessionSpec extends AnyFunSuite {
     // (file, key as written on the line, why that write is not a scoped
     // override of a key shared with other callers of the session)
     val allow = Seq(
-      ("org/apache/spark/sql/GraftColumnShim.scala", "SHUFFLE_PARTITIONS",
-        "the private session's own width; the session is never shared"),
+      ("org/apache/spark/sql/GraftColumnShim.scala", "p.conf.set(k, v)",
+        "the private session's own conf; the session is never shared"),
       ("graft/streaming/NioLocalFs.scala", "ContextKey",
-        "installs the fork-free file: FileContext; idempotent, never undone"),
-      ("graft/streaming/StateBackend.scala", "ProviderKey",
-        "the state-store provider switch and its scoped restore"),
-      ("graft/streaming/StateBackend.scala", "ChangelogKey",
-        "the RocksDB changelog switch and its scoped restore"),
-      ("graft/SparkEntry.scala", "nanosAsLong",
-        "reads a TIMESTAMP(NANOS) parquet as longs (the bundled events " +
-          "carry micros); set for the session's lifetime"),
-      ("graft/streaming/StreamOps.scala", "nanosAsLong",
-        "reads a TIMESTAMP(NANOS) parquet as longs (the bundled events " +
-          "carry micros); set for the session's lifetime"),
-      ("graft/sources/BlockReplaySource.scala", "nanosAsLong",
-        "reads a TIMESTAMP(NANOS) parquet as longs (the bundled events " +
-          "carry micros); set for the session's lifetime"),
-      ("graft/ScaleProbe.scala", "autoBroadcastJoinThreshold",
-        "a probe main flipping the session it built; no other caller"))
+        "installs the fork-free file: FileContext; idempotent, never undone"))
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq

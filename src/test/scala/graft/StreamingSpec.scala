@@ -1,12 +1,14 @@
 package graft
 
 
+import org.apache.spark.sql.GraftSessionShim.{privateSession, rebind}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.EventLog
-import graft.streaming.StreamOps
+import graft.streaming.{StateBackend, StreamOps}
 
 /** Streaming layer on the sf0.001 events fixture: replay-source semantics
   * (confirmation lag, block_step chunking, bounded ranges), barrier, and
@@ -18,10 +20,8 @@ class StreamingSpec extends AnyFunSuite {
 
   private val path = "/root/testdata/sf0.001/events.parquet"
 
-  private lazy val batchEvents = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private lazy val batchEvents =
     EventLog.withBlockKeys(spark.read.parquet(path)).cache()
-  }
   private lazy val headBlock: Long =
     batchEvents.agg(max("block_number")).head().getLong(0)
 
@@ -1036,7 +1036,7 @@ class StreamingSpec extends AnyFunSuite {
     // provider-independent, and the checkpoint must PROVE which
     // provider ran (zip/changelog for RocksDB vs the HDFS provider's
     // .delta files), so this can't silently pass on the default
-    def run(ckpt: String, name: String): Map[Long, Long] = {
+    def run(ckpt: String, name: String, on: SparkSession): Map[Long, Long] = {
       val dist = StreamOps.distributedOrderedReducer[(Long, Long)](
         StreamOps.readBlockStream(spark, path,
           blockStep = 30L, confirmations = 0L),
@@ -1047,12 +1047,12 @@ class StreamingSpec extends AnyFunSuite {
           }
           if (n > 0) Some((block, n.toLong)) else None
         })
-      val q = dist.toDF("block_number", "n_matches")
+      val q = rebind(dist.toDF("block_number", "n_matches"), on)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append())
         .option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
-      spark.table(name).as[(Long, Long)].collect().toMap
+      on.table(name).as[(Long, Long)].collect().toMap
     }
     def stateFiles(ckpt: String): Seq[String] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -1061,22 +1061,19 @@ class StreamingSpec extends AnyFunSuite {
       walk(new java.io.File(s"$ckpt/state")).map(_.getName)
     }
     val defCkpt = tmp()
-    val viaDefault = run(defCkpt, "sb_default")
+    val viaDefault = run(defCkpt, "sb_default", spark)
     val rockCkpt = tmp()
-    // scoped switch: withRocksDb must restore the PRIOR conf, not the
-    // factory default — pinned by the custom-provider drill below
+    // the RocksDB run starts on a private clone of a caller whose custom
+    // provider (which would fail the query if it reached it) is untouched
     val customProvider = "graft.test.NonexistentStateStoreProvider"
-    spark.conf.set(
+    val caller = spark.newSession()
+    caller.conf.set(
       "spark.sql.streaming.stateStore.providerClass", customProvider)
-    val viaRocks =
-      try graft.streaming.StateBackend.withRocksDb(spark) {
-        run(rockCkpt, "sb_rocksdb")
-      } finally {
-        assert(spark.conf.get(
-          "spark.sql.streaming.stateStore.providerClass") == customProvider,
-          "withRocksDb stomped a deliberately-configured provider")
-        graft.streaming.StateBackend.useDefault(spark)
-      }
+    val viaRocks = run(rockCkpt, "sb_rocksdb",
+      privateSession(caller, StateBackend.RocksDb: _*))
+    assert(caller.conf.get(
+      "spark.sql.streaming.stateStore.providerClass") == customProvider,
+      "the RocksDB run changed the caller's custom provider")
     assert(viaRocks.nonEmpty, "vacuous fixture: no pattern matches")
     assert(viaRocks == viaDefault,
       "state backend changed the fold's results")
@@ -1135,7 +1132,7 @@ class StreamingSpec extends AnyFunSuite {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
-      spark.table(name).collect().map(_.toString).sorted.toSeq
+      df.sparkSession.table(name).collect().map(_.toString).sorted.toSeq
     }
     def stateFilesOf(ckpt: String): Seq[String] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -1143,12 +1140,12 @@ class StreamingSpec extends AnyFunSuite {
         else Seq(f)
       walk(new java.io.File(s"$ckpt/state")).map(_.getName)
     }
+    val rocks = privateSession(spark, StateBackend.RocksDb: _*)
     families.foreach { case (fam, mk, mode) =>
       val viaDefault = drained(s"sw_${fam}_d", mk(), mode, tmp())
       val rockCkpt = tmp()
-      val viaRocks = graft.streaming.StateBackend.withRocksDb(spark) {
-        drained(s"sw_${fam}_r", mk(), mode, rockCkpt)
-      }
+      val viaRocks =
+        drained(s"sw_${fam}_r", rebind(mk(), rocks), mode, rockCkpt)
       assert(viaDefault.nonEmpty, s"$fam: vacuous fixture — nothing drained")
       assert(viaRocks == viaDefault,
         s"$fam: results changed under the RocksDB provider — " +
