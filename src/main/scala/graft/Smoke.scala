@@ -48,11 +48,12 @@ object Smoke {
         .agg(org.apache.spark.sql.functions.max("block_number")).head().getLong(0)
       println(s"STREAM_ROWS=$sn STREAM_MAX_BLOCK=$sMax")
 
-      // partitioned block-store layout: write, pruned range scan back
+      // block-bucketed sink layout: write, pruned range scan back
       val ev = graft.operators.EventLog.withBlockKeys(
         spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-      sources.BlockStore.write(ev, bsPath, blockStep = 20L)
-      val bsRows = sources.BlockStore.rangeScan(spark, bsPath, 0L, 19L, 20L).count()
+      streaming.BlockSink.writeBatch(ev, 0L, bsPath, bucketBlocks = 20L)
+      val bsRows = streaming.BlockSink.rangeScan(spark, bsPath, 0L, 19L, 20L)
+        .count()
       println(s"BLOCKSTORE_RANGE_ROWS=$bsRows")
       assert(bsRows > 0, "block store range scan empty")
     } finally {

@@ -2015,7 +2015,7 @@ object SparkEntry {
     // end: exact dedup (min-id winners) → benchmark decontamination
     // (mod-97 eval split, 3-grams) → quality gate ≥ 0.5 + language ID →
     // the training corpus, WRITTEN through idempotent build epochs
-    // (dynamic-partition overwrite keyed by build_epoch; epoch 0 is
+    // (IngestCompaction.writeEpoch, keyed by ingest_batch; epoch 0 is
     // deliberately REPLAYED after the build — the BlockSink crash story —
     // and must leave the artifact unchanged). The result is the
     // artifact's MANIFEST, computed from the WRITTEN parquet, not the
@@ -2030,15 +2030,10 @@ object SparkEntry {
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val run = java.nio.file.Files.createTempDirectory("graft_cb").toString
       onJvmExitDelete(run)
-      def epochWrite(e: Long): Unit =
-        selected.filter(pmod(col("doc_id"), lit(4)) === e)
-          .withColumn("build_epoch", lit(e))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("build_epoch")
-          .parquet(s"$run/corpus")
-      (0L to 3L).foreach(epochWrite)
-      epochWrite(0L) // crash replay: rewrites only its own partition
+      // the last epoch is a crash replay: it rewrites only its own partition
+      Seq(0L, 1L, 2L, 3L, 0L).foreach(e => graft.streaming.IngestCompaction
+        .writeEpoch(selected.filter(pmod(col("doc_id"), lit(4)) === e),
+          s"$run/corpus", e))
       val written = s.read.parquet(s"$run/corpus")
       val eq = written.as("w")
         .join(selected.as("p"), Seq("doc_id"), "full")
@@ -2079,15 +2074,10 @@ object SparkEntry {
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val run = java.nio.file.Files.createTempDirectory("graft_cbmm").toString
       onJvmExitDelete(run)
-      def epochWrite(e: Long): Unit =
-        selected.filter(pmod(col("doc_id"), lit(4)) === e)
-          .withColumn("build_epoch", lit(e))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("build_epoch")
-          .parquet(s"$run/corpus")
-      (0L to 3L).foreach(epochWrite)
-      epochWrite(1L) // crash replay: rewrites only its own partition
+      // the last epoch is a crash replay: it rewrites only its own partition
+      Seq(0L, 1L, 2L, 3L, 1L).foreach(e => graft.streaming.IngestCompaction
+        .writeEpoch(selected.filter(pmod(col("doc_id"), lit(4)) === e),
+          s"$run/corpus", e))
       val written = s.read.parquet(s"$run/corpus")
       val eq = written.as("w")
         .join(selected.as("p"), Seq("doc_id"), "full")

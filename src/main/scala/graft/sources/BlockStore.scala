@@ -1,39 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Partitioned at-rest layout for event logs: directory-partitioned by
-  * `chunk_id = block DIV blockStep` — the storage twin of the reference's
-  * `block_step` scan chunking (eth_event_stream/src/stream.rs:214-226).
-  *
-  * Why it matters at 100 TB: a block-range query prunes whole chunk
-  * directories at PLANNING time (`PartitionFilters` in the scan, no
-  * footer reads for pruned chunks), and ingest appends new chunks without
-  * touching old ones — the append-only total order of the log maps to an
-  * append-only directory sequence.
-  */
-object BlockStore {
-
-  /** Write with chunk partitioning. `mode=append` adds later chunks. */
-  def write(df: DataFrame, path: String, blockStep: Long = 1000L,
-      mode: String = "overwrite"): Unit =
-    df.withColumn("chunk_id", expr(s"block_number DIV $blockStep"))
-      .write.mode(mode).partitionBy("chunk_id").parquet(path)
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** S1/S2 over the partitioned layout: the chunk-range predicate prunes
-    * directories, the block-range predicate prunes row groups.
-    */
-  def rangeScan(spark: SparkSession, path: String,
-      from: Long, to: Long, blockStep: Long = 1000L): DataFrame =
-    read(spark, path).filter(
-      col("chunk_id").between(from / blockStep, to / blockStep) &&
-        col("block_number").between(from, to))
-}
-
 /** B3 — retry policy parity: exponential backoff from 10 ms with jitter,
   * 4 attempts (reference: eth_event_stream/src/stream.rs:148-150,
   * :160-166). Two sanctioned contexts: driver-side source RPC with the

@@ -5,22 +5,22 @@ import java.util.Locale
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileSystem
 
-/** Filesystem-semantics guard for the maintenance protocols that commit
-  * via directory `rename` ([[IngestCompaction.compact]]'s staged-fold
-  * swap, [[BlockSink.compactBucket]]'s two-rename bucket swap).
+/** Filesystem-semantics guard for the one maintenance protocol that
+  * commits via directory `rename`: [[IngestCompaction.compact]]'s
+  * staged-fold swap (which [[BlockSink.compactBucket]] runs on a sink
+  * bucket).
   *
-  * Those protocols' crash-safety proofs assume `FileSystem.rename` is
+  * That protocol's crash-safety proof assumes `FileSystem.rename` is
   * ATOMIC — true on HDFS-class filesystems (HDFS, viewfs, the local FS)
   * where rename is a metadata operation, and FALSE on flat object
   * stores: S3A and GCS implement directory rename as copy-then-delete,
   * so a crash (or a concurrent reader) mid-"rename" can observe a torn
-  * directory — exactly the silent-corruption window the markers exist
+  * directory — exactly the silent-corruption window the marker exists
   * to close. At a 100 TB deployment the sink path plausibly lives on
   * object storage, so the assumption must be CHECKED, not documented
-  * away: every rename-committing entry point calls
-  * [[requireAtomicRename]] first and fails loudly — before any
-  * destructive step — when the target filesystem is not known to
-  * provide atomic rename.
+  * away: the fold and its roll-forward call [[requireAtomicRename]]
+  * first and fail loudly — before any destructive step — when the
+  * target filesystem is not known to provide atomic rename.
   *
   * Schemes trusted by default: `file`, `hdfs`, `viewfs`. Anything else
   * (s3a, gs, wasb, abfs, …) is rejected unless the operator opts the

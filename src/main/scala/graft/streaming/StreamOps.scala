@@ -490,12 +490,12 @@ object StreamOps {
     *     regardless of how the source carves batches;
     *  3. the pairs land in `pairsDir/ingest_batch=<id>`.
     *
-    * Both writes are per-epoch dynamic-partition OVERWRITES (the
-    * [[BlockSink.writeBatch]] idempotence story applied to the dedup
-    * index): a replayed epoch — crash between the two writes included —
-    * deterministically rewrites its own partitions and no others, so
-    * the drained result equals the one-shot batch run of
-    * `incrementalNearDupPairs` over the whole stream. Epoch-exclusion
+    * Both writes are [[IngestCompaction.writeEpoch]] — the one epoch
+    * write [[BlockSink.writeBatch]] also runs: a replayed epoch — crash
+    * between the two writes included — deterministically rewrites its
+    * own partitions and no others, so the drained result equals the
+    * one-shot batch run of `incrementalNearDupPairs` over the whole
+    * stream. Epoch-exclusion
     * (`ingest_batch < id`) keeps a replayed epoch's own leftover bands
     * out of its index side, which would otherwise self-pair every doc.
     *
@@ -504,10 +504,12 @@ object StreamOps {
     * the two directories, never in the state store — a year-long ingest
     * holds nothing in memory between epochs. `compactEvery = Some(m)`
     * closes the one growth path that leaves: every m-th epoch folds the
-    * committed `ingest_batch` partitions of BOTH directories into one
-    * ([[IngestCompaction]] — crash-safe, auto-recovering inside the
-    * micro-batch loop, which is the single maintenance writer), so the
-    * per-epoch re-list/re-union of the appends touches a bounded
+    * committed `ingest_batch` partitions of BOTH directories into
+    * `ingest_batch=-1` ([[IngestCompaction.compact]], the fold
+    * [[BlockSink.compactBucket]] runs on a sink bucket — crash-safe,
+    * auto-recovering inside the micro-batch loop, which is the single
+    * maintenance writer; a cadence with no new epoch rewrites nothing),
+    * so the per-epoch re-list/re-union of the appends touches a bounded
     * partition count instead of one per epoch ever ingested.
     */
   def nearDupIngestStream(docStream: DataFrame, baseIndexDir: String,
@@ -632,17 +634,6 @@ object StreamOps {
       .start()
   }
 
-  /** `df` as the epoch's own `ingest_batch=id` partition of `dir`: a
-    * dynamic-partition OVERWRITE, so a replayed epoch rewrites exactly
-    * its own partition (the [[BlockSink.writeBatch]] idempotence story).
-    */
-  private def epochWrite(df: DataFrame, dir: String, id: Long): Unit =
-    df.withColumn("ingest_batch", lit(id))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(dir)
-
   /** Band-index streams (MinHash text, dHash image, audio) on the
     * [[ingestStream]] skeleton: per epoch, write the batch's band rows
     * as the epoch's own `ingest_batch=id` partition, pair them against
@@ -716,11 +707,10 @@ object StreamOps {
         b, bb, pr, maxBucketSize, storage = None))
   }
 
-  /** One epoch of either band-index ingest: both writes are per-epoch
-    * dynamic-partition OVERWRITES (the [[BlockSink.writeBatch]]
-    * idempotence story applied to the index) — a replayed epoch,
-    * crash between the two writes included, deterministically rewrites
-    * its own partitions and no others. The `ingest_batch < id` screen
+  /** One epoch of either band-index ingest: both writes are
+    * [[IngestCompaction.writeEpoch]] — a replayed epoch, crash between
+    * the two writes included, deterministically rewrites its own
+    * partitions and no others. The `ingest_batch < id` screen
     * keeps a replayed epoch's own leftover bands out of its index
     * side, which would otherwise self-pair every doc.
     */
@@ -729,7 +719,7 @@ object StreamOps {
       id: Long, bandRowsOf: DataFrame => DataFrame,
       pairsOf: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
-    epochWrite(bandRowsOf(batch), appendDir, id)
+    IngestCompaction.writeEpoch(bandRowsOf(batch), appendDir, id)
     val appended = spark.read.parquet(appendDir)
     val thisBanded = appended.filter(col("ingest_batch") === id)
       .drop("ingest_batch")
@@ -737,7 +727,7 @@ object StreamOps {
       .select(indexCols.map(col): _*)
       .unionByName(appended.filter(col("ingest_batch") < id)
         .drop("ingest_batch"))
-    epochWrite(pairsOf(older, thisBanded), pairsDir, id)
+    IngestCompaction.writeEpoch(pairsOf(older, thisBanded), pairsDir, id)
   }
 
   /** Streaming ANN index ingest — the PQ mirror of [[nearDupIngestStream]],
@@ -805,7 +795,7 @@ object StreamOps {
   def annIngestEpoch(batch: DataFrame, centroids: Array[Array[Double]],
       appendDir: String, id: Long,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    epochWrite(
+    IngestCompaction.writeEpoch(
       graft.operators.Similarity.ivfPqCodeRows(batch, centroids, idCol, vecCol)
         // drift metric rides the epoch write (see annIngestStream's
         // codebook-drift scaladoc); epoch-unique name — replays re-emit

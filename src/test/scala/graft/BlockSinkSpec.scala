@@ -159,10 +159,13 @@ class BlockSinkSpec extends AnyFunSuite {
     (0 until 4).foreach(e =>
       BlockSink.writeBatch(rows(e * 2 until (e + 1) * 2), batchId = e.toLong,
         out, bucketBlocks = 16L))
+    BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 2)
+    // one more epoch lands before the bucket is folded again, so the
+    // second compaction rewrites the folded partition
+    BlockSink.writeBatch(rows(8 until 10), batchId = 4L, out, bucketBlocks = 16L)
     val before = spark.read.parquet(out)
       .select($"block_number", $"log_index", $"v").collect().toSet
-
-    BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 2)
+    assert(before.size == 20)
     // a reader whose plan was built BEFORE the second compaction captured
     // the pre-swap file list: it must either return the full consistent
     // set or fail CLEANLY with a missing-file error (retryable) — never a
@@ -180,77 +183,112 @@ class BlockSinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(out)
       .select($"block_number", $"log_index", $"v").collect().toSet == before,
       "double-compact changed the data")
+    assert(dataFiles(s"$out/block_bucket=0").size == 1)
+    // compacting an already-compacted bucket rewrites nothing
+    val files = dataFiles(out).map(_.getPath).sorted
+    BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1)
+    assert(dataFiles(out).map(_.getPath).sorted == files)
   }
 
   test("crashed compactor: marker/staged state refuses a new run instead " +
       "of deleting the only copy; recoverBucket restores each crash state") {
+    import graft.streaming.IngestCompaction
     val out = tmp()
+    // bucket 0 holds epochs 0 and 1; bucket 1 (epoch 2) keeps the root
+    // readable while bucket 0 is mid-crash
     BlockSink.writeBatch(rows(0 until 4), batchId = 0L, out, bucketBlocks = 16L)
-    val want = spark.read.parquet(out)
-      .select($"block_number", $"log_index", $"v").collect().toSet
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-
-    // state A: crash mid-write — marker + tmp exist, bucket intact
-    fs.create(p(s"$out/_compacting_0"), false).close()
-    fs.mkdirs(p(s"$out/.compact_0.tmp"))
-    val exA = intercept[java.io.IOException](
-      BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1))
-    assert(exA.getMessage.contains("recoverBucket"), exA.getMessage)
-    BlockSink.recoverBucket(spark, out, bucket = 0L)
-    assert(!fs.exists(p(s"$out/_compacting_0")))
-    assert(!fs.exists(p(s"$out/.compact_0.tmp")))
-    assert(spark.read.parquet(out)
-      .select($"block_number", $"log_index", $"v").collect().toSet == want)
-
-    // state B: crash BETWEEN the renames — bucket dir gone, .old is the
-    // only copy. A fresh compact must refuse (the pre-fix code deleted
-    // .old here: data loss); recover must restore the bucket.
-    BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1)
-    fs.create(p(s"$out/_compacting_0"), false).close()
-    assert(fs.rename(p(s"$out/block_bucket=0"), p(s"$out/.compact_0.old")))
-    intercept[Exception](
-      BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1))
-    assert(fs.exists(p(s"$out/.compact_0.old")),
-      "a refused run must not touch the staged-out copy")
-    // the staging dirs are HIDDEN (dot-prefixed): a concurrent reader
-    // planned mid-crash must neither double-read the bucket nor have
-    // the block_bucket partition type flip to string (regression:
-    // unhidden block_bucket=N.old siblings were parsed as partitions)
-    val midCrash =
-      try Some(spark.read.parquet(out))
-      catch {
-        // single-bucket fixture: with bucket 0 staged out NOTHING is
-        // visible — exactly right, the hidden dirs must not serve reads
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => None
-      }
-    midCrash.foreach { df =>
-      assert(df.schema.fieldNames.contains("block_bucket") &&
-        df.schema("block_bucket").dataType !=
-          org.apache.spark.sql.types.StringType,
-        "an unhidden staging sibling flipped the partition type to string")
-      assert(df.filter($"block_bucket" === 0L).count() == 0L,
-        "bucket 0 is staged out mid-crash: hidden dirs must not serve reads")
+    BlockSink.writeBatch(rows(4 until 8), batchId = 1L, out, bucketBlocks = 16L)
+    BlockSink.writeBatch(rows(16 until 18), batchId = 2L, out, bucketBlocks = 16L)
+    def read() = spark.read.parquet(out)
+      .select($"block_number", $"log_index", $"v").as[(Long, Long, Long)]
+      .collect().toSeq
+    val want = read().toSet
+    val bucket = s"$out/block_bucket=0"
+    val staging = s"$bucket/.compact_fold.tmp"
+    val marker = s"$bucket/_folding"
+    def exists(f: String) = new java.io.File(f).exists()
+    def write(f: String, text: String) =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), text)
+    def stage(): Unit = spark.read.parquet(bucket)
+      .withColumn("ingest_batch", lit(IngestCompaction.Folded)).repartition(1)
+      .write.partitionBy("ingest_batch").parquet(staging)
+    def dropEpoch(e: Long) = org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(s"$bucket/ingest_batch=$e"))
+    // the staging dir is HIDDEN (dot-prefixed, inside the bucket): a
+    // reader planned mid-crash must never double-read the bucket nor
+    // have the block_bucket partition type flip to string
+    def midCrashRead(): Set[(Long, Long, Long)] = {
+      val df = spark.read.parquet(out)
+      assert(df.schema("block_bucket").dataType !=
+        org.apache.spark.sql.types.StringType,
+        "a staging sibling flipped the partition type to string")
+      val got = df.select($"block_number", $"log_index", $"v")
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(got.size == got.distinct.size,
+        "a reader planned mid-crash double-read the bucket")
+      got.toSet
     }
-    BlockSink.recoverBucket(spark, out, bucket = 0L)
-    assert(spark.read.parquet(out)
-      .select($"block_number", $"log_index", $"v").collect().toSet == want,
-      "recover lost the staged-out copy")
+    def recovered(): Unit = {
+      BlockSink.recoverBucket(spark, out, bucket = 0L)
+      assert(!exists(marker) && !exists(staging), "recover left artifacts")
+      assert(read().size == want.size && read().toSet == want,
+        "recover did not restore the pre-compaction rows")
+    }
 
-    // state C: crash after swap-in, before cleanup — both dirs exist;
-    // recover keeps the live one and drops .old
-    fs.mkdirs(p(s"$out/.compact_0.old"))
+    // state A: crash mid-staging — stale tmp, no marker: the staged rows
+    // are invisible; recover rolls BACK to the untouched originals
+    stage()
+    assert(midCrashRead() == want, "staged fold rows leaked into a reader")
+    recovered()
+    assert(IngestCompaction.listEpochs(spark, bucket) == Seq(0L, 1L))
+
+    // state B: TORN marker (crash mid-publish, terminator missing) — a
+    // fresh compact refuses; recover rolls BACK
+    stage(); write(marker, "0\n1")
+    val exB = intercept[java.io.IOException](
+      BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1))
+    assert(exB.getMessage.contains("recover"), exB.getMessage)
+    recovered()
+    assert(IngestCompaction.listEpochs(spark, bucket) == Seq(0L, 1L))
+
+    // state C: complete marker, one original deleted — a fresh compact
+    // refuses and must not touch the staged copy; recover rolls FORWARD
+    stage(); write(marker, "0\n1\n#end:2"); dropEpoch(0L)
+    intercept[java.io.IOException](
+      BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1))
+    assert(exists(s"$staging/ingest_batch=-1"),
+      "a refused run must not touch the staged copy")
+    assert(midCrashRead().subsetOf(want))
+    recovered()
+    assert(IngestCompaction.listEpochs(spark, bucket) == Seq(-1L))
+
+    // state C': every original deleted — the staged fold is the ONLY
+    // copy of the bucket; recover must swap it in, never drop it
+    BlockSink.writeBatch(rows(8 until 10), batchId = 3L, out, bucketBlocks = 16L)
+    val want3 = read().toSet
+    stage(); write(marker, "-1\n3\n#end:2"); dropEpoch(-1L); dropEpoch(3L)
+    intercept[java.io.IOException](
+      BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1))
+    assert(midCrashRead() == want3 -- want3.filter(_._1 < 16L),
+      "bucket 0 is mid-fold: hidden staging must not serve reads")
     BlockSink.recoverBucket(spark, out, bucket = 0L)
-    assert(!fs.exists(p(s"$out/.compact_0.old")))
-    assert(spark.read.parquet(out)
-      .select($"block_number", $"log_index", $"v").collect().toSet == want)
+    assert(!exists(marker) && !exists(staging))
+    assert(read().size == want3.size && read().toSet == want3,
+      "recover lost the staged-only copy")
+
+    // state D: crash after swap-in, before cleanup — recover keeps the
+    // folded partition and drops the leftovers
+    new java.io.File(staging).mkdirs(); write(marker, "-1\n3\n#end:2")
+    BlockSink.recoverBucket(spark, out, bucket = 0L)
+    assert(!exists(marker) && !exists(staging))
+    assert(read().size == want3.size && read().toSet == want3)
 
     // recovered state compacts cleanly again
+    BlockSink.writeBatch(rows(10 until 12), batchId = 4L, out, bucketBlocks = 16L)
+    val want4 = read().toSet
     BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1)
-    assert(spark.read.parquet(out)
-      .select($"block_number", $"log_index", $"v").collect().toSet == want)
+    assert(IngestCompaction.listEpochs(spark, bucket) == Seq(-1L))
+    assert(read().size == want4.size && read().toSet == want4)
   }
 
   private def dataFiles(dir: String): Seq[java.io.File] = {

@@ -27,6 +27,11 @@ class StreamingSpec extends AnyFunSuite {
 
   private def tmp(): String = TestSpark.tempDir("graft-stream")
 
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten.flatMap(f =>
+      if (f.isDirectory && !f.getName.startsWith(".")) dataFiles(f.getPath)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil).sortBy(_.getPath)
+
   test("replay source honors confirmation lag and block_step chunking") {
     val stream = StreamOps.readBlockStream(spark, path,
       blockStep = 10L, confirmations = 2L)
@@ -664,9 +669,9 @@ class StreamingSpec extends AnyFunSuite {
       "fold changed the drained pair set")
     assert(bandSet(runB) == bandSet(runA),
       "fold changed the band index content")
-    // partition bound: folded 0..2 into one + epoch 3 = exactly 2
-    assert(IngestCompaction.listEpochs(spark, s"$runB/append") == Seq(2L, 3L),
-      "append partitions not folded to {2, 3}")
+    // partition bound: folded 0..2 into -1 + epoch 3 = exactly 2
+    assert(IngestCompaction.listEpochs(spark, s"$runB/append") == Seq(-1L, 3L),
+      "append partitions not folded to {-1, 3}")
     // a second fold over the already-folded range is a no-op (the
     // replayed-compaction path inside a recovering foreachBatch)
     IngestCompaction.recover(spark, s"$runB/append")
@@ -679,13 +684,9 @@ class StreamingSpec extends AnyFunSuite {
     "mid-delete roll-forward, post-swap cleanup, marker blocks new runs") {
     import graft.streaming.IngestCompaction
     def writeEpochs(dir: String, n: Int): Unit =
-      (0 until n).foreach { e =>
-        spark.range(e * 10, e * 10 + 10)
-          .select($"id", ($"id" * 2).as("v"), lit(e.toLong).as("ingest_batch"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch").parquet(dir)
-      }
+      (0 until n).foreach(e => IngestCompaction.writeEpoch(
+        spark.range(e * 10, e * 10 + 10).select($"id", ($"id" * 2).as("v")),
+        dir, e.toLong))
     def rows(dir: String) = spark.read.parquet(dir)
       .select($"id", $"v").as[(Long, Long)].collect().toSet
     val full = (0L until 30L).map(i => (i, i * 2)).toSet
@@ -696,7 +697,7 @@ class StreamingSpec extends AnyFunSuite {
     // exactly once, never a double-count of staged + original rows
     val a = tmp(); writeEpochs(a, 3)
     spark.read.parquet(a).filter($"ingest_batch" <= 1)
-      .withColumn("ingest_batch", lit(1L)).repartition(1)
+      .withColumn("ingest_batch", lit(-1L)).repartition(1)
       .write.partitionBy("ingest_batch").parquet(s"$a/.compact_fold.tmp")
     assert(rows(a) == full,
       "reader saw staged fold rows — hidden dir leaked into discovery")
@@ -714,7 +715,7 @@ class StreamingSpec extends AnyFunSuite {
     // original already deleted) → recover rolls FORWARD
     val b = tmp(); writeEpochs(b, 3)
     spark.read.parquet(b).filter($"ingest_batch" <= 2)
-      .withColumn("ingest_batch", lit(2L)).repartition(1)
+      .withColumn("ingest_batch", lit(-1L)).repartition(1)
       .write.partitionBy("ingest_batch").parquet(s"$b/.compact_fold.tmp")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$b/_folding"), "0\n1\n2\n#end:3")
@@ -726,7 +727,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("recover"))
     IngestCompaction.recover(spark, b)
-    assert(IngestCompaction.listEpochs(spark, b) == Seq(2L))
+    assert(IngestCompaction.listEpochs(spark, b) == Seq(-1L))
     assert(rows(b) == full, "roll-forward lost or duplicated rows")
     assert(!new java.io.File(s"$b/_folding").exists())
 
@@ -739,7 +740,7 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$c/_folding"), "0\n1\n2\n#end:3")
     IngestCompaction.recover(spark, c)
-    assert(IngestCompaction.listEpochs(spark, c) == Seq(2L))
+    assert(IngestCompaction.listEpochs(spark, c) == Seq(-1L))
     assert(rows(c) == full)
     assert(!new java.io.File(s"$c/_folding").exists() &&
       !new java.io.File(s"$c/.compact_fold.tmp").exists())
@@ -747,10 +748,21 @@ class StreamingSpec extends AnyFunSuite {
     IngestCompaction.recover(spark, c)
     assert(rows(c) == full)
 
-    // (d) fewer than two foldable partitions → no-op, no artifacts
+    // (d) only -1 in range → no-op, no artifacts: an idle stream's
+    // cadence never rewrites its folded partition
     val d = tmp(); writeEpochs(d, 3)
-    IngestCompaction.compact(spark, d, upToEpoch = 0)
-    assert(IngestCompaction.listEpochs(spark, d) == Seq(0L, 1L, 2L))
+    IngestCompaction.compact(spark, d, upToEpoch = 1)
+    assert(IngestCompaction.listEpochs(spark, d) == Seq(-1L, 2L))
+    val folded = dataFiles(s"$d/ingest_batch=-1")
+      .map(f => f.getPath -> f.lastModified)
+    IngestCompaction.compact(spark, d, upToEpoch = 1)
+    assert(dataFiles(s"$d/ingest_batch=-1")
+      .map(f => f.getPath -> f.lastModified) == folded,
+      "a fold with nothing new rewrote the folded partition")
+    assert(IngestCompaction.listEpochs(spark, d) == Seq(-1L, 2L))
+    assert(!new java.io.File(s"$d/_folding").exists() &&
+      !new java.io.File(s"$d/.compact_fold.tmp").exists())
+    assert(rows(d) == full)
 
     // (e) TORN marker (crash mid-publish: staging complete, terminator
     // missing — the object-storage-honest marker's detectable state):
@@ -759,7 +771,7 @@ class StreamingSpec extends AnyFunSuite {
     // list names while keeping the rest → duplicated survivors)
     val e = tmp(); writeEpochs(e, 3)
     spark.read.parquet(e).filter($"ingest_batch" <= 2)
-      .withColumn("ingest_batch", lit(2L)).repartition(1)
+      .withColumn("ingest_batch", lit(-1L)).repartition(1)
       .write.partitionBy("ingest_batch").parquet(s"$e/.compact_fold.tmp")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$e/_folding"), "0\n1") // torn: no #end
@@ -782,6 +794,22 @@ class StreamingSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$e2/_folding").exists())
   }
 
+  test("ingest compaction: one epoch written in many files folds to " +
+    "targetFiles with the same rows") {
+    import graft.streaming.IngestCompaction
+    val dir = tmp()
+    spark.range(0, 40).select($"id", ($"id" * 2).as("v"))
+      .repartition(4).withColumn("ingest_batch", lit(0L))
+      .write.mode("overwrite").partitionBy("ingest_batch").parquet(dir)
+    def rows() = spark.read.parquet(dir).select($"id", $"v")
+      .as[(Long, Long)].collect().toSeq.sorted
+    val before = rows()
+    assert(before.size == 40 && dataFiles(dir).size == 4)
+    IngestCompaction.compact(spark, dir, upToEpoch = 0, targetFiles = 1)
+    assert(dataFiles(dir).size == 1, "one epoch's files were not folded")
+    assert(rows() == before, "the fold changed the rows")
+  }
+
   test("non-atomic-rename filesystem: compaction DETECTS and refuses " +
     "before any destructive step; opt-in conf restores the protocol") {
     import graft.streaming.{BlockSink, FsCommit, IngestCompaction}
@@ -789,13 +817,9 @@ class StreamingSpec extends AnyFunSuite {
     hconf.set("fs.nonatomic.impl", classOf[NonAtomicRenameFileSystem].getName)
     hconf.setBoolean("fs.nonatomic.impl.disable.cache", true)
     def writeEpochs(dir: String, n: Int): Unit =
-      (0 until n).foreach { e =>
-        spark.range(e * 10, e * 10 + 10)
-          .select($"id", ($"id" * 2).as("v"), lit(e.toLong).as("ingest_batch"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch").parquet(dir)
-      }
+      (0 until n).foreach(e => IngestCompaction.writeEpoch(
+        spark.range(e * 10, e * 10 + 10).select($"id", ($"id" * 2).as("v")),
+        dir, e.toLong))
     val base = tmp()
     writeEpochs(base, 3)
     val dir = s"nonatomic://$base" // same files, untrusted scheme
@@ -818,19 +842,19 @@ class StreamingSpec extends AnyFunSuite {
       .write.mode("overwrite")
       .partitionBy("block_bucket", "ingest_batch").parquet(sink)
     val err2 = intercept[java.io.IOException] {
-      BlockSink.compactBucket(spark, s"nonatomic://$sink", 0L, 1,
-        orderCols = Seq("block_number"))
+      BlockSink.compactBucket(spark, s"nonatomic://$sink", 0L, 1)
     }
     assert(err2.getMessage.contains("atomic"), err2.getMessage)
-    assert(!new java.io.File(s"$sink/_compacting_0").exists(),
-      "guard must fire before the compaction marker is created")
+    assert(!new java.io.File(s"$sink/block_bucket=0/_folding").exists() &&
+      !new java.io.File(s"$sink/block_bucket=0/.compact_fold.tmp").exists(),
+      "guard must fire before any protocol artifact is created")
     // (c) operator opt-in: the scheme asserted atomic → the full
     // protocol runs and the fold is content-identical to the local run
     hconf.set(FsCommit.AtomicSchemesKey, "nonatomic")
     try {
       IngestCompaction.recover(spark, dir)
       IngestCompaction.compact(spark, dir, upToEpoch = 2)
-      assert(IngestCompaction.listEpochs(spark, dir) == Seq(2L))
+      assert(IngestCompaction.listEpochs(spark, dir) == Seq(-1L))
       assert(spark.read.parquet(base).select($"id", $"v")
         .as[(Long, Long)].collect().toSet ==
         (0L until 30L).map(i => (i, i * 2)).toSet)
