@@ -22,13 +22,6 @@ import graft.operators.Similarity
   */
 object ScaleProbe {
 
-  /** Fixture content identity for probe-local /tmp caches —
-    * [[SparkEntry.tableKey]] (ONE recipe: path + max mtime + total
-    * bytes) sanitized into a dir-name-safe token.
-    */
-  private def fixtureKey(spark: SparkSession, path: String): String =
-    SparkEntry.tableKey(spark, path).replaceAll("[^A-Za-z0-9]", "_")
-
   def main(args: Array[String]): Unit = {
     val only = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -66,6 +59,15 @@ object ScaleProbe {
       spark.catalog.clearCache()
       Some((tag, sec, rows))
     }
+
+    // a fixture-keyed cache (GateHarness.fixtureScratch, the gates'
+    // scratch) at `<root>/<name>`, filled untimed and only when `tag`
+    // runs, so a tag subset fills no cache it does not read; "" when
+    // `tag` is filtered out (its row never runs)
+    def cached(tag: String, name: String)(populate: String => Unit): String =
+      if (only.nonEmpty && !only(tag)) ""
+      else GateHarness.fixtureScratch(spark, s"$sfDir/documents.parquet",
+        s"probe_$name", name)(root => populate(s"$root/$name")) + s"/$name"
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val nDocs = docs.count()
@@ -278,10 +280,7 @@ object ScaleProbe {
         // pure-parse shape, NOT mm_audio_aiff_raw's codec-bound one
         // (the round-15 433 s vs 10.2 s finding, operationalized).
         // Fixture-keyed /tmp cache, the dedup_pairs_served convention.
-        val normDir = s"/tmp/graft_probe_audnorm_" +
-          fixtureKey(spark, s"$sfDir/documents.parquet")
-        if ((only.isEmpty || only("mm_audio_norm_served")) &&
-            !new java.io.File(s"$normDir/_SUCCESS").exists())
+        val normDir = cached("mm_audio_norm_served", "audnorm") { dir =>
           graft.operators.Multimodal.normalizeAudio(
             graft.operators.Multimodal.attachWavAudio(docs)
               .select(org.apache.spark.sql.functions.col("doc_id"),
@@ -289,7 +288,8 @@ object ScaleProbe {
                 graft.functions.vec.wavToAiff(
                   org.apache.spark.sql.functions.col("payload"))
                   .as("payload")))
-            .write.mode("overwrite").parquet(normDir)
+            .write.mode("overwrite").parquet(dir)
+        }
         time("mm_audio_norm_served") {
           graft.operators.Multimodal.audioNearDupPairs(
             spark.read.parquet(normDir), maxHamming = 6,
@@ -390,12 +390,10 @@ object ScaleProbe {
         // the fixtureScratch convention) — a doc-count-only key would
         // silently serve a stale index after a fixture regeneration
         // with the same row count
-        val idxDir = s"/tmp/graft_probe_mhidx_" +
-          fixtureKey(spark, s"$sfDir/documents.parquet")
-        if ((only.isEmpty || only("dedup_pairs_served")) &&
-            !new java.io.File(s"$idxDir/_SUCCESS").exists())
+        val idxDir = cached("dedup_pairs_served", "mhidx") { dir =>
           graft.operators.Dedup.minHashBandIndex(docs)
-            .write.mode("overwrite").parquet(idxDir)
+            .write.mode("overwrite").parquet(dir)
+        }
         time("dedup_pairs_served") {
           graft.operators.Dedup.minHashLshPairsFromIndex(
             spark.read.parquet(idxDir), minJaccard = 0.5,
@@ -489,14 +487,14 @@ object ScaleProbe {
         // semantic decon, round-19: the prescreen × early-exit tier →
         // quality/lang gate) — the same definition the oracled
         // pipeline_corpus_build materializes and writes
-        SparkEntry.corpusBuildSelected(docs).count() },
+        graft.operators.CorpusBuild.corpusBuildSelected(docs).count() },
       time("corpus_build_mm_raw") {
         // the MULTIMODAL capstone chain (round-15; round-19 adds the
         // semantic ivf_flag tier + the image-decon stage): exact text
         // dedup ∩ three real-decoder near-dup joins in one cluster
         // resolution ∩ semantic + image decon ∩ quality gate — the
         // same definition pipeline_corpus_build_mm materializes
-        SparkEntry.corpusBuildMmSelected(docs).count() },
+        graft.operators.CorpusBuild.corpusBuildMmSelected(docs).count() },
       time("mm_decon_report_raw") {
         // the attribution report at scale (round-19): mm_decon_raw's
         // fixture through the INNER-join + eval-keyed count-distinct
@@ -618,13 +616,11 @@ object ScaleProbe {
     // normalize-once rows.
     val textEmbedRuns: Seq[Option[(String, Double, Long)]] = {
       import org.apache.spark.sql.functions.col
-      val embDir = s"/tmp/graft_probe_textemb_" +
-        fixtureKey(spark, s"$sfDir/documents.parquet")
       def embed = graft.operators.TextOps.hashEmbedUnit(docs)
         .withColumnRenamed("doc_id", "vec_id")
-      if ((only.isEmpty || only("recall_text_embed")) &&
-          !new java.io.File(s"$embDir/_SUCCESS").exists())
-        embed.write.mode("overwrite").parquet(embDir)
+      val embDir = cached("recall_text_embed", "textemb") { dir =>
+        embed.write.mode("overwrite").parquet(dir)
+      }
       Seq(
         time("text_embed_raw") {
           // the one-time embed pass: kernel + unit normalization
@@ -954,7 +950,10 @@ object ScaleProbe {
     // #7): every BATCH decon member carries 100×/1000× rows; these pin
     // the micro-batch overhead curve of the in-flight drop gates. The
     // corpus drains as a file stream in 8 range-partitioned slices
-    // (maxFilesPerTrigger = 1 → 8 micro-batches); "sec" is the full
+    // (GateHarness.sliceStream → 8 micro-batches) through the gates'
+    // drain (GateHarness.drainToParquet: private session, fork-free
+    // checkpoint filesystem, listener buses detached) at the probe's
+    // shuffle width; "sec" is the full
     // drain wall including the parquet sink + checkpoint I/O, rows =
     // the flagged count. Benchmark recipe matches mm_decon_raw (every
     // 300th doc), so the delta against the batch rows IS the
@@ -971,19 +970,13 @@ object ScaleProbe {
         val root = java.nio.file.Files
           .createTempDirectory("graft_probe_sd").toString
         try {
-          docs.select("doc_id", "text")
-            .repartitionByRange(8, col("doc_id"))
-            .write.mode("overwrite").parquet(s"$root/in")
-          val schema = spark.read.parquet(s"$root/in").schema
-          def stream = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$root/in")
+          val stream = GateHarness.sliceStream(spark,
+            docs.select("doc_id", "text"), "doc_id", 8) { write =>
+            write(root); root }
           def drain(out: org.apache.spark.sql.DataFrame,
               dir: String): Long = {
-            val q = out.writeStream.format("parquet")
-              .option("path", s"$dir/out")
-              .option("checkpointLocation", s"$dir/ckpt")
-              .outputMode("append").start()
-            try q.processAllAvailable() finally q.stop()
+            GateHarness.drainToParquet(spark, out, dir,
+              Seq("spark.sql.shuffle.partitions" -> shuffle))
             spark.read.parquet(s"$dir/out").count()
           }
           Seq(
@@ -999,8 +992,7 @@ object ScaleProbe {
                 graft.operators.Multimodal.attachMedia(stream), bench,
                 maxHamming = 6, bands = 2, bandBits = 32,
                 probeRadius = 1, nHint = nDocs), s"$root/m") })
-        } finally org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(root))
+        } finally GateHarness.deleteRecursively(root)
       }
     }
 

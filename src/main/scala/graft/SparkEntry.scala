@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftSessionShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, EventDecoder, EventLog, Multimodal, Sampling, Similarity, Sketches, TextOps}
+import graft.GateHarness._
+import graft.operators.{CorpusBuild, Dedup, EventDecoder, EventLog, Multimodal, Sampling, Similarity, Sketches, TextOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -46,20 +47,6 @@ object SparkEntry {
       column: String = "doc_id"): Long =
     new graft.sources.FooterHeadTracker(column).maxValue(s, path)
       .getOrElse(0L)
-
-  /** Corpus identity for cross-query model/scratch caches: path + max
-    * mtime + total bytes of the backing files — changes whenever the
-    * fixture is regenerated. Footer-free (a Hadoop FS listing, no data
-    * read). Used to key the IVF trained-quantizer cache and the
-    * stream_dedup doubled-scratch dir.
-    */
-  private[graft] def tableKey(s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats = fs.listStatus(p).filter(_.isFile)
-    val mt = if (stats.isEmpty) 0L else stats.map(_.getModificationTime).max
-    s"$path@$mt:${stats.map(_.getLen).sum}"
-  }
 
   /** Shared decimal cast: keeps double aggregation exact + order-insensitive. */
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
@@ -109,310 +96,39 @@ object SparkEntry {
       a.join(e, keys, "left_anti").agg((count(lit(1)) === 0).as("subset_ok")))
   }
 
-  /** Shuffle and state-store width of every streaming drain: the gates
-    * hold a few hundred rows of state, where 4 stores beat `cpus`
-    * near-empty ones (each store loads and commits a version per
-    * trigger).
+  /** One-row verdict `name`: the `doc_id` sets of `a` and `b` are equal (a
+    * full outer join leaves no one-sided row) — drained vs batch flagged
+    * ids, incremental vs full re-flag.
     */
-  private val DrainWidth = 4
+  private def idSetsEqual(a: DataFrame, b: DataFrame,
+      name: String = "equal_ok"): DataFrame =
+    a.withColumn("l", lit(1)).as("a")
+      .join(b.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
+      .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0).as(name))
 
-  /** Shared harness for every streaming query a query body runs: `start`
-    * receives `out` rebound onto a private clone of `s` at [[DrainWidth]]
-    * plus `conf` and returns the started query, which is drained and
-    * stopped. The caller's session conf is never written. A stateful
-    * query's state width and state-store provider are fixed by the
-    * session its DataFrame is bound to when `start()` runs, so the
-    * private session sets them, and other work on `s` keeps its own
-    * values throughout. Checkpoint files go through the
-    * fork-free local filesystem ([[graft.streaming.NioLocalFs.install]],
-    * on the private session). After the stop, the streaming listener
-    * buses of the private session and of the query's own clone of it are
-    * detached ([[GraftSessionShim.detachStreams]]), so a drain leaves no
-    * listener on the SparkContext's bus. Returns the private session,
-    * which holds a memory sink's table.
+  /** One-row `equal_ok`: `a` and `b` hold the same `(d1, d2)` pairs and
+    * their `value` columns differ by at most `tol` on every pair.
     */
-  private def drain(s: SparkSession, out: DataFrame,
-      conf: Seq[(String, String)] = Nil)(
-      start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery)
-      : SparkSession = {
-    val p = GraftSessionShim.privateSession(s,
-      ("spark.sql.shuffle.partitions" -> DrainWidth.toString) +: conf: _*)
-    graft.streaming.NioLocalFs.install(p)
-    try {
-      val q = start(GraftSessionShim.rebind(out, p))
-      try q.processAllAvailable()
-      finally {
-        q.stop()
-        GraftSessionShim.detachStreams(GraftSessionShim.sessionForStream(q))
-      }
-    } finally GraftSessionShim.detachStreams(p)
-    p
-  }
+  private def pairValuesEqual(a: DataFrame, b: DataFrame, value: String,
+      tol: Double): DataFrame =
+    a.withColumnRenamed(value, "va")
+      .join(b.withColumnRenamed(value, "vb"), Seq("d1", "d2"), "full")
+      .agg(((count(when(col("va").isNull || col("vb").isNull, 1)) === 0)
+        && coalesce(max(abs(col("va") - col("vb"))) <= tol, lit(true)))
+        .as("equal_ok"))
 
-  /** Drain `out` into a fresh memory sink ([[drain]]) and return the sink
-    * table, bound to `s`. The checkpoint is deleted after the drain: the
-    * result lives in the memory sink, and repeated Verify/Bench
-    * invocations must not accumulate /tmp garbage. `rocksDb` keeps the
-    * query's state on the RocksDB provider ([[graft.streaming.StateBackend]],
-    * set on the drain's private session).
+  /** The drained pairs at `dir`, or no rows of `ddl`'s schema: a corpus
+    * slice with zero qualifying pairs leaves the dir schema-less
+    * (partition dirs only appear on non-empty epochs).
     */
-  private def runStreamingGate(s: SparkSession, sinkName: String,
-      out: DataFrame,
-      outputMode: org.apache.spark.sql.streaming.OutputMode =
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-      rocksDb: Boolean = false): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sg").toString
-    val p = try drain(s, out,
-        if (rocksDb) graft.streaming.StateBackend.RocksDb else Nil) {
-        _.writeStream.format("memory").queryName(sinkName)
-          .outputMode(outputMode)
-          .option("checkpointLocation", ckpt)
-          .start()
-      } finally deleteRecursively(ckpt)
-    GraftSessionShim.rebind(p.table(sinkName), s)
-  }
-
-  /** Drain `out` into `\$run/out` through the parquet sink (checkpoint at
-    * `\$run/ckpt`): the file-sink twin of [[runStreamingGate]].
-    */
-  private def drainToParquet(s: SparkSession,
-      out: DataFrame, run: String): Unit =
-    drain(s, out)(_.writeStream.format("parquet")
-      .option("path", s"$run/out")
-      .option("checkpointLocation", s"$run/ckpt")
-      .outputMode("append").start())
-
-  /** Scratch the RETURNED DataFrame is still backed by (the caller
-    * writes/collects it after this function returns, so it cannot be
-    * deleted eagerly): cleaned at JVM exit.
-    */
-  private def onJvmExitDelete(dir: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(dir)))
-
-  private def deleteRecursively(dir: String): Unit = {
-    // one deletion implementation (fixtureScratch already depends on
-    // commons-io); the old hand-rolled Files.walk also left its stream
-    // unclosed on a mid-iteration exception
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
-
-  /** Fixture-keyed /tmp scratch with atomic population (shared by the
-    * queries that derive a one-time input from a fixture table): the dir
-    * name embeds the fixture's mtime+size (stale copies never reused),
-    * `populate` writes into a run-private temp sibling that is RENAMED
-    * into place (concurrent runs: one wins, the other discards), and
-    * older-version/orphaned dirs for the same fixture are pruned
-    * age-gated on every call (younger than an hour may belong to a live
-    * run). Returns the scratch root.
-    */
-  private def fixtureScratch(s: SparkSession, srcPath: String, tag: String,
-      markerSubdir: String)(populate: String => Unit): String = {
-    val pathPart = srcPath.replaceAll("[^A-Za-z0-9]", "_")
-    val scratch = s"/tmp/graft_${tag}_cache_" +
-      tableKey(s, srcPath).replaceAll("[^A-Za-z0-9]", "_")
-    val marker = java.nio.file.Paths.get(s"$scratch/$markerSubdir/_SUCCESS")
-    if (!java.nio.file.Files.exists(marker)) {
-      val tmp = s"$scratch.tmp.${java.util.UUID.randomUUID}"
-      populate(tmp)
-      def move(): Unit = java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(scratch),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      try move()
-      catch { case _: java.nio.file.FileSystemException =>
-        // target exists. If it carries the marker we lost a healthy race —
-        // keep the winner's copy. A MARKER-LESS target (half-deleted dir,
-        // a committer configured to skip _SUCCESS) would otherwise make
-        // every future call re-populate and discard — evict it and retry
-        // once; on a second loss, defer to the age-gated prune below.
-        if (java.nio.file.Files.exists(marker))
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-        else {
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-          try move()
-          catch { case _: java.nio.file.FileSystemException =>
-            org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-          }
-        }
-      }
-      // the double-loss window (evicted a marker-less target, lost the
-      // retry to ANOTHER marker-less writer) must not hand the caller a
-      // half-populated dir — verify the winner actually carries the
-      // marker and fail loudly; the next run starts clean
-      if (!java.nio.file.Files.exists(marker))
-        throw new IllegalStateException(
-          s"fixture scratch $scratch has no $markerSubdir/_SUCCESS marker " +
-            "after populate+move — concurrent populate race left an " +
-            "unverified dir; re-run (stale dirs are pruned age-gated)")
+  private def pairsOrEmpty(s: SparkSession, dir: String,
+      ddl: String): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    try s.read.parquet(dir).select(schema.fieldNames.map(col): _*)
+    catch { case _: org.apache.spark.sql.AnalysisException =>
+      s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    val cutoff = System.currentTimeMillis() - 3600L * 1000
-    val stale = new java.io.File("/tmp").listFiles()
-    if (stale != null) stale
-      .filter(f => f.getName.startsWith(s"graft_${tag}_cache_$pathPart") &&
-        f.getAbsolutePath != scratch &&
-        f.lastModified() < cutoff)
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    scratch
-  }
-
-  /** The corpus-build selection chain (`pipeline_corpus_build`'s
-    * operator composition, and ScaleProbe's `corpus_build_raw` scale
-    * row — one definition): exact dedup (min-id winners) → benchmark
-    * decontamination (mod-97 eval split, 3-grams) → SEMANTIC
-    * decontamination over the in-engine hashed embeddings (round-19:
-    * the PRESCREEN × EARLY-EXIT tier `semanticDecontaminateIvfFlag` —
-    * round-18 measured it 6.4× cheaper than the plain flag tier at
-    * the 5M clustered tier and parity at 500k, so the capstone runs
-    * the measured-best tier; flagged set is IDENTICAL by the
-    * recall-1 theorem, so the oracle replay is unchanged) → quality
-    * gate ≥ 0.5 + language ID → `(doc_id, pred_lang, n_tokens)`. The
-    * semantic stage runs over post-gram-decon SURVIVORS only (docs the
-    * gram stage already dropped never embed), as do the lang+quality
-    * and token-stats passes. `semCorpusKey` keys the quantizer's
-    * centroid cache (the query passes the fixture key; probes may
-    * leave it None to retrain per call).
-    */
-  private[graft] def corpusBuildSelected(docs: DataFrame,
-      semCorpusKey: Option[String] = None): DataFrame = {
-    val winners = graft.operators.Dedup.exact(docs)
-      .select(col("keep_id").as("doc_id"))
-    val corpus = docs.join(winners, Seq("doc_id"), "left_semi")
-      .filter(col("doc_id") % 97 =!= 0)
-    val evalSplit = docs.filter(col("doc_id") % 97 === 0)
-    val deconned = graft.operators.Dedup.decontaminate(corpus,
-      evalSplit, n = 3)
-    val semFlagged = graft.operators.TextOps.semanticDecontaminateIvfFlag(
-      deconned, evalSplit, corpusKey = semCorpusKey)
-    // the survivor frame persists: it feeds BOTH the lang/quality pass
-    // and the token-stats pass below, and unpersisted each side re-ran
-    // the whole exact-dedup → gram-decon → semantic-anti-join chain
-    // (the corpusBuildMmSelected `base`-persist convention)
-    val selected = graft.CacheScope.persist(
-      deconned.join(broadcast(semFlagged), Seq("doc_id"), "left_anti"),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // lang/quality and token stats are both row-local: ONE survivor
-    // pass (langQualityTokenStats) replaces two scans + an id-keyed
-    // join — expressions identical, results bit-identical
-    graft.operators.TextOps.langQualityTokenStats(selected)
-      .filter(col("quality") >= 0.5)
-      .select(col("doc_id"), col("pred_lang"),
-        col("n_ws_tokens").as("n_tokens"))
-  }
-
-  /** The MULTIMODAL corpus-build selection (`pipeline_corpus_build_mm`'s
-    * composition and ScaleProbe's `corpus_build_mm_raw` scale row — one
-    * definition): re-id every 5th doc of every kind as an arriving
-    * duplicate, then exact text dedup (min-id winners) ∩ media
-    * near-dup representatives — a DELIBERATELY MIXED-CONTAINER corpus
-    * (round-16: every other image arrives as a PNG transcode of the
-    * same pixels, every other WAV as its AIFF transcode; videos stay
-    * REAL YUV4MPEG2) run through the NORMALIZE-ONCE recipe
-    * ([[graft.operators.Multimodal.normalizeImages]] /
-    * `normalizeAudio`) so the near-dup joins downstream see ONE
-    * canonical format per kind and pay pure-parse decode cost — the
-    * deployment shape the round-15 AIFF cost finding (433 s/pass
-    * javax.sound vs 10.2 s pure parse at 100×) prescribes, now
-    * exercised end to end. Normalization is bit-preserving in the
-    * fingerprint domain (the round-16 `mm_audio_normalize*` and
-    * round-15 `mm_image_normalize` gates), so pairs, clusters, and the
-    * manifest are IDENTICAL to the canonical-fixture run. Per-kind
-    * pair sets union into ONE cluster resolution ∩ the lang/quality
-    * gate ∩ (round-17) the SEMANTIC decontamination gate: the mod-97
-    * eval split (by ORIGINAL id — a re-id'd duplicate carries its
-    * source doc's verdict) is excluded and every doc whose hashed-
-    * embedding cosine reaches 4/5 against any eval doc is dropped via
-    * (round-19) the measured-best PRESCREEN × EARLY-EXIT tier
-    * (`semanticDecontaminateIvfFlag` — flagged set identical to the
-    * flag tier's by the recall-1 theorem, oracle unchanged) — the
-    * text→vector→flag loop running inside the multimodal build —
-    * ∩ (round-19) the IMAGE decontamination gate: corpus images
-    * within Hamming 6 (byte dHash over the canonical-P6 body, the
-    * pinned 4×16 layout) of ANY eval-split image are dropped via
-    * `dHashDecontaminateFlag` — the media leg now decontaminates, not
-    * just deduplicates, and the oracle replays the hash/band/verify
-    * relationally
-    * → `(doc_id, kind, pred_lang, n_tokens)`.
-    */
-  private[graft] def corpusBuildMmSelected(docs: DataFrame,
-      semCorpusKey: Option[String] = None,
-      maxIdHint: Option[Long] = None): DataFrame = {
-    // the re-id offset needs max(doc_id): the query passes the footer-
-    // stats value (footerMaxId — no plan-time scan job); probe callers
-    // without a fixture path fall back to the aggregate
-    val maxId = maxIdHint.getOrElse(
-      docs.agg(max(col("doc_id"))).head.getLong(0))
-    val m = (maxId / 3 + 1) * 3
-    val dups = docs.filter(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + m).as("doc_id"), col("text"))
-    val base = graft.CacheScope.persist(
-      docs.select(col("doc_id"), col("text")).unionByName(dups))
-    val textWinners = graft.operators.Dedup.exact(base)
-      .select(col("keep_id").as("doc_id"))
-    // mixed containers ride the SAME synthesis projection (the split is
-    // a row-local when(), not a second pass), then normalize-once
-    // restores the canonical format before anything downstream decodes
-    val mixedImages = graft.operators.Multimodal.attachPpmImages(base)
-      .select(col("doc_id"), col("kind"),
-        when((col("doc_id") / 3) % 2 === 0, col("payload"))
-          .otherwise(graft.functions.vec.ppmToPng(col("payload")))
-          .as("payload"))
-    val mixedAudio = graft.operators.Multimodal.attachWavAudio(base)
-      .select(col("doc_id"), col("kind"),
-        when((col("doc_id") / 3) % 2 === 0, col("payload"))
-          .otherwise(graft.functions.vec.wavToAiff(col("payload")))
-          .as("payload"))
-    val media = graft.CacheScope.persist(
-      graft.operators.Multimodal.normalizeImages(mixedImages)
-        .unionByName(graft.operators.Multimodal.normalizeAudio(mixedAudio))
-        .unionByName(graft.operators.Multimodal.attachY4mVideo(base)))
-    val pairs = graft.operators.Multimodal.dHashImageNearDupPairs(media,
-        maxHamming = 6, maxBucketSize = Some(1024)).select("d1", "d2")
-      .unionByName(graft.operators.Multimodal.audioNearDupPairs(media,
-        maxHamming = 6, maxBucketSize = Some(1024)).select("d1", "d2"))
-      .unionByName(graft.operators.Multimodal.videoNearDupPairs(media,
-        minSharedFrames = 1, maxBucketSize = Some(1024))
-        .select("d1", "d2"))
-    val mediaReps = graft.operators.Dedup.keepRepresentatives(
-      media.select(col("doc_id")), pairs)
-    // ONE base pass for lang/quality + token stats (both row-local;
-    // langQualityTokenStats) instead of two scans + two id-keyed
-    // joins downstream — expressions identical, results bit-identical
-    val qualityTokens = graft.operators.TextOps.langQualityTokenStats(base)
-      .filter(col("quality") >= 0.5)
-      .select(col("doc_id"), col("pred_lang"),
-        col("n_ws_tokens").as("n_tokens"))
-    // semantic decon by ORIGINAL id (a re-id'd dup shares its source
-    // text, hence its flag): prescreen × early-exit flags against the
-    // mod-97 eval split, computed once over the original docs
-    // (round-19: the measured-best tier — flagged set equals the
-    // plain flag tier's by the recall-1 theorem, oracle unchanged)
-    val semFlagged = graft.operators.TextOps.semanticDecontaminateIvfFlag(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0), corpusKey = semCorpusKey)
-      .select(col("doc_id").as("orig_id"))
-    // IMAGE decontamination (round-19, VERDICT r18 #1): the media leg
-    // previously deduplicated but never decontaminated — flag corpus
-    // images whose byte dHash (canonical-P6 body, 13-byte header)
-    // lands within Hamming 6 of ANY eval-split image and drop them.
-    // The pinned 4×16 layout keeps the oracle replay scale-independent;
-    // flagged ids are image-kind only, so the anti join leaves audio/
-    // video untouched.
-    val evalImages = graft.operators.Multimodal.attachPpmImages(
-      docs.filter(col("doc_id") % 97 === 0))
-    val imgFlagged = graft.operators.Multimodal.dHashDecontaminateFlag(
-      media, evalImages, maxHamming = 6, bands = 4, bandBits = 16,
-      headerLen = 13)
-    val origId =
-      when(col("doc_id") >= m, col("doc_id") - m).otherwise(col("doc_id"))
-    media.select(col("doc_id"), col("kind"))
-      .withColumn("orig_id", origId)
-      .filter(col("orig_id") % 97 =!= 0)
-      .join(broadcast(semFlagged), Seq("orig_id"), "left_anti")
-      .drop("orig_id")
-      .join(broadcast(imgFlagged), Seq("doc_id"), "left_anti")
-      .join(textWinners, Seq("doc_id"), "left_semi")
-      .join(mediaReps.select("doc_id"), Seq("doc_id"), "left_semi")
-      .join(qualityTokens, Seq("doc_id"))
   }
 
   /** The fixture-keyed half-corpus MinHash band index shared by every
@@ -747,7 +463,7 @@ object SparkEntry {
     "s7_sink_roundtrip" -> ((s, dir) => {
       graft.sources.RpcLogSource.registerTransport("verify_sim_sink",
         new graft.sources.SimEthNode(head = 80L, logsPerBlock = 3))
-      val out = java.nio.file.Files.createTempDirectory("graft_sink_rt").toString
+      val out = runDir("graft_sink_rt") // the result frame stays file-backed
       val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ck").toString
       val stream = s.readStream.format("graft.sources.RpcLogProvider")
         .option("transport", "verify_sim_sink").option("confirmations", "0")
@@ -757,7 +473,6 @@ object SparkEntry {
       drain(s, stream)(graft.streaming.BlockSink.start(_, out, ckpt,
         bucketBlocks = 16L))
       deleteRecursively(ckpt)
-      onJvmExitDelete(out) // the result frame stays file-backed until written
       s.read.parquet(out)
         .select(col("block_bucket").cast("bigint").as("block_bucket"),
           col("block_number"), col("log_index"), col("v"))
@@ -1916,11 +1631,7 @@ object SparkEntry {
         s.read.parquet(s"$scratch/index"), minJaccard = 0.5)
       val direct = Dedup.minHashLshPairs(docs.filter(col("doc_id") <= half),
         n = 3, numHashes = 64, bands = 16, minJaccard = 0.5)
-      val eq = served.as("a").join(direct.as("b"), Seq("d1", "d2"), "full")
-        .agg(((count(when(col("a.est_jaccard").isNull
-          || col("b.est_jaccard").isNull, 1)) === 0)
-          && coalesce(max(abs(col("a.est_jaccard") - col("b.est_jaccard")))
-            <= 1e-12, lit(true))).as("equal_ok"))
+      val eq = pairValuesEqual(served, direct, "est_jaccard", 1e-12)
       docs.filter(col("doc_id") <= half)
         .agg(count(lit(1)).as("n_docs"))
         .crossJoin(broadcast(eq))
@@ -2025,11 +1736,10 @@ object SparkEntry {
       val docs = table(s, dir, "documents")
       // materialized once so the four epoch writes (and the replay)
       // never recompute the chain
-      val selected = graft.CacheScope.persist(corpusBuildSelected(docs,
+      val selected = graft.CacheScope.persist(CorpusBuild.corpusBuildSelected(docs,
           Some(tableKey(s, s"$dir/documents.parquet") + ":cbsem")),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val run = java.nio.file.Files.createTempDirectory("graft_cb").toString
-      onJvmExitDelete(run)
+      val run = runDir("graft_cb")
       // the last epoch is a crash replay: it rewrites only its own partition
       Seq(0L, 1L, 2L, 3L, 0L).foreach(e => graft.streaming.IngestCompaction
         .writeEpoch(selected.filter(pmod(col("doc_id"), lit(4)) === e),
@@ -2067,13 +1777,12 @@ object SparkEntry {
     // cluster, and the lang/quality/token recompute all hold verbatim.
     "pipeline_corpus_build_mm" -> ((s, dir) => {
       val selected = graft.CacheScope.persist(
-        corpusBuildMmSelected(table(s, dir, "documents"),
+        CorpusBuild.corpusBuildMmSelected(table(s, dir, "documents"),
           Some(tableKey(s, s"$dir/documents.parquet") + ":cbmmsem"),
           maxIdHint =
             Some(footerMaxId(s, s"$dir/documents.parquet"))),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val run = java.nio.file.Files.createTempDirectory("graft_cbmm").toString
-      onJvmExitDelete(run)
+      val run = runDir("graft_cbmm")
       // the last epoch is a crash replay: it rewrites only its own partition
       Seq(0L, 1L, 2L, 3L, 1L).foreach(e => graft.streaming.IngestCompaction
         .writeEpoch(selected.filter(pmod(col("doc_id"), lit(4)) === e),
@@ -2335,13 +2044,7 @@ object SparkEntry {
       // n_new_docs anchors the oracle with an exact SQL-expressible count
       docs.filter(col("doc_id") > half)
         .agg(count(lit(1)).as("n_new_docs"))
-        .crossJoin(broadcast(
-          full.withColumnRenamed("est_jaccard", "ef")
-            .join(inc.withColumnRenamed("est_jaccard", "ei"),
-              Seq("d1", "d2"), "full")
-            .agg(((count(when(col("ef").isNull || col("ei").isNull, 1)) === 0)
-              && coalesce(max(abs(col("ef") - col("ei"))) <= 1e-12, lit(true)))
-              .as("equal_ok"))))
+        .crossJoin(broadcast(pairValuesEqual(full, inc, "est_jaccard", 1e-12)))
     }),
 
     // STREAMING near-dup ingest — the continuous twin of
@@ -2359,17 +2062,10 @@ object SparkEntry {
       // the SAME fixture-keyed base index dedup_incremental_neardup
       // reads — the old side is shingled once ever, for both queries
       val scratch = mhIndexScratch(s, dir, half)
-      val streamIn = fixtureScratch(s, s"$dir/documents.parquet", "ndsin",
-        "in") { tmp =>
-        docs.filter(col("doc_id") > half)
-          .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_nds").toString
-      onJvmExitDelete(run) // the returned frame scans $run/pairs lazily
-      val stream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_nds") // the returned frame scans $run/pairs lazily
+      val stream = sliceStream(s,
+        docs.filter(col("doc_id") > half), "doc_id", 4)(
+        fixtureScratch(s, s"$dir/documents.parquet", "ndsin", "in"))
       // compactEvery=2: the 4-file stream folds its committed append +
       // pairs partitions mid-run (IngestCompaction), so THIS gate also
       // pins that the drained result is unchanged by the fold
@@ -2377,32 +2073,14 @@ object SparkEntry {
         s"$scratch/index", s"$run/append", s"$run/pairs", s"$run/ckpt",
         n = 3, numHashes = 64, bands = 16, minJaccard = 0.5,
         compactEvery = Some(2)))
-      // a corpus slice with zero qualifying pairs leaves $run/pairs
-      // schema-less (partition dirs only appear on non-empty epochs)
-      val streamed = try
-          s.read.parquet(s"$run/pairs").select("d1", "d2", "est_jaccard")
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          s.createDataFrame(s.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("d1",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("d2",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("est_jaccard",
-                org.apache.spark.sql.types.DoubleType))))
-        }
+      val streamed = pairsOrEmpty(s, s"$run/pairs",
+        "d1 BIGINT, d2 BIGINT, est_jaccard DOUBLE")
       val full = Dedup.minHashLshPairs(docs, n = 3, numHashes = 64,
         bands = 16, minJaccard = 0.5).filter(col("d2") > half)
       docs.filter(col("doc_id") > half)
         .agg(count(lit(1)).as("n_new_docs"))
         .crossJoin(broadcast(
-          full.withColumnRenamed("est_jaccard", "ef")
-            .join(streamed.withColumnRenamed("est_jaccard", "es"),
-              Seq("d1", "d2"), "full")
-            .agg(((count(when(col("ef").isNull || col("es").isNull, 1)) === 0)
-              && coalesce(max(abs(col("ef") - col("es"))) <= 1e-12, lit(true)))
-              .as("equal_ok"))))
+          pairValuesEqual(full, streamed, "est_jaccard", 1e-12)))
     }),
 
     // STREAMING image near-dup ingest (round-13): dHashIngestStream
@@ -2431,47 +2109,24 @@ object SparkEntry {
               .select(col("doc_id"), col("text"))))
           .write.mode("overwrite").parquet(s"$tmp/index")
       }
-      val streamIn = fixtureScratch(s, s"$dir/documents.parquet", "mmsin",
-        "in") { tmp =>
-        docs.filter(col("doc_id") > half).select(col("doc_id"), col("text"))
-          .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_mms").toString
-      onJvmExitDelete(run)
-      val stream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_mms")
+      val stream = sliceStream(s,
+        docs.filter(col("doc_id") > half).select(col("doc_id"), col("text")),
+        "doc_id", 4)(
+        fixtureScratch(s, s"$dir/documents.parquet", "mmsin", "in"))
       drain(s, Multimodal.attachMedia(stream))(
         graft.streaming.StreamOps.dHashIngestStream(_, s"$scratch/index",
           s"$run/append", s"$run/pairs", s"$run/ckpt",
           maxHamming = 6, compactEvery = Some(2)))
-      val streamed = try
-          s.read.parquet(s"$run/pairs").select("d1", "d2", "hamming")
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          s.createDataFrame(s.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("d1",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("d2",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("hamming",
-                org.apache.spark.sql.types.LongType))))
-        }
+      val streamed = pairsOrEmpty(s, s"$run/pairs",
+        "d1 BIGINT, d2 BIGINT, hamming BIGINT")
       val full = Multimodal.dHashNearDupPairs(
           Multimodal.attachMedia(docs.select(col("doc_id"), col("text"))),
           maxHamming = 6)
         .filter(col("d2") > half)
       docs.filter(col("doc_id") > half)
         .agg(count(lit(1)).as("n_new_docs"))
-        .crossJoin(broadcast(
-          full.withColumnRenamed("hamming", "hf")
-            .join(streamed.withColumnRenamed("hamming", "hs"),
-              Seq("d1", "d2"), "full")
-            .agg(((count(when(col("hf").isNull || col("hs").isNull, 1)) === 0)
-              && coalesce(max(abs(col("hf") - col("hs"))) === 0, lit(true)))
-              .as("equal_ok"))))
+        .crossJoin(broadcast(pairValuesEqual(full, streamed, "hamming", 0)))
     }),
 
     // Asymmetric containment near-dup (|A∩B|/|A| over gram sets): the
@@ -2664,26 +2319,17 @@ object SparkEntry {
     "stream_decon_flag" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
       val bench = docs.filter(col("doc_id") % 491 === 0)
-      val streamIn = fixtureScratch(s, s"$dir/documents.parquet", "sdf",
-        "in") { tmp =>
-        docs.filter(col("doc_id") % 7 === 0).select("doc_id", "text")
-          .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_sdf").toString
-      onJvmExitDelete(run)
-      val textStream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_sdf")
+      val textStream = sliceStream(s,
+        docs.filter(col("doc_id") % 7 === 0).select("doc_id", "text"),
+        "doc_id", 4)(
+        fixtureScratch(s, s"$dir/documents.parquet", "sdf", "in"))
       drainToParquet(s, TextOps.semanticDecontaminateFlag(textStream, bench),
         run)
       val streamed = s.read.parquet(s"$run/out")
       val batch = TextOps.semanticDecontaminateFlag(
         docs.filter(col("doc_id") % 7 === 0), bench)
-      val eq = streamed.withColumn("l", lit(1)).as("a")
-        .join(batch.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
-        .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0)
-          .as("equal_ok"))
+      val eq = idSetsEqual(streamed, batch)
       streamed.agg(count(lit(1)).as("n_flagged"))
         .crossJoin(broadcast(eq))
     }),
@@ -2700,17 +2346,10 @@ object SparkEntry {
       val bench = Multimodal.attachMedia(docs
         .filter(col("doc_id") % 3 === 0 && (col("doc_id") / 3) % 5 === 0)
         .select((col("doc_id") + m).as("doc_id"), col("text")))
-      val streamIn = fixtureScratch(s, s"$dir/documents.parquet", "smdf",
-        "in") { tmp =>
-        docs.select("doc_id", "text")
-          .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_smdf").toString
-      onJvmExitDelete(run)
-      val textStream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_smdf")
+      val textStream = sliceStream(s,
+        docs.select("doc_id", "text"), "doc_id", 4)(
+        fixtureScratch(s, s"$dir/documents.parquet", "smdf", "in"))
       drainToParquet(s, Multimodal.dHashDecontaminateFlag(
           Multimodal.attachMedia(textStream), bench,
           maxHamming = 6, bands = 4, bandBits = 16), run)
@@ -2718,10 +2357,7 @@ object SparkEntry {
       val batch = Multimodal.dHashDecontaminateFlag(
         Multimodal.attachMedia(docs.select(col("doc_id"), col("text"))),
         bench, maxHamming = 6, bands = 4, bandBits = 16)
-      val eq = streamed.withColumn("l", lit(1)).as("a")
-        .join(batch.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
-        .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0)
-          .as("equal_ok"))
+      val eq = idSetsEqual(streamed, batch)
       streamed.agg(count(lit(1)).as("n_flagged"))
         .crossJoin(broadcast(eq))
     }),
@@ -3630,10 +3266,7 @@ object SparkEntry {
       val full = Multimodal.audioDecontaminateFlag(corpus,
         benchOld.unionByName(benchNew),
         maxHamming = 6, bands = 4, bandBits = 16)
-      val eqFull = incr.withColumn("l", lit(1)).as("a")
-        .join(full.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
-        .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0)
-          .as("equals_full_rerun"))
+      val eqFull = idSetsEqual(incr, full, "equals_full_rerun")
       val benchKeys = docs.filter(col("doc_id") % 3 === 1 &&
           (expr("(doc_id DIV 3) % 5 = 0") || expr("(doc_id DIV 3) % 7 = 3")))
         .select(sha2(col("text"), 256).as("tkey")).distinct()
@@ -3675,10 +3308,7 @@ object SparkEntry {
       val full = Multimodal.videoDecontaminateFlag(corpus,
         benchOld.unionByName(benchNew),
         maxHamming = 6, bands = 4, bandBits = 16)
-      val eqFull = incr.withColumn("l", lit(1)).as("a")
-        .join(full.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
-        .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0)
-          .as("equals_full_rerun"))
+      val eqFull = idSetsEqual(incr, full, "equals_full_rerun")
       val benchKeys = docs.filter(col("doc_id") % 3 === 2 &&
           (expr("(doc_id DIV 3) % 5 = 0") || expr("(doc_id DIV 3) % 7 = 3")))
         .select(sha2(col("text"), 256).as("tkey")).distinct()
@@ -3708,18 +3338,10 @@ object SparkEntry {
       val bench = Multimodal.attachWavAudio(docs
         .filter(col("doc_id") % 3 === 1 && expr("(doc_id DIV 3) % 5 = 0"))
         .select((col("doc_id") + m).as("doc_id"), col("text")))
-      val streamIn = fixtureScratch(s, s"$dir/documents.parquet", "smdaf",
-        "in") { tmp =>
-        docs.select("doc_id", "text")
-          .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_smdaf")
-        .toString
-      onJvmExitDelete(run)
-      val textStream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_smdaf")
+      val textStream = sliceStream(s,
+        docs.select("doc_id", "text"), "doc_id", 4)(
+        fixtureScratch(s, s"$dir/documents.parquet", "smdaf", "in"))
       drainToParquet(s, Multimodal.audioDecontaminateFlag(
           Multimodal.attachWavAudio(textStream), bench,
           maxHamming = 6, bands = 4, bandBits = 16), run)
@@ -3727,10 +3349,7 @@ object SparkEntry {
       val batch = Multimodal.audioDecontaminateFlag(
         Multimodal.attachWavAudio(docs.select(col("doc_id"), col("text"))),
         bench, maxHamming = 6, bands = 4, bandBits = 16)
-      val eq = streamed.withColumn("l", lit(1)).as("a")
-        .join(batch.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
-        .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0)
-          .as("equal_ok"))
+      val eq = idSetsEqual(streamed, batch)
       val benchKeys = docs
         .filter(col("doc_id") % 3 === 1 && expr("(doc_id DIV 3) % 5 = 0"))
         .select(sha2(col("text"), 256).as("tkey")).distinct()
@@ -3756,18 +3375,10 @@ object SparkEntry {
       val bench = Multimodal.attachPpmVideo(docs
         .filter(col("doc_id") % 3 === 2 && expr("(doc_id DIV 3) % 5 = 0"))
         .select((col("doc_id") + m).as("doc_id"), col("text")))
-      val streamIn = fixtureScratch(s, s"$dir/documents.parquet", "smdvf",
-        "in") { tmp =>
-        docs.select("doc_id", "text")
-          .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_smdvf")
-        .toString
-      onJvmExitDelete(run)
-      val textStream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_smdvf")
+      val textStream = sliceStream(s,
+        docs.select("doc_id", "text"), "doc_id", 4)(
+        fixtureScratch(s, s"$dir/documents.parquet", "smdvf", "in"))
       drainToParquet(s, Multimodal.videoDecontaminateFlag(
           Multimodal.attachPpmVideo(textStream), bench,
           maxHamming = 6, bands = 4, bandBits = 16), run)
@@ -3775,10 +3386,7 @@ object SparkEntry {
       val batch = Multimodal.videoDecontaminateFlag(
         Multimodal.attachPpmVideo(docs.select(col("doc_id"), col("text"))),
         bench, maxHamming = 6, bands = 4, bandBits = 16)
-      val eq = streamed.withColumn("l", lit(1)).as("a")
-        .join(batch.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
-        .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0)
-          .as("equal_ok"))
+      val eq = idSetsEqual(streamed, batch)
       val benchKeys = docs
         .filter(col("doc_id") % 3 === 2 && expr("(doc_id DIV 3) % 5 = 0"))
         .select(sha2(col("text"), 256).as("tkey")).distinct()
@@ -4164,17 +3772,10 @@ object SparkEntry {
       // the SAME fixture-keyed base index sim_index_update reads — the
       // old half is trained and coded once ever, for both queries
       val scratch = ivfPqOldScratch(s, dir, half)
-      val streamIn = fixtureScratch(s, s"$dir/embeddings.parquet", "annsin",
-        "in") { tmp =>
-        emb.filter(col("vec_id") > half)
-          .repartitionByRange(4, col("vec_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_anns").toString
-      onJvmExitDelete(run)
-      val stream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_anns")
+      val stream = sliceStream(s,
+        emb.filter(col("vec_id") > half), "vec_id", 4)(
+        fixtureScratch(s, s"$dir/embeddings.parquet", "annsin", "in"))
       drain(s, stream)(graft.streaming.StreamOps.annIngestStream(_, scratch,
         s"$run/append", s"$run/ckpt"))
       // fold ALL drained epochs into one partition before serving (the
@@ -4226,17 +3827,11 @@ object SparkEntry {
           nlist = 16,
           corpusKey = Some(tableKey(s, s"$dir/documents.parquet") + ":teold"))
       }
-      val streamIn = fixtureScratch(s, s"$dir/documents.parquet", "tesin",
-        "in") { tmp =>
-        docs.filter(col("doc_id") > half).select("doc_id", "text")
-          .repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$tmp/in")
-      }
-      val run = java.nio.file.Files.createTempDirectory("graft_tes").toString
-      onJvmExitDelete(run)
-      val textStream = s.readStream.schema(
-          s.read.parquet(s"$streamIn/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$streamIn/in")
+      val run = runDir("graft_tes")
+      val textStream = sliceStream(s,
+        docs.filter(col("doc_id") > half).select("doc_id", "text"),
+        "doc_id", 4)(
+        fixtureScratch(s, s"$dir/documents.parquet", "tesin", "in"))
       val vecStream = TextOps.hashEmbedUnit(textStream)
         .withColumnRenamed("doc_id", "vec_id")
       drain(s, vecStream)(graft.streaming.StreamOps.annIngestStream(_,

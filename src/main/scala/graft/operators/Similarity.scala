@@ -258,7 +258,7 @@ object Similarity {
     * the harness calls each registered query as an independent function,
     * so without this the top-k and near-dup paths each retrain k-means on
     * the same table. The key must change when the corpus does (callers
-    * pass path + file mtime/size — see SparkEntry.tableKey); `None`
+    * pass path + file mtime/size — see GateHarness.tableKey); `None`
     * always retrains. Entries are nlist × dim doubles — negligible.
     */
   private val centroidCache =

@@ -94,9 +94,11 @@ object BlockSink {
     s"$path/block_bucket=$bucket"
 
   /** Fold one frozen bucket's per-epoch files into `targetFiles` files
-    * sorted on `(block_number, log_index)` (ingest leaves one file set
+    * sorted on `block_number`, then `log_index` when the bucket's rows
+    * carry one (raw logs do; the synced flush's per-block cells do not —
+    * the order comes from the bucket's schema). Ingest leaves one file set
     * per epoch; a long-running tail accumulates hundreds per bucket, and
-    * scan cost at 100 TB is dominated by file count × footer reads).
+    * scan cost at 100 TB is dominated by file count × footer reads.
     * This is [[IngestCompaction.compact]] over every epoch of the
     * bucket's directory, with its crash protocol, its atomic-rename
     * guard and its single-maintenance-writer contract. Only run on

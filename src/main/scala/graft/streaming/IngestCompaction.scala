@@ -175,7 +175,9 @@ object IngestCompaction {
     * scans keep row-group pruning on those columns — pass the
     * downstream join / probe keys (`list` for PQ codes, `band_idx,
     * band_key` for band rows, `block_number, log_index` for a sink
-    * bucket); empty keeps a plain `repartition(targetFiles)`.
+    * bucket). A column the folded rows do not carry is skipped (a sink
+    * bucket of synced flush cells has no `log_index`); no order column
+    * keeps a plain `repartition(targetFiles)`.
     *
     * `upToEpoch` MUST only cover committed epochs (see the class doc) —
     * from inside `foreachBatch(id)` that means `id − 1` at most.
@@ -203,10 +205,11 @@ object IngestCompaction {
     val folded0 = spark.read.parquet(dir)
       .filter(col("ingest_batch") <= upToEpoch)
       .withColumn("ingest_batch", lit(Folded))
+    val order = orderCols.filter(folded0.columns.contains).map(col)
     val folded =
-      if (orderCols.isEmpty) folded0.repartition(targetFiles)
-      else folded0.repartitionByRange(targetFiles, orderCols.map(col): _*)
-        .sortWithinPartitions(orderCols.map(col): _*)
+      if (order.isEmpty) folded0.repartition(targetFiles)
+      else folded0.repartitionByRange(targetFiles, order: _*)
+        .sortWithinPartitions(order: _*)
     folded.write.mode(SaveMode.Overwrite)
       .partitionBy("ingest_batch").parquet(tmp.toString)
     writeMarker(f, dir, epochs)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{EthJsonRpc, JsonRpcTransport, RpcLogSource, SimEthNode}
-import graft.streaming.{BlockSink, StreamOps}
+import graft.streaming.{BlockSink, IngestCompaction, StreamOps}
 
 /** [[SimEthNode]] that records every `eth_getLogs` range it serves under
   * `tag`. The log lives in the companion object, JVM-global: each task
@@ -192,7 +192,6 @@ class BlockSinkSpec extends AnyFunSuite {
 
   test("crashed compactor: marker/staged state refuses a new run instead " +
       "of deleting the only copy; recoverBucket restores each crash state") {
-    import graft.streaming.IngestCompaction
     val out = tmp()
     // bucket 0 holds epochs 0 and 1; bucket 1 (epoch 2) keeps the root
     // readable while bucket 0 is mid-crash
@@ -351,6 +350,20 @@ class BlockSinkSpec extends AnyFunSuite {
       "vacuous fixture: the memory drain did not flush the whole chain")
     assert(written.sorted == expected.sorted,
       "writeBatch cells differ from the memory sink's drain of the same flush")
+
+    // the flush cells carry no log_index: a bucket of them compacts on
+    // block_number alone, into one file with the same cells
+    val bucket0 = s"$out/block_bucket=0"
+    assert(IngestCompaction.listEpochs(spark, bucket0).nonEmpty)
+    BlockSink.compactBucket(spark, out, bucket = 0L, targetFiles = 1)
+    assert(IngestCompaction.listEpochs(spark, bucket0) == Seq(-1L))
+    assert(dataFiles(bucket0).size == 1,
+      s"bucket 0 holds ${dataFiles(bucket0).size} data files after compaction")
+    val compacted = spark.read.parquet(out)
+      .select($"block_number", $"source", $"n_events", $"sum_value")
+      .as[(Long, String, Long, Double)].collect().toSeq
+    assert(compacted.sorted == expected.sorted,
+      "compaction changed the sink's cells")
   }
 
   test("stateless ingest: BlockSink.start fetches each planned range once") {
