@@ -56,10 +56,6 @@ object CacheScope {
   private[graft] def persist[T](ds: Dataset[T]): Dataset[T] =
     persist(ds, StorageLevel.MEMORY_AND_DISK)
 
-  /** Run `body`; on exit release every cache/checkpoint the graft
-    * operators created inside it (LIFO). Exceptions in `body` still
-    * release — the scope is also the leak guard on the failure path.
-    */
   /** Drop EVERY piece of persistent storage in the session — the
     * between-queries teardown Bench/Verify share. `clearCache` alone
     * misses checkpoint RDDs (clusterLabels keeps its final labels
@@ -72,6 +68,10 @@ object CacheScope {
       .foreach(_.unpersist(blocking = false))
   }
 
+  /** Run `body`; on exit release every cache/checkpoint the graft
+    * operators created inside it (LIFO). Exceptions in `body` still
+    * release — the scope is also the leak guard on the failure path.
+    */
   def withCaches[A](body: => A): A = {
     val buf = ListBuffer.empty[() => Unit]
     scopes.set(buf :: scopes.get())

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions.col
   *  - [[sliceStream]] turns a frame into a file stream of N range slices,
   *    one micro-batch each;
   *  - [[fixtureScratch]] keys a /tmp cache by the fixture's identity
-  *    ([[tableKey]]) and populates it atomically; [[runDir]] is per-run
-  *    scratch deleted at JVM exit.
+  *    ([[tableKey]], [[fixtureKeyed]], which also prunes the fixture's
+  *    superseded versions) and populates it atomically; [[runDir]] is
+  *    per-run scratch deleted at JVM exit.
   */
 private[graft] object GateHarness {
 
@@ -139,20 +140,38 @@ private[graft] object GateHarness {
     ()
   }
 
-  /** Fixture-keyed /tmp scratch with atomic population (shared by the
-    * queries and probe rows that derive a one-time input from a fixture
-    * table): the dir name embeds the fixture's mtime+size (stale copies
-    * never reused), `populate` writes into a run-private temp sibling
-    * that is RENAMED into place (concurrent runs: one wins, the other
-    * discards), and older-version/orphaned dirs for the same fixture
-    * are pruned age-gated on every call (younger than an hour may belong
-    * to a live run). Returns the scratch root.
+  /** The name `<prefix><fixture key>` of a cache under `root` derived
+    * from the fixture at `srcPath` ([[tableKey]], sanitized to
+    * `[A-Za-z0-9_]`), so stale copies are never reused. First prunes,
+    * age-gated, the other versions of the same fixture's cache under
+    * `root` (and their orphaned `.tmp.` siblings) last modified over an
+    * hour ago: a younger one may belong to a live run. Another fixture's
+    * caches never match.
+    */
+  def fixtureKeyed(s: SparkSession, root: String, prefix: String,
+      srcPath: String): String = {
+    def sanitized(p: String) = p.replaceAll("[^A-Za-z0-9]", "_")
+    val name = prefix + sanitized(tableKey(s, srcPath))
+    val version = (java.util.regex.Pattern.quote(prefix + sanitized(srcPath)) +
+      """_\d+_\d+(\.tmp\..*)?""").r
+    val cutoff = System.currentTimeMillis() - 3600L * 1000
+    Option(new java.io.File(root).listFiles).toSeq.flatten
+      .filter(f => f.getName != name && version.matches(f.getName) &&
+        f.lastModified() < cutoff)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    name
+  }
+
+  /** Fixture-keyed /tmp scratch ([[fixtureKeyed]]) with atomic
+    * population (shared by the queries and probe rows that derive a
+    * one-time input from a fixture table): `populate` writes into a
+    * run-private temp sibling that is RENAMED into place (concurrent
+    * runs: one wins, the other discards). Returns the scratch root.
     */
   def fixtureScratch(s: SparkSession, srcPath: String, tag: String,
       markerSubdir: String)(populate: String => Unit): String = {
-    val pathPart = srcPath.replaceAll("[^A-Za-z0-9]", "_")
-    val scratch = s"/tmp/graft_${tag}_cache_" +
-      tableKey(s, srcPath).replaceAll("[^A-Za-z0-9]", "_")
+    val scratch =
+      "/tmp/" + fixtureKeyed(s, "/tmp", s"graft_${tag}_cache_", srcPath)
     val marker = java.nio.file.Paths.get(s"$scratch/$markerSubdir/_SUCCESS")
     if (!java.nio.file.Files.exists(marker)) {
       val tmp = s"$scratch.tmp.${java.util.UUID.randomUUID}"
@@ -187,13 +206,6 @@ private[graft] object GateHarness {
             "after populate+move — concurrent populate race left an " +
             "unverified dir; re-run (stale dirs are pruned age-gated)")
     }
-    val cutoff = System.currentTimeMillis() - 3600L * 1000
-    val stale = new java.io.File("/tmp").listFiles()
-    if (stale != null) stale
-      .filter(f => f.getName.startsWith(s"graft_${tag}_cache_$pathPart") &&
-        f.getAbsolutePath != scratch &&
-        f.lastModified() < cutoff)
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
     scratch
   }
 }

@@ -124,7 +124,7 @@ object ScaleProbe {
           graft.operators.Multimodal.attachMedia(docs), maxHamming = 6,
           maxBucketSize = Some(256)).count() },
       time("mm_dhash_probed_raw") {
-        // the SCALED layout (autoBandLayout past 1M images): 2x32-bit
+        // the SCALED layout (BandedHamming.autoLayout past 1M images): 2x32-bit
         // bands + radius-1 probing — same recall guarantee, band-key
         // space 2^32 instead of 2^16, so the coincidental-candidate
         // quadratic that bends mm_dhash_raw at this tier is gone

@@ -106,6 +106,137 @@ object SparkEntry {
       .join(b.withColumn("r", lit(1)).as("b"), Seq("doc_id"), "full")
       .agg((count(when(col("l").isNull || col("r").isNull, 1)) === 0).as(name))
 
+  /** One-row identity verdict `(n_identity, all_identity_flagged)`: every
+    * doc of residue `r` whose text equals a `benchTexts` text is in
+    * `flagged` (text equality ⇒ byte-identical media ⇒ hamming 0 ⇒ MUST
+    * flag). NULL-SAFE: an unflagged identity doc leaves `f` NULL after
+    * the left join, and `min(f === 1)` SKIPS nulls — an all-null column
+    * would coalesce to true and the gate could never read false. Missing
+    * flags map to 0 explicitly so a recall regression flips the verdict.
+    */
+  private def identityFlagged(docs: DataFrame, r: Int,
+      benchTexts: DataFrame, flagged: DataFrame): DataFrame = {
+    val benchKeys = benchTexts.select(sha2(col("text"), 256).as("tkey"))
+      .distinct()
+    docs.filter(col("doc_id") % 3 === r)
+      .select(col("doc_id"), sha2(col("text"), 256).as("tkey"))
+      .join(broadcast(benchKeys), "tkey")
+      .select("doc_id").distinct()
+      .join(flagged.withColumn("f", lit(1)), Seq("doc_id"), "left")
+      .agg(count(lit(1)).as("n_identity"),
+        coalesce(min(when(col("f") === 1, lit(1)).otherwise(lit(0))) === 1,
+          lit(true)).as("all_identity_flagged"))
+  }
+
+  /** A media decon gate's benchmark docs: the kind's docs (residue `r`,
+    * the `doc_id % 3` that `attachWavAudio`/`attachPpmVideo` keep)
+    * selected by `sel`, ids shifted by `off` (a multiple of 3 past the
+    * corpus ids, [[idShift]]) so they keep their kind and never collide.
+    */
+  private def mediaBenchDocs(docs: DataFrame, r: Int, sel: String,
+      off: Long): DataFrame =
+    docs.filter(col("doc_id") % 3 === r && expr(sel))
+      .select((col("doc_id") + off).as("doc_id"), col("text"))
+
+  private def idShift(s: SparkSession, dir: String): Long =
+    (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
+
+  /** `mm_decon_{audio,video}_flag`: flag the corpus against every fifth
+    * doc of the kind; the identity verdict plus the media count `nCol`.
+    */
+  private def mediaFlagGate(s: SparkSession, dir: String, r: Int,
+      attach: DataFrame => DataFrame,
+      flag: (DataFrame, DataFrame) => DataFrame, nCol: String): DataFrame = {
+    val docs = table(s, dir, "documents")
+    val bench = mediaBenchDocs(docs, r, "(doc_id DIV 3) % 5 = 0",
+      idShift(s, dir))
+    val corpusMedia = graft.CacheScope.persist(
+      attach(docs.select(col("doc_id"), col("text"))))
+    val flagged = graft.CacheScope.persist(flag(corpusMedia, attach(bench)))
+    identityFlagged(docs, r, bench, flagged)
+      .crossJoin(broadcast(corpusMedia.agg(count(lit(1)).as(nCol))))
+  }
+
+  /** `mm_decon_{audio,video}_incr`: append a second suite to the first;
+    * incr equals the full re-flag over the union (`equals_full_rerun`),
+    * the identity verdict over the union, and the media count `nCol`.
+    */
+  private def mediaIncrGate(s: SparkSession, dir: String, r: Int,
+      attach: DataFrame => DataFrame,
+      flag: (DataFrame, DataFrame) => DataFrame,
+      incrOp: (DataFrame, DataFrame, DataFrame) => DataFrame,
+      nCol: String): DataFrame = {
+    val docs = table(s, dir, "documents")
+    val m = idShift(s, dir)
+    val corpus = graft.CacheScope.persist(
+      attach(docs.select(col("doc_id"), col("text"))))
+    val benchOld = attach(mediaBenchDocs(docs, r, "(doc_id DIV 3) % 5 = 0", m))
+    val benchNew =
+      attach(mediaBenchDocs(docs, r, "(doc_id DIV 3) % 7 = 3", 2 * m))
+    val prev = graft.CacheScope.persist(flag(corpus, benchOld))
+    val incr = graft.CacheScope.persist(incrOp(corpus, prev, benchNew))
+    val full = flag(corpus, benchOld.unionByName(benchNew))
+    identityFlagged(docs, r, docs.filter(col("doc_id") % 3 === r &&
+        (expr("(doc_id DIV 3) % 5 = 0") || expr("(doc_id DIV 3) % 7 = 3"))),
+        incr)
+      .crossJoin(broadcast(idSetsEqual(incr, full, "equals_full_rerun")))
+      .crossJoin(broadcast(corpus.agg(count(lit(1)).as(nCol))))
+  }
+
+  /** `stream_mm_decon_{audio,video}_flag`: the corpus texts arrive as 4
+    * slices (`fixtureScratch` tag `tag`), the kind's media attach in
+    * flight and drain through the flag operator; drained equals batch
+    * (`equal_ok`) plus the identity verdict against the drained set.
+    */
+  private def mediaStreamFlagGate(s: SparkSession, dir: String, r: Int,
+      attach: DataFrame => DataFrame,
+      flag: (DataFrame, DataFrame) => DataFrame, tag: String): DataFrame = {
+    val docs = table(s, dir, "documents")
+    val bench = attach(mediaBenchDocs(docs, r, "(doc_id DIV 3) % 5 = 0",
+      idShift(s, dir)))
+    val run = runDir(s"graft_$tag")
+    val textStream = sliceStream(s,
+      docs.select("doc_id", "text"), "doc_id", 4)(
+      fixtureScratch(s, s"$dir/documents.parquet", tag, "in"))
+    drainToParquet(s, flag(attach(textStream), bench), run)
+    val streamed = graft.CacheScope.persist(s.read.parquet(s"$run/out"))
+    val batch = flag(attach(docs.select(col("doc_id"), col("text"))), bench)
+    identityFlagged(docs, r, docs.filter(col("doc_id") % 3 === r &&
+        expr("(doc_id DIV 3) % 5 = 0")), streamed)
+      .crossJoin(broadcast(idSetsEqual(streamed, batch)))
+  }
+
+  /** `mm_decon_{audio,video}_report`: one report row per benchmark item
+    * (`n_bench`), and every item with a text-identical corpus doc
+    * attributes at `min_hamming` 0 with `n_flagged` covering its identity
+    * matches (`all_identity_attributed`).
+    */
+  private def mediaReportGate(s: SparkSession, dir: String, r: Int,
+      attach: DataFrame => DataFrame,
+      report: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val docs = table(s, dir, "documents")
+    val m = idShift(s, dir)
+    val benchDocs = docs
+      .filter(col("doc_id") % 3 === r && expr("(doc_id DIV 3) % 5 = 0"))
+    val rep = report(attach(docs.select(col("doc_id"), col("text"))),
+      attach(benchDocs.select((col("doc_id") + m).as("doc_id"), col("text"))))
+    val ident = benchDocs
+      .select((col("doc_id") + m).as("eval_id"),
+        sha2(col("text"), 256).as("tkey"))
+      .join(docs.filter(col("doc_id") % 3 === r)
+          .select(sha2(col("text"), 256).as("tkey"), col("doc_id")),
+        Seq("tkey"))
+      .groupBy(col("eval_id"))
+      .agg(countDistinct(col("doc_id")).as("n_ident"))
+    rep.join(broadcast(ident), Seq("eval_id"), "left")
+      .agg(count(lit(1)).as("n_bench"),
+        coalesce(min(when(col("n_ident").isNull, lit(1))
+          .when(col("min_hamming") === 0 &&
+            col("n_flagged") >= col("n_ident"), lit(1))
+          .otherwise(lit(0))) === 1, lit(true))
+          .as("all_identity_attributed"))
+  }
+
   /** One-row `equal_ok`: `a` and `b` hold the same `(d1, d2)` pairs and
     * their `value` columns differ by at most `tol` on every pair.
     */
@@ -1295,45 +1426,19 @@ object SparkEntry {
       import graft.operators.Layout
       // each table's layout is keyed by ITS OWN fixture content — a
       // regenerated orders.parquet must never reuse a bucketed copy
-      // minted under an unchanged lineitem key
+      // minted under an unchanged lineitem key — and the fixture's
+      // superseded layouts are pruned age-gated (fixtureKeyed)
       def bktName(short: String, src: String): String =
-        s"graft_bkt_${short}_" +
-          tableKey(s, s"$dir/$src.parquet").replaceAll("[^A-Za-z0-9]", "_")
+        fixtureKeyed(s, "/tmp", s"graft_bkt_${short}_", s"$dir/$src.parquet")
       val liTbl = bktName("li", "lineitem")
       val ordTbl = bktName("ord", "orders")
-      // age-gated prune of superseded layouts (fixtureScratch's
-      // discipline): regenerated fixtures mint new keyed dirs, the old
-      // ones must not accumulate under /tmp forever. Scope: ONLY dirs
-      // carrying this gate's ownership marker are ever deleted — a
-      // foreign dir (another session's differently-keyed layout, a
-      // user's scratch) under the shared root is never touched — and
-      // staleness is judged by the MARKER's mtime, which every gate run
-      // refreshes below, so any session that ran this gate inside the
-      // window keeps its layouts alive
-      val ownMarker = "_graft_gate_owned"
-      val cutoff = System.currentTimeMillis() - 3600L * 1000
-      val stale = new java.io.File("/tmp/graft_bkt").listFiles()
-      if (stale != null) stale
-        .filter(f => f.getName != liTbl && f.getName != ordTbl)
-        .filter { f =>
-          val m = new java.io.File(f, ownMarker)
-          // lastModified == 0 ⇔ no marker ⇔ not this gate's dir
-          m.lastModified() > 0 && m.lastModified() < cutoff
-        }
-        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
       Layout.ensureBucketedTable(
         table(s, dir, "lineitem")
           .select("l_orderkey", "l_extendedprice", "l_discount"),
-        liTbl, "l_orderkey", 8, s"/tmp/graft_bkt/$liTbl")
+        liTbl, "l_orderkey", 8, s"/tmp/$liTbl")
       Layout.ensureBucketedTable(
         table(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-        ordTbl, "o_orderkey", 8, s"/tmp/graft_bkt/$ordTbl")
-      // claim + keep-alive: (re)stamp the ownership marker on this run's
-      // dirs so concurrent/future sweeps see them as live
-      Seq(liTbl, ordTbl).foreach { t =>
-        val m = new java.io.File(s"/tmp/graft_bkt/$t/$ownMarker")
-        if (!m.createNewFile()) m.setLastModified(System.currentTimeMillis())
-      }
+        ordTbl, "o_orderkey", 8, s"/tmp/$ordTbl")
       s.table(liTbl)
         .join(s.table(ordTbl), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
@@ -3173,35 +3278,10 @@ object SparkEntry {
     // doc's text — hence byte-identical WAV — MUST flag, guaranteed at
     // hamming 0) plus the in-plan verdict; coincidental fuzzy flags
     // ride the flagged set but not the gated columns.
-    "mm_decon_audio_flag" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      val bench = docs
-        .filter(col("doc_id") % 3 === 1 && expr("(doc_id DIV 3) % 5 = 0"))
-        .select((col("doc_id") + m).as("doc_id"), col("text"))
-      val corpusMedia = graft.CacheScope.persist(
-        Multimodal.attachWavAudio(docs.select(col("doc_id"), col("text"))))
-      val flagged = graft.CacheScope.persist(
-        Multimodal.audioDecontaminateFlag(corpusMedia,
-          Multimodal.attachWavAudio(bench),
-          maxHamming = 6, bands = 4, bandBits = 16))
-      val benchKeys = bench.select(sha2(col("text"), 256).as("tkey")).distinct()
-      val mustFlag = docs.filter(col("doc_id") % 3 === 1)
-        .select(col("doc_id"), sha2(col("text"), 256).as("tkey"))
-        .join(broadcast(benchKeys), "tkey")
-        .select("doc_id").distinct()
-      // NULL-SAFE verdict (round-19, ADVICE): an unflagged identity doc
-      // leaves f NULL after the left join, and `min(f === 1)` SKIPS
-      // nulls — an all-null column would coalesce to true and the gate
-      // could never read false. Map missing flags to 0 explicitly so a
-      // recall regression flips the verdict.
-      mustFlag.join(flagged.withColumn("f", lit(1)), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_identity"),
-          coalesce(min(when(col("f") === 1, lit(1)).otherwise(lit(0))) === 1,
-            lit(true)).as("all_identity_flagged"))
-        .crossJoin(broadcast(corpusMedia
-          .agg(count(lit(1)).as("n_audio"))))
-    }),
+    "mm_decon_audio_flag" -> ((s, dir) =>
+      mediaFlagGate(s, dir, 1, Multimodal.attachWavAudio(_),
+        Multimodal.audioDecontaminateFlag(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16), "n_audio")),
 
     // Video decontamination (round-18): the video member — flag corpus
     // videos where ANY sampled frame near-dups ANY benchmark frame
@@ -3209,31 +3289,10 @@ object SparkEntry {
     // Frame hashes aren't SQL-replayable, so the gate is the audio
     // member's shape: relational identity half (text equality ⇒ all
     // frames byte-identical ⇒ hamming 0 ⇒ MUST flag) + in-plan verdict.
-    "mm_decon_video_flag" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      val bench = docs
-        .filter(col("doc_id") % 3 === 2 && expr("(doc_id DIV 3) % 5 = 0"))
-        .select((col("doc_id") + m).as("doc_id"), col("text"))
-      val corpusMedia = graft.CacheScope.persist(
-        Multimodal.attachPpmVideo(docs.select(col("doc_id"), col("text"))))
-      val flagged = graft.CacheScope.persist(
-        Multimodal.videoDecontaminateFlag(corpusMedia,
-          Multimodal.attachPpmVideo(bench),
-          maxHamming = 6, bands = 4, bandBits = 16))
-      val benchKeys = bench.select(sha2(col("text"), 256).as("tkey")).distinct()
-      val mustFlag = docs.filter(col("doc_id") % 3 === 2)
-        .select(col("doc_id"), sha2(col("text"), 256).as("tkey"))
-        .join(broadcast(benchKeys), "tkey")
-        .select("doc_id").distinct()
-      // null-safe verdict — see mm_decon_audio_flag's gate note
-      mustFlag.join(flagged.withColumn("f", lit(1)), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_identity"),
-          coalesce(min(when(col("f") === 1, lit(1)).otherwise(lit(0))) === 1,
-            lit(true)).as("all_identity_flagged"))
-        .crossJoin(broadcast(corpusMedia
-          .agg(count(lit(1)).as("n_video"))))
-    }),
+    "mm_decon_video_flag" -> ((s, dir) =>
+      mediaFlagGate(s, dir, 2, Multimodal.attachPpmVideo(_),
+        Multimodal.videoDecontaminateFlag(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16), "n_video")),
 
     // Incremental AUDIO decon under benchmark append (round-19, closes
     // the audio corner of the incremental-decon triangle): flags are
@@ -3246,41 +3305,12 @@ object SparkEntry {
     // identity half over the union (a corpus clip text-equal to ANY
     // old-or-new bench doc is byte-identical WAV ⇒ hamming 0 ⇒ MUST
     // flag), null-safe as in mm_decon_audio_flag.
-    "mm_decon_audio_incr" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      def bench(selExpr: String, off: Long) =
-        Multimodal.attachWavAudio(docs
-          .filter(col("doc_id") % 3 === 1 && expr(selExpr))
-          .select((col("doc_id") + off).as("doc_id"), col("text")))
-      val corpus = graft.CacheScope.persist(
-        Multimodal.attachWavAudio(docs.select(col("doc_id"), col("text"))))
-      val benchOld = bench("(doc_id DIV 3) % 5 = 0", m)
-      val benchNew = bench("(doc_id DIV 3) % 7 = 3", 2 * m)
-      val prev = graft.CacheScope.persist(
-        Multimodal.audioDecontaminateFlag(corpus, benchOld,
-          maxHamming = 6, bands = 4, bandBits = 16))
-      val incr = graft.CacheScope.persist(
-        Multimodal.audioDecontaminateIncr(corpus, prev, benchNew,
-          maxHamming = 6, bands = 4, bandBits = 16))
-      val full = Multimodal.audioDecontaminateFlag(corpus,
-        benchOld.unionByName(benchNew),
-        maxHamming = 6, bands = 4, bandBits = 16)
-      val eqFull = idSetsEqual(incr, full, "equals_full_rerun")
-      val benchKeys = docs.filter(col("doc_id") % 3 === 1 &&
-          (expr("(doc_id DIV 3) % 5 = 0") || expr("(doc_id DIV 3) % 7 = 3")))
-        .select(sha2(col("text"), 256).as("tkey")).distinct()
-      val mustFlag = docs.filter(col("doc_id") % 3 === 1)
-        .select(col("doc_id"), sha2(col("text"), 256).as("tkey"))
-        .join(broadcast(benchKeys), "tkey")
-        .select("doc_id").distinct()
-      mustFlag.join(incr.withColumn("f", lit(1)), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_identity"),
-          coalesce(min(when(col("f") === 1, lit(1)).otherwise(lit(0))) === 1,
-            lit(true)).as("all_identity_flagged"))
-        .crossJoin(broadcast(eqFull))
-        .crossJoin(broadcast(corpus.agg(count(lit(1)).as("n_audio"))))
-    }),
+    "mm_decon_audio_incr" -> ((s, dir) =>
+      mediaIncrGate(s, dir, 1, Multimodal.attachWavAudio(_),
+        Multimodal.audioDecontaminateFlag(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16),
+        Multimodal.audioDecontaminateIncr(_, _, _,
+          maxHamming = 6, bands = 4, bandBits = 16), "n_audio")),
 
     // Incremental VIDEO decon under benchmark append (round-19, the
     // last corner of the triangle): same monotone-append contract and
@@ -3288,41 +3318,12 @@ object SparkEntry {
     // the unioned benchmark (in-plan full-outer equality) + the
     // relational identity half (text equality ⇒ all sampled frames
     // byte-identical ⇒ hamming 0 ⇒ MUST flag), null-safe verdict.
-    "mm_decon_video_incr" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      def bench(selExpr: String, off: Long) =
-        Multimodal.attachPpmVideo(docs
-          .filter(col("doc_id") % 3 === 2 && expr(selExpr))
-          .select((col("doc_id") + off).as("doc_id"), col("text")))
-      val corpus = graft.CacheScope.persist(
-        Multimodal.attachPpmVideo(docs.select(col("doc_id"), col("text"))))
-      val benchOld = bench("(doc_id DIV 3) % 5 = 0", m)
-      val benchNew = bench("(doc_id DIV 3) % 7 = 3", 2 * m)
-      val prev = graft.CacheScope.persist(
-        Multimodal.videoDecontaminateFlag(corpus, benchOld,
-          maxHamming = 6, bands = 4, bandBits = 16))
-      val incr = graft.CacheScope.persist(
-        Multimodal.videoDecontaminateIncr(corpus, prev, benchNew,
-          maxHamming = 6, bands = 4, bandBits = 16))
-      val full = Multimodal.videoDecontaminateFlag(corpus,
-        benchOld.unionByName(benchNew),
-        maxHamming = 6, bands = 4, bandBits = 16)
-      val eqFull = idSetsEqual(incr, full, "equals_full_rerun")
-      val benchKeys = docs.filter(col("doc_id") % 3 === 2 &&
-          (expr("(doc_id DIV 3) % 5 = 0") || expr("(doc_id DIV 3) % 7 = 3")))
-        .select(sha2(col("text"), 256).as("tkey")).distinct()
-      val mustFlag = docs.filter(col("doc_id") % 3 === 2)
-        .select(col("doc_id"), sha2(col("text"), 256).as("tkey"))
-        .join(broadcast(benchKeys), "tkey")
-        .select("doc_id").distinct()
-      mustFlag.join(incr.withColumn("f", lit(1)), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_identity"),
-          coalesce(min(when(col("f") === 1, lit(1)).otherwise(lit(0))) === 1,
-            lit(true)).as("all_identity_flagged"))
-        .crossJoin(broadcast(eqFull))
-        .crossJoin(broadcast(corpus.agg(count(lit(1)).as("n_video"))))
-    }),
+    "mm_decon_video_incr" -> ((s, dir) =>
+      mediaIncrGate(s, dir, 2, Multimodal.attachPpmVideo(_),
+        Multimodal.videoDecontaminateFlag(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16),
+        Multimodal.videoDecontaminateIncr(_, _, _,
+          maxHamming = 6, bands = 4, bandBits = 16), "n_video")),
 
     // Streaming AUDIO decon (round-19 — stream_mm_decon_flag's audio
     // twin, closing the decon matrix's streaming column for audio):
@@ -3332,74 +3333,20 @@ object SparkEntry {
     // Fingerprints aren't SQL-replayable, so the gate pins drained ==
     // batch (in-plan full-outer equality) + the relational identity
     // half against the DRAINED set (null-safe).
-    "stream_mm_decon_audio_flag" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      val bench = Multimodal.attachWavAudio(docs
-        .filter(col("doc_id") % 3 === 1 && expr("(doc_id DIV 3) % 5 = 0"))
-        .select((col("doc_id") + m).as("doc_id"), col("text")))
-      val run = runDir("graft_smdaf")
-      val textStream = sliceStream(s,
-        docs.select("doc_id", "text"), "doc_id", 4)(
-        fixtureScratch(s, s"$dir/documents.parquet", "smdaf", "in"))
-      drainToParquet(s, Multimodal.audioDecontaminateFlag(
-          Multimodal.attachWavAudio(textStream), bench,
-          maxHamming = 6, bands = 4, bandBits = 16), run)
-      val streamed = graft.CacheScope.persist(s.read.parquet(s"$run/out"))
-      val batch = Multimodal.audioDecontaminateFlag(
-        Multimodal.attachWavAudio(docs.select(col("doc_id"), col("text"))),
-        bench, maxHamming = 6, bands = 4, bandBits = 16)
-      val eq = idSetsEqual(streamed, batch)
-      val benchKeys = docs
-        .filter(col("doc_id") % 3 === 1 && expr("(doc_id DIV 3) % 5 = 0"))
-        .select(sha2(col("text"), 256).as("tkey")).distinct()
-      val mustFlag = docs.filter(col("doc_id") % 3 === 1)
-        .select(col("doc_id"), sha2(col("text"), 256).as("tkey"))
-        .join(broadcast(benchKeys), "tkey")
-        .select("doc_id").distinct()
-      mustFlag.join(streamed.withColumn("f", lit(1)), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_identity"),
-          coalesce(min(when(col("f") === 1, lit(1)).otherwise(lit(0))) === 1,
-            lit(true)).as("all_identity_flagged"))
-        .crossJoin(broadcast(eq))
-    }),
+    "stream_mm_decon_audio_flag" -> ((s, dir) =>
+      mediaStreamFlagGate(s, dir, 1, Multimodal.attachWavAudio(_),
+        Multimodal.audioDecontaminateFlag(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16), "smdaf")),
 
     // Streaming VIDEO decon (round-19 — the video twin, completing
     // the decon matrix's streaming column): frame hashes stream
     // row-local into the same broadcast semi; state = the two
     // flagged-id dedups (composite + video — Spark 4 chains the
     // stateful dedups in append mode). Same gate shape.
-    "stream_mm_decon_video_flag" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      val bench = Multimodal.attachPpmVideo(docs
-        .filter(col("doc_id") % 3 === 2 && expr("(doc_id DIV 3) % 5 = 0"))
-        .select((col("doc_id") + m).as("doc_id"), col("text")))
-      val run = runDir("graft_smdvf")
-      val textStream = sliceStream(s,
-        docs.select("doc_id", "text"), "doc_id", 4)(
-        fixtureScratch(s, s"$dir/documents.parquet", "smdvf", "in"))
-      drainToParquet(s, Multimodal.videoDecontaminateFlag(
-          Multimodal.attachPpmVideo(textStream), bench,
-          maxHamming = 6, bands = 4, bandBits = 16), run)
-      val streamed = graft.CacheScope.persist(s.read.parquet(s"$run/out"))
-      val batch = Multimodal.videoDecontaminateFlag(
-        Multimodal.attachPpmVideo(docs.select(col("doc_id"), col("text"))),
-        bench, maxHamming = 6, bands = 4, bandBits = 16)
-      val eq = idSetsEqual(streamed, batch)
-      val benchKeys = docs
-        .filter(col("doc_id") % 3 === 2 && expr("(doc_id DIV 3) % 5 = 0"))
-        .select(sha2(col("text"), 256).as("tkey")).distinct()
-      val mustFlag = docs.filter(col("doc_id") % 3 === 2)
-        .select(col("doc_id"), sha2(col("text"), 256).as("tkey"))
-        .join(broadcast(benchKeys), "tkey")
-        .select("doc_id").distinct()
-      mustFlag.join(streamed.withColumn("f", lit(1)), Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_identity"),
-          coalesce(min(when(col("f") === 1, lit(1)).otherwise(lit(0))) === 1,
-            lit(true)).as("all_identity_flagged"))
-        .crossJoin(broadcast(eq))
-    }),
+    "stream_mm_decon_video_flag" -> ((s, dir) =>
+      mediaStreamFlagGate(s, dir, 2, Multimodal.attachPpmVideo(_),
+        Multimodal.videoDecontaminateFlag(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16), "smdvf")),
 
     // Audio decon ATTRIBUTION report (round-19, mm_decon_report's
     // audio twin): fingerprints aren't SQL-replayable, so the gate
@@ -3408,64 +3355,20 @@ object SparkEntry {
     // verdicts: every benchmark clip with a text-identical corpus
     // clip (byte-identical WAV ⇒ hamming 0) must attribute at
     // min_hamming 0 with n_flagged covering its identity matches.
-    "mm_decon_audio_report" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      val benchDocs = docs
-        .filter(col("doc_id") % 3 === 1 && expr("(doc_id DIV 3) % 5 = 0"))
-      val rep = Multimodal.audioDecontaminateReport(
-        Multimodal.attachWavAudio(docs.select(col("doc_id"), col("text"))),
-        Multimodal.attachWavAudio(benchDocs
-          .select((col("doc_id") + m).as("doc_id"), col("text"))),
-        maxHamming = 6, bands = 4, bandBits = 16)
-      val ident = benchDocs
-        .select((col("doc_id") + m).as("eval_id"),
-          sha2(col("text"), 256).as("tkey"))
-        .join(docs.filter(col("doc_id") % 3 === 1)
-            .select(sha2(col("text"), 256).as("tkey"), col("doc_id")),
-          Seq("tkey"))
-        .groupBy(col("eval_id"))
-        .agg(countDistinct(col("doc_id")).as("n_ident"))
-      rep.join(broadcast(ident), Seq("eval_id"), "left")
-        .agg(count(lit(1)).as("n_bench"),
-          coalesce(min(when(col("n_ident").isNull, lit(1))
-            .when(col("min_hamming") === 0 &&
-              col("n_flagged") >= col("n_ident"), lit(1))
-            .otherwise(lit(0))) === 1, lit(true))
-            .as("all_identity_attributed"))
-    }),
+    "mm_decon_audio_report" -> ((s, dir) =>
+      mediaReportGate(s, dir, 1, Multimodal.attachWavAudio(_),
+        Multimodal.audioDecontaminateReport(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16))),
 
     // Video decon ATTRIBUTION report (round-19): the video twin —
     // keyed on VIDEOS (the composite frame hits re-key to video ids
     // before the agg), so a benchmark video with a text-identical
     // corpus video (all frames byte-identical) must attribute at
     // min_hamming 0. Same gate shape as the audio report.
-    "mm_decon_video_report" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val m = (footerMaxId(s, s"$dir/documents.parquet") / 3 + 1) * 3
-      val benchDocs = docs
-        .filter(col("doc_id") % 3 === 2 && expr("(doc_id DIV 3) % 5 = 0"))
-      val rep = Multimodal.videoDecontaminateReport(
-        Multimodal.attachPpmVideo(docs.select(col("doc_id"), col("text"))),
-        Multimodal.attachPpmVideo(benchDocs
-          .select((col("doc_id") + m).as("doc_id"), col("text"))),
-        maxHamming = 6, bands = 4, bandBits = 16)
-      val ident = benchDocs
-        .select((col("doc_id") + m).as("eval_id"),
-          sha2(col("text"), 256).as("tkey"))
-        .join(docs.filter(col("doc_id") % 3 === 2)
-            .select(sha2(col("text"), 256).as("tkey"), col("doc_id")),
-          Seq("tkey"))
-        .groupBy(col("eval_id"))
-        .agg(countDistinct(col("doc_id")).as("n_ident"))
-      rep.join(broadcast(ident), Seq("eval_id"), "left")
-        .agg(count(lit(1)).as("n_bench"),
-          coalesce(min(when(col("n_ident").isNull, lit(1))
-            .when(col("min_hamming") === 0 &&
-              col("n_flagged") >= col("n_ident"), lit(1))
-            .otherwise(lit(0))) === 1, lit(true))
-            .as("all_identity_attributed"))
-    }),
+    "mm_decon_video_report" -> ((s, dir) =>
+      mediaReportGate(s, dir, 2, Multimodal.attachPpmVideo(_),
+        Multimodal.videoDecontaminateReport(_, _,
+          maxHamming = 6, bands = 4, bandBits = 16))),
 
     // DECODED frame sampling (round-14, closes the offsets-only
     // mm_frames seam): the fixture videos are 4 concatenated PPM
@@ -4673,9 +4576,6 @@ object SparkEntry {
        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
        WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.45"""
 
-  /** Gate oracle for the ANN top-k self-checks: brute-force top-10 row
-    * count (queries × k, short rows excluded by rank) + expected verdict.
-    */
   /** CTE chain restating [[TextOps.hashEmbed]] in plain BIGINT SQL: per
     * char (DuckDB `ascii` of a one-char string = its codepoint — the
     * text_fingerprint convention), 3-gram injective code
@@ -4890,12 +4790,6 @@ object SparkEntry {
     s"""$deconSemanticOracleCtes
        SELECT DISTINCT doc_id FROM f"""
 
-  /** The incremental tier's contract is monotone-update equality: its
-    * result set equals a FULL flag-tier re-run against the unioned
-    * benchmark, so the oracle is the exact tier's distinct flagged ids
-    * over (old mod-491 suite ∪ new mod-97≡11 suite) — never the
-    * incremental decomposition itself.
-    */
   /** The report's oracle: the exact tier's passing-pair stream grouped
     * by BENCHMARK doc (the counts are exact because the ball-cover
     * prescreen is recall-1), zero-match evals via the left join.
@@ -4909,10 +4803,19 @@ object SparkEntry {
        FROM (SELECT doc_id FROM documents WHERE doc_id % 491 = 0) b
        LEFT JOIN rep ON rep.eval_id = b.doc_id"""
 
+  /** The incremental tier's contract is monotone-update equality: its
+    * result set equals a FULL flag-tier re-run against the unioned
+    * benchmark, so the oracle is the exact tier's distinct flagged ids
+    * over (old mod-491 suite ∪ new mod-97≡11 suite) — never the
+    * incremental decomposition itself.
+    */
   private lazy val deconSemanticIncrOracleSql: String =
     s"""${deconSemanticCtesFor("doc_id % 491 = 0 OR doc_id % 97 = 11")}
        SELECT DISTINCT doc_id FROM f"""
 
+  /** Gate oracle for the ANN top-k self-checks: brute-force top-10 row
+    * count (queries × k, short rows excluded by rank) + expected verdict.
+    */
   private val TopKGateSql =
     """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5),
        p AS (SELECT qid, vec_id, list_cosine_similarity(qe, embedding) AS sim

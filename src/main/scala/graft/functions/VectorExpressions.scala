@@ -345,13 +345,6 @@ object VectorRuntime {
     */
   private val MaxDecodedPixels: Long = 64L * 1024 * 1024
 
-  /** Decode a sniffed JDK-container payload headless, or null on any
-    * failure (unsniffed magic, truncated stream, codec error, or
-    * header dimensions past [[MaxDecodedPixels]] — the null-drop
-    * contract; a corrupt or hostile payload must drop its row, never
-    * kill the task). Dimensions are checked via the reader's
-    * header-only accessors BEFORE `read` allocates the raster.
-    */
   /** Packed-ARGB pixels of a decoded BufferedImage, with RAW-SAMPLE
     * fidelity for gray rasters (round-16, ADVICE r15 #1): a grayscale
     * (or 16-bit gray) PNG decodes to a `TYPE_BYTE_GRAY` /
@@ -389,6 +382,13 @@ object VectorRuntime {
     out
   }
 
+  /** Decode a sniffed JDK-container payload headless, or null on any
+    * failure (unsniffed magic, truncated stream, codec error, or
+    * header dimensions past [[MaxDecodedPixels]] — the null-drop
+    * contract; a corrupt or hostile payload must drop its row, never
+    * kill the task). Dimensions are checked via the reader's
+    * header-only accessors BEFORE `read` allocates the raster.
+    */
   private def readJdkImage(payload: Array[Byte]): java.awt.image.BufferedImage = {
     if (!isJdkRaster(payload)) return null
     val noCache = imageIoMemOnly
@@ -1287,21 +1287,6 @@ object VectorRuntime {
     java.lang.Long.valueOf(energyZcrOfMono(mono))
   }
 
-  /** javax.sound SPI providers, discovered ONCE per JVM and shared by
-    * every executor thread. `AudioSystem.getAudioInputStream` /
-    * `AudioSystem.write` route EVERY call through
-    * `JDK13Services.getProviders` — a JVM-GLOBAL synchronized monitor.
-    * Under local[32] the per-clip lookups convoy on that lock: the
-    * 1000×-tier AIFF pass (1.67M clips) measured ~2 of 32 cores busy
-    * with every worker stack parked on the monitor
-    * (`JSSecurityManager.getProviders`). The SPI interfaces are public
-    * API (`javax.sound.sampled.spi.*`) and the JDK's own readers/
-    * writers are module-declared services, so a one-time ServiceLoader
-    * scan yields the same providers without the per-call lock.
-    * (ImageIO's `IIORegistry` is per-thread — the PNG/JPEG paths never
-    * had this problem, which is why they scaled linearly while audio
-    * did not.)
-    */
   /** ServiceLoader scan across EVERY classloader that could host a
     * provider — the interface's own loader (platform — the JDK's
     * built-in readers), the thread context loader, and the system
@@ -1334,6 +1319,21 @@ object VectorRuntime {
     seen.values.toArray
   }
 
+  /** javax.sound SPI providers, discovered ONCE per JVM and shared by
+    * every executor thread. `AudioSystem.getAudioInputStream` /
+    * `AudioSystem.write` route EVERY call through
+    * `JDK13Services.getProviders` — a JVM-GLOBAL synchronized monitor.
+    * Under local[32] the per-clip lookups convoy on that lock: the
+    * 1000×-tier AIFF pass (1.67M clips) measured ~2 of 32 cores busy
+    * with every worker stack parked on the monitor
+    * (`JSSecurityManager.getProviders`). The SPI interfaces are public
+    * API (`javax.sound.sampled.spi.*`) and the JDK's own readers/
+    * writers are module-declared services, so a one-time ServiceLoader
+    * scan yields the same providers without the per-call lock.
+    * (ImageIO's `IIORegistry` is per-thread — the PNG/JPEG paths never
+    * had this problem, which is why they scaled linearly while audio
+    * did not.)
+    */
   private val audioReaders: Array[javax.sound.sampled.spi.AudioFileReader] =
     loadSpiProviders(classOf[javax.sound.sampled.spi.AudioFileReader])
   private val audioWriters: Array[javax.sound.sampled.spi.AudioFileWriter] =

@@ -399,7 +399,7 @@ private[graft] object BandedHamming {
     (probed, hamming)
   }
 
-  /** Bipartite decontamination ATTRIBUTION report — the
+  /** Bipartite decontamination ATTRIBUTION report, first half — the
     * contamination-report shape ([[Dedup.contaminationReport]]'s
     * contract) on [[bipartiteFlagJoin]]'s machinery: per BENCHMARK
     * item, how many corpus docs it flags and at what minimum Hamming
@@ -407,35 +407,15 @@ private[graft] object BandedHamming {
     * Same plan skeleton with the semi join widened to INNER (the
     * count needs every matching corpus doc, not just existence):
     * corpus band rows row-local, benchmark broadcast with the
-    * full-hash verify in the condition, then ONE aggregation keyed on
-    * `eval_id` — `count(DISTINCT doc_id)` absorbs the per-band /
-    * per-probe-key duplicates of a pair, `min(hamming)` is
-    * duplicate-insensitive. Benchmark items with ZERO hits still
-    * report (`n_flagged = 0`, null `min_hamming`) via a left join
-    * from the distinct benchmark ids — both sides of that join are
-    * benchmark-sized, so it broadcasts. Exchanges: the eval-keyed
-    * agg (+ its distinct expand) over the MATCHING pairs only —
-    * bounded by the contamination volume, never the corpus; corpus
-    * fingerprints still never shuffle. NO occupancy cap, as in the
-    * flag tier (an attribution that silently undercounts misleads
-    * the eval owner exactly like a silent unflag).
-    */
-  def bipartiteReportJoin(corpusRows: DataFrame, benchRows: DataFrame,
-      maxHamming: Int, bands: Int, bandBits: Int, probeRadius: Int,
-      storage: Option[org.apache.spark.storage.StorageLevel]): DataFrame = {
-    val (hits, benchIds) = bipartiteHitPairs(corpusRows, benchRows,
-      maxHamming, bands, bandBits, probeRadius, storage)
-    reportFromHits(hits, benchIds)
-  }
-
-  /** The raw verified hit stream behind [[bipartiteReportJoin]]:
-    * `(eval_id, doc_id, hamming)` for every band-colliding,
+    * full-hash verify in the condition. Returns the raw verified hit
+    * stream `(eval_id, doc_id, hamming)` for every band-colliding,
     * verify-passing (corpus, benchmark) combination — duplicates per
-    * band/probe key included (consumers aggregate with
-    * duplicate-insensitive ops), plus the distinct benchmark-id frame
-    * for zero-hit reporting. The video report consumes this at the
-    * FRAME level and re-keys both sides to video ids before
-    * aggregating.
+    * band/probe key included — plus the distinct benchmark-id frame
+    * for zero-hit reporting; [[reportFromHits]] aggregates them (the
+    * video report re-keys both from frames to videos first). NO
+    * occupancy cap, as in the flag tier (an attribution that silently
+    * undercounts misleads the eval owner exactly like a silent
+    * unflag).
     */
   private[operators] def bipartiteHitPairs(corpusRows: DataFrame,
       benchRows: DataFrame, maxHamming: Int, bands: Int, bandBits: Int,
@@ -455,10 +435,14 @@ private[graft] object BandedHamming {
     (hits, probed.select(col("eval_id")).distinct())
   }
 
-  /** Aggregate a hit stream into the attribution report:
-    * `count(DISTINCT doc_id)` absorbs the per-band / per-probe-key
-    * duplicates of a pair, `min(hamming)` is duplicate-insensitive;
-    * zero-hit benchmark ids report `(0, null)` via the left join.
+  /** Aggregate a hit stream into the attribution report
+    * `(eval_id, n_flagged, min_hamming)` — ONE aggregation keyed on
+    * `eval_id`, over the MATCHING pairs only (bounded by the
+    * contamination volume, never the corpus; corpus fingerprints never
+    * shuffle): `count(DISTINCT doc_id)` absorbs the per-band /
+    * per-probe-key duplicates of a pair, `min(hamming)` is
+    * duplicate-insensitive; zero-hit benchmark ids report `(0, null)`
+    * via the left join.
     * The join broadcasts: both sides are benchmark-sized (the agg
     * emits one row per HIT eval item), but post-agg stats are unknown
     * so Spark would otherwise plan a sort-merge join

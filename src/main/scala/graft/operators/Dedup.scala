@@ -80,18 +80,6 @@ object Dedup {
     graft.functions.vec.ngramHashes(
       graft.functions.vec.wsTokenHashes(text), n)
 
-  /** Exact n-gram Jaccard near-dup pairs: explode distinct gram hashes,
-    * join on shared gram (candidate generation), then
-    * `|∩| / (|A|+|B|−|∩|) ≥ minJaccard`. The gram-join is the shuffle; very
-    * frequent grams fan out quadratically, so callers at scale should cap
-    * gram document-frequency (`maxGramDf`) — the classic stopword-shingle
-    * skew guard. The cap gates CANDIDATE GENERATION only: per-doc gram
-    * counts (the Jaccard denominator) always come from the full gram set,
-    * so the reported `jaccard` stays the true metric — with a cap the
-    * numerator can only miss capped shared grams, making the score a lower
-    * bound (pairs that share only stopword-shingles are deliberately
-    * dropped).
-    */
   /** Shared gram-hash candidate stage for the pairwise near-dup metrics:
     * exploded `(doc_id, gram)` rows — df-capped for CANDIDATE GENERATION
     * when `maxGramDf` is set — plus the UNCAPPED per-doc gram counts
@@ -136,6 +124,18 @@ object Dedup {
     }
   }
 
+  /** Exact n-gram Jaccard near-dup pairs: explode distinct gram hashes,
+    * join on shared gram (candidate generation), then
+    * `|∩| / (|A|+|B|−|∩|) ≥ minJaccard`. The gram-join is the shuffle; very
+    * frequent grams fan out quadratically, so callers at scale should cap
+    * gram document-frequency (`maxGramDf`) — the classic stopword-shingle
+    * skew guard. The cap gates CANDIDATE GENERATION only: per-doc gram
+    * counts (the Jaccard denominator) always come from the full gram set,
+    * so the reported `jaccard` stays the true metric — with a cap the
+    * numerator can only miss capped shared grams, making the score a lower
+    * bound (pairs that share only stopword-shingles are deliberately
+    * dropped).
+    */
   def ngramJaccardPairs(df: DataFrame, n: Int = 3, minJaccard: Double = 0.8,
       textCol: String = "text", idCol: String = "doc_id",
       maxGramDf: Option[Int] = None): DataFrame = {

@@ -271,15 +271,6 @@ object EventLog {
         max("block_number").as("window_to"))
   }
 
-  /** W1 extension — SLIDING block windows of `size` blocks every `slide`
-    * blocks starting at `from` (the reference has only tumbling; overlap
-    * comes free declaratively). Each block explodes into the ≤⌈size/slide⌉
-    * windows covering it, then one aggregation per window — the explode
-    * factor is the overlap ratio, bounded and row-local. All index
-    * arithmetic keeps numerators non-negative: integral division
-    * truncates toward zero in Spark but floors in some engines
-    * (DuckDB `//`), and the two only agree on non-negatives.
-    */
   /** Shared window-coverage explosion for the sliding-window family:
     * block b (relative: q·slide + r) is covered by windows q−j for
     * j = 0..min(q, (size−1−r) div slide); r > size−1 ⇔ in a gap (only
@@ -311,6 +302,15 @@ object EventLog {
           orderCols.map(col) :+ substring(col("event_type"), 1, 1).as("c"): _*))),
         x => x.getField("c"))).as("__seq"))
 
+  /** W1 extension — SLIDING block windows of `size` blocks every `slide`
+    * blocks starting at `from` (the reference has only tumbling; overlap
+    * comes free declaratively). Each block explodes into the ≤⌈size/slide⌉
+    * windows covering it, then one aggregation per window — the explode
+    * factor is the overlap ratio, bounded and row-local. All index
+    * arithmetic keeps numerators non-negative: integral division
+    * truncates toward zero in Spark but floors in some engines
+    * (DuckDB `//`), and the two only agree on non-negatives.
+    */
   def slidingWindow(df: DataFrame, from: Long, size: Long, slide: Long): DataFrame = {
     explodeToSlidingWindows(df, from, size, slide)
       .groupBy(col("window_id"))
@@ -513,12 +513,6 @@ object EventLog {
       .filter(col("n_matches") > 0)
   }
 
-  /** A3 — the reference's flagship netflow aggregate
-    * (eth_event_stream/examples/stream_multi.rs:33-70): outflow events
-    * subtract `value` from the key, inflow events add it. Decimal keeps the
-    * fold order-insensitive and exactly mergeable across partitions —
-    * map-side partial aggregation applies, one shuffle on the key.
-    */
   /** Signed netflow delta of one event — shared by the direct and salted
     * folds so the two can never drift apart semantically. Each element
     * fits decimal(18,2); the cast goes straight to decimal(38,2) so the
@@ -531,6 +525,12 @@ object EventLog {
     when(col("event_type") === inflowType, col("value").cast("decimal(38,2)"))
       .otherwise(-col("value").cast("decimal(38,2)"))
 
+  /** A3 — the reference's flagship netflow aggregate
+    * (eth_event_stream/examples/stream_multi.rs:33-70): outflow events
+    * subtract `value` from the key, inflow events add it. Decimal keeps the
+    * fold order-insensitive and exactly mergeable across partitions —
+    * map-side partial aggregation applies, one shuffle on the key.
+    */
   def netflow(df: DataFrame, inflowType: String, outflowType: String,
       keyCol: String = "user_id"): DataFrame =
     df.filter(col("event_type").isin(inflowType, outflowType))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Multimodal columns for training-data pipelines: image/audio/video ride
   * through the engine as opaque `BINARY` payloads plus typed metadata
@@ -14,6 +15,21 @@ import org.apache.spark.sql.functions._
   * was retired once every media path had a real kernel. Unsupported
   * payloads hash/feature to null and drop, so mixed-media tables route
   * themselves.
+  *
+  * The near-dup and decontamination family (image, audio, video) runs on
+  * one banded-Hamming core ([[BandedHamming]]). What differs per media
+  * kind is one private descriptor, [[Media]]: image bytes (`headerLen`),
+  * image pixels, audio and video frames (`maxFrames`). It knows the
+  * `kind` filter, the band rows for a resolved layout, what the
+  * `bands = 0` sizing count runs over (the kind's rows; for video the
+  * persisted composite `doc_id·64 + frame_idx` frame rows, which the
+  * corpus side then bands from, so the decode kernel runs once) and, for
+  * video only, how composite ids map back to videos. Each operator shape
+  * (band rows, near-dup pairs, incremental pairs, decontamination flag
+  * and report, benchmark-append flag) has one private implementation
+  * carrying the streaming-corpus guard, the layout resolution, the
+  * heuristic-tail warning and the [[BandedHamming]] call; the public
+  * operators delegate to it.
   */
 object Multimodal {
 
@@ -180,26 +196,6 @@ object Multimodal {
           .as("payload"))
       .filter(col("payload").isNotNull)
 
-  /** Perceptual-hash band rows for image payloads — the MULTIMODAL
-    * near-dup index, mirroring [[Dedup.minHashBandIndex]]'s layout
-    * exactly (`doc_id`, the full hash as `bands`, one exploded
-    * `(band_idx, band_key)` row per band): a difference-hash (dHash)
-    * gradient over the image's byte content, packed into `bands` keys
-    * of `bandBits` bits by the compiled
-    * `dhash_bands` kernel, entirely row-local — the
-    * banded self-join downstream is the only shuffle, the same plan
-    * shape that carries MinHash at 100 TB.
-    *
-    * The GRADIENT SOURCE here is the payload's raw byte content — the
-    * "pixel brightness sequence" is the hex expansion of the payload
-    * body: deterministic, engine-recomputable (the oracle replays it
-    * as `lower(sha256(text))`), and the right member for OPAQUE
-    * (non-raster) payloads whose codec lives elsewhere. Raster
-    * payloads take the REAL decoder member ([[dHashImageBandRows]] —
-    * PPM/PNG/JPEG/GIF/BMP). The banding, occupancy cap, pair join,
-    * and Hamming verify — the parts that carry the scale — are shared
-    * either way.
-    */
   /** The [[dHashBandRows]] kernel UN-BANDED: one row-local 64-bit
     * byte-sequence dHash per image, `(doc_id, dhash)`. The band layout
     * is a pure bit-slicing of this hash (little-endian, band `b` =
@@ -222,25 +218,29 @@ object Multimodal {
           1).as("dhash"))
   }
 
+  /** Perceptual-hash band rows for image payloads — the MULTIMODAL
+    * near-dup index, mirroring [[Dedup.minHashBandIndex]]'s layout
+    * exactly (`doc_id`, the full hash as `bands`, one exploded
+    * `(band_idx, band_key)` row per band): a difference-hash (dHash)
+    * gradient over the image's byte content, packed into `bands` keys
+    * of `bandBits` bits by the compiled
+    * `dhash_bands` kernel, entirely row-local — the
+    * banded self-join downstream is the only shuffle, the same plan
+    * shape that carries MinHash at 100 TB.
+    *
+    * The GRADIENT SOURCE here is the payload's raw byte content — the
+    * "pixel brightness sequence" is the hex expansion of the payload
+    * body: deterministic, engine-recomputable (the oracle replays it
+    * as `lower(sha256(text))`), and the right member for OPAQUE
+    * (non-raster) payloads whose codec lives elsewhere. Raster
+    * payloads take the REAL decoder member ([[dHashImageBandRows]] —
+    * PPM/PNG/JPEG/GIF/BMP). The banding, occupancy cap, pair join,
+    * and Hamming verify — the parts that carry the scale — are shared
+    * either way.
+    */
   def dHashBandRows(media: DataFrame, bands: Int = 0, bandBits: Int = 16,
-      headerLen: Int = 3, nHint: Long = -1L): DataFrame = {
-    // bands = 0 self-sizes the INDEX layout from the image count: a
-    // persisted index built with the fixed 4x16 default at 5M images
-    // would bake the measured key-space quadratic into every
-    // incremental/streaming query deriving its layout from it
-    val (b, bb, _) = BandedHamming.resolveLayout(bands, bandBits, 0,
-      if (nHint >= 0) nHint else media.filter(col("kind") === "image").count())
-    val body = expr(s"substring(payload, ${headerLen + 1}, " +
-      s"length(payload) - $headerLen)")
-    media.filter(col("kind") === "image")
-      .select(col("doc_id"),
-        graft.functions.vec.dHashBands(lower(hex(body)), b, bb)
-          .as("bands"))
-      // null-hash docs (payload too short for a gradient) drop via the
-      // posexplode, like minHashBandIndex's gramless docs
-      .select(col("doc_id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-  }
+      headerLen: Int = 3, nHint: Long = -1L): DataFrame =
+    bandRowsOf(ImageBytes(headerLen), media, bands, bandBits, nHint)
 
   /** Image near-dup pairs: [[dHashBandRows]] → banded self-join (docs
     * sharing ≥1 band key are candidates — any pair within Hamming
@@ -258,13 +258,13 @@ object Multimodal {
     * "visually near" structure appears under the real decoder path
     * ([[dHashImageNearDupPairs]]); this variant remains the
     * byte-sequence member for opaque (non-raster) payloads, and both
-    * share [[bandPairJoin]] verbatim.
+    * share [[BandedHamming.pairJoin]] verbatim.
     *
     * SCALE: the DEFAULT `bands = 0` is SELF-SIZING — the layout
     * resolves from a cheap image count (or `nHint`, to skip the count
     * job when the caller already knows the size) via
-    * [[autoBandLayout]], so pointing the defaults at 5M images takes
-    * the scaled 2×32+probe key space instead of silently re-entering
+    * [[BandedHamming.autoLayout]], so pointing the defaults at 5M images
+    * takes the scaled 2×32+probe key space instead of silently re-entering
     * the fixed-2^16 quadratic measured at the 1000× tier
     * ([[BandedHamming]] scaladoc). Explicit `bands > 0` pins a layout
     * (the gate queries' convention).
@@ -285,15 +285,9 @@ object Multimodal {
       maxBucketSize: Option[Int] = None,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      probeRadius: Int = 0, nHint: Long = -1L): DataFrame = {
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius,
-      if (nHint >= 0) nHint else media.filter(col("kind") === "image").count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("dHashNearDupPairs", maxHamming, b, pr)
-    bandPairJoin(dHashBandRows(media, b, bb, headerLen),
-      maxHamming, b, bb, pr, maxBucketSize, storage)
-  }
+      probeRadius: Int = 0, nHint: Long = -1L): DataFrame =
+    pairs(ImageBytes(headerLen), "dHashNearDupPairs", media, maxHamming,
+      bands, bandBits, probeRadius, maxBucketSize, storage, nHint)
 
   /** [[dHashBandRows]] with the REAL decoder: the payload is decoded —
     * binary PPM (P6) through the pure-JVM parse, or PNG/JPEG/GIF/BMP
@@ -311,16 +305,8 @@ object Multimodal {
     * the shared, decoder-independent machinery.
     */
   def dHashImageBandRows(media: DataFrame, bands: Int = 0,
-      bandBits: Int = 16, nHint: Long = -1L): DataFrame = {
-    val (b, bb, _) = BandedHamming.resolveLayout(bands, bandBits, 0,
-      if (nHint >= 0) nHint else media.filter(col("kind") === "image").count())
-    media.filter(col("kind") === "image")
-      .select(col("doc_id"),
-        graft.functions.vec.dHashImageBands(col("payload"), b, bb)
-          .as("bands"))
-      .select(col("doc_id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-  }
+      bandBits: Int = 16, nHint: Long = -1L): DataFrame =
+    bandRowsOf(ImagePixels, media, bands, bandBits, nHint)
 
   /** [[dHashNearDupPairs]] over REAL decoded pixels
     * ([[dHashImageBandRows]]): visually-near images (small dHash
@@ -335,45 +321,9 @@ object Multimodal {
       maxBucketSize: Option[Int] = None,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      probeRadius: Int = 0, nHint: Long = -1L): DataFrame = {
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius,
-      if (nHint >= 0) nHint else media.filter(col("kind") === "image").count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("dHashImageNearDupPairs", maxHamming,
-        b, pr)
-    bandPairJoin(dHashImageBandRows(media, b, bb),
-      maxHamming, b, bb, pr, maxBucketSize, storage)
-  }
-
-  /** Corpus-size-scaled band layout `(bands, bandBits, probeRadius)`
-    * for the 64-bit dHash join. The default `(4, 16, 0)` layout's
-    * band-key space is FIXED at 2^16, so coincidental collisions
-    * between unrelated hashes grow as `bands · n² / 2^17` no matter
-    * how healthy the corpus is — the occupancy cap never bites
-    * (average bucket ≈ n/2^16 stays under any sane cap) while the
-    * candidate set goes quadratic. Measured: the 1000×-tier probe
-    * (1.67M images) bent `mm_dhash_raw` to 19× the 100× time for 10×
-    * the rows, exactly the `n²/2^17` model.
-    *
-    * Past `ScaledLayoutMinImages` images this returns `(2, 32, 1)`:
-    * 32-bit band keys (space 2^32 ≥ any realistic shard) with
-    * radius-1 key probing on one join side. Recall guarantee is
-    * UNCHANGED — for Hamming distance ≤ 3 some band has per-band
-    * distance ≤ ⌊3/2⌋ = 1 (the substring-probe argument of
-    * multi-index hashing, Greene/Norouzi), exactly matching the
-    * `(4, 16)` pigeonhole guarantee (≤ 3 ⇒ some band equal); beyond 3
-    * both layouts are heuristic, as the `maxHamming = 6` default
-    * already documents. Expected coincidental candidates fall from
-    * `n² · 3.1e-5` to `n² · 7.7e-9` (≈4000×) for 33 probe keys per
-    * band row — the explode is row-local and the join still carries
-    * everything, so the plan shape (ONE shuffle + pair dedup) is
-    * unchanged.
-    */
-  val ScaledLayoutMinImages: Long = BandedHamming.ScaledLayoutMinDocs
-
-  def autoBandLayout(nImages: Long): (Int, Int, Int) =
-    BandedHamming.autoLayout(nImages)
+      probeRadius: Int = 0, nHint: Long = -1L): DataFrame =
+    pairs(ImagePixels, "dHashImageNearDupPairs", media, maxHamming, bands,
+      bandBits, probeRadius, maxBucketSize, storage, nHint)
 
   /** Incremental image near-dup — the production shape that completes
     * the multimodal dedup family exactly as
@@ -401,17 +351,10 @@ object Multimodal {
       maxBucketSize: Option[Int] = None,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      decodePixels: Boolean = false): DataFrame = {
-    val (b, bb, pr) = BandedHamming.resolveIndexLayout(
-      bands, bandBits, probeRadius, index)
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("dHashIncrementalPairs", maxHamming,
-        b, pr)
-    BandedHamming.incrementalPairJoin(index,
-      if (decodePixels) dHashImageBandRows(newMedia, b, bb)
-      else dHashBandRows(newMedia, b, bb, headerLen),
-      maxHamming, b, bb, pr, maxBucketSize, storage)
-  }
+      decodePixels: Boolean = false): DataFrame =
+    incrementalPairs(image(headerLen, decodePixels), "dHashIncrementalPairs",
+      newMedia, index, maxHamming, bands, bandBits, probeRadius,
+      maxBucketSize, storage)
 
   /** Image decontamination — the MULTIMODAL member of the
     * decontamination family, the operation that removes eval-set
@@ -449,34 +392,18 @@ object Multimodal {
     * count runs ONCE PER CALL: cheap against parquet (footer
     * statistics) but a real scan on an expensive view — pass `nHint`
     * or an explicit `bands` for non-parquet corpora or repeated
-    * batch invocations (the streaming guard below already demands it
-    * for unbounded inputs).
+    * batch invocations (a streaming corpus must: the guard refuses it
+    * otherwise).
     */
   def dHashDecontaminateFlag(corpusMedia: DataFrame,
       benchmarkMedia: DataFrame, maxHamming: Int = 6, bands: Int = 0,
       bandBits: Int = 16, headerLen: Int = 3, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      decodePixels: Boolean = false, nHint: Long = -1L): DataFrame = {
-    // a STREAMING corpus runs the same plan (stream-static broadcast
-    // semi + stateful dedup), but auto-sizing counts the corpus —
-    // impossible on an unbounded stream; demand the layout up front
-    require(!corpusMedia.isStreaming || bands > 0 || nHint >= 0,
-      "dHashDecontaminateFlag: a streaming corpus needs an explicit " +
-        "bands layout or an nHint — bands = 0 auto-sizing counts the corpus")
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius,
-      if (nHint >= 0) nHint
-      else corpusMedia.filter(col("kind") === "image").count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("dHashDecontaminateFlag",
-        maxHamming, b, pr)
-    def rows(m: DataFrame) =
-      if (decodePixels) dHashImageBandRows(m, b, bb)
-      else dHashBandRows(m, b, bb, headerLen)
-    BandedHamming.bipartiteFlagJoin(rows(corpusMedia),
-      rows(benchmarkMedia), maxHamming, b, bb, pr, storage)
-  }
+      decodePixels: Boolean = false, nHint: Long = -1L): DataFrame =
+    decontaminate(image(headerLen, decodePixels), "dHashDecontaminateFlag",
+      corpusMedia, benchmarkMedia, maxHamming, bands, bandBits, probeRadius,
+      storage, nHint, report = false)
 
   /** Benchmark-append incremental image decon — flags are MONOTONE
     * under benchmark append (a new eval suite can only ADD flags), so
@@ -492,15 +419,10 @@ object Multimodal {
     * `prevFlagged` after one anti join — old payloads are never
     * re-hashed for docs already flagged.
     *
-    * LAYOUT CONSISTENCY (round-19, ADVICE r18): under `bands = 0` the
-    * auto layout resolves from the FULL corpus count, never the
-    * post-anti-join remainder — the full-re-run equality this
-    * operator promises holds only when both runs hash under the SAME
-    * layout, and a remainder-sized count could straddle the 1M
-    * auto-layout crossover the full re-run doesn't. The count is one
-    * extra metadata-cheap job against parquet; pass `nHint` (or an
-    * explicit `bands`) to skip it on expensive views or repeated
-    * incremental calls.
+    * Under `bands = 0` the layout resolves from the FULL corpus count
+    * ([[decontaminateIncr]]): one extra metadata-cheap job against
+    * parquet; pass `nHint` (or an explicit `bands`) to skip it on
+    * expensive views or repeated incremental calls.
     */
   def dHashDecontaminateIncr(corpusMedia: DataFrame,
       prevFlagged: DataFrame, newBenchmarkMedia: DataFrame,
@@ -508,23 +430,19 @@ object Multimodal {
       headerLen: Int = 3, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      decodePixels: Boolean = false, nHint: Long = -1L): DataFrame = {
-    val hint =
-      if (bands > 0 || nHint >= 0) nHint
-      else corpusMedia.filter(col("kind") === "image").count()
-    val prevIds = prevFlagged.select(col("doc_id"))
-    val remainder = corpusMedia.join(prevIds, Seq("doc_id"), "left_anti")
-    prevIds.unionByName(dHashDecontaminateFlag(remainder,
-      newBenchmarkMedia, maxHamming, bands, bandBits, headerLen,
-      probeRadius, storage, decodePixels, hint))
-  }
+      decodePixels: Boolean = false, nHint: Long = -1L): DataFrame =
+    decontaminateIncr(image(headerLen, decodePixels), corpusMedia,
+      prevFlagged, bands, nHint)(dHashDecontaminateFlag(_,
+        newBenchmarkMedia, maxHamming, bands, bandBits, headerLen,
+        probeRadius, storage, decodePixels, _))
 
   /** Image decon ATTRIBUTION report (round-19 —
     * [[graft.operators.Dedup.contaminationReport]]'s contract for the
     * multimodal member): per benchmark image, how many corpus images
     * it flags and at what minimum Hamming, zero-hit items included —
     * the report an eval owner reads before deciding which suite
-    * items leaked. [[BandedHamming.bipartiteReportJoin]] over the
+    * items leaked. [[BandedHamming.bipartiteHitPairs]] and
+    * [[BandedHamming.reportFromHits]] over the
     * same band rows as [[dHashDecontaminateFlag]] (byte kernel or
     * `decodePixels` raster kernel); returns
     * `(eval_id, n_flagged, min_hamming)`. Same sizing/streaming
@@ -535,36 +453,10 @@ object Multimodal {
       bandBits: Int = 16, headerLen: Int = 3, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      decodePixels: Boolean = false, nHint: Long = -1L): DataFrame = {
-    require(!corpusMedia.isStreaming || bands > 0 || nHint >= 0,
-      "dHashDecontaminateReport: a streaming corpus needs an explicit " +
-        "bands layout or an nHint — bands = 0 auto-sizing counts the corpus")
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius,
-      if (nHint >= 0) nHint
-      else corpusMedia.filter(col("kind") === "image").count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("dHashDecontaminateReport",
-        maxHamming, b, pr)
-    def rows(m: DataFrame) =
-      if (decodePixels) dHashImageBandRows(m, b, bb)
-      else dHashBandRows(m, b, bb, headerLen)
-    BandedHamming.bipartiteReportJoin(rows(corpusMedia),
-      rows(benchmarkMedia), maxHamming, b, bb, pr, storage)
-  }
-
-  /** Shared candidate-then-verify core ([[BandedHamming.pairJoin]],
-    * also carrying [[Dedup.simHashPairs]]): banded self-join over
-    * `(doc_id, bands, band_idx, band_key)` rows → exact Hamming verify
-    * over the full hash, with optional multi-index key probing
-    * (`probeRadius`) for corpus-size-scaled layouts (see
-    * [[autoBandLayout]]).
-    */
-  private def bandPairJoin(rows0: DataFrame, maxHamming: Int, bands: Int,
-      bandBits: Int, probeRadius: Int, maxBucketSize: Option[Int],
-      storage: Option[org.apache.spark.storage.StorageLevel]): DataFrame =
-    BandedHamming.pairJoin(rows0, maxHamming, bands, bandBits, probeRadius,
-      maxBucketSize, storage)
+      decodePixels: Boolean = false, nHint: Long = -1L): DataFrame =
+    decontaminate(image(headerLen, decodePixels), "dHashDecontaminateReport",
+      corpusMedia, benchmarkMedia, maxHamming, bands, bandBits, probeRadius,
+      storage, nHint, report = true)
 
   /** Frame sampling for video payloads: up to 8 evenly spaced frame
     * offsets into the payload body (offsets only — the METADATA
@@ -635,15 +527,8 @@ object Multimodal {
     * drop.
     */
   def audioFingerprintBandRows(media: DataFrame, bands: Int = 0,
-      bandBits: Int = 16, nHint: Long = -1L): DataFrame = {
-    val (b, bb, _) = BandedHamming.resolveLayout(bands, bandBits, 0,
-      if (nHint >= 0) nHint else media.filter(col("kind") === "audio").count())
-    BandedHamming.bandRows(
-      media.filter(col("kind") === "audio")
-        .select(col("doc_id"),
-          graft.functions.vec.audioFingerprint64(col("payload")).as("afp")),
-      "afp", b, bb)
-  }
+      bandBits: Int = 16, nHint: Long = -1L): DataFrame =
+    bandRowsOf(Audio, media, bands, bandBits, nHint)
 
   /** Audio near-dup pairs — the audio member of the multimodal dedup
     * family, same candidate-then-verify shape and occupancy guard as
@@ -655,15 +540,9 @@ object Multimodal {
       maxBucketSize: Option[Int] = None,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      probeRadius: Int = 0, nHint: Long = -1L): DataFrame = {
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius,
-      if (nHint >= 0) nHint else media.filter(col("kind") === "audio").count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("audioNearDupPairs", maxHamming, b, pr)
-    bandPairJoin(audioFingerprintBandRows(media, b, bb),
-      maxHamming, b, bb, pr, maxBucketSize, storage)
-  }
+      probeRadius: Int = 0, nHint: Long = -1L): DataFrame =
+    pairs(Audio, "audioNearDupPairs", media, maxHamming, bands, bandBits,
+      probeRadius, maxBucketSize, storage, nHint)
 
   /** Incremental audio near-dup — the audio member of the maintenance
     * triangle, exactly [[dHashIncrementalPairs]]' shape: an arriving
@@ -676,16 +555,9 @@ object Multimodal {
       maxHamming: Int = 6, bands: Int = 0, bandBits: Int = 16,
       probeRadius: Int = 0, maxBucketSize: Option[Int] = None,
       storage: Option[org.apache.spark.storage.StorageLevel] =
-        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)): DataFrame = {
-    val (b, bb, pr) = BandedHamming.resolveIndexLayout(
-      bands, bandBits, probeRadius, index)
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("audioIncrementalPairs", maxHamming,
-        b, pr)
-    BandedHamming.incrementalPairJoin(index,
-      audioFingerprintBandRows(newMedia, b, bb),
-      maxHamming, b, bb, pr, maxBucketSize, storage)
-  }
+        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)): DataFrame =
+    incrementalPairs(Audio, "audioIncrementalPairs", newMedia, index,
+      maxHamming, bands, bandBits, probeRadius, maxBucketSize, storage)
 
   /** Audio decontamination — [[dHashDecontaminateFlag]]'s contract for
     * the audio member: flag corpus audio whose 64-bit energy/ZCR
@@ -708,39 +580,20 @@ object Multimodal {
       bandBits: Int = 16, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      nHint: Long = -1L): DataFrame = {
-    require(!corpusMedia.isStreaming || bands > 0 || nHint >= 0,
-      "audioDecontaminateFlag: a streaming corpus needs an explicit " +
-        "bands layout or an nHint — bands = 0 auto-sizing counts the corpus")
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius,
-      if (nHint >= 0) nHint
-      else corpusMedia.filter(col("kind") === "audio").count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("audioDecontaminateFlag",
-        maxHamming, b, pr)
-    BandedHamming.bipartiteFlagJoin(
-      audioFingerprintBandRows(corpusMedia, b, bb),
-      audioFingerprintBandRows(benchmarkMedia, b, bb),
-      maxHamming, b, bb, pr, storage)
-  }
+      nHint: Long = -1L): DataFrame =
+    decontaminate(Audio, "audioDecontaminateFlag", corpusMedia,
+      benchmarkMedia, maxHamming, bands, bandBits, probeRadius, storage,
+      nHint, report = false)
 
   /** Benchmark-append incremental audio decon (round-19, closes the
     * audio corner of the incremental-decon triangle): the
     * [[dHashDecontaminateIncr]] monotone-append argument is
     * METRIC-AGNOSTIC — flags are existential over the benchmark side,
-    * so a new eval suite can only ADD flags, and the update job is
-    * [[audioDecontaminateFlag]] over the previously-UNFLAGGED
-    * remainder × the NEW benchmark clips only, unioned with the
-    * carried flag set. Result EQUALS a full re-flag against the
-    * unioned benchmark (same `maxHamming`/layout); under `bands = 0`
-    * the auto layout resolves from the FULL corpus count, never the
-    * remainder (the image member's layout-consistency rule). Branches
-    * are disjoint (`newly ⊆ corpus ∖ prevFlagged`) — no distinct, no
-    * shuffle beyond the anti join; an empty append returns
-    * `prevFlagged` after one anti join, old payloads never re-decode
-    * for docs already flagged. Pass `nHint`/`bands` to skip the
-    * sizing count on expensive views or repeated calls.
+    * so the update is [[audioDecontaminateFlag]] over the
+    * previously-UNFLAGGED remainder × the NEW benchmark clips only.
+    * Result EQUALS a full re-flag against the unioned benchmark (same
+    * `maxHamming`/layout). Pass `nHint`/`bands` to skip the sizing
+    * count on expensive views or repeated calls.
     */
   def audioDecontaminateIncr(corpusMedia: DataFrame,
       prevFlagged: DataFrame, newBenchmarkMedia: DataFrame,
@@ -748,16 +601,10 @@ object Multimodal {
       probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      nHint: Long = -1L): DataFrame = {
-    val hint =
-      if (bands > 0 || nHint >= 0) nHint
-      else corpusMedia.filter(col("kind") === "audio").count()
-    val prevIds = prevFlagged.select(col("doc_id"))
-    val remainder = corpusMedia.join(prevIds, Seq("doc_id"), "left_anti")
-    prevIds.unionByName(audioDecontaminateFlag(remainder,
-      newBenchmarkMedia, maxHamming, bands, bandBits, probeRadius,
-      storage, hint))
-  }
+      nHint: Long = -1L): DataFrame =
+    decontaminateIncr(Audio, corpusMedia, prevFlagged, bands, nHint)(
+      audioDecontaminateFlag(_, newBenchmarkMedia, maxHamming, bands,
+        bandBits, probeRadius, storage, _))
 
   /** Audio decon ATTRIBUTION report (round-19 —
     * [[dHashDecontaminateReport]]'s contract for the audio member):
@@ -773,22 +620,10 @@ object Multimodal {
       bandBits: Int = 16, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      nHint: Long = -1L): DataFrame = {
-    require(!corpusMedia.isStreaming || bands > 0 || nHint >= 0,
-      "audioDecontaminateReport: a streaming corpus needs an explicit " +
-        "bands layout or an nHint — bands = 0 auto-sizing counts the corpus")
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius,
-      if (nHint >= 0) nHint
-      else corpusMedia.filter(col("kind") === "audio").count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("audioDecontaminateReport",
-        maxHamming, b, pr)
-    BandedHamming.bipartiteReportJoin(
-      audioFingerprintBandRows(corpusMedia, b, bb),
-      audioFingerprintBandRows(benchmarkMedia, b, bb),
-      maxHamming, b, bb, pr, storage)
-  }
+      nHint: Long = -1L): DataFrame =
+    decontaminate(Audio, "audioDecontaminateReport", corpusMedia,
+      benchmarkMedia, maxHamming, bands, bandBits, probeRadius, storage,
+      nHint, report = true)
 
   // -------------------------------------------------------------------
   // REAL video member (round-14): the fixture "video codec" is
@@ -904,24 +739,13 @@ object Multimodal {
           .as("afp")),
       "afp")
 
-  /** Video near-dup pairs: videos sharing ≥ `minSharedFrames` sampled
-    * frame hashes. Per-video DISTINCT frame hashes → exact-key
-    * self-join on the 64-bit hash (one shuffle, the banded-join plan
-    * shape with the full hash as the key — frame identity is exact by
-    * construction, no Hamming radius needed at the frame level) →
-    * per-pair shared count. `maxBucketSize` caps degenerate frame
-    * strata (a black-frame bucket) through the shared
-    * [[Dedup.capBandBuckets]] guard — the frame hash rides as the
-    * band key.
-    */
   /** FUZZY video near-dup: frames within Hamming distance ≤
     * `maxHamming` of each other count as shared — the visually-near
     * semantics of [[dHashImageNearDupPairs]] lifted to the frame
     * level, riding the SAME [[BandedHamming.pairJoin]] core (third
     * operator on it, after image dHash and text SimHash). Sampled
-    * frames get a composite row id (`doc_id · 64 + frame_idx` —
-    * frame pairs from one video must not collapse in the pair dedup),
-    * band-join + exact-verify finds near frame PAIRS, and the rollup
+    * frames get a composite row id ([[VideoFrames]]), band-join +
+    * exact-verify finds near frame PAIRS, and the rollup
     * counts, per video pair, the DISTINCT frames of the lower-id video
     * with at least one near twin in the other — the same units
     * (bounded by the sampled-frame count) as [[videoNearDupPairs]]'
@@ -931,11 +755,7 @@ object Multimodal {
     * frame). A re-encoded or slightly-edited frame (the [[resizePpm]]
     * output, a one-cell touch-up) still matches where the exact-key
     * join loses it. `bands = 0` self-sizes from the EXACT sampled-
-    * frame count: the frame rows persist once and feed both the count
-    * and the banding, so the decode kernel never runs twice (a
-    * `videos × maxFrames` bound was measured flipping a 666k-frame
-    * corpus across the 1M crossover — the layout threshold needs the
-    * real count, not an overestimate).
+    * frame count ([[VideoFrames]]).
     */
   def videoNearDupPairsFuzzy(media: DataFrame, maxHamming: Int = 6,
       minSharedFrames: Int = 1, maxFrames: Int = 8,
@@ -944,31 +764,14 @@ object Multimodal {
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       nHint: Long = -1L): DataFrame = {
-    require(maxFrames >= 1 && maxFrames <= 64,
-      s"maxFrames must be in [1, 64] (composite-id headroom), got $maxFrames")
+    val frames = VideoFrames(maxFrames)
     require(minSharedFrames >= 1,
       s"minSharedFrames must be >= 1, got $minSharedFrames")
-    val hashed0 = sampleFrameHashes(media, maxFrames)
-      .select((col("doc_id") * 64 + col("frame_idx")).as("doc_id"),
-        col("frame_hash"))
-    val hashed =
-      if (bands == 0 && nHint < 0)
-        storage.fold(hashed0)(graft.CacheScope.persist(hashed0, _))
-      else hashed0
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius, if (nHint >= 0) nHint else hashed.count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("videoNearDupPairsFuzzy", maxHamming,
-        b, pr)
-    BandedHamming.pairJoin(
-        BandedHamming.bandRows(hashed, "frame_hash", b, bb),
-        maxHamming, b, bb, pr, maxBucketSize, storage)
+    pairs(frames, "videoNearDupPairsFuzzy", media, maxHamming, bands,
+        bandBits, probeRadius, maxBucketSize, storage, nHint)
       // pairJoin orients d1 < d2 on composite ids, and frame offsets
-      // are < 64, so d1 always belongs to the lower-id video. The
-      // decomposition is an ARITHMETIC shift, not DIV: integer DIV
-      // truncates toward zero and would mis-attribute a negative
-      // video's frames to its neighbor (doc ids must fit 57 bits
-      // either sign — the composite multiplies by 64)
+      // are < 64, so d1 always belongs to the lower-id video (the
+      // arithmetic shift of [[VideoFrames]])
       .select(shiftright(col("d1"), 6).as("d1"),
         shiftright(col("d2"), 6).as("d2"),
         col("d1").as("lo_frame"))
@@ -986,8 +789,7 @@ object Multimodal {
     * rows consumed through [[BandedHamming.bipartiteFlagJoin]]: corpus
     * frame hashes row-local, benchmark frames broadcast, full-hash
     * verify in the semi condition, then the composite ids shift back
-    * to video ids (arithmetic shift — DIV truncates toward zero on
-    * negatives) and dedup. Two bounded exchanges (composite dedup +
+    * to video ids and dedup. Two bounded exchanges (composite dedup +
     * video dedup), both over the flagged subset; NO occupancy cap
     * (drop decisions keep their recall). Sides may share ids —
     * round-19: the bipartite core carries no self-id exclusion, so a
@@ -1001,40 +803,15 @@ object Multimodal {
       bands: Int = 0, bandBits: Int = 16, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      nHint: Long = -1L): DataFrame = {
-    require(maxFrames >= 1 && maxFrames <= 64,
-      s"maxFrames must be in [1, 64] (composite-id headroom), got $maxFrames")
-    require(!corpusMedia.isStreaming || bands > 0 || nHint >= 0,
-      "videoDecontaminateFlag: a streaming corpus needs an explicit " +
-        "bands layout or an nHint — bands = 0 auto-sizing counts the frames")
-    def composite(m: DataFrame) = sampleFrameHashes(m, maxFrames)
-      .select((col("doc_id") * 64 + col("frame_idx")).as("doc_id"),
-        col("frame_hash"))
-    val cHashed0 = composite(corpusMedia)
-    val cHashed =
-      if (bands == 0 && nHint < 0)
-        storage.fold(cHashed0)(graft.CacheScope.persist(cHashed0, _))
-      else cHashed0
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius, if (nHint >= 0) nHint else cHashed.count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("videoDecontaminateFlag",
-        maxHamming, b, pr)
-    BandedHamming.bipartiteFlagJoin(
-        BandedHamming.bandRows(cHashed, "frame_hash", b, bb),
-        BandedHamming.bandRows(composite(benchmarkMedia), "frame_hash",
-          b, bb),
-        maxHamming, b, bb, pr, storage)
-      .select(shiftright(col("doc_id"), 6).as("doc_id"))
-      .dropDuplicates("doc_id")
-  }
+      nHint: Long = -1L): DataFrame =
+    decontaminate(VideoFrames(maxFrames), "videoDecontaminateFlag",
+      corpusMedia, benchmarkMedia, maxHamming, bands, bandBits, probeRadius,
+      storage, nHint, report = false)
 
   /** Benchmark-append incremental video decon (round-19, closes the
     * video corner of the incremental-decon triangle): monotone-append
     * over [[videoDecontaminateFlag]] — flags are existential over the
-    * benchmark frames, so the update is the flag tier over the
-    * previously-UNFLAGGED remainder × the NEW benchmark only, unioned
-    * with the carried set; equals a full re-flag against the unioned
+    * benchmark frames; equals a full re-flag against the unioned
     * benchmark under a shared layout. Under `bands = 0` the layout
     * resolves from the FULL corpus FRAME count (the quantity the full
     * re-run sizes from), which decodes every corpus video's sampled
@@ -1047,22 +824,16 @@ object Multimodal {
       bandBits: Int = 16, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      nHint: Long = -1L): DataFrame = {
-    val hint =
-      if (bands > 0 || nHint >= 0) nHint
-      else sampleFrameHashes(corpusMedia, maxFrames).count()
-    val prevIds = prevFlagged.select(col("doc_id"))
-    val remainder = corpusMedia.join(prevIds, Seq("doc_id"), "left_anti")
-    prevIds.unionByName(videoDecontaminateFlag(remainder,
-      newBenchmarkMedia, maxHamming, maxFrames, bands, bandBits,
-      probeRadius, storage, hint))
-  }
+      nHint: Long = -1L): DataFrame =
+    decontaminateIncr(VideoFrames(maxFrames), corpusMedia, prevFlagged,
+      bands, nHint)(videoDecontaminateFlag(_, newBenchmarkMedia, maxHamming,
+        maxFrames, bands, bandBits, probeRadius, storage, _))
 
   /** Video decon ATTRIBUTION report (round-19): per benchmark VIDEO,
     * how many corpus videos share a near-dup sampled frame and the
     * minimum frame-pair Hamming — the report is keyed on videos, so
     * the composite (video, frame) hit stream re-keys BOTH sides to
-    * video ids (arithmetic shift) before the count-distinct agg, and
+    * video ids before the count-distinct agg, and
     * the zero-hit frame carries the distinct benchmark VIDEO ids. A
     * trimmed re-cut attributes at Hamming 0 through any shared frame.
     */
@@ -1071,37 +842,21 @@ object Multimodal {
       bands: Int = 0, bandBits: Int = 16, probeRadius: Int = 0,
       storage: Option[org.apache.spark.storage.StorageLevel] =
         Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      nHint: Long = -1L): DataFrame = {
-    require(maxFrames >= 1 && maxFrames <= 64,
-      s"maxFrames must be in [1, 64] (composite-id headroom), got $maxFrames")
-    require(!corpusMedia.isStreaming || bands > 0 || nHint >= 0,
-      "videoDecontaminateReport: a streaming corpus needs an explicit " +
-        "bands layout or an nHint — bands = 0 auto-sizing counts the frames")
-    def composite(m: DataFrame) = sampleFrameHashes(m, maxFrames)
-      .select((col("doc_id") * 64 + col("frame_idx")).as("doc_id"),
-        col("frame_hash"))
-    val cHashed0 = composite(corpusMedia)
-    val cHashed =
-      if (bands == 0 && nHint < 0)
-        storage.fold(cHashed0)(graft.CacheScope.persist(cHashed0, _))
-      else cHashed0
-    val (b, bb, pr) = BandedHamming.resolveLayout(bands, bandBits,
-      probeRadius, if (nHint >= 0) nHint else cHashed.count())
-    if (bands == 0)
-      BandedHamming.warnHeuristicTail("videoDecontaminateReport",
-        maxHamming, b, pr)
-    val (hits, benchFrameIds) = BandedHamming.bipartiteHitPairs(
-      BandedHamming.bandRows(cHashed, "frame_hash", b, bb),
-      BandedHamming.bandRows(composite(benchmarkMedia), "frame_hash",
-        b, bb),
-      maxHamming, b, bb, pr, storage)
-    BandedHamming.reportFromHits(
-      hits.select(shiftright(col("eval_id"), 6).as("eval_id"),
-        shiftright(col("doc_id"), 6).as("doc_id"), col("hamming")),
-      benchFrameIds.select(shiftright(col("eval_id"), 6).as("eval_id"))
-        .distinct())
-  }
+      nHint: Long = -1L): DataFrame =
+    decontaminate(VideoFrames(maxFrames), "videoDecontaminateReport",
+      corpusMedia, benchmarkMedia, maxHamming, bands, bandBits, probeRadius,
+      storage, nHint, report = true)
 
+  /** Video near-dup pairs: videos sharing ≥ `minSharedFrames` sampled
+    * frame hashes. Per-video DISTINCT frame hashes → exact-key
+    * self-join on the 64-bit hash (one shuffle, the banded-join plan
+    * shape with the full hash as the key — frame identity is exact by
+    * construction, no Hamming radius needed at the frame level) →
+    * per-pair shared count. `maxBucketSize` caps degenerate frame
+    * strata (a black-frame bucket) through the shared
+    * [[Dedup.capBandBuckets]] guard — the frame hash rides as the
+    * band key.
+    */
   def videoNearDupPairs(media: DataFrame, minSharedFrames: Int = 1,
       maxFrames: Int = 8, maxBucketSize: Option[Int] = None,
       storage: Option[org.apache.spark.storage.StorageLevel] =
@@ -1121,5 +876,191 @@ object Multimodal {
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("shared_frames"))
       .filter(col("shared_frames") >= minSharedFrames)
+  }
+
+  // -------------------------------------------------------------------
+  // The banded-Hamming media family: one descriptor per media kind and
+  // one implementation per operator shape (header scaladoc)
+  // -------------------------------------------------------------------
+
+  /** How one media kind becomes banded-Hamming input. */
+  private[graft] sealed abstract class Media(val kind: String) {
+    /** The rows the `bands = 0` sizing count runs over and the corpus
+      * side bands from; `storage` is set exactly when that count runs.
+      */
+    def sized(m: DataFrame, storage: Option[StorageLevel]): DataFrame =
+      m.filter(col("kind") === kind)
+    /** Band rows of [[sized]] output under a resolved layout. */
+    def bands(sized: DataFrame, b: Int, bb: Int): DataFrame
+    /** What the sizing counts, as the streaming guard names it. */
+    def counts: String = "corpus"
+    /** Flagged ids as media ids. */
+    def flagged(ids: DataFrame): DataFrame = ids
+    /** The attribution report from the verified hits and benchmark ids. */
+    def report(hitsAndIds: (DataFrame, DataFrame)): DataFrame =
+      BandedHamming.reportFromHits(hitsAndIds._1, hitsAndIds._2)
+    final def rows(m: DataFrame, b: Int, bb: Int): DataFrame =
+      bands(sized(m, None), b, bb)
+  }
+
+  private def explodeBands(hashed: DataFrame): DataFrame =
+    // null-hash docs (payload too short for a gradient, undecodable
+    // raster) drop via the posexplode, like minHashBandIndex's gramless
+    // docs
+    hashed.select(col("doc_id"), col("bands"),
+      posexplode(col("bands")).as(Seq("band_idx", "band_key")))
+
+  /** Byte-sequence dHash over the payload past `headerLen` bytes. */
+  private[graft] final case class ImageBytes(headerLen: Int)
+      extends Media("image") {
+    def bands(sized: DataFrame, b: Int, bb: Int): DataFrame = {
+      val body = expr(s"substring(payload, ${headerLen + 1}, " +
+        s"length(payload) - $headerLen)")
+      explodeBands(sized.select(col("doc_id"),
+        graft.functions.vec.dHashBands(lower(hex(body)), b, bb).as("bands")))
+    }
+  }
+
+  /** dHash over decoded pixels (PPM/PNG/JPEG/GIF/BMP). */
+  private[graft] case object ImagePixels extends Media("image") {
+    def bands(sized: DataFrame, b: Int, bb: Int): DataFrame =
+      explodeBands(sized.select(col("doc_id"),
+        graft.functions.vec.dHashImageBands(col("payload"), b, bb)
+          .as("bands")))
+  }
+
+  private[graft] def image(headerLen: Int, decodePixels: Boolean): Media =
+    if (decodePixels) ImagePixels else ImageBytes(headerLen)
+
+  /** The 64-bit energy/zero-crossing WAV fingerprint. */
+  private[graft] case object Audio extends Media("audio") {
+    def bands(sized: DataFrame, b: Int, bb: Int): DataFrame =
+      BandedHamming.bandRows(sized.select(col("doc_id"),
+        graft.functions.vec.audioFingerprint64(col("payload")).as("afp")),
+        "afp", b, bb)
+  }
+
+  /** Up to `maxFrames` sampled frame dHashes per video, one row per frame
+    * under the composite id `doc_id·64 + frame_idx` (frame pairs from one
+    * video must not collapse in a pair dedup). The sizing count needs the
+    * exact frame count (a `videos × maxFrames` bound was measured
+    * flipping a 666k-frame corpus across the 1M crossover), so the frame
+    * rows persist once and feed both the count and the banding. Ids map
+    * back by an ARITHMETIC shift, not DIV: integer DIV truncates toward
+    * zero and would mis-attribute a negative video's frames to its
+    * neighbor (doc ids must fit 57 bits either sign).
+    */
+  private[graft] final case class VideoFrames(maxFrames: Int)
+      extends Media("video") {
+    require(maxFrames >= 1 && maxFrames <= 64,
+      s"maxFrames must be in [1, 64] (composite-id headroom), got $maxFrames")
+    override def sized(m: DataFrame,
+        storage: Option[StorageLevel]): DataFrame = {
+      val frames = sampleFrameHashes(m, maxFrames)
+        .select((col("doc_id") * 64 + col("frame_idx")).as("doc_id"),
+          col("frame_hash"))
+      storage.fold(frames)(graft.CacheScope.persist(frames, _))
+    }
+    def bands(sized: DataFrame, b: Int, bb: Int): DataFrame =
+      BandedHamming.bandRows(sized, "frame_hash", b, bb)
+    override def counts: String = "frames"
+    override def flagged(ids: DataFrame): DataFrame =
+      ids.select(shiftright(col("doc_id"), 6).as("doc_id"))
+        .dropDuplicates("doc_id")
+    override def report(hitsAndIds: (DataFrame, DataFrame)): DataFrame =
+      BandedHamming.reportFromHits(
+        hitsAndIds._1.select(shiftright(col("eval_id"), 6).as("eval_id"),
+          shiftright(col("doc_id"), 6).as("doc_id"), col("hamming")),
+        hitsAndIds._2.select(shiftright(col("eval_id"), 6).as("eval_id"))
+          .distinct())
+  }
+
+  /** Band rows shape. `bands = 0` self-sizes the INDEX layout from the
+    * media count: a persisted index built with the fixed 4x16 default at
+    * 5M images would bake the measured key-space quadratic into every
+    * incremental/streaming query deriving its layout from it.
+    */
+  private def bandRowsOf(media: Media, m: DataFrame, bands: Int,
+      bandBits: Int, nHint: Long): DataFrame = {
+    val (b, bb, _) = BandedHamming.resolveLayout(bands, bandBits, 0,
+      if (nHint >= 0) nHint else media.sized(m, None).count())
+    media.rows(m, b, bb)
+  }
+
+  /** The sized rows of `m` with the resolved layout: `bands`, `nHint`, or
+    * the count over [[Media.sized]]; warns on a heuristic tail under
+    * auto-sizing.
+    */
+  private def sizedLayout(media: Media, op: String, m: DataFrame,
+      maxHamming: Int, bands: Int, bandBits: Int, probeRadius: Int,
+      storage: Option[StorageLevel],
+      nHint: Long): (DataFrame, (Int, Int, Int)) = {
+    val sized = media.sized(m, if (bands == 0 && nHint < 0) storage else None)
+    val layout @ (b, _, pr) = BandedHamming.resolveLayout(bands, bandBits,
+      probeRadius, if (nHint >= 0) nHint else sized.count())
+    if (bands == 0) BandedHamming.warnHeuristicTail(op, maxHamming, b, pr)
+    (sized, layout)
+  }
+
+  /** Near-dup pairs shape: [[BandedHamming.pairJoin]]. */
+  private def pairs(media: Media, op: String, m: DataFrame, maxHamming: Int,
+      bands: Int, bandBits: Int, probeRadius: Int,
+      maxBucketSize: Option[Int], storage: Option[StorageLevel],
+      nHint: Long): DataFrame = {
+    val (sized, (b, bb, pr)) = sizedLayout(media, op, m, maxHamming, bands,
+      bandBits, probeRadius, storage, nHint)
+    BandedHamming.pairJoin(media.bands(sized, b, bb), maxHamming, b, bb, pr,
+      maxBucketSize, storage)
+  }
+
+  /** Incremental pairs shape: the layout comes from the index. */
+  private def incrementalPairs(media: Media, op: String, newMedia: DataFrame,
+      index: DataFrame, maxHamming: Int, bands: Int, bandBits: Int,
+      probeRadius: Int, maxBucketSize: Option[Int],
+      storage: Option[StorageLevel]): DataFrame = {
+    val (b, bb, pr) = BandedHamming.resolveIndexLayout(
+      bands, bandBits, probeRadius, index)
+    if (bands == 0) BandedHamming.warnHeuristicTail(op, maxHamming, b, pr)
+    BandedHamming.incrementalPairJoin(index, media.rows(newMedia, b, bb),
+      maxHamming, b, bb, pr, maxBucketSize, storage)
+  }
+
+  /** Decontamination flag and report shape: the corpus sizes the layout
+    * (the big side; both sides must hash under one layout for the band
+    * keys to meet).
+    */
+  private def decontaminate(media: Media, op: String, corpus: DataFrame,
+      bench: DataFrame, maxHamming: Int, bands: Int, bandBits: Int,
+      probeRadius: Int, storage: Option[StorageLevel], nHint: Long,
+      report: Boolean): DataFrame = {
+    // a STREAMING corpus runs the same plan (stream-static broadcast
+    // semi + stateful dedup), but auto-sizing counts the corpus —
+    // impossible on an unbounded stream; demand the layout up front
+    require(!corpus.isStreaming || bands > 0 || nHint >= 0,
+      s"$op: a streaming corpus needs an explicit bands layout or an " +
+        s"nHint — bands = 0 auto-sizing counts the ${media.counts}")
+    val (sized, (b, bb, pr)) = sizedLayout(media, op, corpus, maxHamming,
+      bands, bandBits, probeRadius, storage, nHint)
+    val (c, e) = (media.bands(sized, b, bb), media.rows(bench, b, bb))
+    if (report) media.report(BandedHamming.bipartiteHitPairs(c, e,
+      maxHamming, b, bb, pr, storage))
+    else media.flagged(BandedHamming.bipartiteFlagJoin(c, e, maxHamming,
+      b, bb, pr, storage))
+  }
+
+  /** Benchmark-append flag shape: under `bands = 0` the layout resolves
+    * from the FULL corpus count, never the post-anti-join remainder —
+    * the full-re-run equality holds only when both runs hash under the
+    * SAME layout, and a remainder-sized count could straddle the 1M
+    * crossover the full re-run doesn't. `flag(remainder, nHint)` is the
+    * kind's public flag operator.
+    */
+  private def decontaminateIncr(media: Media, corpus: DataFrame,
+      prevFlagged: DataFrame, bands: Int, nHint: Long)(
+      flag: (DataFrame, Long) => DataFrame): DataFrame = {
+    val hint =
+      if (bands > 0 || nHint >= 0) nHint
+      else media.sized(corpus, None).count()
+    TextOps.flagAppend(corpus, prevFlagged, "doc_id")(flag(_, hint))
   }
 }

@@ -27,15 +27,6 @@ object Similarity {
     */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Hard bound on the brute-force baselines: they are EXACT VERIFIERS
-    * for the recall gates, O(corpus × queries) / O(n²) by definition, and
-    * must never be pointed at a full corpus — the scale paths are
-    * [[lshTopK]]/[[ivfTopK]] and [[cosineNearDupPairs]]/
-    * [[ivfNearDupPairs]]. The guard is one planning-action count
-    * (parquet row-group metadata, not a scan) that fails LOUDLY past the
-    * bound instead of launching an n² job. Callers with a genuinely
-    * bounded non-fixture input can raise `maxRows` explicitly.
-    */
   /** Guard-verdict cache keyed on the CANONICALIZED plan + bound: the
     * verify/bench harnesses evaluate each registered query twice per
     * session, and the bounded count is job-overhead-priced — a repeat of
@@ -60,6 +51,15 @@ object Similarity {
             java.lang.Boolean]): Boolean = size() > 128
     })
 
+  /** Hard bound on the brute-force baselines: they are EXACT VERIFIERS
+    * for the recall gates, O(corpus × queries) / O(n²) by definition, and
+    * must never be pointed at a full corpus — the scale paths are
+    * [[lshTopK]]/[[ivfTopK]] and [[cosineNearDupPairs]]/
+    * [[ivfNearDupPairs]]. The guard is one planning-action count
+    * (parquet row-group metadata, not a scan) that fails LOUDLY past the
+    * bound instead of launching an n² job. Callers with a genuinely
+    * bounded non-fixture input can raise `maxRows` explicitly.
+    */
   private def requireBruteScale(df: DataFrame, maxRows: Long,
       what: String, alternative: String): Unit = {
     // stats fast path: the optimizer's size estimate for a parquet-backed
@@ -148,13 +148,6 @@ object Similarity {
     }.reduce(_ + _)
   }
 
-  /** ANN top-k via hyperplane LSH with multi-probe across `tables`
-    * independent hash tables: vectors and queries are bucketed row-locally,
-    * candidates come from per-(table, bucket) joins — each bucket holds
-    * ~corpus/2^planes vectors, so the join is narrow and shuffle-bounded —
-    * then exact cosine ranks the union of candidates. Recall grows with
-    * `tables`; cost stays O(candidates) instead of O(corpus) per query.
-    */
   /** Embedding dimension: explicit when given (>0), else read from the
     * first corpus row — a wrong literal would fail mid-job in vector_dot.
     */
@@ -162,6 +155,13 @@ object Similarity {
     if (dim > 0) dim
     else df.select(size(col(vecCol))).head().getInt(0)
 
+  /** ANN top-k via hyperplane LSH with multi-probe across `tables`
+    * independent hash tables: vectors and queries are bucketed row-locally,
+    * candidates come from per-(table, bucket) joins — each bucket holds
+    * ~corpus/2^planes vectors, so the join is narrow and shuffle-bounded —
+    * then exact cosine ranks the union of candidates. Recall grows with
+    * `tables`; cost stays O(candidates) instead of O(corpus) per query.
+    */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       planes: Int = 8, tables: Int = 4, dim0: Int = -1,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -195,15 +195,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col(idCol), col("sim"))
   }
 
-  /** IVF (inverted-file) ANN: a coarse k-means quantizer assigns every
-    * vector to its nearest of `nlist` centroid lists (row-local argmin
-    * over centroid dot products — centroids ride as literals); a query
-    * probes its `nprobe` nearest lists and exact cosine reranks only those
-    * candidates. The other classic ANN scale path next to hyperplane LSH:
-    * recall follows data clustering rather than random projections.
-    * Centroids train on a bounded sample via MLlib KMeans (seeded —
-    * deterministic).
-    */
   /** Seeded coarse quantizer: centroids from MLlib KMeans on a bounded
     * sample (deterministic; shared by the IVF top-k and near-dup paths).
     */
@@ -440,6 +431,15 @@ object Similarity {
       .select(col(idCol), col("cluster"))
   }
 
+  /** IVF (inverted-file) ANN: a coarse k-means quantizer assigns every
+    * vector to its nearest of `nlist` centroid lists (row-local argmin
+    * over centroid dot products — centroids ride as literals); a query
+    * probes its `nprobe` nearest lists and exact cosine reranks only those
+    * candidates. The other classic ANN scale path next to hyperplane LSH:
+    * recall follows data clustering rather than random projections.
+    * Centroids train on a bounded sample via MLlib KMeans (seeded —
+    * deterministic).
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 0, nprobe: Int = 4, trainSample: Int = 10000,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -653,12 +653,6 @@ object Similarity {
       loadIvfPqCentroids(spark, dir), corpus, queries, k, nprobe, rerank,
       idCol, vecCol)
 
-  /** Exact all-pairs cosine near-dups: the O(n²) baseline the LSH variant
-    * approximates. Norms precomputed per side ⇒ one dot per pair. Only
-    * viable when one side fits broadcast / the pair count is bounded; at
-    * 100 TB use [[cosineNearDupPairs]]. Guarded: past `maxRows` the call
-    * fails loudly instead of launching the n² self-join.
-    */
   /** Reciprocal-rank fusion (Cormack et al. 2009 — the standard hybrid-
     * search combiner: BM25 ⊕ ANN, or any mix of ranked retrievals):
     * fuse N rankings into `score(d) = Σ_r 1/(rrfK + rank_r(d))` over the
@@ -702,6 +696,12 @@ object Similarity {
       .select(col("rank"), col(idCol), col("n_rankings"), col("rrf_score"))
   }
 
+  /** Exact all-pairs cosine near-dups: the O(n²) baseline the LSH variant
+    * approximates. Norms precomputed per side ⇒ one dot per pair. Only
+    * viable when one side fits broadcast / the pair count is bounded; at
+    * 100 TB use [[cosineNearDupPairs]]. Guarded: past `maxRows` the call
+    * fails loudly instead of launching the n² self-join.
+    */
   def bruteForceNearDupPairs(df: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxRows: Long = 65536L): DataFrame = {

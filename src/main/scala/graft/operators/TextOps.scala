@@ -55,10 +55,6 @@ object TextOps {
   private def votes(tokens: Column, words: Seq[String]): Column =
     size(filter(tokens, t => t.isin(words.map(lit(_)): _*)))
 
-  /** Language-ID heuristic: stopword votes per language, argmax with
-    * deterministic tiebreak (list order). Returns (id, pred_lang, per-lang
-    * votes) so the decision is auditable.
-    */
   /** The fused per-row language/quality statistics vector
     * `[v_en..v_zh, n_ws, n_bpe, n_punct]` (`lang_stats`
     * over `lower(text)` — one compiled pass; the HOF formulation it
@@ -73,6 +69,10 @@ object TextOps {
 
   private def voteAt(st: Column, j: Int): Column = element_at(st, j + 1)
 
+  /** Language-ID heuristic: stopword votes per language, argmax with
+    * deterministic tiebreak (list order). Returns (id, pred_lang, per-lang
+    * votes) so the decision is auditable.
+    */
   def langId(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     val st = col("__st")
@@ -844,61 +844,22 @@ object TextOps {
   def semanticDecontaminateIncr(corpus: DataFrame, prevFlagged: DataFrame,
       newBenchmark: DataFrame, cosP: Int = 4, cosQ: Int = 5,
       textCol: String = "text", idCol: String = "doc_id", n: Int = 3,
-      dim: Int = 64): DataFrame = {
+      dim: Int = 64): DataFrame =
+    flagAppend(corpus, prevFlagged, idCol)(semanticDecontaminateFlag(_,
+      newBenchmark, cosP, cosQ, textCol, idCol, n, dim))
+
+  /** The monotone benchmark-append update every incremental decon tier
+    * runs (this one and the three media `*DecontaminateIncr`):
+    * `prevFlagged ∪ flag(corpus ∖ prevFlagged)`, where `flag` is the
+    * tier's flag operator against the NEW benchmark only. The branches
+    * are disjoint by construction, so the union needs no distinct.
+    */
+  private[operators] def flagAppend(corpus: DataFrame, prevFlagged: DataFrame,
+      idCol: String)(flag: DataFrame => DataFrame): DataFrame = {
     val prevIds = prevFlagged.select(col(idCol))
-    val remainder = corpus.join(prevIds, Seq(idCol), "left_anti")
-    val newly = semanticDecontaminateFlag(
-      remainder, newBenchmark, cosP, cosQ, textCol, idCol, n, dim)
-    prevIds.unionByName(newly)
+    prevIds.unionByName(flag(corpus.join(prevIds, Seq(idCol), "left_anti")))
   }
 
-  /** IVF-prescreened semantic decontamination — the candidate-generation
-    * tier [[semanticDecontaminate]]'s doc promises for HUGE benchmarks.
-    * Same contract (flag corpus docs with hashed-embedding cosine ≥ p/q
-    * against any benchmark doc; returns `(idCol, n_matches)`) and a
-    * THEOREM, not a probability, for recall: the flagged set EQUALS the
-    * exact tier's on every input.
-    *
-    * Mechanism (metric ball cover over the IVF coarse quantizer):
-    * every corpus doc is assigned row-locally to its nearest of `nlist`
-    * seeded k-means centroids (unit-normalized, so euclidean-nearest =
-    * max-cosine; the compiled [[graft.functions.NearestCentroidsKernel]]
-    * node). One bounded aggregation records each list's angular RADIUS
-    * `r_l` (max angle from an assigned doc to its centroid). A
-    * benchmark doc `e` is then replicated into exactly the lists whose
-    * centroid lies within `θ_τ + r_l` of it (θ_τ = arccos(p/q), plus a
-    * 10⁻⁶ rad float-safety slack — the verdict's "threshold − slack"):
-    * by the triangle inequality, ANY corpus doc within θ_τ of `e` sits
-    * in a list `e` was replicated into, so no true pair can escape the
-    * candidate join. The exact integer verify ([[cosThresholdPred]])
-    * then makes precision 1 — equality to the exact tier holds by
-    * construction at every scale, which is why the `decon_semantic_ivf`
-    * oracle IS the exact tier's replay.
-    *
-    * Scale shape at 100 TB: the corpus pays one row-local embed +
-    * assignment (nlist·dim mults — `nlist = 0` sizes by the BENCHMARK,
-    * √|benchmark| clamped [16, 4096], so the assignment stays ≪ the
-    * |benchmark|-dot scan it replaces no matter how big the corpus
-    * grows; the ANN corpus-√n rule measured SUPER-linear at the 1000×
-    * clustered tier, see `ivfBallCover`) and ONE broadcast
-    * hash probe per row; each corpus doc lives in exactly one list, so
-    * candidate pairs appear AT MOST ONCE — no pair-dedup shuffle. The
-    * verified pair stream is OUTPUT-SENSITIVE: pairs within
-    * `θ_τ + r_l` of a replicated benchmark doc. On a diverse corpus
-    * (tight clusters, near-orthogonal background) that is a small
-    * fraction; on a corpus whose background cosine already crowds the
-    * threshold no recall-1 method can verify fewer pairs than actually
-    * match — the prescreen degrades gracefully to the exact tier's
-    * cost plus the (cheap) assignment, never worse by more than that.
-    * One shuffle total (the per-doc match count); the corpus vectors
-    * never shuffle.
-    *
-    * `candidatesOnly = true` returns the raw verified-pair stream
-    * `(idCol, n1, n2, dt)` BEFORE the threshold/aggregation — the
-    * ScaleProbe diagnostic behind the pair-stream-ratio claim (verified
-    * pairs ÷ the exact tier's corpus × benchmark), never a query
-    * surface.
-    */
   /** The shared ball-cover prescreen behind both IVF decon tiers:
     * returns (corpus rows with their assigned list, benchmark rows
     * replicated into every list whose angular ball could hold a
@@ -1019,6 +980,53 @@ object TextOps {
     (cAssigned, benchRep)
   }
 
+  /** IVF-prescreened semantic decontamination — the candidate-generation
+    * tier [[semanticDecontaminate]]'s doc promises for HUGE benchmarks.
+    * Same contract (flag corpus docs with hashed-embedding cosine ≥ p/q
+    * against any benchmark doc; returns `(idCol, n_matches)`) and a
+    * THEOREM, not a probability, for recall: the flagged set EQUALS the
+    * exact tier's on every input.
+    *
+    * Mechanism (metric ball cover over the IVF coarse quantizer):
+    * every corpus doc is assigned row-locally to its nearest of `nlist`
+    * seeded k-means centroids (unit-normalized, so euclidean-nearest =
+    * max-cosine; the compiled [[graft.functions.NearestCentroidsKernel]]
+    * node). One bounded aggregation records each list's angular RADIUS
+    * `r_l` (max angle from an assigned doc to its centroid). A
+    * benchmark doc `e` is then replicated into exactly the lists whose
+    * centroid lies within `θ_τ + r_l` of it (θ_τ = arccos(p/q), plus a
+    * 10⁻⁶ rad float-safety slack — the verdict's "threshold − slack"):
+    * by the triangle inequality, ANY corpus doc within θ_τ of `e` sits
+    * in a list `e` was replicated into, so no true pair can escape the
+    * candidate join. The exact integer verify ([[cosThresholdPred]])
+    * then makes precision 1 — equality to the exact tier holds by
+    * construction at every scale, which is why the `decon_semantic_ivf`
+    * oracle IS the exact tier's replay.
+    *
+    * Scale shape at 100 TB: the corpus pays one row-local embed +
+    * assignment (nlist·dim mults — `nlist = 0` sizes by the BENCHMARK,
+    * √|benchmark| clamped [16, 4096], so the assignment stays ≪ the
+    * |benchmark|-dot scan it replaces no matter how big the corpus
+    * grows; the ANN corpus-√n rule measured SUPER-linear at the 1000×
+    * clustered tier, see `ivfBallCover`) and ONE broadcast
+    * hash probe per row; each corpus doc lives in exactly one list, so
+    * candidate pairs appear AT MOST ONCE — no pair-dedup shuffle. The
+    * verified pair stream is OUTPUT-SENSITIVE: pairs within
+    * `θ_τ + r_l` of a replicated benchmark doc. On a diverse corpus
+    * (tight clusters, near-orthogonal background) that is a small
+    * fraction; on a corpus whose background cosine already crowds the
+    * threshold no recall-1 method can verify fewer pairs than actually
+    * match — the prescreen degrades gracefully to the exact tier's
+    * cost plus the (cheap) assignment, never worse by more than that.
+    * One shuffle total (the per-doc match count); the corpus vectors
+    * never shuffle.
+    *
+    * `candidatesOnly = true` returns the raw verified-pair stream
+    * `(idCol, n1, n2, dt)` BEFORE the threshold/aggregation — the
+    * ScaleProbe diagnostic behind the pair-stream-ratio claim (verified
+    * pairs ÷ the exact tier's corpus × benchmark), never a query
+    * surface.
+    */
   def semanticDecontaminateIvf(corpus: DataFrame, benchmark: DataFrame,
       cosP: Int = 4, cosQ: Int = 5, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3, dim: Int = 64,

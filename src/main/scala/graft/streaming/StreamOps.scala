@@ -539,8 +539,8 @@ object StreamOps {
     * through the shared skeleton, with the band rows coming from the
     * perceptual-hash kernel and the pair join from
     * [[graft.operators.BandedHamming.incrementalPairJoin]] (optionally
-    * under the scaled probed layout — `autoBandLayout` of the expected
-    * corpus size). `mediaStream` rows are `(doc_id, kind, payload)`;
+    * under the scaled probed layout — `BandedHamming.autoLayout` of the
+    * expected corpus size). `mediaStream` rows are `(doc_id, kind, payload)`;
     * persists are disabled inside epochs (both join sides are the
     * epoch's own parquet), so a year-long ingest caches nothing.
     * `decodePixels = true` routes each batch through the REAL PPM
@@ -563,7 +563,7 @@ object StreamOps {
       bands, bandBits, probeRadius, baseIndex)
     bandIngestStream(mediaStream, baseIndex, DHashIndexCols, appendDir,
       pairsDir, checkpoint, compactEvery,
-      dHashRowsOf(b, bb, headerLen, decodePixels),
+      graft.operators.Multimodal.image(headerLen, decodePixels).rows(_, b, bb),
       graft.operators.BandedHamming.incrementalPairJoin(_, _, maxHamming,
         b, bb, pr, maxBucketSize, storage = None))
   }
@@ -587,18 +587,10 @@ object StreamOps {
       bands, bandBits, probeRadius, baseIndex)
     bandIngestStream(mediaStream, baseIndex, DHashIndexCols, appendDir,
       pairsDir, checkpoint, compactEvery,
-      graft.operators.Multimodal.audioFingerprintBandRows(_, b, bb),
+      graft.operators.Multimodal.Audio.rows(_, b, bb),
       graft.operators.BandedHamming.incrementalPairJoin(_, _, maxHamming,
         b, bb, pr, maxBucketSize, storage = None))
   }
-
-  private def dHashRowsOf(bands: Int, bandBits: Int, headerLen: Int,
-      decodePixels: Boolean): DataFrame => DataFrame =
-    if (decodePixels)
-      graft.operators.Multimodal.dHashImageBandRows(_, bands, bandBits)
-    else
-      graft.operators.Multimodal.dHashBandRows(_, bands, bandBits,
-        headerLen)
 
   private val MinHashIndexCols = Seq("doc_id", "sig", "band_idx", "band_key")
   private val DHashIndexCols = Seq("doc_id", "bands", "band_idx", "band_key")
@@ -702,7 +694,7 @@ object StreamOps {
       bands, bandBits, probeRadius, baseIndex)
     bandIngestEpoch(batch, baseIndex,
       DHashIndexCols, appendDir, pairsDir, id,
-      dHashRowsOf(b, bb, headerLen, decodePixels),
+      graft.operators.Multimodal.image(headerLen, decodePixels).rows(_, b, bb),
       graft.operators.BandedHamming.incrementalPairJoin(_, _, maxHamming,
         b, bb, pr, maxBucketSize, storage = None))
   }

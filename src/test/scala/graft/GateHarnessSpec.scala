@@ -82,6 +82,23 @@ class GateHarnessSpec extends AnyFunSuite {
       assert(calls.get == 2)
       assert(!Files.exists(Paths.get(old)), "a stale dir past an hour survived")
       assert(tagDirs(tag).map(_.getPath) == Seq(fresh))
+
+      // the extracted prune, called directly: this fixture's orphaned
+      // temp sibling goes, another fixture's cache under the same prefix
+      // stays, however old
+      val prefix = s"graft_${tag}_cache_"
+      val other = TestSpark.tempDir("graft-gh-other")
+      val foreign = new java.io.File(
+        s"/tmp/$prefix${other.replaceAll("[^A-Za-z0-9]", "_")}_1_2")
+      val sibling = new java.io.File(s"$fresh.tmp.orphan")
+      for (d <- Seq(foreign, sibling)) {
+        assert(d.mkdir())
+        assert(d.setLastModified(System.currentTimeMillis() - 2 * 3600L * 1000))
+      }
+      assert("/tmp/" + GateHarness.fixtureKeyed(spark, "/tmp", prefix,
+        fixture) == fresh)
+      assert(!sibling.exists, "an orphaned temp sibling past an hour survived")
+      assert(foreign.exists, "another fixture's cache was pruned")
     }
   }
 

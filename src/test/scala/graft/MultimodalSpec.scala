@@ -185,8 +185,8 @@ class MultimodalSpec extends AnyFunSuite {
         .as[(Long, Long, Long)].collect().toSet
     assert(pairSet(2, 32, 1) == pairSet(4, 16, 0))
     // cutover: exact layout below 1M images, scaled at/above
-    assert(Multimodal.autoBandLayout(999999L) == ((4, 16, 0)))
-    assert(Multimodal.autoBandLayout(1000000L) == ((2, 32, 1)))
+    assert(graft.operators.BandedHamming.autoLayout(999999L) == ((4, 16, 0)))
+    assert(graft.operators.BandedHamming.autoLayout(1000000L) == ((2, 32, 1)))
   }
 
   test("dHashDecontaminateFlag (round-18): flagged set equals the brute " +
@@ -1949,5 +1949,106 @@ class MultimodalSpec extends AnyFunSuite {
       maxBucketSize = None, storage = None)
     assert(viaKernel.exceptAll(viaRebanding).isEmpty &&
       viaRebanding.exceptAll(viaKernel).isEmpty)
+  }
+
+  /** One media kind of the banded-Hamming family, driven through its
+    * public operators: `flag`/`report`/`incr`/`pairs` take
+    * `(bands, nHint)` and leave every other argument at its default;
+    * an explicit `bands` takes `bandBits = 64 / bands`.
+    */
+  private case class MediaKind(name: String, residue: Int,
+      attach: DataFrame => DataFrame, flagName: String, reportName: String,
+      flag: (DataFrame, DataFrame, Int, Long) => DataFrame,
+      report: (DataFrame, DataFrame, Int, Long) => DataFrame,
+      incr: (DataFrame, DataFrame, DataFrame, Int) => DataFrame,
+      pairs: (DataFrame, Int, Long) => DataFrame)
+
+  private val mediaKinds = {
+    import Multimodal._
+    def bb(bands: Int) = if (bands == 0) 16 else 64 / bands
+    def image(name: String, attach: DataFrame => DataFrame,
+        decodePixels: Boolean,
+        pairs: (DataFrame, Int, Long) => DataFrame) =
+      MediaKind(name, 0, attach,
+        "dHashDecontaminateFlag", "dHashDecontaminateReport",
+        (c, e, b, n) => dHashDecontaminateFlag(c, e, bands = b,
+          bandBits = bb(b), decodePixels = decodePixels, nHint = n),
+        (c, e, b, n) => dHashDecontaminateReport(c, e, bands = b,
+          bandBits = bb(b), decodePixels = decodePixels, nHint = n),
+        (c, p, e, b) => dHashDecontaminateIncr(c, p, e, bands = b,
+          bandBits = bb(b), decodePixels = decodePixels),
+        pairs)
+    Seq(
+      image("image bytes", attachMedia, decodePixels = false,
+        (m, b, n) => dHashNearDupPairs(m, bands = b, bandBits = bb(b),
+          nHint = n)),
+      image("image pixels", attachPpmImages(_), decodePixels = true,
+        (m, b, n) => dHashImageNearDupPairs(m, bands = b, bandBits = bb(b),
+          nHint = n)),
+      MediaKind("audio", 1, attachWavAudio(_),
+        "audioDecontaminateFlag", "audioDecontaminateReport",
+        (c, e, b, n) => audioDecontaminateFlag(c, e, bands = b,
+          bandBits = bb(b), nHint = n),
+        (c, e, b, n) => audioDecontaminateReport(c, e, bands = b,
+          bandBits = bb(b), nHint = n),
+        (c, p, e, b) => audioDecontaminateIncr(c, p, e, bands = b,
+          bandBits = bb(b)),
+        (m, b, n) => audioNearDupPairs(m, bands = b, bandBits = bb(b),
+          nHint = n)),
+      MediaKind("video frames", 2, attachPpmVideo(_),
+        "videoDecontaminateFlag", "videoDecontaminateReport",
+        (c, e, b, n) => videoDecontaminateFlag(c, e, bands = b,
+          bandBits = bb(b), nHint = n),
+        (c, e, b, n) => videoDecontaminateReport(c, e, bands = b,
+          bandBits = bb(b), nHint = n),
+        (c, p, e, b) => videoDecontaminateIncr(c, p, e, bands = b,
+          bandBits = bb(b)),
+        (m, b, n) => videoNearDupPairsFuzzy(m, bands = b, bandBits = bb(b),
+          nHint = n)))
+  }
+
+  test("media family contracts, per kind: a streaming corpus at bands = 0 " +
+    "without nHint is refused by name; Incr at bands = 0 equals a full " +
+    "re-flag; NearDupPairs at bands = 0 with nHint = n equals explicit 4x16") {
+    // 36 docs, 12 per kind, 4 distinct texts per kind, 3 copies each
+    val corpusDocs = Seq.tabulate(36)(i => (i.toLong, s"doc ${i % 12}"))
+      .toDF("doc_id", "text")
+    // benchmark ids shift by multiples of 3, so each keeps its kind
+    def bench(lo: Int, hi: Int, off: Long) = corpusDocs
+      .filter($"doc_id" >= lo && $"doc_id" < hi)
+      .select(($"doc_id" + off).as("doc_id"), $"text")
+    val unseen = Seq.tabulate(3)(i => (900L + i, s"unseen $i"))
+      .toDF("doc_id", "text")
+    val stream = spark.readStream.format("rate").load()
+      .select($"value".as("doc_id"), $"value".cast("string").as("text"))
+    for (k <- mediaKinds) {
+      val streamed = k.attach(stream)
+      for ((fn, op) <- Seq(k.flagName -> k.flag, k.reportName -> k.report)) {
+        val err = intercept[IllegalArgumentException] {
+          op(streamed, k.attach(bench(0, 3, 360)), 0, -1L)
+        }
+        assert(err.getMessage.contains(s"$fn: a streaming corpus needs"),
+          s"${k.name}: $fn must refuse the stream by name: ${err.getMessage}")
+      }
+      val corpus = k.attach(corpusDocs)
+      val oldB = k.attach(bench(0, 3, 360))
+      val newB = k.attach(bench(3, 6, 720).unionByName(unseen))
+      def ids(df: DataFrame) = df.select($"doc_id").as[Long].collect().toSet
+      val prev = k.flag(corpus, oldB, 0, -1L)
+      val incr = ids(k.incr(corpus, prev, newB, 0))
+      val full = ids(k.flag(corpus, oldB.unionByName(newB), 0, -1L))
+      // doc_id % 12 == residue or residue + 3: the two bench texts
+      val identity = (0 until 36).filter(i =>
+        i % 12 == k.residue || i % 12 == k.residue + 3).map(_.toLong).toSet
+      assert(incr == full, s"${k.name}: incr $incr != full re-flag $full")
+      assert(identity.subsetOf(full), s"${k.name}: $identity ⊄ $full")
+      val n = k.attach(corpusDocs).count()
+      def pairSet(df: DataFrame) =
+        df.select($"d1", $"d2").as[(Long, Long)].collect().toSet
+      val auto = pairSet(k.pairs(corpus, 0, n))
+      assert(auto == pairSet(k.pairs(corpus, 4, -1L)),
+        s"${k.name}: bands = 0 with nHint = $n differs from explicit 4x16")
+      assert(auto.size >= 12, s"${k.name}: 4 texts x 3 copies: $auto")
+    }
   }
 }
