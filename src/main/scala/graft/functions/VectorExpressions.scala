@@ -243,35 +243,28 @@ object VectorRuntime {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** REAL image dHash: decode the payload — PPM (P6) through the
-    * pure-JVM parse, or any JDK-decodable container (PNG/JPEG/GIF/BMP,
-    * sniffed by magic bytes and decoded headless via
-    * `javax.imageio.ImageIO`, which ships in every JDK — no external
-    * codec dependency) — grayscale it (integer ITU-R 601 luma
-    * `(299·R + 587·G + 114·B) / 1000`), box-resize to the classic
-    * dHash 9×8 grid (each target cell is the integer mean luma of its
-    * source box — boxes partition the image, degenerate boxes widened
-    * to one pixel), and emit the 64 horizontal gradient bits
-    * `cell[r][c] > cell[r][c+1]` (r < 8, c < 8) packed little-endian
-    * into `bands` longs of `bandBits` bits — the SAME band layout as
-    * [[dHashBands]], so the banded near-dup join is kernel-agnostic.
-    * The luma/resize/gradient arithmetic is identical across decode
-    * paths, so a PPM and a PNG of the SAME pixels hash identically
-    * (lossless containers; a JPEG re-encode lands within a small
-    * Hamming distance — the near-dup semantics). All arithmetic is
-    * integer and deterministic.
+  /** REAL image dHash: decode the payload ([[raster]]: PPM/PGM through
+    * the pure-JVM parse, or any JDK-decodable container — PNG/JPEG/GIF/
+    * BMP/TIFF, sniffed by magic bytes and decoded headless via
+    * `javax.imageio.ImageIO`, which ships in every JDK), then the one
+    * box-resize dHash ([[dHash64]]: 9×8 grid of integer mean luma, the
+    * 64 horizontal gradient bits `cell[r][c] > cell[r][c+1]`) packed
+    * little-endian into `bands` longs of `bandBits` bits — the SAME band
+    * layout as [[dHashBands]], so the banded near-dup join is
+    * kernel-agnostic. A PPM and a PNG of the SAME pixels hash
+    * identically (the decode-layer identities); a JPEG re-encode lands
+    * within a small Hamming distance — the near-dup semantics.
     *
     * Null (row drops out, the established null-hash contract) for
     * anything that is not a well-formed payload of a supported format:
     * wrong magic, bad header, maxval > 255, truncated pixel data, or
-    * an ImageIO decode failure. `#` comments and arbitrary header
-    * whitespace are honored per the PPM spec.
+    * an ImageIO decode failure.
     */
   def dHashImageBands(payload: Array[Byte], bands: Int,
       bandBits: Int): ArrayData = {
-    val hash = imageDHash64(payload)
-    if (hash == null) return null
-    val h = hash.longValue()
+    val r = raster(payload)
+    if (r == null) return null
+    val h = dHash64(r)
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1L
     val out = new Array[Long](bands)
     var b = 0
@@ -282,346 +275,51 @@ object VectorRuntime {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Route one image payload to its decoder and return the 64-bit
-    * dHash, or null if no supported container matches ([[dHashImageBands]]
-    * semantics). PPM stays on the allocation-free byte path; the JDK
-    * containers decode through ImageIO into one packed-ARGB buffer.
-    */
-  def imageDHash64(payload: Array[Byte]): java.lang.Long = {
-    if (payload == null) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd != null) {
-      // non-canonical maxval rescales through the normalizer first —
-      // netpbm samples scale by maxval, so hashing the raw bytes of a
-      // maxval-127 payload would hash a half-brightness image
-      if (hd(4) != 255) return imageDHash64(imageToPpm(payload))
-      // P5 bytes ARE the luma plane (the Y4M Y-plane path), so a PGM
-      // and the gray PPM/PNG of the same values hash identically
-      return java.lang.Long.valueOf(
-        if (hd(3) == 3) dHash64At(payload, hd(2), hd(0), hd(1))
-        else dHash64LumaAt(payload, hd(2), hd(0), hd(1)))
-    }
-    val img = readJdkImage(payload)
-    if (img == null) return null
-    val w = img.getWidth; val h = img.getHeight
-    if (w < 1 || h < 1) return null
-    val argb = argbOf(img)
-    java.lang.Long.valueOf(dHash64Argb(argb, w, h))
-  }
-
-  /** ImageIO's disk cache writes decode scratch to temp FILES — per-row
-    * I/O an executor must never pay. Disabled once per JVM, touched
-    * lazily from every ImageIO call site.
-    */
-  private lazy val imageIoMemOnly: Boolean = {
-    javax.imageio.ImageIO.setUseCache(false); true
-  }
-
-  /** Magic-byte sniff for the JDK-decodable raster containers: PNG
-    * (`89 'PNG'`), JPEG (`FF D8 FF`), GIF (`'GIF8'`), BMP (`'BM'`),
-    * TIFF (`'II*\0'` little-endian / `'MM\0*'` big-endian — the JDK
-    * ships a TIFF plugin since Java 9; document/scan corpora carry it).
-    * The sniff gates the (allocating) ImageIO attempt so arbitrary
-    * binary payloads in a mixed-media table fail in a few byte
-    * compares, not in a codec probe.
-    */
-  private def isJdkRaster(p: Array[Byte]): Boolean =
-    p.length >= 8 && (
-      (p(0) == 0x89.toByte && p(1) == 'P' && p(2) == 'N' && p(3) == 'G') ||
-      (p(0) == 0xff.toByte && p(1) == 0xd8.toByte && p(2) == 0xff.toByte) ||
-      (p(0) == 'G' && p(1) == 'I' && p(2) == 'F' && p(3) == '8') ||
-      (p(0) == 'B' && p(1) == 'M') ||
-      (p(0) == 'I' && p(1) == 'I' && p(2) == '*' && p(3) == 0) ||
-      (p(0) == 'M' && p(1) == 'M' && p(2) == 0 && p(3) == '*'))
-
-  /** Decoded-raster ceiling for the ImageIO path: 64M pixels (a 256 MB
-    * ARGB buffer). PPM/Y4M are uncompressed — their decoded size is
-    * bounded by the payload bytes — but PNG/GIF/JPEG are COMPRESSED: a
-    * kilobyte payload can declare a multi-gigapixel canvas
-    * (decompression bomb), and an unguarded `ImageIO.read` would try
-    * to allocate it inside an executor task. Untrusted corpora are the
-    * norm at 100 TB, so dimensions are read from the HEADER first and
-    * oversized images null-drop before any pixel allocation.
-    */
-  private val MaxDecodedPixels: Long = 64L * 1024 * 1024
-
-  /** Packed-ARGB pixels of a decoded BufferedImage, with RAW-SAMPLE
-    * fidelity for gray rasters (round-16, ADVICE r15 #1): a grayscale
-    * (or 16-bit gray) PNG decodes to a `TYPE_BYTE_GRAY` /
-    * `TYPE_USHORT_GRAY` image whose `getRGB` pushes linear gray
-    * through the default sRGB color transform — gray 128 reads back
-    * ~186 — so raw sample values are NOT preserved and a gray PNG
-    * would hash differently from the PGM of the same values. Gray
-    * types therefore read their raster samples directly
-    * (`R = G = B = sample`, the lossless gray embedding); 16-bit
-    * samples round to 8 bits by `s·255/65535` (round-half-up, the
-    * maxval rescale arithmetic). Every other type keeps `getRGB`, the
-    * established color path.
-    */
-  private def argbOf(img: java.awt.image.BufferedImage): Array[Int] = {
-    val w = img.getWidth; val h = img.getHeight
-    val t = img.getType
-    val gray8 = t == java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-    val gray16 = t == java.awt.image.BufferedImage.TYPE_USHORT_GRAY
-    if (!gray8 && !gray16) return img.getRGB(0, 0, w, h, null, 0, w)
-    val raster = img.getRaster
-    val out = new Array[Int](w * h)
-    var y = 0
-    var i = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val s = raster.getSample(x, y, 0)
-        val v = if (gray8) s else (s * 255 * 2 + 65535) / (2 * 65535)
-        out(i) = 0xff000000 | (v << 16) | (v << 8) | v
-        i += 1
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  /** Decode a sniffed JDK-container payload headless, or null on any
-    * failure (unsniffed magic, truncated stream, codec error, or
-    * header dimensions past [[MaxDecodedPixels]] — the null-drop
-    * contract; a corrupt or hostile payload must drop its row, never
-    * kill the task). Dimensions are checked via the reader's
-    * header-only accessors BEFORE `read` allocates the raster.
-    */
-  private def readJdkImage(payload: Array[Byte]): java.awt.image.BufferedImage = {
-    if (!isJdkRaster(payload)) return null
-    val noCache = imageIoMemOnly
-    if (!noCache) return null // unreachable; forces the lazy init
-    var iis: javax.imageio.stream.ImageInputStream = null
-    var reader: javax.imageio.ImageReader = null
-    try {
-      iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) return null
-      reader = readers.next()
-      reader.setInput(iis, true, true)
-      val w = reader.getWidth(0).toLong
-      val h = reader.getHeight(0).toLong
-      if (w < 1 || h < 1 || w * h > MaxDecodedPixels) return null
-      reader.read(0)
-    } catch {
-      case _: Exception => null
-    } finally {
-      if (reader != null) reader.dispose()
-      if (iis != null) try iis.close() catch { case _: Exception => () }
-    }
-  }
-
-  /** [[dHash64At]] over a packed-ARGB buffer — the ImageIO decode path.
-    * BYTE-IDENTICAL arithmetic to the PPM path (same integer luma, same
-    * box partition, same gradient bits), so identical pixels hash
-    * identically regardless of which container carried them.
-    */
-  private def dHash64Argb(argb: Array[Int], w: Int, h: Int): Long = {
-    val gw = 9; val gh = 8
-    val cells = new Array[Long](gh * gw)
-    var ty = 0
-    while (ty < gh) {
-      val y0 = ((ty.toLong * h) / gh).toInt
-      var y1 = (((ty + 1).toLong * h) / gh).toInt
-      if (y1 <= y0) y1 = y0 + 1
-      var tx = 0
-      while (tx < gw) {
-        val x0 = ((tx.toLong * w) / gw).toInt
-        var x1 = (((tx + 1).toLong * w) / gw).toInt
-        if (x1 <= x0) x1 = x0 + 1
-        var s = 0L; var cnt = 0L
-        var y = y0
-        while (y < y1) {
-          val row = y * w
-          var x = x0
-          while (x < x1) {
-            val p = argb(row + x)
-            s += 299L * ((p >>> 16) & 0xff) + 587L * ((p >>> 8) & 0xff) +
-              114L * (p & 0xff)
-            cnt += 1
-            x += 1
-          }
-          y += 1
-        }
-        cells(ty * gw + tx) = s / (cnt * 1000L)
-        tx += 1
-      }
-      ty += 1
-    }
-    var hash = 0L
-    var i = 0
-    while (i < 64) {
-      val r = i / 8; val c = i % 8
-      if (cells(r * gw + c) > cells(r * gw + c + 1)) hash |= (1L << i)
-      i += 1
-    }
-    hash
-  }
-
-  /** REAL raster stats (round-15 — the kernel that retired the
-    * StubDecoder mapPartitions seam): decode the payload (PPM byte
-    * path or ImageIO, exactly [[imageDHash64]]'s routing) and return
-    * `{width, height, luma_milli_mean}` where `luma_milli_mean =
-    * Σ(299·R + 587·G + 114·B) / (w·h)` — the integer milli-scaled
-    * ITU-R 601 mean with ONE final division, so a relational oracle
-    * replays it byte-exactly from a fixture recipe. Null for
-    * non-raster payloads (audio/video/opaque rows carry null stats).
+  /** REAL raster stats: `{width, height, luma_milli_mean}` of the
+    * decoded image, where `luma_milli_mean = Σ(299·R + 587·G + 114·B) /
+    * (w·h)` — the integer milli-scaled ITU-R 601 mean with ONE final
+    * division, so a relational oracle replays it byte-exactly from a
+    * fixture recipe. Null for non-raster payloads (audio/video/opaque
+    * rows carry null stats).
     */
   def imageStats(payload: Array[Byte]): ArrayData = {
-    if (payload == null) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd != null) {
-      // netpbm maxval semantics: non-canonical payloads rescale
-      // through the normalizer before stats read raw bytes
-      if (hd(4) != 255) return imageStats(imageToPpm(payload))
-      val w = hd(0); val h = hd(1); val pos = hd(2); val ch = hd(3)
-      val n = w.toLong * h
-      var s = 0L
-      var i = 0L
-      while (i < n) {
-        val p = pos + (i * ch).toInt
-        // gray P5: 1000·y — numerically EQUAL to the RGB recipe on a
-        // gray pixel (299y + 587y + 114y), so P5/P6/PNG stats agree
-        s += (if (ch == 3)
-          299L * (payload(p) & 0xff) + 587L * (payload(p + 1) & 0xff) +
-            114L * (payload(p + 2) & 0xff)
-        else 1000L * (payload(p) & 0xff))
-        i += 1
-      }
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array(w.toLong, h.toLong, s / n))
-    }
-    val img = readJdkImage(payload)
-    if (img == null) return null
-    val w = img.getWidth; val h = img.getHeight
-    if (w < 1 || h < 1) return null
-    val argb = argbOf(img)
-    var s = 0L
-    var i = 0
-    while (i < argb.length) {
-      val p = argb(i)
-      s += 299L * ((p >>> 16) & 0xff) + 587L * ((p >>> 8) & 0xff) +
-        114L * (p & 0xff)
-      i += 1
-    }
+    val r = raster(payload)
+    if (r == null) return null
+    val mean = new Array[Long](1)
+    lumaMeans(r, 0, r.h, 1, 1L, mean, 0)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array(w.toLong, h.toLong, s / argb.length))
+      Array(r.w.toLong, r.h.toLong, mean(0)))
   }
 
   /** Normalize ANY supported image container to canonical P6 — the
     * transcode a mixed-format corpus runs before downstream raster
-    * kernels (resize, per-pixel oracles) so they see ONE format:
-    * PPM payloads re-encode canonically (comments/whitespace variants
-    * collapse; pixel bytes copied verbatim), PNG/JPEG/GIF/BMP decode
-    * through ImageIO to the same `P6\nW H\n255\n` + RGB bytes.
+    * kernels (resize, per-pixel oracles) so they see ONE format: the
+    * decoded raster's `P6\nW H\n255\n` + RGB bytes (comments and
+    * whitespace variants collapse, P5 gray-embeds, maxval rescales).
     * Lossless containers round-trip byte-exactly (the `mm_image_
     * normalize` gate replays the output from the fixture recipe).
     * Null for non-image payloads or a decoded size past the 2 GiB
     * array bound (the null-drop routing convention).
     */
   def imageToPpm(payload: Array[Byte]): Array[Byte] = {
-    if (payload == null) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd != null) {
-      val w = hd(0); val h = hd(1); val pos = hd(2); val maxv = hd(4)
-      if (w.toLong * h * 3L + 32L > Int.MaxValue) return null
-      val header = ("P6\n" + w + " " + h + "\n255\n").getBytes("US-ASCII")
-      val out = new Array[Byte](header.length + w * h * 3)
-      System.arraycopy(header, 0, out, 0, header.length)
-      // netpbm samples scale by maxval: the canonical-P6 re-emit
-      // rescales a maxval < 255 payload by 255/maxval (round-half-up;
-      // exact identity at maxval = 255) — copying bytes verbatim under
-      // a 255 header would BRIGHTEN the image (ADVICE r15 #3)
-      @inline def scaled(b: Byte): Byte =
-        if (maxv == 255) b
-        else (((b & 0xff) * 255 * 2 + maxv) / (2 * maxv)).toByte
-      if (hd(3) == 3) {
-        if (maxv == 255)
-          System.arraycopy(payload, pos, out, header.length, w * h * 3)
-        else {
-          var i = 0
-          val n = w * h * 3
-          while (i < n) {
-            out(header.length + i) = scaled(payload(pos + i))
-            i += 1
-          }
-        }
-      } else {
-        // grayscale P5 → R=G=B=y (the lossless gray embedding: luma,
-        // stats, and dHash all agree with the P5 original)
-        var i = 0
-        var o = header.length
-        val n = w * h
-        while (i < n) {
-          val y = scaled(payload(pos + i))
-          out(o) = y; out(o + 1) = y; out(o + 2) = y
-          i += 1
-          o += 3
-        }
-      }
-      return out
+    val r = raster(payload)
+    if (r == null) return null
+    if (r.p6) r.bytes
+    else {
+      val c = toP6(r)
+      if (c == null) null else c.bytes
     }
-    val img = readJdkImage(payload)
-    if (img == null) return null
-    val w = img.getWidth; val h = img.getHeight
-    if (w < 1 || h < 1 || w.toLong * h * 3L + 32L > Int.MaxValue) return null
-    val argb = argbOf(img)
-    val header = ("P6\n" + w + " " + h + "\n255\n").getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + w * h * 3)
-    System.arraycopy(header, 0, out, 0, header.length)
-    var i = 0
-    var o = header.length
-    while (i < argb.length) {
-      val p = argb(i)
-      out(o) = ((p >>> 16) & 0xff).toByte
-      out(o + 1) = ((p >>> 8) & 0xff).toByte
-      out(o + 2) = (p & 0xff).toByte
-      i += 1
-      o += 3
-    }
-    out
   }
 
-  /** Transcode a P6 payload to PNG via the JDK encoder — the in-plan
-    * fixture leg for the real-format decode gates (PNG is lossless, so
-    * the PNG's decoded pixels EQUAL the PPM's and the two payloads
-    * dHash identically). Deterministic within a JVM; the relational
-    * oracles never replay PNG bytes, only pixel-derived facts. Null
-    * for non-PPM payloads (the null-drop contract).
+  /** Transcode a netpbm payload to PNG via the JDK encoder — the
+    * in-plan fixture leg for the real-format decode gates (PNG is
+    * lossless, so the PNG's decoded pixels EQUAL the PPM's and the two
+    * payloads dHash identically). Deterministic within a JVM; the
+    * relational oracles never replay PNG bytes, only pixel-derived
+    * facts. Null for non-netpbm payloads (the null-drop contract).
     */
-  def ppmToPng(payload: Array[Byte]): Array[Byte] = {
-    if (payload == null) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd == null) return null
-    // non-canonical maxval rescales through the normalizer first
-    // (netpbm maxval semantics — see imageToPpm)
-    if (hd(4) != 255) return ppmToPng(imageToPpm(payload))
-    val w = hd(0); val h = hd(1); val pos = hd(2); val ch = hd(3)
-    val argb = new Array[Int](w * h)
-    var i = 0
-    while (i < argb.length) {
-      val p = pos + i * ch
-      argb(i) =
-        if (ch == 3)
-          0xff000000 | ((payload(p) & 0xff) << 16) |
-            ((payload(p + 1) & 0xff) << 8) | (payload(p + 2) & 0xff)
-        else 0xff000000 | ((payload(p) & 0xff) * 0x010101)
-      i += 1
-    }
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, w, h, argb, 0, w)
-    val noCache = imageIoMemOnly
-    if (!noCache) return null // unreachable; forces the lazy init
-    val bos = new java.io.ByteArrayOutputStream(64 + w * h * 3)
-    try {
-      if (!javax.imageio.ImageIO.write(img, "png", bos)) null
-      else bos.toByteArray
-    } catch { case _: Exception => null }
-  }
+  def ppmToPng(payload: Array[Byte]): Array[Byte] =
+    imageIoWrite(bufferedImage(netpbm(payload), gray = false), "png")
 
   /** Transcode a netpbm payload to JPEG via the JDK encoder (default
     * quality) — the LOSSY fixture leg (round-16): real-world image
@@ -635,131 +333,253 @@ object VectorRuntime {
     * JPEG bytes, only pair-level facts. Null for non-netpbm payloads
     * (the null-drop contract).
     */
-  def ppmToJpeg(payload: Array[Byte]): Array[Byte] = {
-    if (payload == null) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd == null) return null
-    if (hd(4) != 255) return ppmToJpeg(imageToPpm(payload))
-    val w = hd(0); val h = hd(1); val pos = hd(2); val ch = hd(3)
-    val argb = new Array[Int](w * h)
-    var i = 0
-    while (i < argb.length) {
-      val p = pos + i * ch
-      argb(i) =
-        if (ch == 3)
-          0xff000000 | ((payload(p) & 0xff) << 16) |
-            ((payload(p + 1) & 0xff) << 8) | (payload(p + 2) & 0xff)
-        else 0xff000000 | ((payload(p) & 0xff) * 0x010101)
-      i += 1
-    }
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, w, h, argb, 0, w)
-    val noCache = imageIoMemOnly
-    if (!noCache) return null // unreachable; forces the lazy init
-    val bos = new java.io.ByteArrayOutputStream(64 + w * h)
-    try {
-      if (!javax.imageio.ImageIO.write(img, "jpg", bos)) null
-      else bos.toByteArray
-    } catch { case _: Exception => null }
-  }
+  def ppmToJpeg(payload: Array[Byte]): Array[Byte] =
+    imageIoWrite(bufferedImage(netpbm(payload), gray = false), "jpg")
 
   /** Transcode a GRAYSCALE netpbm payload to a true single-band
     * grayscale PNG (`TYPE_BYTE_GRAY` raster — round-17): the fixture
     * leg that exercises the gray-raster decode path (raw raster
     * samples, NOT `getRGB`'s linear-gray→sRGB transform — the
     * round-16 fix) with a REAL gray container at scale. Accepts P5
-    * directly and P6 whose pixels are all R=G=B (the lossless gray
-    * embedding [[imageToPpm]] emits for P5); a P6 with any non-gray
-    * pixel returns null — refusing is better than a silent lossy
-    * luma conversion this transcode's name doesn't promise.
-    * Non-canonical maxval rescales through the normalizer first
-    * (netpbm maxval semantics). Deterministic within a JVM; no
-    * relational oracle replays PNG bytes, only pixel-derived facts.
+    * directly and P6 whose pixels are all R=G=B (the gray embedding
+    * [[imageToPpm]] emits for P5); a P6 with any non-gray pixel
+    * returns null — refusing is better than a silent lossy luma
+    * conversion this transcode's name doesn't promise. Deterministic
+    * within a JVM; no relational oracle replays PNG bytes, only
+    * pixel-derived facts.
     */
-  def pgmToGrayPng(payload: Array[Byte]): Array[Byte] = {
-    if (payload == null) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd == null) return null
-    if (hd(4) != 255) return pgmToGrayPng(imageToPpm(payload))
-    val w = hd(0); val h = hd(1); val pos = hd(2); val ch = hd(3)
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var i = 0
-    while (i < w * h) {
-      val p = pos + i * ch
-      val v = payload(p) & 0xff
-      if (ch == 3 &&
-        ((payload(p + 1) & 0xff) != v || (payload(p + 2) & 0xff) != v))
-        return null
-      raster.setSample(i % w, i / w, 0, v)
-      i += 1
-    }
-    val noCache = imageIoMemOnly
-    if (!noCache) return null // unreachable; forces the lazy init
-    val bos = new java.io.ByteArrayOutputStream(64 + w * h)
-    try {
-      if (!javax.imageio.ImageIO.write(img, "png", bos)) null
-      else bos.toByteArray
-    } catch { case _: Exception => null }
-  }
+  def pgmToGrayPng(payload: Array[Byte]): Array[Byte] =
+    imageIoWrite(bufferedImage(netpbm(payload), gray = true), "png")
 
   /** Re-emit a P5 grayscale payload under a different maxval
     * (round-17): sample values rescale by `newMaxval/maxval`
-    * (round-half-up — the same rounding [[imageToPpm]] uses for its
-    * 255/maxval rescale, so `pgmRescale(pgmRescale(p, m), 255)` and
-    * the normalizer agree bit for bit). The fixture leg for
-    * maxval < 255 corpora: rescaling a canonical payload DOWN
-    * quantizes (values collapse to the coarser scale — information
-    * loss is the point of the fixture), and the round trip
-    * 255 → m → 255 is then EXACT because every m-scale value maps
-    * back to a multiple of 255/m when it divides. P5 only (the gray
-    * domain this exists for); null for anything else.
+    * (round-half-up — the same rounding the decode layer's 255/maxval
+    * rescale uses, so `pgmRescale(pgmRescale(p, m), 255)` and the
+    * normalizer agree bit for bit). The fixture leg for maxval < 255
+    * corpora: rescaling a canonical payload DOWN quantizes (values
+    * collapse to the coarser scale — information loss is the point of
+    * the fixture), and the round trip 255 → m → 255 is then EXACT
+    * because every m-scale value maps back to a multiple of 255/m when
+    * it divides. Reads the raw P5 samples at their own maxval; null
+    * for anything but P5.
     */
   def pgmRescale(payload: Array[Byte], newMaxval: Int): Array[Byte] = {
-    if (payload == null || newMaxval < 1 || newMaxval > 255) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd == null || hd(3) != 1) return null
-    val w = hd(0); val h = hd(1); val pos = hd(2); val oldMax = hd(4)
-    val header = s"P5\n$w $h\n$newMaxval\n".getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + w * h)
+    if (newMaxval < 1 || newMaxval > 255) return null
+    val r = netpbmAt(payload, 0)
+    if (r == null || r.ch != 1) return null
+    val header = s"P5\n${r.w} ${r.h}\n$newMaxval\n".getBytes("US-ASCII")
+    val out = new Array[Byte](header.length + r.w * r.h)
     System.arraycopy(header, 0, out, 0, header.length)
     var i = 0
-    while (i < w * h) {
-      val v = payload(pos + i) & 0xff
+    while (i < r.w * r.h) {
+      val v = r.bytes(r.pos + i) & 0xff
       // round-half-up rescale in pure integer arithmetic
       out(header.length + i) =
-        ((v * newMaxval * 2 + oldMax) / (oldMax * 2)).toByte
+        ((v * newMaxval * 2 + r.maxval) / (r.maxval * 2)).toByte
       i += 1
     }
     out
   }
 
+  /** REAL image resize transcode: integer box-resize every RGB channel
+    * of the decoded netpbm raster to `outW`×`outH` (each target pixel
+    * is the integer mean of its source box — boxes partition the
+    * image, degenerate boxes widened to one pixel, so upscales
+    * replicate; a gray raster resizes its one channel into R = G = B)
+    * and re-encode as a canonical P6 (`P6\nW H\n255\n` + pixels).
+    * All-integer and deterministic — the oracle can replay the
+    * arithmetic byte for byte. Null for malformed or non-netpbm
+    * payloads or non-positive target dims (the null-drop contract).
+    */
+  def ppmResize(payload: Array[Byte], outW: Int, outH: Int): Array[Byte] = {
+    if (outW < 1 || outH < 1) return null
+    val r = netpbm(payload)
+    if (r == null) return null
+    val b = r.bytes; val w = r.w; val ch = r.ch
+    val out = newP6(outW, outH)
+    var o = out.length - outW * outH * 3
+    var ty = 0
+    var y0 = 0
+    while (ty < outH) {
+      val yNext = boxEdge(ty + 1, r.h, outH); val y1 = boxEnd(y0, yNext)
+      var tx = 0
+      var x0 = 0
+      while (tx < outW) {
+        val xNext = boxEdge(tx + 1, w, outW); val x1 = boxEnd(x0, xNext)
+        var sr = 0L; var sg = 0L; var sb = 0L
+        var y = y0
+        while (y < y1) {
+          var p = r.pos + (y * w + x0) * ch
+          val end = r.pos + (y * w + x1) * ch
+          if (ch == 3) while (p < end) {
+            sr += b(p) & 0xff
+            sg += b(p + 1) & 0xff
+            sb += b(p + 2) & 0xff
+            p += 3
+          } else while (p < end) {
+            sr += b(p) & 0xff
+            p += 1
+          }
+          y += 1
+        }
+        if (ch == 1) { sg = sr; sb = sr }
+        val cnt = (x1 - x0).toLong * (y1 - y0)
+        out(o) = (sr / cnt).toByte
+        out(o + 1) = (sg / cnt).toByte
+        out(o + 2) = (sb / cnt).toByte
+        o += 3
+        x0 = xNext
+        tx += 1
+      }
+      y0 = yNext
+      ty += 1
+    }
+    out
+  }
+
+  /** Per-frame 64-bit dHashes of a video payload, routed by container
+    * magic: `YUV4MPEG2` → real Y4M parse ([[y4mFrames]] — the public
+    * uncompressed interchange format, round-15), otherwise
+    * concatenated netpbm frames (the byte-exact fixture codec). Parse
+    * every frame boundary sequentially, then hash up to `maxFrames`
+    * evenly sampled frames (frame `⌊i·n/take⌋`) through the SAME
+    * [[dHash64]] as still images — so a video frame and the identical
+    * still image share a hash, and frame-level near-dup rides the
+    * banded machinery unchanged. Null if the payload is empty,
+    * unrecognized, any frame is malformed (a non-canonical maxval
+    * included — a concatenated-PPM stream whose frames need per-frame
+    * rescaling is not a fixture this codec emits; normalize stills via
+    * `image_to_ppm` instead), or bytes trail the last frame (a torn
+    * payload must drop, not half-decode).
+    */
+  def videoFrameDHashes(payload: Array[Byte], maxFrames: Int): ArrayData = {
+    if (payload == null || payload.length == 0) return null
+    val frames =
+      if (payload.length >= 9 && payload(0) == 'Y' && payload(1) == 'U' &&
+        payload(2) == 'V') y4mFrames(payload)
+      else {
+        val fs = new java.util.ArrayList[Raster]()
+        var pos = 0
+        while (pos < payload.length) {
+          val r = netpbmAt(payload, pos)
+          if (r == null || r.maxval != 255) return null
+          fs.add(r)
+          pos = r.pos + r.w * r.h * r.ch
+        }
+        fs
+      }
+    if (frames == null) return null
+    val nf = frames.size
+    val take = if (nf < maxFrames) nf else maxFrames
+    val out = new Array[Long](take)
+    var i = 0
+    while (i < take) {
+      out(i) = dHash64(frames.get(((i.toLong * nf) / take).toInt))
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  // -------------------------------------------------------------------
+  // Media decode layer. Every media kernel decodes its payload ONCE into
+  // one of two private views, then runs one feature function over it.
+  //
+  // Raster: canonical netpbm samples, `(bytes, pos, w, h, ch)` with
+  // `ch` 1 (gray) or 3 (RGB), row-major from `pos`, at maxval 255.
+  //  - luma is the integer ITU-R 601 recipe `299·R + 587·G + 114·B`
+  //    (milli-scaled), and a gray sample `y` counts as `1000·y` — the
+  //    same number on a gray RGB pixel, so a box mean
+  //    `Σ1000·y / (cnt·1000) = Σy / cnt` is one value for P5, a gray
+  //    P6, a gray PNG and a Y4M Y plane;
+  //  - the gray embedding is `R = G = B = y`, both ways: P5 to P6
+  //    (`image_to_ppm`), gray8/gray16 ImageIO rasters to RGB (their raw
+  //    samples, never `getRGB`'s linear-gray→sRGB transform; 16-bit
+  //    samples round by `s·255/65535`, round-half-up);
+  //  - netpbm samples scale by maxval: a maxval m < 255 payload is
+  //    rescaled once, in the decode, by `255/m` (round-half-up) into
+  //    canonical P6 bytes, the bytes `image_to_ppm` emits for it;
+  //  - an ImageIO container decodes to those same canonical P6 bytes.
+  //
+  // Pcm: one audio clip's interleaved samples over their container
+  // bytes, read as CENTERED integers in the 16-bit scale: WAV 8-bit is
+  // `v − 128` (its native ±128 range), 16-bit the signed value in the
+  // container's byte order, IEEE float32 `[-1, 1]` → ±32767 (clamped,
+  // NaN → 0); AIFF signed-8 IS WAV's `v − 128`, and unsigned variants
+  // re-center. The same audio therefore reads the same integers from
+  // a WAV and an AIFF carrier, and fingerprints bit-identically.
+  // -------------------------------------------------------------------
+
+  /** One decoded raster view (see the decode-layer notes above).
+    * `maxval` is the header's (255 for every canonical view); `p6` is
+    * true when `bytes` is exactly a canonical P6 this layer built.
+    */
+  private final class Raster(val bytes: Array[Byte], val pos: Int,
+      val w: Int, val h: Int, val ch: Int, val maxval: Int, val p6: Boolean)
+
+  /** Canonical view of any supported still image: netpbm, else ImageIO. */
+  private def raster(payload: Array[Byte]): Raster = {
+    val r = netpbm(payload)
+    if (r != null) r else jdkRaster(payload)
+  }
+
+  /** Canonical view of a netpbm payload: its own bytes at maxval 255,
+    * else the rescaled canonical P6. Null if it is not netpbm.
+    */
+  private def netpbm(payload: Array[Byte]): Raster = {
+    val r = netpbmAt(payload, 0)
+    if (r == null || r.maxval == 255) r else toP6(r)
+  }
+
+  /** `P6\nW H\n255\n` followed by room for the pixels. */
+  private def newP6(w: Int, h: Int): Array[Byte] = {
+    val header = ("P6\n" + w + " " + h + "\n255\n").getBytes("US-ASCII")
+    val out = new Array[Byte](header.length + w * h * 3)
+    System.arraycopy(header, 0, out, 0, header.length)
+    out
+  }
+
+  /** Canonical P6 of a netpbm view: gray embeds, maxval < 255 rescales.
+    * Null past the 2 GiB array bound.
+    */
+  private def toP6(r: Raster): Raster = {
+    if (r.w.toLong * r.h * 3L + 32L > Int.MaxValue) return null
+    val out = newP6(r.w, r.h)
+    val data = out.length - r.w * r.h * 3
+    val b = r.bytes; val m = r.maxval; val n = r.w * r.h * r.ch
+    @inline def scaled(v: Byte): Byte =
+      if (m == 255) v else (((v & 0xff) * 255 * 2 + m) / (2 * m)).toByte
+    var i = 0
+    if (r.ch == 3) {
+      if (m == 255) System.arraycopy(b, r.pos, out, data, n)
+      else while (i < n) {
+        out(data + i) = scaled(b(r.pos + i))
+        i += 1
+      }
+    } else {
+      var o = data
+      while (i < n) {
+        val v = scaled(b(r.pos + i))
+        out(o) = v; out(o + 1) = v; out(o + 2) = v
+        i += 1
+        o += 3
+      }
+    }
+    new Raster(out, data, r.w, r.h, 3, 255, p6 = true)
+  }
+
   @inline private def isWsB(c: Int): Boolean = c == ' ' || c == '\t' ||
     c == '\n' || c == '\r' || c == 0x0b || c == 0x0c
 
-  /** Parse one binary netpbm (P6 color PPM or P5 grayscale PGM —
-    * round-15, the grayscale sibling common in ML corpora; maxval ≤
-    * 255) frame header starting at `start`:
-    * `{w, h, dataPos, channels, maxval}` (channels 3 for P6, 1 for P5)
-    * with the pixel data verified in-bounds (frame end =
-    * `dataPos + w·h·channels`), or null for anything malformed — wrong
-    * magic, bad header, maxval > 255, truncated pixels. `#` comments
-    * and arbitrary header whitespace honored per the netpbm spec;
-    * exactly ONE whitespace byte separates maxval from data.
-    *
-    * MAXVAL semantics (round-16, ADVICE r15 #3): netpbm sample values
-    * scale by maxval — a maxval-127 payload's byte 127 means FULL
-    * brightness, not half. The raw-sample kernels (hash/stats/resize)
-    * only interpret CANONICAL maxval-255 payloads directly; a
-    * maxval < 255 payload routes through [[imageToPpm]], which
-    * rescales every sample by `255/maxval` (round-half-up) so the
-    * canonical-P6 contract stays value-preserving instead of silently
-    * brightening copied-verbatim bytes.
+  /** Header view of one binary netpbm frame (P6 color PPM or P5
+    * grayscale PGM; maxval ≤ 255) starting at `start`, with the pixel
+    * data verified in-bounds (frame end = `pos + w·h·ch`), or null for
+    * anything malformed — wrong magic, bad header, maxval 0 or > 255,
+    * truncated pixels. `#` comments and arbitrary header whitespace
+    * honored per the netpbm spec; exactly ONE whitespace byte separates
+    * maxval from data. The samples are raw, at the header's maxval.
     */
-  private def ppmHeader(payload: Array[Byte], start: Int): Array[Int] = {
-    if (payload.length - start < 11) return null
+  private def netpbmAt(payload: Array[Byte], start: Int): Raster = {
+    if (payload == null || payload.length - start < 11) return null
     if (payload(start) != 'P' ||
       (payload(start + 1) != '6' && payload(start + 1) != '5')) return null
     val channels = if (payload(start + 1) == '6') 3 else 1
@@ -791,12 +611,72 @@ object VectorRuntime {
     if (pos >= payload.length || !isWsB(payload(pos) & 0xff)) return null
     pos += 1
     if (pos.toLong + w.toLong * h * channels > payload.length) return null
-    Array(w, h, pos, channels, maxv.toInt)
+    new Raster(payload, pos, w, h, channels, maxv.toInt, p6 = false)
   }
 
-  /** Classic 64-bit dHash of one parsed PPM frame: integer ITU-R 601
-    * luma, 9×8 box resize (boxes partition the frame, degenerate boxes
-    * widened to one pixel), bit `r·8 + c` = `cell[r][c] > cell[r][c+1]`.
+  /** Integer mean milli-luma of the `gw` boxes that partition the
+    * columns of a view, over its rows `[y0, y1)`, further divided by
+    * `scale`: `out(off + t) = Σ milli-luma / (cnt · scale)`. RGB pixels
+    * weigh `299·R + 587·G + 114·B`, gray samples `1000·y`. The one luma
+    * sum under [[dHash64]] (scale 1000: a cell's mean luma) and
+    * [[imageStats]] (one box over every row, scale 1: the milli mean).
+    */
+  private def lumaMeans(r: Raster, y0: Int, y1: Int, gw: Int, scale: Long,
+      out: Array[Long], off: Int): Unit = {
+    val b = r.bytes; val w = r.w; val ch = r.ch
+    var tx = 0
+    var x0 = 0
+    while (tx < gw) {
+      val xNext = boxEdge(tx + 1, w, gw); val x1 = boxEnd(x0, xNext)
+      // a full-width box is one contiguous run of samples
+      val full = x0 == 0 && x1 == w
+      val rows = if (full) y0 + 1 else y1
+      var s = 0L
+      var y = y0
+      while (y < rows) {
+        var p = r.pos + (y * w + x0) * ch
+        val end = r.pos + (if (full) y1 * w else y * w + x1) * ch
+        if (ch == 3) while (p < end) {
+          s += 299L * (b(p) & 0xff) + 587L * (b(p + 1) & 0xff) +
+            114L * (b(p + 2) & 0xff)
+          p += 3
+        } else s += 1000L * graySum(b, p, end)
+        y += 1
+      }
+      out(off + tx) = s / ((x1 - x0).toLong * (y1 - y0) * scale)
+      x0 = xNext
+      tx += 1
+    }
+  }
+
+  /** `Σ y` over the gray bytes `[from, end)`. A method of its own, so
+    * that its loop is compiled for gray runs: inlined in [[lumaMeans]]
+    * next to the RGB loop, it ran 1.2–2.6× slower on 640×480 gray input
+    * (`graft.KernelTiming`).
+    */
+  private def graySum(b: Array[Byte], from: Int, end: Int): Long = {
+    var s = 0L
+    var p = from
+    while (p < end) {
+      s += b(p) & 0xff
+      p += 1
+    }
+    s
+  }
+
+  /** The one box partition (dHash grid, resize, audio windows): box
+    * `t` of `g` boxes over `n` cells starts at `boxEdge(t, n, g)` and
+    * ends at `boxEnd(start, boxEdge(t + 1, n, g))` — a degenerate box
+    * widens to one cell.
+    */
+  @inline private def boxEdge(t: Int, n: Int, g: Int): Int =
+    ((t.toLong * n) / g).toInt
+  @inline private def boxEnd(start: Int, nextEdge: Int): Int =
+    if (nextEdge <= start) start + 1 else nextEdge
+
+  /** Classic 64-bit dHash of a view: 9×8 box resize of the milli-luma
+    * (boxes partition the frame, degenerate boxes widened to one
+    * pixel), bit `r·8 + c` = `cell[r][c] > cell[r][c+1]`.
     *
     * ENTROPY caveat: frames SMALLER than the 9×8 grid make neighboring
     * cells read the same source pixel, so the 64 gradient bits are
@@ -806,164 +686,39 @@ object VectorRuntime {
     * coincidental near-collisions (measured at the 1000× tier).
     * Hash thumbnails at ≥ 9×8.
     */
-  private def dHash64At(payload: Array[Byte], dataPos: Int, w: Int,
-      h: Int): Long = {
+  private def dHash64(r: Raster): Long = {
     val gw = 9; val gh = 8
     val cells = new Array[Long](gh * gw)
     var ty = 0
+    var y0 = 0
     while (ty < gh) {
-      val y0 = ((ty.toLong * h) / gh).toInt
-      var y1 = (((ty + 1).toLong * h) / gh).toInt
-      if (y1 <= y0) y1 = y0 + 1 // degenerate box (h < 8): one pixel row
-      var tx = 0
-      while (tx < gw) {
-        val x0 = ((tx.toLong * w) / gw).toInt
-        var x1 = (((tx + 1).toLong * w) / gw).toInt
-        if (x1 <= x0) x1 = x0 + 1
-        var s = 0L; var cnt = 0L
-        var y = y0
-        while (y < y1) {
-          val row = dataPos + y * w * 3
-          var x = x0
-          while (x < x1) {
-            val p = row + x * 3
-            s += 299L * (payload(p) & 0xff) + 587L * (payload(p + 1) & 0xff) +
-              114L * (payload(p + 2) & 0xff)
-            cnt += 1
-            x += 1
-          }
-          y += 1
-        }
-        cells(ty * gw + tx) = s / (cnt * 1000L)
-        tx += 1
-      }
+      val yNext = boxEdge(ty + 1, r.h, gh)
+      lumaMeans(r, y0, boxEnd(y0, yNext), gw, 1000L, cells, ty * gw)
+      y0 = yNext
       ty += 1
     }
     var hash = 0L
     var i = 0
     while (i < 64) {
-      val r = i / 8; val c = i % 8
-      if (cells(r * gw + c) > cells(r * gw + c + 1)) hash |= (1L << i)
+      val row = i / 8; val c = i % 8
+      if (cells(row * gw + c) > cells(row * gw + c + 1)) hash |= (1L << i)
       i += 1
     }
     hash
   }
 
-  /** REAL image resize transcode: decode the P6 payload, integer
-    * box-resize every RGB channel to `outW`×`outH` (each target pixel
-    * is the integer mean of its source box — boxes partition the
-    * image, degenerate boxes widened to one pixel, so upscales
-    * replicate), and re-encode as a canonical P6 (`P6\nW H\n255\n` +
-    * pixels). All-integer and deterministic — the oracle can replay
-    * the arithmetic byte for byte. Null for malformed payloads or
-    * non-positive target dims (the null-drop contract).
-    */
-  def ppmResize(payload: Array[Byte], outW: Int, outH: Int): Array[Byte] = {
-    if (payload == null || outW < 1 || outH < 1) return null
-    val hd = ppmHeader(payload, 0)
-    if (hd == null) return null
-    // grayscale P5 (and any non-canonical maxval) normalizes to
-    // canonical P6 first (R=G=B=y gray embedding / 255-maxval rescale)
-    // so the box arithmetic below stays one code path and the output
-    // contract is ALWAYS canonical P6
-    if (hd(3) == 1 || hd(4) != 255)
-      return ppmResize(imageToPpm(payload), outW, outH)
-    val w = hd(0); val h = hd(1); val pos = hd(2)
-    val header = ("P6\n" + outW + " " + outH + "\n255\n").getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + outW * outH * 3)
-    System.arraycopy(header, 0, out, 0, header.length)
-    var o = header.length
-    var ty = 0
-    while (ty < outH) {
-      val y0 = ((ty.toLong * h) / outH).toInt
-      var y1 = (((ty + 1).toLong * h) / outH).toInt
-      if (y1 <= y0) y1 = y0 + 1
-      var tx = 0
-      while (tx < outW) {
-        val x0 = ((tx.toLong * w) / outW).toInt
-        var x1 = (((tx + 1).toLong * w) / outW).toInt
-        if (x1 <= x0) x1 = x0 + 1
-        var sr = 0L; var sg = 0L; var sb = 0L; var cnt = 0L
-        var y = y0
-        while (y < y1) {
-          val row = pos + y * w * 3
-          var x = x0
-          while (x < x1) {
-            val p = row + x * 3
-            sr += payload(p) & 0xff
-            sg += payload(p + 1) & 0xff
-            sb += payload(p + 2) & 0xff
-            cnt += 1
-            x += 1
-          }
-          y += 1
-        }
-        out(o) = (sr / cnt).toByte
-        out(o + 1) = (sg / cnt).toByte
-        out(o + 2) = (sb / cnt).toByte
-        o += 3
-        tx += 1
-      }
-      ty += 1
-    }
-    out
-  }
-
-  /** Per-frame 64-bit dHashes of a video payload, routed by container
-    * magic: `YUV4MPEG2` → real Y4M parse ([[y4mFrameDHashes]] — the
-    * public uncompressed interchange format, round-15), `P6` →
-    * concatenated-PPM frames (the byte-exact fixture codec). Parse
-    * every frame boundary sequentially, then hash up to `maxFrames`
-    * evenly sampled frames (frame `⌊i·n/take⌋`) through the SAME
-    * 9×8-cell gradient kernel as still images — so a video frame and
-    * the identical still image share a hash, and frame-level near-dup
-    * rides the banded machinery unchanged. Null if the payload is
-    * empty, unrecognized, any frame is malformed (a non-canonical
-    * maxval included — a concatenated-PPM stream whose frames need
-    * per-frame rescaling is not a fixture this codec emits; normalize
-    * stills via `image_to_ppm` instead), or bytes trail the last
-    * frame (a torn payload must drop, not half-decode).
-    */
-  def videoFrameDHashes(payload: Array[Byte], maxFrames: Int): ArrayData = {
-    if (payload == null || payload.length == 0) return null
-    if (payload.length >= 9 && payload(0) == 'Y' && payload(1) == 'U' &&
-      payload(2) == 'V') return y4mFrameDHashes(payload, maxFrames)
-    val frames = new java.util.ArrayList[Array[Int]]()
-    var pos = 0
-    while (pos < payload.length) {
-      val hd = ppmHeader(payload, pos)
-      if (hd == null || hd(4) != 255) return null
-      frames.add(hd)
-      pos = hd(2) + hd(0) * hd(1) * hd(3)
-    }
-    val nf = frames.size
-    val take = if (nf < maxFrames) nf else maxFrames
-    val out = new Array[Long](take)
-    var i = 0
-    while (i < take) {
-      val hd = frames.get(((i.toLong * nf) / take).toInt)
-      out(i) =
-        if (hd(3) == 3) dHash64At(payload, hd(2), hd(0), hd(1))
-        else dHash64LumaAt(payload, hd(2), hd(0), hd(1))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** [[videoFrameDHashes]] for the YUV4MPEG2 container: stream header
+  /** The YUV4MPEG2 decoder: stream header
     * `YUV4MPEG2 [ W<w> | H<h> | C<cs> | F/I/A/X<ignored> ]...\n`, then
-    * per frame `FRAME[ params]\n` + planes. The Y plane IS the luma
-    * the dHash wants, so it hashes DIRECTLY through [[dHash64LumaAt]]
-    * (cheaper than RGB — no channel weighting) and a gray RGB
-    * rendering of the same Y plane (R=G=B=Y, integer luma
-    * `1000·Y/1000 = Y`) hashes identically — the cross-format spec
-    * pin. Chroma planes are sized per colorspace and skipped:
-    * `C420`* (all 420 subsamplings share plane sizes), `C422`, `C444`,
-    * `Cmono`. Null for anything malformed: unknown colorspace, odd
-    * dims under subsampling, missing/garbled FRAME marker, or
-    * truncated planes.
+    * per frame `FRAME[ params]\n` + planes. Each frame's Y plane IS the
+    * luma the dHash wants, so it is a gray view (`ch` 1) — and a gray
+    * RGB rendering of the same plane hashes identically. Chroma planes
+    * are sized per colorspace and skipped: `C420`* (all 420
+    * subsamplings share plane sizes), `C422`, `C444`, `Cmono`. Null for
+    * anything malformed: unknown colorspace, odd dims under
+    * subsampling, missing/garbled FRAME marker, truncated planes, or no
+    * frame at all.
     */
-  private def y4mFrameDHashes(payload: Array[Byte], maxFrames: Int): ArrayData = {
+  private def y4mFrames(payload: Array[Byte]): java.util.ArrayList[Raster] = {
     val magic = "YUV4MPEG2"
     if (payload.length < magic.length + 1) return null
     var i = 0
@@ -1007,7 +762,7 @@ object VectorRuntime {
       else return null // 444alpha, 411, ... — unsupported plane sets
     val frameLen = w * h + chromaLen
     if (frameLen > Int.MaxValue) return null
-    val yPos = new java.util.ArrayList[Integer]()
+    val frames = new java.util.ArrayList[Raster]()
     while (pos < payload.length) {
       // FRAME marker + optional parameters up to the newline
       if (pos + 6 > payload.length || payload(pos) != 'F' ||
@@ -1018,21 +773,10 @@ object VectorRuntime {
       if (pos >= payload.length) return null
       pos += 1
       if (pos.toLong + frameLen > payload.length) return null // torn
-      yPos.add(Integer.valueOf(pos))
+      frames.add(new Raster(payload, pos, w.toInt, h.toInt, 1, 255, p6 = false))
       pos += frameLen.toInt
     }
-    val nf = yPos.size
-    if (nf == 0) return null
-    val take = if (nf < maxFrames) nf else maxFrames
-    val out = new Array[Long](take)
-    i = 0
-    while (i < take) {
-      out(i) = dHash64LumaAt(payload,
-        yPos.get(((i.toLong * nf) / take).toInt).intValue(),
-        w.toInt, h.toInt)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    if (frames.isEmpty) null else frames
   }
 
   /** Non-negative ASCII integer, or -1 on any non-digit/empty/overflow. */
@@ -1049,50 +793,214 @@ object VectorRuntime {
     v
   }
 
-  /** [[dHash64At]] over a single-channel luma plane (the Y4M Y plane):
-    * cell = integer mean of the box's luma bytes — EQUAL to the RGB
-    * path's `Σ(1000·Y)/(cnt·1000)` when R=G=B=Y, so gray renderings
-    * hash identically across containers.
+  /** ImageIO's disk cache writes decode scratch to temp FILES — per-row
+    * I/O an executor must never pay. Disabled once per JVM, touched
+    * lazily from the one ImageIO reader and the one writer.
     */
-  private def dHash64LumaAt(payload: Array[Byte], dataPos: Int, w: Int,
-      h: Int): Long = {
-    val gw = 9; val gh = 8
-    val cells = new Array[Long](gh * gw)
-    var ty = 0
-    while (ty < gh) {
-      val y0 = ((ty.toLong * h) / gh).toInt
-      var y1 = (((ty + 1).toLong * h) / gh).toInt
-      if (y1 <= y0) y1 = y0 + 1
-      var tx = 0
-      while (tx < gw) {
-        val x0 = ((tx.toLong * w) / gw).toInt
-        var x1 = (((tx + 1).toLong * w) / gw).toInt
-        if (x1 <= x0) x1 = x0 + 1
-        var s = 0L; var cnt = 0L
-        var y = y0
-        while (y < y1) {
-          val row = dataPos + y * w
-          var x = x0
-          while (x < x1) {
-            s += (payload(row + x) & 0xff)
-            cnt += 1
-            x += 1
-          }
-          y += 1
+  private lazy val imageIoMemOnly: Boolean = {
+    javax.imageio.ImageIO.setUseCache(false); true
+  }
+
+  /** Magic-byte sniff for the JDK-decodable raster containers: PNG
+    * (`89 'PNG'`), JPEG (`FF D8 FF`), GIF (`'GIF8'`), BMP (`'BM'`),
+    * TIFF (`'II*\0'` little-endian / `'MM\0*'` big-endian — the JDK
+    * ships a TIFF plugin since Java 9; document/scan corpora carry it).
+    * The sniff gates the (allocating) ImageIO attempt so arbitrary
+    * binary payloads in a mixed-media table fail in a few byte
+    * compares, not in a codec probe.
+    */
+  private def isJdkRaster(p: Array[Byte]): Boolean =
+    p != null && p.length >= 8 && (
+      (p(0) == 0x89.toByte && p(1) == 'P' && p(2) == 'N' && p(3) == 'G') ||
+      (p(0) == 0xff.toByte && p(1) == 0xd8.toByte && p(2) == 0xff.toByte) ||
+      (p(0) == 'G' && p(1) == 'I' && p(2) == 'F' && p(3) == '8') ||
+      (p(0) == 'B' && p(1) == 'M') ||
+      (p(0) == 'I' && p(1) == 'I' && p(2) == '*' && p(3) == 0) ||
+      (p(0) == 'M' && p(1) == 'M' && p(2) == 0 && p(3) == '*'))
+
+  /** Decoded-raster ceiling for the ImageIO path: 64M pixels. PPM/Y4M
+    * are uncompressed — their decoded size is bounded by the payload
+    * bytes — but PNG/GIF/JPEG are COMPRESSED: a kilobyte payload can
+    * declare a multi-gigapixel canvas (decompression bomb), and an
+    * unguarded `ImageIO.read` would try to allocate it inside an
+    * executor task. Untrusted corpora are the norm at 100 TB, so
+    * dimensions are read from the HEADER first and oversized images
+    * null-drop before any pixel allocation.
+    */
+  private val MaxDecodedPixels: Long = 64L * 1024 * 1024
+
+  /** The ImageIO decoder: a sniffed JDK container decoded headless into
+    * canonical P6 bytes, or null on any failure (unsniffed magic,
+    * truncated stream, codec error, or header dimensions past
+    * [[MaxDecodedPixels]] — the null-drop contract; a corrupt or
+    * hostile payload must drop its row, never kill the task).
+    * Dimensions are checked via the reader's header-only accessors
+    * BEFORE `read` allocates the raster. Gray rasters (`TYPE_BYTE_GRAY`
+    * / `TYPE_USHORT_GRAY`, round-16) read their raw samples: `getRGB`
+    * would push linear gray through the default sRGB transform (gray
+    * 128 reads back ~186). Every other type reads `getRGB`.
+    */
+  private def jdkRaster(payload: Array[Byte]): Raster = {
+    if (!isJdkRaster(payload)) return null
+    if (!imageIoMemOnly) return null // unreachable; forces the lazy init
+    var iis: javax.imageio.stream.ImageInputStream = null
+    var reader: javax.imageio.ImageReader = null
+    val img = try {
+      iis = javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(payload))
+      val readers = javax.imageio.ImageIO.getImageReaders(iis)
+      if (!readers.hasNext) return null
+      reader = readers.next()
+      reader.setInput(iis, true, true)
+      val w = reader.getWidth(0).toLong
+      val h = reader.getHeight(0).toLong
+      if (w < 1 || h < 1 || w * h > MaxDecodedPixels) return null
+      reader.read(0)
+    } catch {
+      case _: Exception => return null
+    } finally {
+      if (reader != null) reader.dispose()
+      if (iis != null) try iis.close() catch { case _: Exception => () }
+    }
+    val w = img.getWidth; val h = img.getHeight
+    if (w < 1 || h < 1 || w.toLong * h * 3L + 32L > Int.MaxValue) return null
+    val t = img.getType
+    val gray8 = t == java.awt.image.BufferedImage.TYPE_BYTE_GRAY
+    val gray16 = t == java.awt.image.BufferedImage.TYPE_USHORT_GRAY
+    val out = newP6(w, h)
+    val data = out.length - w * h * 3
+    val row = new Array[Int](w)
+    var o = data
+    var y = 0
+    while (y < h) {
+      var x = 0
+      if (gray8 || gray16) {
+        img.getRaster.getSamples(0, y, w, 1, 0, row)
+        while (x < w) {
+          val s = row(x)
+          val v = (if (gray8) s else (s * 255 * 2 + 65535) / (2 * 65535)).toByte
+          out(o) = v; out(o + 1) = v; out(o + 2) = v
+          o += 3
+          x += 1
         }
-        cells(ty * gw + tx) = s / cnt
-        tx += 1
+      } else {
+        img.getRGB(0, y, w, 1, row, 0, w)
+        while (x < w) {
+          val s = row(x)
+          out(o) = (s >>> 16).toByte
+          out(o + 1) = (s >>> 8).toByte
+          out(o + 2) = s.toByte
+          o += 3
+          x += 1
+        }
       }
-      ty += 1
+      y += 1
     }
-    var hash = 0L
+    new Raster(out, data, w, h, 3, 255, p6 = true)
+  }
+
+  /** A view as a JDK image: `TYPE_INT_RGB` (a gray view embeds
+    * `R = G = B`), or with `gray` a `TYPE_BYTE_GRAY` raster — null then
+    * if any RGB pixel is not gray. Null for a null view.
+    */
+  private def bufferedImage(r: Raster, gray: Boolean): java.awt.image.BufferedImage = {
+    if (r == null) return null
+    val img = new java.awt.image.BufferedImage(r.w, r.h,
+      if (gray) java.awt.image.BufferedImage.TYPE_BYTE_GRAY
+      else java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val b = r.bytes; val n = r.w * r.h; val ch = r.ch
     var i = 0
-    while (i < 64) {
-      val r = i / 8; val c = i % 8
-      if (cells(r * gw + c) > cells(r * gw + c + 1)) hash |= (1L << i)
-      i += 1
+    var p = r.pos
+    if (gray) {
+      val px = img.getRaster.getDataBuffer
+        .asInstanceOf[java.awt.image.DataBufferByte].getData
+      while (i < n) {
+        val v = b(p)
+        if (ch == 3 && (b(p + 1) != v || b(p + 2) != v)) return null
+        px(i) = v
+        p += ch
+        i += 1
+      }
+    } else {
+      val px = img.getRaster.getDataBuffer
+        .asInstanceOf[java.awt.image.DataBufferInt].getData
+      while (i < n) {
+        px(i) =
+          if (ch == 3)
+            ((b(p) & 0xff) << 16) | ((b(p + 1) & 0xff) << 8) | (b(p + 2) & 0xff)
+          else (b(p) & 0xff) * 0x010101
+        p += ch
+        i += 1
+      }
     }
-    hash
+    img
+  }
+
+  /** The one ImageIO writer: `img` encoded as `format`, or null when
+    * `img` is null or the encoder fails.
+    */
+  private def imageIoWrite(img: java.awt.image.BufferedImage,
+      format: String): Array[Byte] = {
+    if (img == null) return null
+    if (!imageIoMemOnly) return null // unreachable; forces the lazy init
+    val bos = new java.io.ByteArrayOutputStream(64 + img.getWidth * img.getHeight)
+    try {
+      if (!javax.imageio.ImageIO.write(img, format, bos)) null
+      else bos.toByteArray
+    } catch { case _: Exception => null }
+  }
+
+  /** One decoded audio clip (see the decode-layer notes above): `len`
+    * bytes of interleaved samples from `pos`, `bits` 8/16 (integer) or
+    * 32 (`float`).
+    */
+  private final class Pcm(val bytes: Array[Byte], val pos: Int, val len: Int,
+      val channels: Int, val rate: Int, val bits: Int, val float: Boolean,
+      val bigEndian: Boolean, val unsigned: Boolean) {
+    val bps: Int = bits / 8
+    def frames: Int = len / (channels * bps)
+
+    /** The centered sample whose first byte is at `p`. */
+    @inline def sampleAt(p: Int): Int =
+      if (bits == 16) {
+        val v =
+          if (bigEndian) (bytes(p) << 8) | (bytes(p + 1) & 0xff)
+          else (bytes(p) & 0xff) | (bytes(p + 1) << 8)
+        if (unsigned) v - 32768 else v
+      } else if (bits == 8) {
+        if (unsigned) (bytes(p) & 0xff) - 128 else bytes(p).toInt
+      } else floatAt(p)
+
+    private def floatAt(p: Int): Int = {
+      val f = java.lang.Float.intBitsToFloat(le32(bytes, p).toInt)
+      if (java.lang.Float.isNaN(f)) 0
+      else if (f >= 1.0f) 32767
+      else if (f <= -1.0f) -32767
+      else math.round(f * 32767f)
+    }
+
+    /** Frame `i` mixed to mono: the integer mean of its channels. */
+    @inline def mono(i: Int): Int = {
+      val base = pos + i * channels * bps
+      var s = 0
+      var c = 0
+      while (c < channels) {
+        s += sampleAt(base + c * bps)
+        c += 1
+      }
+      s / channels
+    }
+  }
+
+  /** Either audio decoder by container: `FORM…AIFF` → [[aiffPcm]],
+    * otherwise [[wavPcm]]. Null for payloads under 12 bytes.
+    */
+  private def pcm(payload: Array[Byte]): Pcm = {
+    if (payload == null || payload.length < 12) return null
+    if (payload(0) == 'F' && payload(1) == 'O' && payload(2) == 'R' &&
+        payload(3) == 'M' && payload(8) == 'A' && payload(9) == 'I' &&
+        payload(10) == 'F' && payload(11) == 'F') aiffPcm(payload)
+    else wavPcm(payload)
   }
 
   @inline private def le16(p: Array[Byte], i: Int): Int =
@@ -1101,13 +1009,13 @@ object VectorRuntime {
     (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
       ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
 
-  /** Parsed WAV geometry: `{fmtTag, channels, bits, sampleRate,
-    * dataPos, dataLen}` from the RIFF chunk walk — `fmt ` must precede
-    * `data`, chunks are word-aligned per the RIFF spec. Accepted
-    * encodings: PCM (format 1) at 8/16 bits and IEEE float (format 3,
-    * round-15) at 32 bits. Null for anything else or any truncation.
+  /** The WAV decoder: the RIFF chunk walk — `fmt ` must precede `data`,
+    * chunks are word-aligned per the RIFF spec — to a view over the
+    * payload's `data` bytes. Accepted encodings: PCM (format 1) at 8/16
+    * bits and IEEE float (format 3, round-15) at 32 bits. Null for
+    * anything else or any truncation.
     */
-  private def parseWav(payload: Array[Byte]): Array[Int] = {
+  private def wavPcm(payload: Array[Byte]): Pcm = {
     if (payload == null || payload.length < 44) return null
     if (payload(0) != 'R' || payload(1) != 'I' || payload(2) != 'F' ||
       payload(3) != 'F') return null
@@ -1142,78 +1050,53 @@ object VectorRuntime {
       pos += 8 + size.toInt + (size.toInt & 1) // RIFF word alignment
     }
     if (dataPos < 0) return null
-    Array(fmtTag, channels, bits, rate, dataPos, dataLen)
+    new Pcm(payload, dataPos, dataLen, channels, rate, bits,
+      float = fmtTag == 3, bigEndian = false, unsigned = bits == 8)
   }
 
-  /** One sample as a CENTERED integer in the 16-bit range's scale:
-    * 8-bit PCM reads `v − 128` (its native ±128 range), 16-bit PCM the
-    * signed LE value, IEEE float32 maps `[-1, 1]` to ±32767 (clamped,
-    * NaN → 0) — so a float re-encode of 16-bit audio yields near-equal
-    * integers and the SAME fingerprint up to integer-rounding ties.
-    */
-  @inline private def wavSample(payload: Array[Byte], p: Int, fmtTag: Int,
-      bits: Int): Int =
-    if (fmtTag == 3) {
-      val f = java.lang.Float.intBitsToFloat(le32(payload, p).toInt)
-      if (java.lang.Float.isNaN(f)) 0
-      else if (f >= 1.0f) 32767
-      else if (f <= -1.0f) -32767
-      else math.round(f * 32767f)
-    } else if (bits == 8) (payload(p) & 0xff) - 128
-    else (payload(p) & 0xff) | (payload(p + 1) << 8)
-
-  /** REAL audio fingerprint: pure-JVM WAV (RIFF) parse ([[parseWav]] —
-    * PCM 8/16-bit or IEEE float32), then a 64-bit windowed
-    * energy/zero-crossing fingerprint over the channel-mixed
-    * mono samples: 33 equal windows (degenerate windows widened to one
-    * frame), `energy[t]` = integer mean |sample| and `zcr[t]` = sign
-    * changes within window `t`; bit `j` = `energy[j] > energy[j+1]`,
-    * bit `32+j` = `zcr[j] > zcr[j+1]` (j < 32). Same gradient-bits
-    * idea as the image dHash, so the shared banded-Hamming join
-    * carries audio near-dup unchanged. All-integer and deterministic;
-    * float samples are mapped to the centered 16-bit integer range
-    * BEFORE the window fold ([[wavSample]]), so a float32 re-encode of
-    * the same audio lands within a small Hamming distance (gradient
-    * ORDER is scale-invariant; only integer-rounding ties can flip).
+  /** REAL audio fingerprint (round-15, container-routed by [[pcm]]): a
+    * 64-bit windowed energy/zero-crossing fingerprint
+    * ([[energyZcrOfMono]]) over the channel-mixed mono samples. The
+    * sample domain is identical across containers (the decode-layer
+    * notes), so the SAME audio carried by WAV or AIFF fingerprints
+    * bit-identically — the `mm_audio_aiff` gate pins exact equality,
+    * not a drift bound — and a float32 re-encode of 16-bit audio lands
+    * within a small Hamming distance (gradient ORDER is
+    * scale-invariant; only integer-rounding ties can flip).
     *
     * Null (row drops, the null-hash contract) for anything that is not
-    * well-formed WAV in an accepted encoding: wrong magic,
+    * well-formed audio in an accepted encoding: wrong magic,
     * missing/short `fmt `, other format tags, bits ∉ {8, 16} (PCM) /
-    * {32} (float), truncated `data`, or fewer than 2 sample frames
-    * (no gradient).
+    * {32} (float), truncated `data`, an AIFF the JDK cannot decode, or
+    * fewer than 2 sample frames (no gradient).
     */
-  def wavFingerprint64(payload: Array[Byte]): java.lang.Long = {
-    val wav = parseWav(payload)
-    if (wav == null) return null
-    val fmtTag = wav(0); val channels = wav(1); val bits = wav(2)
-    val dataPos = wav(4); val dataLen = wav(5)
-    val bytesPerSample = bits / 8
-    val frameSize = channels * bytesPerSample
-    val nFrames = dataLen / frameSize
-    if (nFrames < 2) return null
-    // channel-mixed mono frame value, centered at zero
-    def frame(i: Int): Int = {
-      val base = dataPos + i * frameSize
-      var s = 0
-      var c = 0
-      while (c < channels) {
-        s += wavSample(payload, base + c * bytesPerSample, fmtTag, bits)
-        c += 1
-      }
-      s / channels
-    }
+  def audioFingerprint64(payload: Array[Byte]): java.lang.Long = {
+    val a = pcm(payload)
+    if (a == null || a.frames < 2) null
+    else java.lang.Long.valueOf(energyZcrOfMono(a))
+  }
+
+  /** The one fingerprint fold: 33 equal windows over the clip's mono
+    * frames (degenerate windows widened to one frame), `energy[t]` =
+    * integer mean |sample| and `zcr[t]` = sign changes within window
+    * `t`; bit `j` = `energy[j] > energy[j+1]`, bit `32+j` =
+    * `zcr[j] > zcr[j+1]` (j < 32). Same gradient-bits idea as the image
+    * dHash, so the shared banded-Hamming join carries audio near-dup
+    * unchanged. All-integer and deterministic.
+    */
+  private def energyZcrOfMono(a: Pcm): Long = {
+    val nFrames = a.frames
     val win = 33
     val energy = new Array[Long](win)
     val zcr = new Array[Long](win)
     var t = 0
+    var f0 = 0
     while (t < win) {
-      val f0 = ((t.toLong * nFrames) / win).toInt
-      var f1 = (((t + 1).toLong * nFrames) / win).toInt
-      if (f1 <= f0) f1 = f0 + 1
+      val fNext = boxEdge(t + 1, nFrames, win); val f1 = boxEnd(f0, fNext)
       var sum = 0L; var z = 0L
       var prev = 0; var i = f0
       while (i < f1) {
-        val v = frame(i)
+        val v = a.mono(i)
         sum += (if (v < 0) -v.toLong else v.toLong)
         if (i > f0 && ((v >= 0) != (prev >= 0))) z += 1
         prev = v
@@ -1221,6 +1104,7 @@ object VectorRuntime {
       }
       energy(t) = sum / (f1 - f0)
       zcr(t) = z
+      f0 = fNext
       t += 1
     }
     var hash = 0L
@@ -1230,61 +1114,7 @@ object VectorRuntime {
       if (zcr(j) > zcr(j + 1)) hash |= (1L << (32 + j))
       j += 1
     }
-    java.lang.Long.valueOf(hash)
-  }
-
-  /** Container-routed audio fingerprint (round-15): RIFF → the
-    * pure-JVM WAV parse ([[wavFingerprint64]]); `FORM…AIFF` → the
-    * JDK's `javax.sound` decoder ([[aiffFingerprint64]]). The sample
-    * domain is identical across routes (centered 16-bit-range
-    * integers; AIFF's signed-8 IS WAV's `v − 128`, its big-endian
-    * signed-16 IS WAV's little-endian value), so the SAME audio
-    * carried by either container fingerprints bit-identically — the
-    * `mm_audio_aiff` gate pins exact equality, not a drift bound.
-    * Null for unrecognized containers (the null-drop contract).
-    */
-  def audioFingerprint64(payload: Array[Byte]): java.lang.Long = {
-    if (payload == null || payload.length < 12) return null
-    if (payload(0) == 'F' && payload(1) == 'O' && payload(2) == 'R' &&
-        payload(3) == 'M' && payload(8) == 'A' && payload(9) == 'I' &&
-        payload(10) == 'F' && payload(11) == 'F')
-      return aiffFingerprint64(payload)
-    wavFingerprint64(payload)
-  }
-
-  /** AIFF (FORM/AIFF) fingerprint via the JDK's headless
-    * `javax.sound.sampled` decoder: PCM signed/unsigned at 8/16 bits,
-    * any channel count (mixed to mono exactly like the WAV path).
-    * AIFF-C (compressed, `FORM…AIFC`) is not sniffed — codec support
-    * is platform-dependent, so it null-drops rather than decode
-    * differently on different JVMs. The decoded byte count is bounded
-    * against the container size (PCM in AIFF is uncompressed — a
-    * stream claiming more is malformed, the audio analogue of the
-    * image decompression-bomb guard). Null on any parse/format
-    * failure.
-    */
-  private def aiffFingerprint64(payload: Array[Byte]): java.lang.Long = {
-    val dec = decodeAiffPcm(payload)
-    if (dec == null) return null
-    val samples = dec._1
-    val channels = dec._2
-    val nFrames = samples.length / channels
-    if (nFrames < 2) return null // no gradient — the WAV path's contract
-    // mono-mixed centered samples, the WAV path's exact domain
-    val mono = new Array[Int](nFrames)
-    var i = 0
-    while (i < nFrames) {
-      val base = i * channels
-      var s = 0
-      var c = 0
-      while (c < channels) {
-        s += samples(base + c)
-        c += 1
-      }
-      mono(i) = s / channels
-      i += 1
-    }
-    java.lang.Long.valueOf(energyZcrOfMono(mono))
+    hash
   }
 
   /** ServiceLoader scan across EVERY classloader that could host a
@@ -1359,20 +1189,18 @@ object VectorRuntime {
     null
   }
 
-  /** Decoded AIFF PCM as `(interleaved CENTERED samples, channels,
-    * sampleRate)` — the javax.sound route shared by
-    * [[aiffFingerprint64]] (mixes to mono and folds) and
-    * [[audioToWav]] (preserves channels, round-16). The sample domain
-    * is the WAV path's exactly: signed-8 IS WAV's `v − 128`,
-    * big-endian signed-16 IS WAV's little-endian value, unsigned
-    * variants re-center. The decoded byte count is bounded against
-    * the container size (PCM in AIFF is uncompressed — a stream
-    * claiming more is malformed, the audio decompression-bomb guard)
-    * and against the 2 GiB array bound. Null on any parse/format
-    * failure; AIFF-C is not sniffed by the callers (platform-dependent
-    * codecs must not decode differently per JVM).
+  /** The AIFF decoder, through the JDK's headless `javax.sound`
+    * reader ([[openAudioStream]]): PCM signed/unsigned at 8/16 bits, any
+    * channel count, read into one buffer that the view then reads in
+    * the shared sample domain. AIFF-C (compressed, `FORM…AIFC`) is not
+    * sniffed by [[pcm]] — codec support is platform-dependent, so it
+    * null-drops rather than decode differently on different JVMs. The
+    * decoded byte count is bounded against the container size (PCM in
+    * AIFF is uncompressed — a stream claiming more is malformed, the
+    * audio decompression-bomb guard) and against the 2 GiB array
+    * bound. Null on any parse/format failure.
     */
-  private def decodeAiffPcm(payload: Array[Byte]): (Array[Int], Int, Int) = {
+  private def aiffPcm(payload: Array[Byte]): Pcm = {
     var ais: javax.sound.sampled.AudioInputStream = null
     try {
       ais = openAudioStream(payload)
@@ -1389,39 +1217,18 @@ object VectorRuntime {
         channels < 1 || rate < 1) return null
       val nFramesL = ais.getFrameLength
       val frameSize = f.getFrameSize
-      if (nFramesL < 1 || frameSize < 1 ||
+      if (nFramesL < 1 || frameSize != channels * (bits / 8) ||
         nFramesL * frameSize > payload.length.toLong * 4 ||
         nFramesL * frameSize > Int.MaxValue - 64) return null
-      val nFrames = nFramesL.toInt
-      val data = new Array[Byte](nFrames * frameSize)
+      val data = new Array[Byte](nFramesL.toInt * frameSize)
       var off = 0
       while (off < data.length) {
         val r = ais.read(data, off, data.length - off)
         if (r <= 0) return null // truncated stream
         off += r
       }
-      val bigEndian = f.isBigEndian
-      val bps = bits / 8
-      val samples = new Array[Int](nFrames * channels)
-      var i = 0
-      while (i < nFrames) {
-        val base = i * frameSize
-        var c = 0
-        while (c < channels) {
-          val p = base + c * bps
-          samples(i * channels + c) = (if (bits == 8) {
-            if (unsigned) (data(p) & 0xff) - 128 else data(p).toInt
-          } else {
-            val v =
-              if (bigEndian) (data(p) << 8) | (data(p + 1) & 0xff)
-              else (data(p) & 0xff) | (data(p + 1) << 8)
-            if (unsigned) v - 32768 else v
-          })
-          c += 1
-        }
-        i += 1
-      }
-      (samples, channels, rate)
+      new Pcm(data, 0, data.length, channels, rate, bits, float = false,
+        bigEndian = f.isBigEndian, unsigned = unsigned)
     } catch {
       case _: Exception => null
     } finally {
@@ -1429,86 +1236,38 @@ object VectorRuntime {
     }
   }
 
-  /** The 33-window energy/ZCR fold over pre-mixed mono samples —
-    * ARITHMETIC-IDENTICAL to [[wavFingerprint64]]'s in-place fold (the
-    * `mm_audio_aiff` gate pins the two routes bit-equal on the same
-    * audio), just over a materialized array (the javax.sound path
-    * already decodes into a buffer).
-    */
-  private def energyZcrOfMono(mono: Array[Int]): Long = {
-    val nFrames = mono.length
-    val win = 33
-    val energy = new Array[Long](win)
-    val zcr = new Array[Long](win)
-    var t = 0
-    while (t < win) {
-      val f0 = ((t.toLong * nFrames) / win).toInt
-      var f1 = (((t + 1).toLong * nFrames) / win).toInt
-      if (f1 <= f0) f1 = f0 + 1
-      var sum = 0L; var z = 0L
-      var prev = 0; var i = f0
-      while (i < f1) {
-        val v = mono(i)
-        sum += (if (v < 0) -v.toLong else v.toLong)
-        if (i > f0 && ((v >= 0) != (prev >= 0))) z += 1
-        prev = v
-        i += 1
-      }
-      energy(t) = sum / (f1 - f0)
-      zcr(t) = z
-      t += 1
-    }
-    var hash = 0L
-    var j = 0
-    while (j < 32) {
-      if (energy(j) > energy(j + 1)) hash |= (1L << j)
-      if (zcr(j) > zcr(j + 1)) hash |= (1L << (32 + j))
-      j += 1
-    }
-    hash
-  }
-
   /** Transcode an integer-PCM WAV to AIFF through the JDK encoder —
-    * the in-plan fixture leg for the AIFF gate. Sample conversion to
-    * AIFF's domain is the specified trivial map (unsigned-8 → signed-8
-    * is `v − 128`; 16-bit is a byte swap, values identical), done
-    * HERE so the stream handed to the JDK writer is already
-    * PCM_SIGNED big-endian: `AiffFileWriter` only falls back to
+    * the in-plan fixture leg for the AIFF gate. Each frame-aligned
+    * sample is written as its centered value, signed big-endian (8-bit:
+    * `v − 128`; 16-bit: a byte swap, values identical), done HERE so
+    * the stream handed to the JDK writer is already PCM_SIGNED
+    * big-endian: `AiffFileWriter` only falls back to
     * `AudioSystem.getAudioInputStream` (the global provider monitor —
     * see [[audioReaders]]) when it must convert, and a pre-converted
     * stream keeps that branch cold. The container itself is still
-    * written by the JDK's own AIFF encoder (cached SPI writer), and
-    * the `mm_audio_aiff` gate pins fingerprint BIT-EQUALITY of the
-    * result against the WAV leg, so a conversion error cannot hide.
-    * Null for anything that is not integer PCM (float WAVs route
-    * through [[wavToFloat32]]'s domain, not this one).
+    * written by the JDK's own AIFF encoder (cached SPI writer), and the
+    * `mm_audio_aiff` gate pins fingerprint BIT-EQUALITY of the result
+    * against the WAV leg, so a conversion error cannot hide. Null for
+    * anything that is not integer PCM WAV (float WAVs route through
+    * [[wavToFloat32]]'s domain, not this one) or holds no whole frame.
     */
   def wavToAiff(payload: Array[Byte]): Array[Byte] = {
-    val wav = parseWav(payload)
-    if (wav == null || wav(0) != 1) return null
-    val channels = wav(1); val bits = wav(2); val rate = wav(3)
-    val dataPos = wav(4); val dataLen = wav(5)
-    val bps = bits / 8
-    val frameSize = channels * bps
-    if (frameSize <= 0 || dataLen < frameSize) return null
-    val nFrames = dataLen / frameSize
-    val pcm = new Array[Byte](nFrames * frameSize)
-    if (bits == 8) {
-      var i = 0
-      while (i < pcm.length) {
-        pcm(i) = ((payload(dataPos + i) & 0xff) - 128).toByte
-        i += 1
-      }
-    } else {
-      var i = 0
-      while (i < pcm.length) {
-        pcm(i) = payload(dataPos + i + 1) // LE → BE byte swap
-        pcm(i + 1) = payload(dataPos + i)
-        i += 2
-      }
+    val a = wavPcm(payload)
+    if (a == null || a.float || a.frames < 1) return null
+    val nFrames = a.frames
+    val nSamples = nFrames * a.channels
+    val pcm = new Array[Byte](nSamples * a.bps)
+    var i = 0
+    if (a.bits == 8) while (i < nSamples) {
+      pcm(i) = a.sampleAt(a.pos + i).toByte
+      i += 1
+    } else while (i < pcm.length) { // signed 16-bit LE → BE: a byte swap
+      pcm(i) = a.bytes(a.pos + i + 1)
+      pcm(i + 1) = a.bytes(a.pos + i)
+      i += 2
     }
     val fmt = new javax.sound.sampled.AudioFormat(
-      rate.toFloat, bits, channels, true, true)
+      a.rate.toFloat, a.bits, a.channels, true, true)
     var ais: javax.sound.sampled.AudioInputStream = null
     try {
       ais = new javax.sound.sampled.AudioInputStream(
@@ -1517,7 +1276,7 @@ object VectorRuntime {
       var w = 0
       while (w < audioWriters.length) {
         if (audioWriters(w).isFileTypeSupported(tpe, ais)) {
-          val bos = new java.io.ByteArrayOutputStream(pcm.length + 64)
+          val bos = new java.io.ByteArrayOutputStream(nSamples * a.bps + 64)
           audioWriters(w).write(ais, tpe, bos)
           return bos.toByteArray
         }
@@ -1534,46 +1293,32 @@ object VectorRuntime {
   /** Transcode an integer-PCM WAV to IEEE-float32 WAV (format 3) — the
     * in-plan fixture leg for the float-decode gates, and a real
     * transcode any pipeline normalizing mixed-encoding audio needs:
-    * each sample maps exactly (8-bit: `(v−128)/128`, 16-bit:
+    * each centered sample maps exactly (8-bit: `(v−128)/128`, 16-bit:
     * `v/32768` — both exact in float32, no rounding), channels are
     * PRESERVED (a transcode is not a downmix), and the output is a
-    * canonical 44-byte header + one float32 LE word per sample.
-    * Deterministic bit-for-bit. Null for non-PCM input (an
-    * already-float payload has nothing to transcode; the null-drop
+    * canonical 44-byte header + one float32 LE word per sample. Every
+    * whole sample in `data` is written (`dataLen / bytesPerSample`, not
+    * frame-aligned). Deterministic bit-for-bit. Null for non-PCM input
+    * (an already-float payload has nothing to transcode; the null-drop
     * routing convention).
     */
   def wavToFloat32(payload: Array[Byte]): Array[Byte] = {
-    val wav = parseWav(payload)
-    if (wav == null || wav(0) != 1) return null
-    val channels = wav(1); val bits = wav(2); val rate = wav(3)
-    val dataPos = wav(4); val dataLen = wav(5)
-    val bytesPerSample = bits / 8
-    val nSamples = dataLen / bytesPerSample
-    if (nSamples.toLong * 4L + 44L > Int.MaxValue) return null
-    // the u32 byteRate field must stay representable — a pathological
-    // rate x channels product must reject, not wrap into a corrupt
-    // header other readers would trust
-    val byteRate = rate.toLong * channels * 4L
-    if (byteRate > Int.MaxValue) return null
-    val out = java.nio.ByteBuffer.allocate(44 + nSamples * 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put("RIFF".getBytes("US-ASCII")).putInt(36 + nSamples * 4)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(3).putShort(channels.toShort) // IEEE float
-      .putInt(rate).putInt(byteRate.toInt)
-      .putShort((channels * 4).toShort).putShort(32)
-      .put("data".getBytes("US-ASCII")).putInt(nSamples * 4)
+    val a = wavPcm(payload)
+    if (a == null || a.float) return null
+    val nSamples = a.len / a.bps
+    val out = wavOut(3, a.channels, a.rate, 32, nSamples)
+    if (out == null) return null
+    val scale = if (a.bits == 8) 128.0f else 32768.0f
     var i = 0
     while (i < nSamples) {
-      val p = dataPos + i * bytesPerSample
-      val f =
-        if (bits == 8) ((payload(p) & 0xff) - 128) / 128.0f
-        else ((payload(p) & 0xff) | (payload(p + 1) << 8)) / 32768.0f
-      out.putFloat(f)
+      val f = java.lang.Float.floatToRawIntBits(
+        a.sampleAt(a.pos + i * a.bps) / scale)
+      val o = 44 + 4 * i
+      out(o) = f.toByte; out(o + 1) = (f >> 8).toByte
+      out(o + 2) = (f >> 16).toByte; out(o + 3) = (f >> 24).toByte
       i += 1
     }
-    out.array()
+    out
   }
 
   /** Canonical-WAV audio normalization (round-16 — `image_to_ppm`'s
@@ -1581,10 +1326,9 @@ object VectorRuntime {
     * container/encoding — integer-PCM WAV (8/16-bit), IEEE-float32
     * WAV, or AIFF via javax.sound — to ONE canonical PCM-16 LE WAV
     * (44-byte header, channels and sample rate preserved) whose
-    * samples are the engine's CENTERED sample domain (exactly
-    * [[wavSample]] / [[decodeAiffPcm]]'s mapping, the domain every
-    * round-15 cross-container gate pins). Value preservation in that
-    * domain is the contract:
+    * samples are the decode layer's CENTERED sample domain, the domain
+    * every round-15 cross-container gate pins. Value preservation in
+    * that domain is the contract:
     *
     *  - `audio_fingerprint64(audio_to_wav(x)) == audio_fingerprint64(x)`
     *    BIT-EXACTLY for every accepted input — normalization never
@@ -1596,10 +1340,12 @@ object VectorRuntime {
     *  - already-canonical PCM-16 WAV re-emits its samples verbatim
     *    (header chunks canonicalize, sample bytes copy).
     *
-    * Deliberately NOT a loudness stage: 8-bit audio keeps its native
-    * ±128 amplitude — a 256× gain would break the bit-equality
-    * guarantee on integer-division ties in the fingerprint's window
-    * means, and gain belongs to playback, not dedup canonicalization.
+    * Frame-aligned: a ragged trailing sample drops, exactly the
+    * fingerprint's own frame domain. Deliberately NOT a loudness
+    * stage: 8-bit audio keeps its native ±128 amplitude — a 256× gain
+    * would break the bit-equality guarantee on integer-division ties in
+    * the fingerprint's window means, and gain belongs to playback, not
+    * dedup canonicalization.
     *
     * WHY THIS OPERATOR EXISTS AT SCALE: the round-15 100× probe
     * measured the per-query javax.sound AIFF decode at ~2.6 ms/clip
@@ -1612,71 +1358,55 @@ object VectorRuntime {
     * null-drop routing convention).
     */
   def audioToWav(payload: Array[Byte]): Array[Byte] = {
-    if (payload == null || payload.length < 12) return null
-    if (payload(0) == 'F' && payload(1) == 'O' && payload(2) == 'R' &&
-        payload(3) == 'M' && payload(8) == 'A' && payload(9) == 'I' &&
-        payload(10) == 'F' && payload(11) == 'F') {
-      val dec = decodeAiffPcm(payload)
-      if (dec == null) return null
-      val samples = dec._1
-      val bb = pcm16WavBuffer(samples.length, dec._2, dec._3)
-      if (bb == null) return null
-      var i = 0
-      while (i < samples.length) {
-        bb.putShort(samples(i).toShort)
-        i += 1
-      }
-      return bb.array()
-    }
-    val wav = parseWav(payload)
-    if (wav == null) return null
-    val fmtTag = wav(0); val channels = wav(1); val bits = wav(2)
-    val rate = wav(3); val dataPos = wav(4); val dataLen = wav(5)
-    val bytesPerSample = bits / 8
-    val frameSize = channels * bytesPerSample
-    // frame-aligned: a ragged trailing sample drops, exactly the
-    // fingerprint's own frame domain
-    val nFrames = dataLen / frameSize
-    val nSamples = nFrames * channels
-    val bb = pcm16WavBuffer(nSamples, channels, rate)
-    if (bb == null) return null
-    if (fmtTag == 1 && bits == 16)
+    val a = pcm(payload)
+    if (a == null) return null
+    val nSamples = a.frames * a.channels
+    val out = wavOut(1, a.channels, a.rate, 16, nSamples)
+    if (out == null) return null
+    if (a.bits == 16 && !a.bigEndian && !a.unsigned)
       // already the canonical sample encoding — verbatim copy
-      bb.put(payload, dataPos, nSamples * 2)
+      System.arraycopy(a.bytes, a.pos, out, 44, nSamples * 2)
     else {
       var i = 0
       while (i < nSamples) {
-        bb.putShort(wavSample(payload, dataPos + i * bytesPerSample,
-          fmtTag, bits).toShort)
+        val v = a.sampleAt(a.pos + i * a.bps)
+        out(44 + 2 * i) = v.toByte; out(45 + 2 * i) = (v >> 8).toByte
         i += 1
       }
     }
-    bb.array()
+    out
   }
 
-  /** Canonical 44-byte PCM-16 LE WAV header + body buffer for
-    * `nSamples` interleaved samples over `channels` at `rate` Hz —
-    * [[audioToWav]]'s output contract (and byte-compatible with
-    * [[graft.operators.Multimodal.wavHeader]]'s layout at 16 bits).
-    * Null when the output would exceed the 2 GiB array bound or the
-    * u32 byteRate field would wrap.
+  /** A WAV output for `nSamples` samples: the 44-byte header
+    * ([[putWavHeader]]) written, room for the body. Null when the
+    * output would exceed the 2 GiB array bound or the u32 byteRate
+    * field would wrap (a pathological rate × channels product must
+    * reject, not wrap into a corrupt header other readers would trust).
     */
-  private def pcm16WavBuffer(nSamples: Int, channels: Int,
-      rate: Int): java.nio.ByteBuffer = {
-    if (nSamples < 0 || nSamples.toLong * 2L + 44L > Int.MaxValue)
-      return null
-    val byteRate = rate.toLong * channels * 2L
-    if (byteRate > Int.MaxValue) return null
-    val bb = java.nio.ByteBuffer.allocate(44 + nSamples * 2)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + nSamples * 2)
+  private def wavOut(fmtTag: Int, channels: Int, rate: Int, bits: Int,
+      nSamples: Int): Array[Byte] = {
+    val bps = bits / 8
+    if (nSamples.toLong * bps + 44L > Int.MaxValue ||
+      rate.toLong * channels * bps > Int.MaxValue) return null
+    putWavHeader(java.nio.ByteBuffer.allocate(44 + nSamples * bps)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN),
+      fmtTag, channels, rate, bits, nSamples * bps).array()
+  }
+
+  /** The one canonical 44-byte WAV header writer (`RIFF`/`WAVE`, a
+    * 16-byte `fmt ` chunk, the `data` chunk header for `dataLen` bytes)
+    * into a little-endian buffer; returns `bb`.
+    */
+  private[graft] def putWavHeader(bb: java.nio.ByteBuffer, fmtTag: Int,
+      channels: Int, rate: Int, bits: Int, dataLen: Int): java.nio.ByteBuffer = {
+    val blockAlign = channels * (bits / 8)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
       .put("WAVE".getBytes("US-ASCII"))
       .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(channels.toShort)
-      .putInt(rate).putInt(byteRate.toInt)
-      .putShort((channels * 2).toShort).putShort(16)
-      .put("data".getBytes("US-ASCII")).putInt(nSamples * 2)
-    bb
+      .putShort(fmtTag.toShort).putShort(channels.toShort)
+      .putInt(rate).putInt(rate * blockAlign)
+      .putShort(blockAlign.toShort).putShort(bits.toShort)
+      .put("data".getBytes("US-ASCII")).putInt(dataLen)
   }
 
   private def isWs(c: Char): Boolean =

@@ -106,15 +106,8 @@ private[graft] object BandedHamming {
     * is nothing to derive from.
     */
   def layoutOfIndex(index: DataFrame): (Int, Int, Int) = {
-    val head = index
-      .agg(min(size(col("bands"))).as("lo"), max(size(col("bands"))).as("hi"))
-      .head()
-    require(!head.isNullAt(0),
+    val bands = uniformBands(index,
       "cannot derive a band layout from an EMPTY index — pass bands explicitly")
-    require(head.getInt(0) == head.getInt(1),
-      s"index mixes band layouts (${head.getInt(0)}..${head.getInt(1)} " +
-        "bands) — rebuild it under one layout before deriving from it")
-    val bands = head.getInt(0)
     require(bands > 0 && 64 % bands == 0,
       s"index stores a $bands-band hash; 64 bits must split evenly")
     val bandBits = 64 / bands
@@ -130,14 +123,23 @@ private[graft] object BandedHamming {
     * explicitly (where nothing is derived, so nothing else would
     * scan).
     */
-  def verifyUniformLayout(index: DataFrame): Unit = {
+  def verifyUniformLayout(index: DataFrame): Unit =
+    uniformBands(index, "cannot verify the layout of an EMPTY index")
+
+  /** The one band count every row of `index` stores, from one
+    * `min/max(size(bands))` scan; `ifEmpty` is the message for an index
+    * with no rows, and a mixed-layout index fails the same way for
+    * every caller.
+    */
+  private def uniformBands(index: DataFrame, ifEmpty: String): Int = {
     val head = index
       .agg(min(size(col("bands"))).as("lo"), max(size(col("bands"))).as("hi"))
       .head()
-    require(!head.isNullAt(0), "cannot verify the layout of an EMPTY index")
+    require(!head.isNullAt(0), ifEmpty)
     require(head.getInt(0) == head.getInt(1),
       s"index mixes band layouts (${head.getInt(0)}..${head.getInt(1)} " +
         "bands) — rebuild it under one layout before deriving from it")
+    head.getInt(0)
   }
 
   /** Warn for the HEURISTIC Hamming tail under auto-sizing: the banded

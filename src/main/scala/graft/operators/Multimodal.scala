@@ -487,18 +487,10 @@ object Multimodal {
     * prefix ([[attachWavAudio]]), byte-exact per the RIFF spec.
     */
   private[graft] def wavHeader(dataLen: Int,
-      sampleRate: Int = 8000): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(44)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(1) // PCM, mono
-      .putInt(sampleRate).putInt(sampleRate) // byteRate = rate × 1 × 1
-      .putShort(1).putShort(8) // blockAlign, bitsPerSample
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    b.array()
-  }
+      sampleRate: Int = 8000): Array[Byte] =
+    graft.functions.VectorRuntime.putWavHeader(java.nio.ByteBuffer.allocate(44)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN), 1, 1, sampleRate, 8, dataLen)
+      .array()
 
   /** Deterministic REAL audio fixture — [[attachPpmImages]]' recipe
     * for the audio member: for each audio-kind doc (`doc_id % 3 == 1`,
